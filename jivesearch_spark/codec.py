@@ -8,8 +8,8 @@ query time. Carrying dl inside the block makes scoring self-contained:
 no N-row doc-length broadcast at 10^12-doc scale.
 
 Both encode and decode are vectorized over whole arrays (numpy byte
-matrices), so the applyInPandas build/score kernels stay Arrow-batch
-fast — no per-posting Python.
+matrices), so the mapInArrow build and applyInArrow score kernels
+stay Arrow-batch fast — no per-posting Python.
 
 The reference itself never materializes posting lists (Lucene owns
 them inside Elasticsearch, SURVEY.md §1.2); this layout is our

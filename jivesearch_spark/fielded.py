@@ -44,8 +44,8 @@ from pyspark.sql import functions as F
 from . import analyze, bm25
 from .hashing import term_bucket
 from .index import IndexParams, Manifest, assign_doc_ids, build_index
-from .query import (_decode_term_arrays, _dense_arrays_from_tb,
-                    _term_block_meta, _topk_blockmax_lazy)
+from .query import (_POSTING_COLS, _dense_arrays_from_tb, _pinned_topk,
+                    _term_block_meta, _topk_blockmax_lazy, _topk_table)
 from .session import ensure_shipped
 
 #: (field, source column, boost, shingle?) — search/elasticsearch.go:35-47
@@ -204,20 +204,42 @@ def _query_plan(reader, query: str, tld_boost: str | None):
     return plan if plan["per_field"] else None
 
 
-def _score_fielded(pdf, plan, k1, b, k, msm_req):
-    """Kernel for one doc range (a shard, or the whole index): pdf has
-    (field, term, block…) rows. Returns (docids, scores) top-k."""
-    arrays = {}   # (field, term) -> posting arrays (scores already ×idf)
-    for field, g in pdf.groupby("field", sort=True):
-        spec = plan["per_field"].get(field) or (
-            plan["tld"] if plan["tld"] and field == TLD_FIELD else None)
-        if spec is None:
-            continue
-        decoded = _decode_term_arrays(g, spec["idf"], k1, b, spec["avgdl"])
-        for t, arr in decoded.items():
-            arr["scores"] = arr["scores"] * spec["boost"]
-            arrays[(field, t)] = arr
-    return _score_from_arrays(arrays, plan, k, msm_req)
+def _plan_specs(plan) -> dict:
+    """{field: spec} of every field a plan reads, the tld field included."""
+    specs = dict(plan["per_field"])
+    if plan["tld"]:
+        specs[TLD_FIELD] = plan["tld"]
+    return specs
+
+
+def _field_meta(tbl, spec) -> dict:
+    """Per-term raw block tables of ONE field's postings (Arrow table),
+    scored as that field: w = idf × boost (the oracle's evaluation
+    order, bm25.bm25_fielded_topk), the field's own avgdl, and block
+    bounds boost-scaled to match — the stored max_score_ub is
+    idf × max tf-norm (codec.encode_blocks), so unscaled bounds would
+    let the lazy kernel retire blocks that still hold top-k winners."""
+    boost = spec["boost"]
+    tb = _term_block_meta(tbl, {t: w * boost for t, w in spec["idf"].items()})
+    for meta in tb.values():
+        meta["avgdl"] = spec["avgdl"]
+        meta["ub"] = meta["ub"] * boost
+        if meta.get("iub") is not None:
+            meta["iub"] = meta["iub"] * boost
+    return tb
+
+
+def _score_fielded(tbl, plan, k1, b, k, msm_req):
+    """Kernel for one doc range (a shard, or the whole index): ``tbl``
+    is an Arrow table of (field, term, block…) rows. Returns (docids,
+    scores) top-k."""
+    import pyarrow.compute as pc
+    tb = {}
+    for field, spec in _plan_specs(plan).items():
+        sub = tbl.filter(pc.equal(tbl["field"], field))
+        tb.update({(field, t): m for t, m in _field_meta(sub, spec).items()})
+    return _score_from_arrays(_dense_arrays_from_tb(tb, k1, b, 1.0), plan,
+                              k, msm_req)
 
 
 def _score_from_arrays(arrays, plan, k, msm_req):
@@ -256,21 +278,7 @@ def _score_from_arrays(arrays, plan, k, msm_req):
         pos_c = np.minimum(pos, arr["docids"].size - 1)
         hit = arr["docids"][pos_c] == cand
         total += np.where(hit, arr["scores"][pos_c], 0.0)
-    if cand.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    kloc = min(k, cand.size)
-    r = np.round(total, 9)
-    if cand.size > 4 * k:
-        # threshold on the ROUNDED scores first (exact: the pool keeps
-        # every doc at/above the k-th rounded score, ties included), so
-        # the pinned (-rounded, docid) lexsort runs over ~k rows
-        # instead of every candidate — the full-array sort was the one
-        # multi-million-candidate pass left in this finisher
-        thr = np.partition(r, cand.size - kloc)[cand.size - kloc]
-        pool = np.flatnonzero(r >= thr)
-        cand, total, r = cand[pool], total[pool], r[pool]
-    idx = np.lexsort((cand, -r))[:kloc]
-    return cand[idx].astype(np.int64), total[idx]
+    return _pinned_topk(cand, total, k)
 
 
 def bm25_fielded_indexed(reader: FieldedReader, query: str, k: int = 10,
@@ -296,30 +304,23 @@ def bm25_fielded_indexed(reader: FieldedReader, query: str, k: int = 10,
     req = bm25.msm_required(len(plan["q_terms"])) if min_should_match else 0
 
     frames = []
-    specs = dict(plan["per_field"])
-    if plan["tld"]:
-        specs[TLD_FIELD] = plan["tld"]
-    for name, spec in specs.items():
+    for name, spec in _plan_specs(plan).items():
         terms = spec["terms"]
         bks = sorted({term_bucket(t, reader.n_buckets) for t in terms})
         frames.append(
             reader.postings[name]
             .where(F.col("bucket").isin(bks) & F.col("term").isin(terms))
-            .select(F.lit(name).alias("field"), "term", "shard", "block_id",
-                    "first_docid", "last_docid", "n_docs", "max_score_ub",
-                    "deltas", "tfs", "dls"))
+            .select(F.lit(name).alias("field"), *_POSTING_COLS))
     blocks = frames[0]
     for fr in frames[1:]:
         blocks = blocks.unionByName(fr)
 
-    plan_b, kk = plan, k + max(0, offset)
+    kk = k + max(0, offset)
 
-    def _kernel(pdf):
-        import pandas as pd
-        d, s = _score_fielded(pdf, plan_b, k1, b, kk, req)
-        return pd.DataFrame({"docid": d, "score": s})
+    def _kernel(tbl):
+        return _topk_table(*_score_fielded(tbl, plan, k1, b, kk, req))
 
-    per_shard = blocks.groupBy("shard").applyInPandas(
+    per_shard = blocks.groupBy("shard").applyInArrow(
         _kernel, schema="docid long, score double")
     topk = per_shard.orderBy(F.round(F.col("score"), 9).desc(),
                              F.asc("docid"))
@@ -462,16 +463,13 @@ class FieldedLocalIndex:
         b = self.man[TLD_FIELD].params["b"]
         req = bm25.msm_required(len(plan["q_terms"])) if min_should_match else 0
 
-        cols = ["term", "shard", "block_id", "first_docid", "last_docid",
-                "n_docs", "max_score_ub", "deltas", "tfs", "dls"]
-        specs = dict(plan["per_field"])
-        if plan["tld"]:
-            specs[TLD_FIELD] = plan["tld"]
+        specs = _plan_specs(plan)
         # per-(field, term) RAW block tables: cache hits skip the
         # pruned read; misses are fetched per field in one batched
-        # read. w = idf×boost and the per-field avgdl are pinned on
-        # each entry, so the lazy kernel scores every field with its
-        # own stats while sweeping ONE global bound table.
+        # read. _field_meta pins w = idf×boost, boost-scaled bounds and
+        # the per-field avgdl on each entry, so the lazy kernel scores
+        # every field with its own stats while sweeping ONE global
+        # bound table.
         tb = {}
         for name, spec in specs.items():
             missing = [t for t in spec["terms"]
@@ -481,21 +479,10 @@ class FieldedLocalIndex:
                               for t in missing})
                 flt = (ds.field("bucket").isin(bks)
                        & ds.field("term").isin(missing))
-                pdf = self._post[name].to_table(filter=flt,
-                                                columns=cols)
-                if len(pdf):
-                    w = {t: spec["idf"][t] * spec["boost"] for t in missing}
-                    for t, meta in _term_block_meta(pdf, w).items():
-                        meta["avgdl"] = spec["avgdl"]
-                        # stored max_score_ub = idf × max tf-norm
-                        # (codec.py:127); this field scores with
-                        # w = idf × boost, so the block bound must be
-                        # boost-scaled too or the lazy kernel retires
-                        # blocks that still hold top-k winners
-                        meta["ub"] = meta["ub"] * spec["boost"]
-                        if meta.get("iub") is not None:
-                            meta["iub"] = meta["iub"] * spec["boost"]
-                        self._meta_cache[(name, t)] = meta
+                tbl = self._post[name].to_table(filter=flt,
+                                                columns=_POSTING_COLS)
+                for t, meta in _field_meta(tbl, spec).items():
+                    self._meta_cache[(name, t)] = meta
             for t in spec["terms"]:
                 meta = self._meta_cache.get((name, t))
                 if meta is not None:

@@ -8,15 +8,17 @@ Query plan (SURVEY.md §3.1 stages 6-7, re-expressed for Spark):
    Catalyst pushes both into the parquet scan (directory pruning +
    row-group min/max on term), so IO is proportional to the query's
    posting lists, never the corpus.
-3. per-shard score kernel (applyInPandas over shard groups — every
+3. per-shard score kernel (applyInArrow over shard groups — every
    query term's postings for a doc range are co-located by
-   construction): vectorized numpy decode + BM25, with optional
-   score-neutral **block-max pruning** (WAND-style): a candidate doc
-   is exactly scored only if the sum of its terms' block-max upper
-   bounds can beat the running top-k threshold obtained from an exact
-   first pass over the two strongest terms. Skipped docs provably
-   cannot enter the top-k, so WAND on/off is rank-identical (gate in
-   tests).
+   construction): the shard's Arrow table goes straight to
+   ``_term_block_meta`` (the same block tables the serving tier
+   builds from its pruned read) and then to ``_topk_query``, the one
+   top-k entry every caller shares. With ``use_wand`` that is the
+   lazy block-max kernel: a block is decoded only while its bound can
+   still beat the running top-k threshold, so skipped docs provably
+   cannot enter the top-k and WAND on/off is rank-identical (gate in
+   tests). Without it every block decodes and ``_topk_brute`` scores
+   every candidate exactly — the oracle.
 4. global top-k: union of per-shard top-ks → TakeOrderedAndProject
    (no global sort).
 
@@ -33,6 +35,10 @@ from pyspark.sql import functions as F
 from . import analyze, bm25, codec
 from .index import Manifest
 from .session import ensure_shipped
+
+#: postings columns every top-k reader selects (Spark scan or pyarrow read)
+_POSTING_COLS = ["term", "shard", "block_id", "first_docid", "last_docid",
+                 "n_docs", "max_score_ub", "deltas", "tfs", "dls"]
 
 
 def analyze_query(man: Manifest, query: str) -> list[str]:
@@ -121,19 +127,15 @@ def bm25_topk_indexed(reader: IndexReader, query: str, k: int = 10,
     bks = reader.buckets_of(present)
     blocks = (reader.postings
               .where(F.col("bucket").isin(bks) & F.col("term").isin(present))
-              .select("term", "shard", "block_id", "first_docid", "last_docid",
-                      "n_docs", "max_score_ub", "deltas", "tfs", "dls"))
+              .select(*_POSTING_COLS))
 
-    idf_b = idf  # closure
-    wand = use_wand
     kk = k + max(0, offset)   # ranks ≤ offset+k live in per-shard top-(offset+k)
 
-    def _score_shard(pdf):
-        import pandas as pd
-        out_doc, out_score = _score_shard_np(pdf, idf_b, k1, b, avgdl, kk, req, wand)
-        return pd.DataFrame({"docid": out_doc, "score": out_score})
+    def _score_shard(tbl):
+        return _topk_table(*_score_shard_np(tbl, idf, k1, b, avgdl, kk,
+                                            req, use_wand))
 
-    per_shard = blocks.groupBy("shard").applyInPandas(
+    per_shard = blocks.groupBy("shard").applyInArrow(
         _score_shard, schema="docid long, score double")
 
     out = per_shard.orderBy(F.round(F.col("score"), 9).desc(), F.asc("docid"))
@@ -142,57 +144,28 @@ def bm25_topk_indexed(reader: IndexReader, query: str, k: int = 10,
     return out.limit(k)
 
 
-def _decode_term_arrays(pdf, idf: dict, k1: float, b: float,
-                        avgdl: float) -> dict:
-    """Decode a shard's blocks into per-term posting arrays with
-    precomputed BM25 contributions (idf is per-term, so the arrays are
-    shared by every query touching the term)."""
-    terms = {}
-    # shard ranges partition the docid space in shard order, so sorting
-    # (term, shard, block_id) yields globally docid-sorted postings —
-    # the same code path serves one shard (Spark kernel) or the whole
-    # index (serving tier). Impact-prefix rows (block_id < 0) are a
-    # redundant reordering of the docid blocks — drop them here.
-    if (pdf["block_id"].values < 0).any():
-        pdf = pdf[pdf["block_id"].values >= 0]
-    keys = (["term", "shard", "block_id"] if "shard" in pdf.columns
-            else ["term", "block_id"])
-    pdf = pdf.sort_values(keys, kind="mergesort")
-    for term, g in pdf.groupby("term", sort=True):
-        ubs = g["max_score_ub"].values
-        firsts = g["first_docid"].values
-        d, t, l = codec.decode_blocks_concat(
-            g["deltas"].tolist(), g["tfs"].tolist(), g["dls"].tolist(),
-            g["n_docs"].values)
-        t = t.astype(np.float64)
-        l = l.astype(np.float64)
-        w = idf[term]
-        scores = w * t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * l / max(avgdl, 1e-9)))
-        terms[term] = {
-            "docids": d, "scores": scores, "block_ub": ubs,
-            "block_first": firsts, "max_ub": float(ubs.max()),
-        }
-    return terms
+def _topk_table(docids, scores):
+    """(docid, score) Arrow table — the Spark kernels' output batch."""
+    import pyarrow as pa
+    return pa.table({"docid": pa.array(docids, pa.int64()),
+                     "score": pa.array(scores, pa.float64())})
 
 
-def _score_shard_np(pdf, idf: dict, k1: float, b: float, avgdl: float,
+def _score_shard_np(tbl, idf: dict, k1: float, b: float, avgdl: float,
                     k: int, msm_req: int, use_wand: bool,
                     stats: dict | None = None):
-    """Vectorized per-shard kernel. Returns (docids, scores) of the
-    local top-k (score-neutral under pruning).
+    """Per-shard kernel: one shard's postings (an Arrow table, as
+    applyInArrow hands it over) → (docids, scores) of the local top-k.
 
-    With ``use_wand`` the lazy block-max kernel runs: blocks are
-    decoded only when an interval's upper bound can still beat the
-    running top-k threshold, so head-term cost is sublinear in df
-    (true DAAT-style in-list skipping, at block granularity). Without
-    it, every block decodes and every candidate is scored exactly —
-    the oracle the rank-identity gates compare against.
+    Builds the raw block tables with ``_term_block_meta`` and runs
+    ``_topk_query`` on them, so the Spark path, the batch path and the
+    serving tier share one decode path and one kernel entry:
+    ``use_wand`` selects the lazy block-max kernel, otherwise every
+    block decodes and ``_topk_brute`` scores every candidate — the
+    oracle the rank-identity gates compare against.
     """
-    if use_wand:
-        tb = _term_block_meta(pdf, idf)
-        return _topk_blockmax_lazy(tb, k, msm_req, k1, b, avgdl, stats=stats)
-    terms = _decode_term_arrays(pdf, idf, k1, b, avgdl)
-    return _topk_from_terms(terms, k, msm_req, use_wand)
+    return _topk_query(_term_block_meta(tbl, idf), k, msm_req, k1, b,
+                       avgdl, use_wand, stats=stats)
 
 
 class _LazyBytes:
@@ -223,12 +196,23 @@ class _LazyBytes:
         return self._a.take(idxs).to_pylist()
 
 
-def _term_block_meta_arrow(tbl, idf: dict) -> dict:
-    """Arrow-native _term_block_meta (same output contract): sorts and
-    groups with Arrow compute + numpy run boundaries, and leaves the
-    compressed block bytes as _LazyBytes column slices — the serving
-    tiers pass the pruned parquet read straight in, skipping the
-    pandas conversion entirely."""
+def _term_block_meta(tbl, idf: dict) -> dict:
+    """Group a postings Arrow table into per-term RAW block metadata —
+    no decode. Sorted (term, shard, block_id) with Arrow compute +
+    numpy run boundaries, so each term's block ordinals are
+    docid-ordered and disjoint (shard ranges partition the docid space
+    in shard order); the same code serves one shard (the Spark
+    kernels' applyInArrow input) or the whole index (the serving
+    tiers' pruned read). Compressed block bytes stay as _LazyBytes
+    column slices, so blocks that are never decoded are never
+    converted to Python objects.
+
+    Impact-ordered prefix rows (block_id < 0, written by the build when
+    a (term, shard) list exceeds ``impact_min`` — index.IndexParams)
+    are split into separate per-term arrays (``iub``/``ind``/``ishard``
+    /``ideltas``…, sorted (shard, rank) so within a shard chunk k holds
+    impact ranks [k·B, (k+1)·B)); the regular docid-block arrays never
+    see them, so every existing consumer decodes each posting once."""
     import pyarrow.compute as pc
     has_shard = "shard" in tbl.column_names
     neg_mask = pc.less(tbl["block_id"], 0)
@@ -236,6 +220,8 @@ def _term_block_meta_arrow(tbl, idf: dict) -> dict:
     reg_t = tbl.filter(pc.invert(neg_mask)) if imp_t is not None else tbl
 
     def _groups(t, blk_order):
+        if not len(t):   # an empty read or shard has no runs to group
+            return
         keys = ([("term", "ascending")]
                 + ([("shard", "ascending")] if has_shard else [])
                 + [("block_id", blk_order)])
@@ -266,14 +252,20 @@ def _term_block_meta_arrow(tbl, idf: dict) -> dict:
             "last": cols["last_docid"][sl].astype(np.int64),
             "nd": cols["n_docs"][sl].astype(np.int64),
             "ub": cols["max_score_ub"][sl].astype(np.float64),
+            # shard of each regular block — the prefix TA needs it to
+            # tell short lists (full blocks generate candidates) from
+            # prefix-covered ones (only their top-P chunks do)
             "bshard": cols["shard"][sl].astype(np.int64),
             "deltas": _LazyBytes(byt["deltas"].slice(sl.start, n)),
             "tfs": _LazyBytes(byt["tfs"].slice(sl.start, n)),
             "dls": _LazyBytes(byt["dls"].slice(sl.start, n)),
             "w": idf[term],
+            # total postings across blocks — the serving tiers charge
+            # the RAW compressed table against their eviction budget
+            # with this (≈2-4 B/posting varint vs 16 B/posting decoded)
             "nd_total": int(cols["n_docs"][sl].sum()),
         }
-    if imp_t is not None and len(imp_t):
+    if imp_t is not None:
         # impact rows: rank = -block_id - 1 ascending ⇔ block_id DESC
         for term, sl, cols, byt in _groups(imp_t, "descending"):
             d = out.get(term)
@@ -287,72 +279,6 @@ def _term_block_meta_arrow(tbl, idf: dict) -> dict:
             d["itfs"] = _LazyBytes(byt["tfs"].slice(sl.start, n))
             d["idls"] = _LazyBytes(byt["dls"].slice(sl.start, n))
             d["nd_total"] += int(cols["n_docs"][sl].sum())
-    return out
-
-
-def _term_block_meta(pdf, idf: dict) -> dict:
-    """Group a postings frame into per-term RAW block metadata — no
-    decode. Sorted (term, shard, block_id) like _decode_term_arrays,
-    so each term's block ordinals are docid-ordered and disjoint
-    (shard ranges partition the docid space in shard order).
-    Accepts a pandas frame (the Spark per-shard kernel's input) or a
-    pyarrow Table (the serving tiers' pruned read — dispatched to the
-    pandas-free _term_block_meta_arrow).
-
-    Impact-ordered prefix rows (block_id < 0, written by the build when
-    a (term, shard) list exceeds ``impact_min`` — index.IndexParams)
-    are split into separate per-term arrays (``iub``/``ind``/``ishard``
-    /``ideltas``…, sorted (shard, rank) so within a shard chunk k holds
-    impact ranks [k·B, (k+1)·B)); the regular docid-block arrays never
-    see them, so every existing consumer decodes each posting once."""
-    if not hasattr(pdf, "iloc"):    # pyarrow Table
-        return _term_block_meta_arrow(pdf, idf)
-    keys = (["term", "shard", "block_id"] if "shard" in pdf.columns
-            else ["term", "block_id"])
-    has_shard = "shard" in pdf.columns
-    neg = pdf["block_id"].values < 0
-    imp = pdf[neg] if neg.any() else None
-    if neg.any():
-        pdf = pdf[~neg]
-    pdf = pdf.sort_values(keys, kind="mergesort")
-    out = {}
-    for term, g in pdf.groupby("term", sort=True):
-        out[term] = {
-            "first": g["first_docid"].values.astype(np.int64),
-            "last": g["last_docid"].values.astype(np.int64),
-            "nd": g["n_docs"].values.astype(np.int64),
-            "ub": g["max_score_ub"].values.astype(np.float64),
-            # shard of each regular block — the prefix TA needs it to
-            # tell short lists (full blocks generate candidates) from
-            # prefix-covered ones (only their top-P chunks do)
-            "bshard": (g["shard"].values.astype(np.int64) if has_shard
-                       else np.zeros(len(g), dtype=np.int64)),
-            "deltas": g["deltas"].tolist(),
-            "tfs": g["tfs"].tolist(),
-            "dls": g["dls"].tolist(),
-            "w": idf[term],
-            # total postings across blocks — the serving tiers charge
-            # the RAW compressed table against their eviction budget
-            # with this (≈2-4 B/posting varint vs 16 B/posting decoded)
-            "nd_total": int(g["n_docs"].sum()),
-        }
-    if imp is not None and len(imp):
-        imp = imp.assign(__rank=(-imp["block_id"].values - 1))
-        ikeys = (["term", "shard", "__rank"] if has_shard
-                 else ["term", "__rank"])
-        imp = imp.sort_values(ikeys, kind="mergesort")
-        for term, g in imp.groupby("term", sort=True):
-            d = out.get(term)
-            if d is None:   # prefix rows imply regular rows; be safe
-                continue
-            d["iub"] = g["max_score_ub"].values.astype(np.float64)
-            d["ind"] = g["n_docs"].values.astype(np.int64)
-            d["ishard"] = (g["shard"].values.astype(np.int64) if has_shard
-                           else np.zeros(len(g), dtype=np.int64))
-            d["ideltas"] = g["deltas"].tolist()
-            d["itfs"] = g["tfs"].tolist()
-            d["idls"] = g["dls"].tolist()
-            d["nd_total"] += int(g["n_docs"].sum())
     return out
 
 
@@ -383,14 +309,9 @@ def _ensure_blocks(d: dict, st: dict, ords, k1: float, b: float,
     if not new:
         return 0
     na = np.asarray(new, dtype=np.int64)
-    if hasattr(d["deltas"], "take"):    # _LazyBytes: one Arrow call
-        bufs = (d["deltas"].take(na), d["tfs"].take(na),
-                d["dls"].take(na))
-    else:
-        bufs = ([d["deltas"][o] for o in new],
-                [d["tfs"][o] for o in new],
-                [d["dls"][o] for o in new])
-    dd, tf, dl = codec.decode_blocks_concat(*bufs, d["nd"][na])
+    dd, tf, dl = codec.decode_blocks_concat(    # one Arrow take per stream
+        d["deltas"].take(na), d["tfs"].take(na), d["dls"].take(na),
+        d["nd"][na])
     sc = _bm25_scores(d, tf, dl, k1, b, avgdl)
     offs = np.concatenate([[0], np.cumsum(d["nd"][na])])
     for i, o in enumerate(new):
@@ -445,7 +366,10 @@ def _pinned_topk(cand: np.ndarray, total: np.ndarray, k: int):
     Thresholds on the rounded scores first (exact: the pool keeps
     every row at/above the k-th rounded score, ties included), so the
     lexsort runs over ~k rows instead of every scored candidate — the
-    brute oracle at millions of candidates was one full-array sort."""
+    brute oracle at millions of candidates was one full-array sort.
+    Every selection tail ends here; k ≤ 0 answers empty."""
+    if k <= 0:
+        return np.empty(0, dtype=np.int64), np.empty(0)
     kloc = min(k, cand.size)
     r = np.round(total, 9)
     if cand.size > 4 * k:
@@ -454,6 +378,26 @@ def _pinned_topk(cand: np.ndarray, total: np.ndarray, k: int):
         cand, total, r = cand[pool], total[pool], r[pool]
     idx = np.lexsort((cand, -r))[:kloc]
     return cand[idx].astype(np.int64), total[idx]
+
+
+def _scored_pool(got_s: list, got_m: list, msm_req: int) -> np.ndarray:
+    """Exact totals of the msm-eligible docs a sweep has scored so far
+    (the pool its running k-th-best θ is taken from)."""
+    alls = np.concatenate(got_s)
+    return alls[np.concatenate(got_m) >= msm_req] if msm_req else alls
+
+
+def _pools_topk(got_d: list, got_s: list, got_m: list, k: int,
+                msm_req: int):
+    """Pinned top-k over the candidate batches a sweep scored, keeping
+    only rows that meet ``msm_req`` — the tail every sweep shares."""
+    if not got_d:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    cand, total = np.concatenate(got_d), np.concatenate(got_s)
+    if msm_req:
+        okm = np.concatenate(got_m) >= msm_req
+        cand, total = cand[okm], total[okm]
+    return _pinned_topk(cand, total, k)
 
 
 def _range_max_table(vals: np.ndarray) -> list:
@@ -514,7 +458,7 @@ def _scores_bulk(d: dict, tf: np.ndarray, dl: np.ndarray,
 def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
                           keys=None) -> dict:
     """Decode EVERY block of the given tb entries into brute-kernel
-    arrays ({docids, scores, max_ub}), memoizing the decode on the tb
+    arrays ({docids, scores}), memoizing the decode on the tb
     entry (``dense``) so callers holding tb (e.g. a serving-tier block
     cache) pay the bulk decode once. Compact decode (minimal dtypes)
     + per-distinct-(tf, dl) score evaluation keep this pass
@@ -530,8 +474,7 @@ def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
             sc = _scores_bulk(d, tf, dl, k1, b, avgdl)
             full = (dd, sc)
             d["dense"] = full
-        dense[t] = {"docids": full[0], "scores": full[1],
-                    "max_ub": float(d["ub"].max()) if d["ub"].size else 0.0}
+        dense[t] = {"docids": full[0], "scores": full[1]}
     return dense
 
 
@@ -602,7 +545,7 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     terms = sorted(t for t in tb if t not in no_cand)
     extras = sorted(t for t in tb if t in no_cand)
     keys_all = terms + extras
-    if not terms:
+    if not terms or k <= 0:     # θ is the k-th best: nothing to sweep for
         return zero
     if msm_group is None:
         grp_of = {t: t for t in terms}          # per-key counting
@@ -836,28 +779,13 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
         scored = np.union1d(scored, cand)
         n_ok += int((matched >= msm_req).sum()) if msm_req else cand.size
         if n_ok >= k:
-            alls = np.concatenate(got_s)
-            if msm_req:
-                allm = np.concatenate(got_m)
-                sc_pool = alls[allm >= msm_req]
-            else:
-                sc_pool = alls
-            theta = np.partition(sc_pool, -k)[-k]
+            theta = np.partition(_scored_pool(got_s, got_m, msm_req), -k)[-k]
 
     if stats is not None:
         stats["blocks_decoded"] = n_decoded
         stats["blocks_total"] = blocks_all
 
-    if not got_d:
-        return zero
-    cand = np.concatenate(got_d)
-    total = np.concatenate(got_s)
-    if msm_req:
-        okm = np.concatenate(got_m) >= msm_req
-        cand, total = cand[okm], total[okm]
-    if cand.size == 0:
-        return zero
-    return _pinned_topk(cand, total, k)
+    return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
 #: stop margin for the impact-ordered sweep: with θ − T > 2·0.5e-9,
@@ -941,24 +869,9 @@ def _topk_impact_ordered(dense: dict, k: int, msm_req: int,
         scored = np.union1d(scored, cand)
         n_ok += int((mat >= msm_req).sum()) if msm_req else cand.size
         if n_ok >= k:
-            alls = np.concatenate(got_s)
-            if msm_req:
-                allm = np.concatenate(got_m)
-                pool = alls[allm >= msm_req]
-            else:
-                pool = alls
-            theta = np.partition(pool, -k)[-k]
+            theta = np.partition(_scored_pool(got_s, got_m, msm_req), -k)[-k]
 
-    if not got_d:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    cand = np.concatenate(got_d)
-    total = np.concatenate(got_s)
-    if msm_req:
-        okm = np.concatenate(got_m) >= msm_req
-        cand, total = cand[okm], total[okm]
-    if cand.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    return _pinned_topk(cand, total, k)
+    return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
 #: candidate-flood threshold that flips the prefix-TA sweep into the
@@ -1004,7 +917,7 @@ def _topk_dense_merge(dense: dict, k: int, msm_req: int,
     zero = (np.empty(0, dtype=np.int64), np.empty(0))
     names = sorted(dense)
     parts = [dense[t] for t in names if dense[t]["docids"].size]
-    if not parts:
+    if not parts or k <= 0:
         return zero
     total_np = sum(p["docids"].size for p in parts)
     lo = min(int(p["docids"].min()) for p in parts)
@@ -1071,17 +984,7 @@ def _topk_dense_merge(dense: dict, k: int, msm_req: int,
         if msm_req:
             m = cnt >= msm_req
             cand, total = cand[m], total[m]
-        cand = cand.astype(np.int64)
-        if cand.size == 0:
-            return zero
-    kloc = min(k, cand.size)
-    r = np.round(total, 9)
-    if cand.size > 4 * k:
-        thr = np.partition(r, cand.size - kloc)[cand.size - kloc]
-        pool = np.flatnonzero(r >= thr)     # ⊇ the true top-k incl. ties
-        cand, total, r = cand[pool], total[pool], r[pool]
-    idx = np.lexsort((cand, -r))[:kloc]
-    return cand[idx], total[idx]
+    return _pinned_topk(cand, total, k)
 
 
 def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
@@ -1590,16 +1493,7 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
             stats["blocks_total"] = blocks_total
         stats["dense_bailout"] = fellback
 
-    if not got_d:
-        return zero
-    cand = np.concatenate(got_d)
-    total = np.concatenate(got_s)
-    if msm_req:
-        okm = np.concatenate(got_m) >= msm_req
-        cand, total = cand[okm], total[okm]
-    if cand.size == 0:
-        return zero
-    return _pinned_topk(cand, total, k)
+    return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
 def _exact_scores_over(sources: dict, names, cand: np.ndarray):
@@ -1630,72 +1524,35 @@ def _drop_scored(cand: np.ndarray, scored: np.ndarray) -> np.ndarray:
     return cand[scored[pc] != cand]
 
 
-def _topk_from_terms(terms: dict, k: int, msm_req: int, use_wand: bool):
+def _topk_brute(terms: dict, k: int, msm_req: int):
+    """Exhaustive top-k over fully decoded term arrays ({docids,
+    scores} per term): every candidate is scored exactly in
+    sorted-term order — the oracle every pruning finisher must match."""
     if not terms:
         return np.empty(0, dtype=np.int64), np.empty(0)
-
-    names = sorted(terms, key=lambda t: -terms[t]["max_ub"])
-
-    def exact_scores(cand: np.ndarray):
-        return _exact_scores_over(terms, sorted(terms), cand)
-
-    if not use_wand or len(names) <= 1:
-        cand = np.unique(np.concatenate([terms[t]["docids"] for t in names]))
-        total, matched = exact_scores(cand)
-    else:
-        # ---- block-max two-phase pruning (score-neutral) ----
-        # phase 1: exact over the strongest 2 terms' candidates → θ
-        seed_terms = names[:2]
-        cand1 = np.unique(np.concatenate([terms[t]["docids"] for t in seed_terms]))
-        tot1, mat1 = exact_scores(cand1)
-        if msm_req:
-            ok = mat1 >= msm_req
-            sc_for_theta = tot1[ok]
-        else:
-            sc_for_theta = tot1
-        if sc_for_theta.size >= k:
-            theta = np.partition(sc_for_theta, -k)[-k]
-        else:
-            theta = -np.inf
-        # phase 2: docs only in the remaining terms; UB via block-max
-        rest = names[2:]
-        if rest:
-            cand2 = np.unique(np.concatenate([terms[t]["docids"] for t in rest]))
-            cand2 = _drop_scored(cand2, cand1)
-            if cand2.size:
-                ub = np.zeros(cand2.size)
-                for t in names:
-                    td = terms[t]
-                    # block containing/preceding each candidate
-                    bi = np.searchsorted(td["block_first"], cand2, side="right") - 1
-                    bi = np.clip(bi, 0, len(td["block_ub"]) - 1)
-                    # candidate may fall between blocks; UB of the located
-                    # block is a valid bound when the doc is in the list,
-                    # and irrelevant when absent — include membership test
-                    pos = np.searchsorted(td["docids"], cand2)
-                    pos_c = np.minimum(pos, td["docids"].size - 1)
-                    present = td["docids"][pos_c] == cand2
-                    ub += np.where(present, td["block_ub"][bi], 0.0)
-                keep = ub >= theta if np.isfinite(theta) else np.ones(cand2.size, bool)
-                cand2 = cand2[keep]
-            if cand2.size:
-                tot2, mat2 = exact_scores(cand2)
-                cand = np.concatenate([cand1, cand2])
-                total = np.concatenate([tot1, tot2])
-                matched = np.concatenate([mat1, mat2])
-            else:
-                cand, total, matched = cand1, tot1, mat1
-        else:
-            cand, total, matched = cand1, tot1, mat1
-
+    cand = np.unique(np.concatenate([terms[t]["docids"] for t in terms]))
+    total, matched = _exact_scores_over(terms, sorted(terms), cand)
     if msm_req:
         ok = matched >= msm_req
         cand, total = cand[ok], total[ok]
-    if cand.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-
-    # top-k by (-round(score,9), docid) — the pinned tie-break
     return _pinned_topk(cand, total, k)
+
+
+def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
+                avgdl: float, use_wand: bool, stats: dict | None = None,
+                store: dict | None = None):
+    """THE single-field top-k entry: the Spark kernels and the serving
+    tier all call it, so ``use_wand`` means one thing everywhere. With
+    it, the lazy block-max kernel (decoded blocks land in ``store``
+    when given); without it, decode every block (memoized on the tb
+    entries) and score exhaustively with ``_topk_brute``."""
+    if use_wand:
+        return _topk_blockmax_lazy(tb, k, msm_req, k1, b, avgdl,
+                                   stats=stats, store=store)
+    if stats is not None:
+        n = sum(m["ub"].size for m in tb.values())
+        stats.update(blocks_decoded=n, blocks_total=n, dense_bailout=True)
+    return _topk_brute(_dense_arrays_from_tb(tb, k1, b, avgdl), k, msm_req)
 
 
 def bm25_topk_batch(reader: IndexReader, queries: list[tuple[str, str]],
@@ -1706,10 +1563,12 @@ def bm25_topk_batch(reader: IndexReader, queries: list[tuple[str, str]],
 
     The analytics flavor of the query engine (replay a whole query log
     against a snapshot): one pruned postings scan for the UNION of all
-    query terms, each shard's blocks decoded ONCE, every query scored
-    against the shared decoded arrays, then a per-qid window rank for
-    the global top-k. At 10^12-doc scale this is the right shape —
-    per-query jobs would re-pay scan+schedule costs N times.
+    query terms, each shard's block tables built ONCE and every block
+    decoded at most once for all its queries (one shared store), then
+    a per-qid window rank for the global top-k. At 10^12-doc scale this is the right shape —
+    per-query jobs would re-pay scan+schedule costs N times. Each
+    query runs ``_topk_query`` — the same kernel, with the same
+    ``use_wand`` meaning, as ``bm25_topk_indexed`` and the serving tier.
     """
     spark = reader.spark
     out_schema = "qid string, docid long, score double"
@@ -1734,34 +1593,31 @@ def bm25_topk_batch(reader: IndexReader, queries: list[tuple[str, str]],
     bks = reader.buckets_of(live)
     blocks = (reader.postings
               .where(F.col("bucket").isin(bks) & F.col("term").isin(live))
-              .select("term", "shard", "block_id", "first_docid", "last_docid",
-                      "n_docs", "max_score_ub", "deltas", "tfs", "dls"))
+              .select(*_POSTING_COLS))
 
-    qterms_b = analyzed  # closures (broadcast by task serialization)
-    reqs_b = reqs
-    wand, kk = use_wand, k + max(0, offset)
+    kk = k + max(0, offset)
 
-    def _score_shard_batch(pdf):
-        import pandas as pd
-        arrays = _decode_term_arrays(pdf, idf, k1, b, avgdl)
+    def _score_shard_batch(tbl):
+        import pyarrow as pa
+        # one block table and one decoded-block store per shard task:
+        # every query of the log reads the same blocks, so a block any
+        # query decodes is decoded once for the whole batch
+        tb, store = _term_block_meta(tbl, idf), {}
         qids, docs_out, scores_out = [], [], []
-        for qid, ts in qterms_b.items():
-            sub = {t: arrays[t] for t in ts if t in arrays}
+        for qid, ts in analyzed.items():
+            sub = {t: tb[t] for t in ts if t in tb}
             if not sub:
                 continue
-            d, s = _topk_from_terms(sub, kk, reqs_b[qid], wand)
+            d, s = _topk_query(sub, kk, reqs[qid], k1, b, avgdl, use_wand,
+                               store=store)
             qids.extend([qid] * d.size)
             docs_out.append(d)
             scores_out.append(s)
-        if not qids:
-            return pd.DataFrame({"qid": [], "docid": [], "score": []})
-        return pd.DataFrame({
-            "qid": qids,
-            "docid": np.concatenate(docs_out),
-            "score": np.concatenate(scores_out),
-        })
+        res = _topk_table(np.concatenate(docs_out or [np.empty(0, np.int64)]),
+                          np.concatenate(scores_out or [np.empty(0)]))
+        return res.add_column(0, "qid", pa.array(qids, pa.string()))
 
-    per_shard = blocks.groupBy("shard").applyInPandas(
+    per_shard = blocks.groupBy("shard").applyInArrow(
         _score_shard_batch, schema=out_schema)
 
     w = Window.partitionBy("qid").orderBy(

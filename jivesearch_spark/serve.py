@@ -11,16 +11,19 @@ read of a few posting lists. This module is that read path:
    (``bucket IN buckets(Q) AND term IN Q``): hive partition pruning
    on ``bucket`` + parquet row-group min/max pruning on ``term`` —
    IO per query is O(|Q| posting lists) regardless of corpus size.
-2. same pruned read over ``postings`` — but only block METADATA is
-   materialized eagerly (compressed bytes + per-block bounds, via
-   `query._term_block_meta`); scoring runs the SAME lazy block-max
-   kernel as the Spark path (`query._topk_blockmax_lazy`) over the
-   whole index at once, so a head term's tail blocks are never
-   decoded when the top-k threshold retires them (Lucene-style
-   in-list skipping — the reference's ES serving analog,
-   search/elasticsearch.go:66). One code path ⇒ rank identity
-   between serve and cluster modes is structural, and the pinned
-   tie-break (round(score,9) desc, docid asc) is replicated exactly.
+2. same pruned read over ``postings``, handed as an Arrow table to
+   `query._term_block_meta` — the block tables the Spark kernels
+   build from their applyInArrow input — so only block METADATA is
+   materialized eagerly (compressed bytes + per-block bounds).
+   Scoring calls the SAME kernel entry as the Spark path
+   (`query._topk_query`) over the whole index at once: with
+   ``use_wand`` the lazy block-max kernel, so a head term's tail
+   blocks are never decoded when the top-k threshold retires them
+   (Lucene-style in-list skipping — the reference's ES serving
+   analog, search/elasticsearch.go:66); without it the brute oracle.
+   One decode path and one kernel entry ⇒ rank identity between
+   serve and cluster modes is structural, and the pinned tie-break
+   (round(score,9) desc, docid asc) is replicated exactly.
    Decoded blocks persist across queries in a block-granular store
    (bounded by decoded postings, LRU by term), so warm queries
    decode nothing; raw block metadata sits in its own LRU keyed by
@@ -38,11 +41,8 @@ from __future__ import annotations
 from . import bm25
 from .hashing import term_bucket
 from .index import Manifest
-from .query import (_dense_arrays_from_tb, _term_block_meta,
-                    _topk_blockmax_lazy, _topk_from_terms, analyze_query)
-
-_POSTING_COLS = ["term", "shard", "block_id", "first_docid", "last_docid",
-                 "n_docs", "max_score_ub", "deltas", "tfs", "dls"]
+from .query import (_POSTING_COLS, _term_block_meta, _topk_query,
+                    analyze_query)
 
 
 _ARENAS_RETAINED = False
@@ -249,11 +249,9 @@ class LocalIndex:
         # the pruned read; the persistent segment store skips decode.
         missing = [t for t in live if t not in self._meta_cache]
         if missing:
-            pdf = self._blocks_for(missing)
-            if len(pdf):
-                idf_m = {t: bm25.idf(n_docs, dfs[t]) for t in missing}
-                for t, meta in _term_block_meta(pdf, idf_m).items():
-                    self._meta_cache[t] = meta
+            idf_m = {t: bm25.idf(n_docs, dfs[t]) for t in missing}
+            self._meta_cache.update(
+                _term_block_meta(self._blocks_for(missing), idf_m))
         tb_all = {}
         for t in live:
             meta = self._meta_cache.get(t)
@@ -273,18 +271,8 @@ class LocalIndex:
             req = bm25.msm_required(len(q_terms)) if min_should_match else 0
             tb = {t: tb_all[t] for t in present}
             qstats: dict = {}
-            if use_wand:
-                d, s = _topk_blockmax_lazy(tb, k + max(0, offset), req,
-                                           self.k1, self.b, avgdl,
-                                           stats=qstats, store=self._store)
-            else:
-                # brute path (the rank-identity oracle): decode-all,
-                # memoized on the cached meta entries
-                dense = _dense_arrays_from_tb(tb, self.k1, self.b, avgdl)
-                d, s = _topk_from_terms(dense, k + max(0, offset), req, False)
-                qstats = {"blocks_decoded": sum(m["ub"].size for m in tb.values()),
-                          "blocks_total": sum(m["ub"].size for m in tb.values()),
-                          "dense_bailout": True}
+            d, s = _topk_query(tb, k + max(0, offset), req, self.k1, self.b,
+                               avgdl, use_wand, stats=qstats, store=self._store)
             self.last_stats[q] = qstats
             out[q] = [(int(di), float(si))
                       for di, si in zip(d[offset:], s[offset:])]

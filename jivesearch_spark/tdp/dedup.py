@@ -152,8 +152,11 @@ def _token_hashes(toks: list[str], cache: dict) -> np.ndarray:
 
 def _arrow_utf8_view(texts):
     """(arr, data, offs): a pyarrow string Array plus zero-copy numpy
-    views of its UTF-8 data buffer (uint8) and value offsets (int64).
-    Accepts a pa.Array (mapInArrow batches), pandas Series, or list."""
+    views of its UTF-8 data (uint8) and value offsets (int64), both
+    rebased to the array's own values — a sliced array (offset != 0)
+    shares its parent's buffers, whose bytes outside the slice must
+    not reach the byte scan. Accepts a pa.Array (mapInArrow batches),
+    pandas Series, or list."""
     import pyarrow as pa
     if isinstance(texts, pa.ChunkedArray):
         texts = texts.combine_chunks()
@@ -173,7 +176,7 @@ def _arrow_utf8_view(texts):
         arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
     data = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
             else np.empty(0, dtype=np.uint8))
-    return arr, data, offs
+    return arr, data[offs[0]:offs[-1]], offs - offs[0]
 
 
 def _batch_token_hashes_slow(texts_arr, cache: dict):

@@ -51,6 +51,28 @@ def test_codec_roundtrip_property():
         assert np.array_equal(codec.varint_decode(codec.varint_encode(v), n), v)
 
 
+def test_codec_large_mixed_varint_stream():
+    """Streams of ≥ 4096 values take the run-patching decode branch:
+    mixed 1-byte and multi-byte values, adjacent multi-byte runs and a
+    multi-byte final value decode to what varint_encode was given, and
+    to what the small-stream walk decodes from the same values."""
+    rng = np.random.default_rng(17)
+    n = 9000
+    v = rng.integers(0, 128, size=n).astype(np.uint64)
+    multi = rng.random(n) < 0.1
+    v[multi] = rng.integers(128, 2**40, size=int(multi.sum()))
+    v[100:105] = [300, 2**20, 2**35, 129, 2**62]   # adjacent multi-byte run
+    v[-1] = 2**50                                   # multi-byte final value
+    buf = codec.varint_encode(v)
+    small = np.concatenate([codec.varint_decode(codec.varint_encode(c),
+                                                c.size)
+                            for c in np.array_split(v, 4)])   # < 4096 each
+    assert np.array_equal(small, v)
+    for compact in (False, True):
+        out = codec.varint_decode(buf, n, compact=compact)
+        assert np.array_equal(out.astype(np.uint64), v), compact
+
+
 def test_codec_frame_encode_equals_per_block():
     """encode_blocks_frame (vectorized whole-batch) must be
     byte-identical to per-group encode_blocks."""

@@ -30,11 +30,18 @@ def built(spark, tmp_path_factory):
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("msm", [False, True])
-def test_batch_matches_per_query(spark, built, msm):
+@pytest.mark.parametrize("msm,use_wand", [
+    pytest.param(False, True, id="False"),
+    pytest.param(True, True, id="True"),
+    pytest.param(False, False, id="False-brute"),
+    pytest.param(True, False, id="True-brute"),
+])
+def test_batch_matches_per_query(spark, built, msm, use_wand):
+    """Both kernel modes of the batch job ≡ the per-query job under the
+    pinned (-round(score, 9), docid) tie-break."""
     reader = IndexReader(spark, built)
     got = {}
-    for r in bm25_topk_batch(reader, QUERIES, 10,
+    for r in bm25_topk_batch(reader, QUERIES, 10, use_wand=use_wand,
                              min_should_match=msm).collect():
         got.setdefault(r.qid, []).append((r.docid, round(r.score, 9)))
     for qid, q in QUERIES:

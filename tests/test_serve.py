@@ -68,6 +68,12 @@ def test_serve_msm_matches_spark_path(spark, built):
         assert served == spark_rows, q
 
 
+def test_serve_k_zero_is_empty(built):
+    idx = LocalIndex(built)
+    for wand in (True, False):
+        assert idx.topk("the fast key order", k=0, use_wand=wand) == []
+
+
 def test_serve_matches_python_oracle(spark, docs, built):
     rows = {r.docid: r.text for r in docs.collect()}
     ora = oracle.SingleFieldIndex(rows)

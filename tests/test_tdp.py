@@ -52,6 +52,20 @@ def test_byte_tokenizer_identical_to_per_doc():
     assert n1 == n2 and (o1 == o2).all() and (th1 == th2).all()
 
 
+def test_batch_token_hashes_sliced_arrow_array():
+    """A sliced Arrow string array (offset != 0) shares its parent's
+    buffers; it must hash exactly like the same values built unsliced."""
+    import pyarrow as pa
+    vals = ["leading TOKENS outside", "Hello WORLD 123", "a b c", "",
+            "end-token 42", "trailing words outside"]
+    n = len(vals) - 2
+    got = dedup._batch_token_hashes(pa.array(vals).slice(1, n), {})
+    want = dedup._batch_token_hashes(pa.array(vals[1:1 + n]), {})
+    assert got[2] == want[2] == n
+    assert np.array_equal(got[1], want[1])
+    assert np.array_equal(got[0], want[0])
+
+
 def test_sketch_chunking_identical_to_minhash_sig():
     """_sketch_into (cache-resident chunked, scratch-buffer sketch)
     must be bit-identical to the reference _minhash_sig per segment —

@@ -1,9 +1,12 @@
-"""Lazy block-max WAND kernel: rank identity vs brute + decode skipping.
+"""Top-k kernels: lazy block-max rank identity vs brute, decode
+skipping, the dense-merge finisher, and k=0 / empty edge inputs.
 
-Pure-numpy tests (no Spark session) over synthetic posting frames —
-the kernel is the same code the Spark applyInPandas path runs per
-shard, so these gates are the fast inner loop of the rank-identity
-guarantee (the Spark-level gates live in test_index.py/test_serve.py).
+Pure-numpy tests (no Spark session) over synthetic postings built as
+Arrow tables with the posting schema — the same input the Spark
+applyInArrow kernels and the serving tier's pruned read hand to
+``_term_block_meta`` and ``_topk_query``, so these gates are the fast
+inner loop of the rank-identity guarantee (the Spark-level gates live
+in test_index.py/test_serve.py/test_query_batch.py).
 
 Reference parity: the reference's query path delegates top-k scoring
 to Elasticsearch/Lucene (search/elasticsearch.go:66), whose scorer is
@@ -16,7 +19,7 @@ from __future__ import annotations
 import itertools
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from jivesearch_spark import bm25, codec
@@ -24,8 +27,15 @@ from jivesearch_spark.query import _score_shard_np
 
 K1, B, AVGDL = 1.2, 0.75, 90.0
 
+#: the postings columns a Spark kernel receives (index.POSTINGS_SCHEMA)
+POSTINGS = pa.schema([
+    ("term", pa.string()), ("shard", pa.int32()), ("block_id", pa.int32()),
+    ("first_docid", pa.int64()), ("last_docid", pa.int64()),
+    ("n_docs", pa.int32()), ("max_score_ub", pa.float64()),
+    ("deltas", pa.binary()), ("tfs", pa.binary()), ("dls", pa.binary())])
 
-def _make_pdf(rng, n_docs, spec, idf, zipf=False, shards=1):
+
+def _make_tbl(rng, n_docs, spec, idf, zipf=False, shards=1):
     rows = []
     dls = rng.integers(5, 200, size=n_docs + 1)
     bounds = np.linspace(0, n_docs, shards + 1).astype(np.int64)
@@ -43,7 +53,7 @@ def _make_pdf(rng, n_docs, spec, idf, zipf=False, shards=1):
                 blk["term"] = term
                 blk["shard"] = s
                 rows.append(blk)
-    return pd.DataFrame(rows)
+    return pa.Table.from_pylist(rows, schema=POSTINGS)
 
 
 def test_lazy_kernel_rank_identical_to_brute():
@@ -54,12 +64,12 @@ def test_lazy_kernel_rank_identical_to_brute():
         spec = {f"t{i}": int(rng.integers(3, n_docs // 2))
                 for i in range(n_terms)}
         idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
-        pdf = _make_pdf(rng, n_docs, spec, idf, zipf=bool(trial % 2),
+        tbl = _make_tbl(rng, n_docs, spec, idf, zipf=bool(trial % 2),
                         shards=1 + trial % 3)
         for k, msm in itertools.product((1, 10, 137),
                                         (0, max(1, n_terms - 1), n_terms)):
-            d1, s1 = _score_shard_np(pdf, idf, K1, B, AVGDL, k, msm, True)
-            d0, s0 = _score_shard_np(pdf, idf, K1, B, AVGDL, k, msm, False)
+            d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, k, msm, True)
+            d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, k, msm, False)
             if not (np.array_equal(d1, d0)
                     and np.allclose(s1, s0, atol=1e-12)):
                 fails.append((trial, k, msm))
@@ -75,43 +85,42 @@ def test_lazy_kernel_skips_head_term_blocks():
 
     spec = {"head": n_docs // 2}
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
-    pdf = _make_pdf(rng, n_docs, spec, idf, zipf=True)
+    tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
     st = {}
-    _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 0, True, stats=st)
+    _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, True, stats=st)
     assert st["blocks_decoded"] < 0.2 * st["blocks_total"], st
 
     spec = {"head": n_docs // 2, "head2": n_docs // 3, "rare": 300}
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
-    pdf = _make_pdf(rng, n_docs, spec, idf, zipf=True)
+    tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
     st = {}
-    d1, s1 = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 0, True, stats=st)
-    d0, s0 = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 0, False)
+    d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, True, stats=st)
+    d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
     assert st["blocks_decoded"] < 0.6 * st["blocks_total"], st
 
 
 def test_lazy_kernel_empty_and_degenerate():
     rng = np.random.default_rng(3)
-    # empty frame → empty result
-    pdf = pd.DataFrame(columns=["term", "shard", "block_id", "first_docid",
-                                "last_docid", "n_docs", "max_score_ub",
-                                "deltas", "tfs", "dls"])
-    d, s = _score_shard_np(pdf, {}, K1, B, AVGDL, 10, 0, True)
-    assert d.size == 0 and s.size == 0
+    # empty table with the posting schema → empty result, both modes
+    tbl = POSTINGS.empty_table()
+    for wand in (True, False):
+        d, s = _score_shard_np(tbl, {}, K1, B, AVGDL, 10, 0, wand)
+        assert d.size == 0 and s.size == 0
     # one tiny list, k larger than the corpus
     spec = {"only": 5}
     idf = {"only": float(bm25.idf(100, 5))}
-    pdf = _make_pdf(rng, 100, spec, idf)
-    d1, s1 = _score_shard_np(pdf, idf, K1, B, AVGDL, 50, 0, True)
-    d0, s0 = _score_shard_np(pdf, idf, K1, B, AVGDL, 50, 0, False)
+    tbl = _make_tbl(rng, 100, spec, idf)
+    d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, 50, 0, True)
+    d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 50, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
     assert d1.size == 5
     # msm stricter than the number of terms → empty
     spec = {"a": 40, "b": 40}
     idf = {t: float(bm25.idf(100, 40)) for t in spec}
-    pdf = _make_pdf(rng, 100, spec, idf)
-    d1, _ = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 3, True)
-    d0, _ = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 3, False)
+    tbl = _make_tbl(rng, 100, spec, idf)
+    d1, _ = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 3, True)
+    d0, _ = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 3, False)
     assert d1.size == 0 and d0.size == 0
 
 
@@ -126,11 +135,11 @@ def test_lazy_kernel_flat_bounds_bail_to_dense():
     n_docs = 400_000
     spec = {"bob": n_docs // 4, "dylan": n_docs // 5}
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
-    pdf = _make_pdf(rng, n_docs, spec, idf, zipf=True)
+    tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
 
     st = {}
-    d1, s1 = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 0, True, stats=st)
-    d0, s0 = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 0, False)
+    d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, True, stats=st)
+    d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
     assert st.get("dense_bailout"), st
 
@@ -142,9 +151,9 @@ def test_lazy_kernel_flat_bounds_bail_to_dense():
             ts.append(time.perf_counter() - t0)
         return min(ts)
 
-    t_lazy = best_of(5, lambda: _score_shard_np(pdf, idf, K1, B, AVGDL,
+    t_lazy = best_of(5, lambda: _score_shard_np(tbl, idf, K1, B, AVGDL,
                                                 10, 0, True))
-    t_brute = best_of(5, lambda: _score_shard_np(pdf, idf, K1, B, AVGDL,
+    t_brute = best_of(5, lambda: _score_shard_np(tbl, idf, K1, B, AVGDL,
                                                  10, 0, False))
     # generous margin for shared-VM noise; the regression being guarded
     # against was ≥1.3×, and the fixed kernel measures ~0.95×
@@ -175,20 +184,20 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
             blk["term"] = term
             blk["shard"] = 0
             rows.append(blk)
-    pdf = pd.DataFrame(rows)
-    tb = _term_block_meta(pdf, idf)
+    tbl = pa.Table.from_pylist(rows, schema=POSTINGS)
+    tb = _term_block_meta(tbl, idf)
     store, st = {}, {}
     d1, s1 = _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
     assert st.get("dense_bailout"), st
     assert store == {}, "upfront bailout must precede any lazy decode"
-    d0, s0 = _score_shard_np(pdf, idf, K1, B, AVGDL, 10, 0, False)
+    d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
 
     # skewed: zipf tfs give θ separation → lazy path, blocks skipped
     spec = {"head": n_docs // 2, "rare": 200}
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
-    pdf = _make_pdf(rng, n_docs, spec, idf, zipf=True)
-    tb = _term_block_meta(pdf, idf)
+    tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
+    tb = _term_block_meta(tbl, idf)
     store, st = {}, {}
     _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
     assert not st.get("dense_bailout"), st
@@ -205,10 +214,10 @@ def test_lazy_kernel_paging_window(offset_k):
     n_docs = 5000
     spec = {"x": 900, "y": 400, "z": 60}
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
-    pdf = _make_pdf(rng, n_docs, spec, idf, zipf=True)
+    tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
     kk = offset + k
-    d1, s1 = _score_shard_np(pdf, idf, K1, B, AVGDL, kk, 0, True)
-    d0, s0 = _score_shard_np(pdf, idf, K1, B, AVGDL, kk, 0, False)
+    d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, kk, 0, True)
+    d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, kk, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
 
 
@@ -235,10 +244,10 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
                                    avgdl=avgdl):
         blk["term"] = "bob"
         rows.append(blk)
-    pdf = pd.DataFrame(rows)
+    tbl = pa.Table.from_pylist(rows)
 
     def topk(scale_ub):
-        tb = _term_block_meta(pdf, {"bob": idf * boost})
+        tb = _term_block_meta(tbl, {"bob": idf * boost})
         for meta in tb.values():
             meta["avgdl"] = avgdl
             if scale_ub:
@@ -247,7 +256,7 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
         d, s = _topk_blockmax_lazy(tb, 10, 0, k1, b, avgdl, stats=st)
         return list(zip(d.tolist(), np.round(s, 6).tolist())), st
 
-    tb = _term_block_meta(pdf, {"bob": idf * boost})
+    tb = _term_block_meta(tbl, {"bob": idf * boost})
     for meta in tb.values():
         meta["avgdl"] = avgdl
     want = _topk_impact_ordered(_dense_arrays_from_tb(tb, k1, b, avgdl), 10, 0)
@@ -271,8 +280,7 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
 def _dense_from_lists(lists):
     """{term: (docids, scores)} → the _topk_dense_merge input shape."""
     return {t: {"docids": np.asarray(d, dtype=np.int64),
-                "scores": np.asarray(s, dtype=np.float64),
-                "max_ub": float(np.max(s)) if len(s) else 0.0}
+                "scores": np.asarray(s, dtype=np.float64)}
             for t, (d, s) in lists.items()}
 
 
@@ -293,15 +301,15 @@ def _merge_cases(rng, n_docs, id_stride):
 @pytest.mark.parametrize("id_stride", [1, 10**9])
 @pytest.mark.parametrize("msm", [0, 3])
 def test_dense_merge_matches_brute(id_stride, msm):
-    """_topk_dense_merge ≡ _topk_from_terms on both branches (dense
+    """_topk_dense_merge ≡ _topk_brute on both branches (dense
     scatter for small spans, (docid, term)-lexsort + reduceat for
     sparse/re-id'd spaces), with and without minimum-should-match."""
-    from jivesearch_spark.query import _topk_dense_merge, _topk_from_terms
+    from jivesearch_spark.query import _topk_brute, _topk_dense_merge
     rng = np.random.default_rng(11)
     for trial in range(10):
         dense = _dense_from_lists(_merge_cases(rng, 3000, id_stride))
         got = _topk_dense_merge(dense, 10, msm)
-        want = _topk_from_terms(dense, 10, msm, False)
+        want = _topk_brute(dense, 10, msm)
         assert got[0].tolist() == want[0].tolist(), trial
         assert all(float(a) == float(b)
                    for a, b in zip(got[1], want[1])), trial
@@ -311,10 +319,10 @@ def test_dense_merge_theta_bound_exact():
     """theta (a valid k-th-best lower bound) must not change the
     result — including a too-tight theta, which the widen guard
     recovers from, and the rounded-tie slack at the pool boundary."""
-    from jivesearch_spark.query import _topk_dense_merge, _topk_from_terms
+    from jivesearch_spark.query import _topk_brute, _topk_dense_merge
     rng = np.random.default_rng(12)
     dense = _dense_from_lists(_merge_cases(rng, 3000, 1))
-    want = _topk_from_terms(dense, 10, 0, False)
+    want = _topk_brute(dense, 10, 0)
     kth = float(np.min(want[1]))
     for theta in (-np.inf, 0.0, kth / 2, kth, kth - 1e-10):
         got = _topk_dense_merge(dense, 10, 0, theta=theta)
@@ -339,3 +347,21 @@ def test_dense_merge_fewer_than_k_and_empty():
     assert d.tolist() == [9]
     d, s = _topk_dense_merge({}, 10, 0)
     assert d.size == 0
+
+
+def test_k_zero_is_empty():
+    """k=0 answers empty on every path instead of raising from the
+    top-k selection (np.partition with an out-of-bounds kth)."""
+    from jivesearch_spark.query import _topk_brute, _topk_dense_merge
+    rng = np.random.default_rng(21)
+    spec = {"x": 900, "y": 400, "z": 60}
+    idf = {t: float(bm25.idf(5000, d)) for t, d in spec.items()}
+    tbl = _make_tbl(rng, 5000, spec, idf, zipf=True)
+    for wand in (True, False):
+        for msm in (0, 2):
+            d, s = _score_shard_np(tbl, idf, K1, B, AVGDL, 0, msm, wand)
+            assert d.size == 0 and s.size == 0, (wand, msm)
+    dense = _dense_from_lists({"a": (np.arange(20), np.linspace(1, 2, 20))})
+    for fn in (_topk_brute, _topk_dense_merge):
+        d, s = fn(dense, 0, 0)
+        assert d.size == 0 and s.size == 0, fn
