@@ -1252,7 +1252,7 @@ def main():
 
     local = LocalIndex(f"{WORK}/idx_high")
     local.result_cache_enabled = False  # kernel latency, not memo hits
-    local.topk("warm up", 10)  # untimed: open datasets, prime caches
+    local.topk("warm up", 10)  # untimed: prime caches
     serve_lat = []
     for name, q in BENCH_QUERIES:
         lats = []

@@ -28,8 +28,8 @@ Query modes:
   (field, term) once, scoring = Σ boost_f · bm25_f, cross-field MSM
   (distinct base terms matched in ANY unigram field), tld bonus added
   after the MSM filter exactly like the reference's should-clause.
-- ``FieldedLocalIndex.topk`` — the serving-tier flavor (pyarrow pruned
-  reads, no Spark job), same kernel.
+- ``FieldedLocalIndex.topk`` — the serving-tier flavor (open-once
+  `index.TermFiles` pruned reads, no Spark job), same kernel.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from . import analyze, bm25
 from .hashing import term_bucket
-from .index import IndexParams, Manifest, assign_doc_ids, build_index
+from .index import IndexParams, Manifest, TermFiles, assign_doc_ids, build_index
 from .query import (_POSTING_COLS, _dense_arrays_from_tb, _pinned_topk,
                     _term_block_meta, _topk_blockmax_lazy, _topk_table)
 from .session import ensure_shipped
@@ -338,31 +338,20 @@ class FieldedLocalIndex:
     """Serving-tier fielded queries (no Spark job)."""
 
     def __init__(self, root: str):
-        import pyarrow.dataset as ds
         self.root = root
         with open(os.path.join(root, "fielded.json")) as f:
             self.meta = json.load(f)
         self.fields = {f["name"]: f for f in self.meta["fields"]}
-        part = ds.partitioning(flavor="hive")
-        self.man: dict[str, Manifest] = {}
-        self._post = {}
-        self._stats = {}
-        for name in list(self.fields) + [TLD_FIELD]:
-            d = os.path.join(root, "fields", name)
-            self.man[name] = Manifest.load(d)
-            # zero-posting field (e.g. all-null tld) writes no postings
-            # dir; _query_plan never selects such a field (df=0), so a
-            # None dataset is never dereferenced
-            p = f"{d}/postings"
-            self._post[name] = (ds.dataset(p, partitioning=part)
-                                if os.path.isdir(p) else None)
-            s = f"{d}/term_stats"
-            has_stats = os.path.isdir(s) and any(
-                fn.endswith(".parquet")
-                for _, _, fns in os.walk(s) for fn in fns)
-            self._stats[name] = (ds.dataset(s, partitioning=part)
-                                 if has_stats else None)
+        names = list(self.fields) + [TLD_FIELD]
+        self.man: dict[str, Manifest] = {
+            n: Manifest.load(os.path.join(root, "fields", n)) for n in names}
         self.n_buckets = self.man[TLD_FIELD].params["n_buckets"]
+        # a zero-posting field (all-null tld) has no files: reads empty
+        self._post = {n: TermFiles(os.path.join(root, "fields", n, "postings"),
+                                   self.n_buckets) for n in names}
+        self._stats = {n: TermFiles(os.path.join(root, "fields", n, "term_stats"),
+                                    self.n_buckets) for n in names}
+        self._reads: dict[str, int] = {}    # this kernel run's reads
         self._urls = None
         self._df_cache: dict[tuple[str, str], int] = {}
         # two-level cache, same pattern as serve.LocalIndex: raw
@@ -378,7 +367,7 @@ class FieldedLocalIndex:
         # incremental eviction accounting (see serve.LocalIndex._evict)
         self._cost: dict[tuple[str, str], int] = {}
         self._cost_total = 0
-        #: kernel stats of the last topk call
+        #: kernel stats of the last topk call (+ its pruned reads)
         self.last_stats: dict = {}
         # exact result cache over the immutable snapshot (see
         # serve.LocalIndex: the reference's frontend result cache,
@@ -393,19 +382,10 @@ class FieldedLocalIndex:
         self.result_cache_enabled = True
 
     def stats_for(self, field: str, terms: list[str]) -> dict[str, int]:
-        import pyarrow.dataset as ds
         missing = [t for t in terms if (field, t) not in self._df_cache]
         if missing:
-            if self._stats[field] is None:       # zero-token field
-                found = {}
-            else:
-                bks = sorted({term_bucket(t, self.n_buckets) for t in missing})
-                flt = (ds.field("bucket").isin(bks)
-                       & ds.field("term").isin(missing))
-                tbl = self._stats[field].to_table(filter=flt,
-                                                  columns=["term", "df"])
-                found = dict(zip(tbl["term"].to_pylist(),
-                                 tbl["df"].to_pylist()))
+            tbl = self._stats[field].read(missing, ["term", "df"], self._reads)
+            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
             for t in missing:
                 self._df_cache[(field, t)] = int(found.get(t, 0))
         return {t: self._df_cache[(field, t)] for t in terms
@@ -450,7 +430,7 @@ class FieldedLocalIndex:
 
     def _topk_kernel(self, query, k, shingles, tld_boost,
                      min_should_match, offset, use_wand):
-        import pyarrow.dataset as ds
+        self._reads = {"terms_read": 0, "row_groups_read": 0}
         plan = _query_plan(self, query, tld_boost)
         if plan is None:
             return []
@@ -474,13 +454,9 @@ class FieldedLocalIndex:
         for name, spec in specs.items():
             missing = [t for t in spec["terms"]
                        if (name, t) not in self._meta_cache]
-            if missing and self._post[name] is not None:
-                bks = sorted({term_bucket(t, self.n_buckets)
-                              for t in missing})
-                flt = (ds.field("bucket").isin(bks)
-                       & ds.field("term").isin(missing))
-                tbl = self._post[name].to_table(filter=flt,
-                                                columns=_POSTING_COLS)
+            if missing:
+                tbl = self._post[name].read(missing, _POSTING_COLS,
+                                            self._reads)
                 for t, meta in _field_meta(tbl, spec).items():
                     self._meta_cache[(name, t)] = meta
             for t in spec["terms"]:
@@ -508,7 +484,7 @@ class FieldedLocalIndex:
         def dense_score(dense):
             return _score_from_arrays(dense, plan, k + max(0, offset), req)
 
-        self.last_stats = {}
+        self.last_stats = dict(self._reads)
         if use_wand:
             docids, scores = _topk_blockmax_lazy(
                 tb, k + max(0, offset), req, k1, b, 1.0,

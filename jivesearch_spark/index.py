@@ -59,6 +59,9 @@ POSTINGS_SCHEMA = (
     "last_docid long, n_docs int, max_score_ub double, "
     "deltas binary, tfs binary, dls binary")
 TERM_STATS_SCHEMA = "term string, df long, cf long, bucket int"
+#: column -> Arrow type of those schemas (TermFiles' read of no files)
+_ARROW_TYPES = {n: {"int": "int32", "long": "int64"}.get(t, t) for n, t in (
+    c.split() for c in f"{POSTINGS_SCHEMA}, {TERM_STATS_SCHEMA}".split(","))}
 
 
 @dataclass
@@ -738,6 +741,70 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
         except Exception:
             pass
     return man
+
+
+class TermFiles:
+    """Reader of one term-bucketed file set build_index writes
+    (``postings`` or ``term_stats``: term-sorted ``bucket=N/*.parquet``).
+    Each file is opened once and each row group's ``term`` min/max kept
+    from its footer, so a read touches only the row groups that can
+    hold a wanted term — no per-call dataset planning or footer re-read.
+    Not memory-mapped, so reads stay visible in the process's IO counters."""
+
+    def __init__(self, root: str, n_buckets: int):
+        import glob
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        self.n_buckets = n_buckets
+        #: bucket -> [(file, [(min term, max term) | None per row group])]
+        self._files: dict[int, list] = {}
+        schema = pa.schema([(c, pa.type_for_alias(t))
+                            for c, t in _ARROW_TYPES.items()])
+        for path in sorted(glob.glob(os.path.join(root, "bucket=*", "*.parquet"))):
+            pf = pq.ParquetFile(path)
+            schema = pf.schema_arrow
+            col = schema.get_field_index("term")
+            sts = (pf.metadata.row_group(i).column(col).statistics
+                   for i in range(pf.num_row_groups))
+            ranges = [(st.min, st.max) if st is not None and st.has_min_max
+                      else None for st in sts]
+            bucket = int(os.path.basename(os.path.dirname(path))[len("bucket="):])
+            self._files.setdefault(bucket, []).append((pf, ranges))
+        self._empty = schema.empty_table()   # what a read of no match returns
+
+    def read(self, terms, columns: list[str], stats: dict | None = None):
+        """Rows of ``terms`` with ``columns`` (which include ``term``) as
+        an Arrow table, empty when no file holds them. ``stats``
+        accumulates ``terms_read`` and ``row_groups_read``."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from .hashing import term_bucket
+        want = sorted(set(terms))
+        by_bucket: dict[int, list] = {}
+        for t in want:
+            by_bucket.setdefault(term_bucket(t, self.n_buckets), []).append(t)
+        parts, n_groups = [], 0
+        for bucket, ts in by_bucket.items():
+            for pf, ranges in self._files.get(bucket, ()):
+                # a group holds a wanted term iff the first term ≥ its
+                # min is ≤ its max; a group without statistics is read
+                groups = [i for i, r in enumerate(ranges) if r is None or (
+                    (j := bisect.bisect_left(ts, r[0])) < len(ts)
+                    and ts[j] <= r[1])]
+                if groups:
+                    parts.append(pf.read_row_groups(groups, columns=columns,
+                                                    use_threads=False))
+                    n_groups += len(groups)
+        if stats is not None:
+            stats["terms_read"] = stats.get("terms_read", 0) + len(want)
+            stats["row_groups_read"] = stats.get("row_groups_read", 0) + n_groups
+        if not parts:
+            return self._empty.select(columns)
+        tbl = pa.concat_tables(parts)
+        return tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(want, pa.string())))
 
 
 # ---------------------------------------------------------------------------

@@ -7,11 +7,12 @@ The reference serves queries from Elasticsearch at millisecond latency
 scheduling. Spark builds the index; serving a top-k query is a pruned
 read of a few posting lists. This module is that read path:
 
-1. ``term_stats`` lookup via a pyarrow dataset filter
-   (``bucket IN buckets(Q) AND term IN Q``): hive partition pruning
-   on ``bucket`` + parquet row-group min/max pruning on ``term`` —
-   IO per query is O(|Q| posting lists) regardless of corpus size.
-2. same pruned read over ``postings``, handed as an Arrow table to
+1. ``term_stats`` lookup through `index.TermFiles`, which opens each
+   ``bucket=N`` file once and keeps its row groups' ``term`` min/max:
+   a first-seen term reads only the row groups whose range holds it,
+   with no per-query dataset planning or footer re-read — IO per
+   query is O(|Q| posting lists) regardless of corpus size.
+2. the same pruned read over ``postings``, handed as an Arrow table to
    `query._term_block_meta` — the block tables the Spark kernels
    build from their applyInArrow input — so only block METADATA is
    materialized eagerly (compressed bytes + per-block bounds).
@@ -39,8 +40,7 @@ path (`query.bm25_topk_indexed`) remains the batch/analytics flavor.
 from __future__ import annotations
 
 from . import bm25
-from .hashing import term_bucket
-from .index import Manifest
+from .index import Manifest, TermFiles
 from .query import (_POSTING_COLS, _term_block_meta, _topk_query,
                     analyze_query)
 
@@ -90,7 +90,6 @@ class LocalIndex:
     """Driver/serving-process handle on an on-disk index."""
 
     def __init__(self, root: str):
-        import pyarrow.dataset as ds
         _retain_malloc_arenas()
         self.root = root
         self.man = Manifest.load(root)
@@ -99,9 +98,8 @@ class LocalIndex:
         self.n_buckets = self.man.params["n_buckets"]
         self.k1 = self.man.params["k1"]
         self.b = self.man.params["b"]
-        part = ds.partitioning(flavor="hive")
-        self._postings = ds.dataset(f"{root}/postings", partitioning=part)
-        self._stats = ds.dataset(f"{root}/term_stats", partitioning=part)
+        self._postings = TermFiles(f"{root}/postings", self.n_buckets)
+        self._stats = TermFiles(f"{root}/term_stats", self.n_buckets)
         self._df_cache: dict[str, int] = {}
         # two-level cache (the serving analog of the reference's
         # result cache, frontend/search.go:439-453 — ours caches the
@@ -122,7 +120,8 @@ class LocalIndex:
         self._cost: dict[str, int] = {}
         self._cost_total = 0
         #: per-query kernel stats of the LAST topk/topk_batch call:
-        #: {query: {"blocks_decoded", "blocks_total", ...}}
+        #: {query: {"blocks_decoded", "blocks_total", ..., and the
+        #: batch's pruned reads "terms_read", "row_groups_read"}}
         self.last_stats: dict[str, dict] = {}
         # EXACT result cache — the serving analog of the reference's
         # frontend result cache (frontend/search.go:439-453, 1 h TTL
@@ -144,30 +143,15 @@ class LocalIndex:
         self.result_cache_enabled = True
 
     # -- lookups ----------------------------------------------------------
-    def buckets_of(self, terms: list[str]) -> list[int]:
-        return sorted({term_bucket(t, self.n_buckets) for t in terms})
-
-    def stats_for(self, terms: list[str]) -> dict[str, int]:
+    def stats_for(self, terms: list[str],
+                  stats: dict | None = None) -> dict[str, int]:
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            import pyarrow.dataset as ds
-            flt = (ds.field("bucket").isin(self.buckets_of(missing))
-                   & ds.field("term").isin(missing))
-            tbl = self._stats.to_table(filter=flt, columns=["term", "df"])
+            tbl = self._stats.read(missing, ["term", "df"], stats)
             found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
             for t in missing:
                 self._df_cache[t] = int(found.get(t, 0))
         return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
-
-    def _blocks_for(self, terms: list[str]):
-        import pyarrow.dataset as ds
-        flt = (ds.field("bucket").isin(self.buckets_of(terms))
-               & ds.field("term").isin(terms))
-        # Arrow table straight through: _term_block_meta groups it
-        # natively and keeps block bytes as lazy column views, so the
-        # cold path never pays a pandas conversion for postings whose
-        # blocks it ends up skipping
-        return self._postings.to_table(filter=flt, columns=_POSTING_COLS)
 
     # -- query ------------------------------------------------------------
     def topk(self, query: str, k: int = 10, use_wand: bool = True,
@@ -237,7 +221,8 @@ class LocalIndex:
         all_terms = sorted({t for ts in analyzed.values() for t in ts})
         if not all_terms:
             return {q: [] for q in queries}
-        dfs = self.stats_for(all_terms)
+        reads = {"terms_read": 0, "row_groups_read": 0}  # df + postings
+        dfs = self.stats_for(all_terms, reads)
         live = [t for t in all_terms if t in dfs]
         n_docs, avgdl = self.man.n_docs, self.man.avgdl
 
@@ -250,8 +235,8 @@ class LocalIndex:
         missing = [t for t in live if t not in self._meta_cache]
         if missing:
             idf_m = {t: bm25.idf(n_docs, dfs[t]) for t in missing}
-            self._meta_cache.update(
-                _term_block_meta(self._blocks_for(missing), idf_m))
+            self._meta_cache.update(_term_block_meta(
+                self._postings.read(missing, _POSTING_COLS, reads), idf_m))
         tb_all = {}
         for t in live:
             meta = self._meta_cache.get(t)
@@ -270,7 +255,7 @@ class LocalIndex:
                 continue
             req = bm25.msm_required(len(q_terms)) if min_should_match else 0
             tb = {t: tb_all[t] for t in present}
-            qstats: dict = {}
+            qstats = dict(reads)
             d, s = _topk_query(tb, k + max(0, offset), req, self.k1, self.b,
                                avgdl, use_wand, stats=qstats, store=self._store)
             self.last_stats[q] = qstats

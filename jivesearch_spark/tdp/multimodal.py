@@ -394,15 +394,16 @@ def safe_filter(decoded: DataFrame, threshold: float = 0.5,
     """Reference safe-search predicate (image/elasticsearch.go:26-58):
     safe ⇒ nsfw_score < threshold, unsafe ⇒ ≥ threshold.
 
-    Refuses fiction by default: when ``decoded`` carries the
-    ``nsfw_model`` provenance column (everything out of decode_media
-    does) and no real classifier produced the scores, this raises
-    instead of silently filtering on digest noise. Pass
-    ``allow_stub_scores=True`` to opt in (tests / plumbing checks)."""
-    if not allow_stub_scores and "nsfw_model" in decoded.columns:
+    Refuses fiction by default: when some row's ``nsfw_model``
+    provenance is ``NSFW_MODEL_STUB`` (decode_media stamps it until a
+    real classifier is wired in), this raises instead of silently
+    filtering on digest noise. Pass ``allow_stub_scores=True`` to opt
+    in (tests / plumbing checks)."""
+    if not allow_stub_scores and "nsfw_model" in decoded.columns and not (
+            decoded.where(F.col("nsfw_model") == NSFW_MODEL_STUB).isEmpty()):
         raise ValueError(
-            "nsfw_score values are stub (nsfw_model column present — "
-            f"decode_media stamps '{NSFW_MODEL_STUB}' until a real "
+            "nsfw_score values are stub (nsfw_model is "
+            f"'{NSFW_MODEL_STUB}' — decode_media stamps it until a real "
             "classifier is wired in); filtering on them is noise. Pass "
             "allow_stub_scores=True to proceed anyway.")
     cond = F.col("nsfw_score") < threshold if safe else F.col("nsfw_score") >= threshold

@@ -11,7 +11,7 @@ from jivesearch_spark.extract import extract_page
 from jivesearch_spark.fielded import (FieldedLocalIndex, FieldedReader,
                                       bm25_fielded_indexed,
                                       build_fielded_index)
-from jivesearch_spark.index import IndexParams
+from jivesearch_spark.index import IndexParams, TermFiles
 from jivesearch_spark.queries import QUERY_SET
 
 N_DOCS = 600
@@ -129,16 +129,16 @@ def test_fielded_serving_bounds_carry_field_boost(roots):
     import numpy as np
     import pyarrow.dataset as pads
 
-    idx = FieldedLocalIndex(roots[None])
+    root = roots[None]
+    idx = FieldedLocalIndex(root)
     idx.topk("bob dylan guitar", k=10, use_wand=True)
     assert idx._meta_cache, "query should have populated the tb cache"
     checked = 0
     for (field, term), meta in idx._meta_cache.items():
         # tld key scores with boost 1.0 (fielded.py _query_plan)
         boost = idx.fields[field]["boost"] if field in idx.fields else 1.0
-        dset = idx._post[field]
-        if dset is None:
-            continue
+        dset = pads.dataset(f"{root}/fields/{field}/postings",
+                            partitioning="hive")
         pdf = dset.to_table(
             filter=pads.field("term") == term,
             columns=["shard", "block_id", "max_score_ub"]).to_pandas()
@@ -151,7 +151,7 @@ def test_fielded_serving_bounds_carry_field_boost(roots):
 
 
 @pytest.mark.spark
-def test_fielded_tld_only_bail_charges_cache(roots):
+def test_fielded_tld_only_bail_charges_cache(roots, tmp_path):
     """A query whose only retrievable block tables are TLD entries
     bails with [] — but the entries it parked in _meta_cache must be
     charged to the incremental eviction accounting, or a long-running
@@ -161,13 +161,30 @@ def test_fielded_tld_only_bail_charges_cache(roots):
             if idx.stats_for("tld", [t])]
     assert tlds, "fixture corpus should have at least one known tld"
     # postings-less text fields are a constructor-supported state
-    # (zero-posting fields write no postings dir); forcing it routes
-    # the query to the tld-only early return
+    # (zero-posting fields write no postings dir, and their reader
+    # reads empty); forcing it routes the query to the tld-only
+    # early return
     for name in idx.fields:
-        idx._post[name] = None
+        idx._post[name] = TermFiles(str(tmp_path / "no_postings"),
+                                    idx.n_buckets)
     assert idx.topk("bob dylan", k=5, tld_boost=tlds[0]) == []
     parked = [k for k in idx._meta_cache if k[0] == "tld"]
     assert parked, "tld block table should have been cached"
     assert all(k in idx._cost for k in parked)
     assert idx._cost_total == sum(idx._cost.values())
     assert idx._cost_total > 0
+
+
+@pytest.mark.spark
+def test_fielded_last_stats_count_pruned_reads(roots):
+    """The fielded tier reports its pruned reads like serve.LocalIndex:
+    a cold query reads row groups, the same terms warm read none."""
+    idx = FieldedLocalIndex(roots[None])
+    idx.result_cache_enabled = False
+    idx.topk("bob dylan guitar", k=10)
+    cold = idx.last_stats
+    assert cold["terms_read"] > 0 and cold["row_groups_read"] > 0
+    assert "blocks_decoded" in cold
+    idx.topk("bob dylan guitar", k=10)
+    warm = idx.last_stats
+    assert warm["terms_read"] == 0 and warm["row_groups_read"] == 0

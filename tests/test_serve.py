@@ -222,3 +222,131 @@ def test_result_cache_exact_and_bounded(built):
     assert len(idx._result_cache) <= 4
     q_last, off_last = list(want)[-1]
     assert idx.topk(q_last, 10, offset=off_last) == want[(q_last, off_last)]
+
+
+#: non-ASCII terms of the row-group fixture (the standard analyzer
+#: never produces them; the fixture indexes pre-tokenized docs)
+NON_ASCII = ["café", "naïve", "日本語", "straße", "ünïcödé"]
+
+
+@pytest.fixture(scope="module")
+def built_small_rg(spark, tmp_path_factory):
+    """A wide-vocabulary index written in tiny row groups, so every
+    bucket file holds several and pruning by the footer's term ranges
+    really skips some (the sf0.001 docs have too few terms for that)."""
+    import random
+
+    rng = random.Random(4)
+    vocab = [f"t{i:04d}" for i in range(3000)]
+    rows = [(d, [vocab[min(int(rng.paretovariate(1.0)) - 1, 2999)]
+                 for _ in range(10)] + rng.sample(vocab, 30)
+             + [NON_ASCII[d % len(NON_ASCII)]])
+            for d in range(600)]
+    docs = spark.createDataFrame(rows, "docid long, toks array<string>")
+    root = str(tmp_path_factory.mktemp("serve_index") / "small_rg")
+    params = IndexParams(docs_per_shard=100, n_buckets=8, bucket_batch=4,
+                         row_group_bytes=4096)
+    build_index(docs, root, params, url_col=None, toks_col="toks",
+                log=lambda *a: None)
+    return root
+
+
+def _sorted_rows(tbl):
+    return tbl.sort_by([(c, "ascending") for c in ("term", "shard", "block_id")
+                        if c in tbl.column_names]).to_pylist()
+
+
+def test_term_files_match_dataset_scan(built_small_rg):
+    """`index.TermFiles.read` returns exactly the rows of the
+    pyarrow.dataset bucket+term filter it replaced, for terms present,
+    absent, spread over buckets, non-ASCII and at row-group edges."""
+    import glob
+    import os
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from jivesearch_spark.hashing import term_bucket
+    from jivesearch_spark.index import TermFiles
+    from jivesearch_spark.query import _POSTING_COLS
+
+    n = PARAMS.n_buckets
+    for sub, cols in (("postings", _POSTING_COLS),
+                      ("term_stats", ["term", "df", "cf"])):
+        path = os.path.join(built_small_rg, sub)
+        edges, n_groups, split = set(), 0, False
+        for f in glob.glob(f"{path}/bucket=*/*.parquet"):
+            md = pq.ParquetFile(f).metadata
+            col = md.schema.names.index("term")
+            bounds = [(md.row_group(i).column(col).statistics.min,
+                       md.row_group(i).column(col).statistics.max)
+                      for i in range(md.num_row_groups)]
+            edges.update(t for b in bounds for t in b)
+            n_groups += len(bounds)
+            split |= any(a[1] == b[0] for a, b in zip(bounds, bounds[1:]))
+        assert n_groups >= 3 * n, (sub, n_groups)
+        if sub == "postings":
+            assert split, "some term's rows should straddle two row groups"
+        dset = ds.dataset(path, partitioning="hive")
+        vocab = sorted(dset.to_table(columns=["term"])["term"].unique()
+                       .to_pylist())
+        edges = sorted(edges)
+        cases = [
+            [vocab[0]], [vocab[-1]], vocab[::37],
+            edges, edges[::3] + ["zzz-absent", "aaa-absent"],
+            NON_ASCII, NON_ASCII + ["é-absent", "日本"],
+            ["zzz-absent"],
+        ]
+        assert len({term_bucket(t, n) for t in vocab[::37]}) > 1
+        files = TermFiles(path, n)
+        for terms in cases:
+            stats = {}
+            got = files.read(terms, cols, stats)
+            flt = (ds.field("bucket").isin(sorted({term_bucket(t, n)
+                                                   for t in terms}))
+                   & ds.field("term").isin(terms))
+            want = dset.to_table(filter=flt, columns=cols)
+            assert got.schema == want.schema, (sub, terms)
+            assert _sorted_rows(got) == _sorted_rows(want), (sub, terms)
+            assert stats["terms_read"] == len(set(terms))
+            if len(terms) == 1:   # pruning skips the bucket's other groups
+                assert stats["row_groups_read"] <= 2, (sub, terms, stats)
+        assert all(t in vocab for t in NON_ASCII)
+        none = files.read([], cols)
+        assert none.num_rows == 0 and none.schema == want.schema
+
+    missing = TermFiles(os.path.join(built_small_rg, "no_such_dir"), n)
+    empty = missing.read(["café", "spark"], ["term", "df"])
+    assert empty.num_rows == 0 and empty.column_names == ["term", "df"]
+    assert empty.schema.types == TermFiles(
+        os.path.join(built_small_rg, "term_stats"), n).read(
+            ["café"], ["term", "df"]).schema.types
+
+
+@pytest.mark.spark
+def test_small_row_groups_serve_matches_spark_path(spark, built_small_rg):
+    """Row-group pruning changes which bytes are read, never the
+    answer: over several row groups per bucket file the served top-k
+    still equals the Spark path's."""
+    reader = IndexReader(spark, built_small_rg)
+    idx = LocalIndex(built_small_rg)
+    for q in ["t0000", "t0001 t0002 t0007", "t0040 t0300 t2999", "t0013 zzz",
+              "zzz"]:
+        spark_rows = [(r.docid, round(r.score, 9)) for r in
+                      bm25_topk_indexed(reader, q, 10).collect()]
+        assert [(d, round(s, 9)) for d, s in idx.topk(q, 10)] == spark_rows, q
+
+
+def test_last_stats_count_pruned_reads(built):
+    """Every kernel-run query reports the batch's pruned reads: a cold
+    query reads row groups, the same terms warm read none."""
+    idx = LocalIndex(built)
+    idx.result_cache_enabled = False
+    q = "spark group query"
+    idx.topk(q, 10)
+    cold = idx.last_stats[q]
+    assert cold["terms_read"] > 0 and cold["row_groups_read"] > 0
+    assert "blocks_decoded" in cold
+    idx.topk(q, 10)
+    warm = idx.last_stats[q]
+    assert warm["terms_read"] == 0 and warm["row_groups_read"] == 0

@@ -370,6 +370,16 @@ def test_multimodal_stub_plumbing(spark):
     safe = multimodal.safe_filter(dec, threshold=1.1, safe=True,
                                   allow_stub_scores=True)
     assert safe.count() == 4
+    # a real classifier's model name filters without the opt-in; one
+    # stub-stamped row among them still refuses
+    real = dec.withColumn("nsfw_model", F.when(
+        F.col("nsfw_model").isNotNull(), F.lit("nsfw-net-v2")))
+    assert multimodal.safe_filter(real, threshold=1.1, safe=True).count() == 4
+    mixed = real.withColumn("nsfw_model", F.when(
+        F.col("media_id") == 1, F.lit(multimodal.NSFW_MODEL_STUB))
+        .otherwise(F.col("nsfw_model")))
+    with pytest.raises(ValueError, match="stub"):
+        multimodal.safe_filter(mixed, threshold=1.1, safe=True)
 
 
 def _minimal_png(w: int, h: int) -> bytes:
