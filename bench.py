@@ -1235,11 +1235,11 @@ def main():
     # ---- serving-tier replay (driver-side pruned reads, no Spark job;
     # the reference's ES-lookup analog). Rank identity with the Spark
     # path is a pytest gate (tests/test_serve.py).
-    from jivesearch_spark.serve import LocalIndex
+    from jivesearch_spark.serve import LocalIndex, ResultCache
     # cold-pass skip evidence: fraction of posting blocks the lazy
     # kernel actually decoded across the query set, fresh caches
     cold_li = LocalIndex(f"{WORK}/idx_high")
-    cold_li.result_cache_enabled = False  # measure the kernel, not memo
+    cold_li.results.max_tuples = 0  # measure the kernel, not memo
     dec = tot = 0
     for name, q in BENCH_QUERIES:
         t0 = time.time()
@@ -1251,7 +1251,7 @@ def main():
     results["serve_cold_blocks_decoded_pct"] = round(100 * dec / max(tot, 1), 1)
 
     local = LocalIndex(f"{WORK}/idx_high")
-    local.result_cache_enabled = False  # kernel latency, not memo hits
+    local.results.max_tuples = 0  # kernel latency, not memo hits
     local.topk("warm up", 10)  # untimed: prime caches
     serve_lat = []
     for name, q in BENCH_QUERIES:
@@ -1290,7 +1290,7 @@ def main():
     # frontend/search.go:439-453, exact here because the snapshot is
     # immutable; hit ≡ recompute is a pytest gate). Hot repeated
     # queries — the real head of a query log — serve at memo speed.
-    local.result_cache_enabled = True
+    local.results = ResultCache()
     local.topk_batch(qs_only, 10, use_wand=True)  # populate
     t0 = time.time()
     for _ in range(reps_qps):

@@ -29,7 +29,8 @@ Query modes:
   (distinct base terms matched in ANY unigram field), tld bonus added
   after the MSM filter exactly like the reference's should-clause.
 - ``FieldedLocalIndex.topk`` — the serving-tier flavor (open-once
-  `index.TermFiles` pruned reads, no Spark job), same kernel.
+  `index.TermFiles` pruned reads, no Spark job), same kernel, same
+  `serve.TermCache` / `serve.ResultCache` as `serve.LocalIndex`.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from .hashing import term_bucket
 from .index import IndexParams, Manifest, TermFiles, assign_doc_ids, build_index
 from .query import (_POSTING_COLS, _dense_arrays_from_tb, _pinned_topk,
                     _term_block_meta, _topk_blockmax_lazy, _topk_table)
+from .serve import ResultCache, TermCache
 from .session import ensure_shipped
 
 #: (field, source column, boost, shingle?) — search/elasticsearch.go:35-47
@@ -351,40 +353,19 @@ class FieldedLocalIndex:
                                    self.n_buckets) for n in names}
         self._stats = {n: TermFiles(os.path.join(root, "fields", n, "term_stats"),
                                     self.n_buckets) for n in names}
-        self._reads: dict[str, int] = {}    # this kernel run's reads
+        #: the last topk call's pruned reads, term-cache counters and
+        #: kernel stats
+        self.last_stats: dict = {}
         self._urls = None
         self._df_cache: dict[tuple[str, str], int] = {}
-        # two-level cache, same pattern as serve.LocalIndex: raw
-        # per-(field, term) block tables (compressed bytes + bounds,
-        # w pre-multiplied ×idf×boost and per-field avgdl pinned on
-        # the entry — all constants of the index) in an LRU, plus the
-        # lazy kernel's persistent decoded-block store so warm terms
-        # skip read AND decode at block granularity
-        from collections import OrderedDict
-        self._meta_cache: "OrderedDict[tuple[str, str], dict]" = OrderedDict()
-        self._store: dict[tuple[str, str], dict] = {}
-        self.arr_cache_max_postings = 16_000_000
-        # incremental eviction accounting (see serve.LocalIndex._evict)
-        self._cost: dict[tuple[str, str], int] = {}
-        self._cost_total = 0
-        #: kernel stats of the last topk call (+ its pruned reads)
-        self.last_stats: dict = {}
-        # exact result cache over the immutable snapshot (see
-        # serve.LocalIndex: the reference's frontend result cache,
-        # frontend/search.go:439-453, without the TTL staleness)
-        self._result_cache: "OrderedDict[tuple, list]" = OrderedDict()
-        self.result_cache_max = 50_000
-        # budgeted by total cached (url, score) tuples — URL strings
-        # make each tuple even heavier than serve.LocalIndex's, so an
-        # entry-count cap alone scales memory with caller-chosen k
-        self.result_cache_max_tuples = 500_000
-        self._result_cache_tuples = 0
-        self.result_cache_enabled = True
+        self.terms = TermCache()    # keyed by (field, term)
+        self.results = ResultCache()
 
     def stats_for(self, field: str, terms: list[str]) -> dict[str, int]:
         missing = [t for t in terms if (field, t) not in self._df_cache]
         if missing:
-            tbl = self._stats[field].read(missing, ["term", "df"], self._reads)
+            tbl = self._stats[field].read(missing, ["term", "df"],
+                                          self.last_stats)
             found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
             for t in missing:
                 self._df_cache[(field, t)] = int(found.get(t, 0))
@@ -406,31 +387,19 @@ class FieldedLocalIndex:
              offset: int = 0, use_wand: bool = True) -> list[tuple[str, float]]:
         ck = (query, k, shingles, tld_boost, min_should_match, offset,
               use_wand)
-        if self.result_cache_enabled:
-            hit = self._result_cache.get(ck)
-            if hit is not None:
-                self._result_cache.move_to_end(ck)
-                self.last_stats = {"result_cache_hit": True}
-                return list(hit)
-        res = self._topk_kernel(query, k, shingles, tld_boost,
-                                min_should_match, offset, use_wand)
-        if self.result_cache_enabled:
-            old = self._result_cache.pop(ck, None)
-            if old is not None:
-                self._result_cache_tuples -= len(old)
-            self._result_cache[ck] = list(res)
-            self._result_cache_tuples += len(res)
-            while self._result_cache and (
-                    len(self._result_cache) > self.result_cache_max
-                    or self._result_cache_tuples
-                    > self.result_cache_max_tuples):
-                _, old = self._result_cache.popitem(last=False)
-                self._result_cache_tuples -= len(old)
+        hit = self.results.get(ck)
+        if hit is not None:
+            self.last_stats = {"result_cache_hit": True}
+            return hit
+        res = self._topk_kernel(*ck)
+        self.results.put(ck, res)
         return res
 
     def _topk_kernel(self, query, k, shingles, tld_boost,
                      min_should_match, offset, use_wand):
-        self._reads = {"terms_read": 0, "row_groups_read": 0}
+        # reset up front, so no early return reports the PREVIOUS
+        # query's kernel stats
+        self.last_stats = {"terms_read": 0, "row_groups_read": 0}
         plan = _query_plan(self, query, tld_boost)
         if plan is None:
             return []
@@ -452,23 +421,19 @@ class FieldedLocalIndex:
         # bound table.
         tb = {}
         for name, spec in specs.items():
-            missing = [t for t in spec["terms"]
-                       if (name, t) not in self._meta_cache]
+            keys = [(name, t) for t in spec["terms"]]
+            missing = self.terms.missing(keys, self.last_stats)
             if missing:
-                tbl = self._post[name].read(missing, _POSTING_COLS,
-                                            self._reads)
-                for t, meta in _field_meta(tbl, spec).items():
-                    self._meta_cache[(name, t)] = meta
-            for t in spec["terms"]:
-                meta = self._meta_cache.get((name, t))
-                if meta is not None:
-                    self._meta_cache.move_to_end((name, t))
-                    tb[(name, t)] = meta
+                tbl = self._post[name].read([t for _, t in missing],
+                                            _POSTING_COLS, self.last_stats)
+                self.terms.put({(name, t): meta for t, meta
+                                in _field_meta(tbl, spec).items()})
+            tb.update(self.terms.take(keys))
         if not any(key[0] != TLD_FIELD for key in tb):
             # charge the entries this query DID load (TLD-only block
             # tables) before bailing, or the incremental accounting
             # never sees them and the cache grows past its budget
-            self._evict(touched=list(tb))
+            self.terms.charge(tb, self.last_stats)
             return []
 
         # cross_fields MSM groups: a candidate's matched count = the
@@ -484,54 +449,17 @@ class FieldedLocalIndex:
         def dense_score(dense):
             return _score_from_arrays(dense, plan, k + max(0, offset), req)
 
-        self.last_stats = dict(self._reads)
         if use_wand:
             docids, scores = _topk_blockmax_lazy(
                 tb, k + max(0, offset), req, k1, b, 1.0,
-                stats=self.last_stats, store=self._store,
+                stats=self.last_stats, store=self.terms.store,
                 msm_group=msm_group, no_cand=no_cand, dense_fn=dense_score)
         else:
             docids, scores = dense_score(
                 _dense_arrays_from_tb(tb, k1, b, 1.0))
-        self._evict(touched=list(tb))
+        self.terms.charge(tb, self.last_stats)
         docids, scores = docids[offset:], scores[offset:]
         if not docids.size:
             return []
         urls = self._url_of(docids)
         return [(urls[int(d)], float(s)) for d, s in zip(docids, scores)]
-
-    def _evict(self, touched=()):
-        """LRU-evict (field, term) entries until decoded postings fit
-        the budget (same policy + incremental accounting as
-        serve.LocalIndex._evict — only ``touched`` keys recharge)."""
-        def decoded(key):
-            st = self._store.get(key, {})
-            n = st.get("np", 0)
-            ist = st.get("istream")
-            if ist is not None:
-                n += 2 * int(ist["d"].size)
-            meta = self._meta_cache.get(key)
-            if meta is not None:
-                if meta.get("dense") is not None:
-                    n += int(meta["dense"][0].size)
-                order = meta.get("impact_order")
-                if order is not None:
-                    n += int(order.size)
-                # raw compressed table charged at ~1/4 posting-
-                # equivalent (see serve.LocalIndex._evict)
-                n += meta.get("nd_total", 0) // 4
-            return n
-
-        for key in touched:
-            new = decoded(key) if key in self._meta_cache else 0
-            self._cost_total += new - self._cost.get(key, 0)
-            if new:
-                self._cost[key] = new
-            else:
-                self._cost.pop(key, None)
-        while (self._cost_total > self.arr_cache_max_postings
-               and len(self._meta_cache) > 1):
-            key = next(iter(self._meta_cache))
-            self._cost_total -= self._cost.pop(key, 0)
-            self._meta_cache.pop(key)
-            self._store.pop(key, None)

@@ -260,9 +260,9 @@ def _term_block_meta(tbl, idf: dict) -> dict:
             "tfs": _LazyBytes(byt["tfs"].slice(sl.start, n)),
             "dls": _LazyBytes(byt["dls"].slice(sl.start, n)),
             "w": idf[term],
-            # total postings across blocks — the serving tiers charge
-            # the RAW compressed table against their eviction budget
-            # with this (≈2-4 B/posting varint vs 16 B/posting decoded)
+            # total postings across blocks — _memo_postings charges the
+            # RAW compressed table against the term-cache budget with
+            # this (≈2-4 B/posting varint vs 16 B/posting decoded)
             "nd_total": int(cols["n_docs"][sl].sum()),
         }
     if imp_t is not None:
@@ -280,6 +280,27 @@ def _term_block_meta(tbl, idf: dict) -> dict:
             d["idls"] = _LazyBytes(byt["dls"].slice(sl.start, n))
             d["nd_total"] += int(cols["n_docs"][sl].sum())
     return out
+
+
+def _memo_postings(meta: dict, st: dict) -> int:
+    """Posting-equivalent memory of one term's block table ``meta`` and
+    decoded-store entry ``st`` (the cost `serve.TermCache` budgets),
+    summed from the LIVE arrays: decoded blocks and prefix chunks
+    (``np``), the memoized TA stream (2 copies per folded posting), a
+    dense bailout decode, the TA impact permutation, and the raw
+    compressed table at ~1/4 posting-equivalent — otherwise a
+    skip-heavy head term parks its FULL compressed list at zero cost
+    and a long-running tier grows without bound."""
+    n = st.get("np", 0)
+    ist = st.get("istream")
+    if ist is not None:
+        n += 2 * int(ist["d"].size)
+    if meta.get("dense") is not None:
+        n += int(meta["dense"][0].size)
+    order = meta.get("impact_order")
+    if order is not None:
+        n += int(order.size)
+    return n + meta.get("nd_total", 0) // 4
 
 
 def _bm25_scores(d: dict, tf: np.ndarray, dl: np.ndarray,

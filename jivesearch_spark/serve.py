@@ -13,22 +13,17 @@ read of a few posting lists. This module is that read path:
    with no per-query dataset planning or footer re-read — IO per
    query is O(|Q| posting lists) regardless of corpus size.
 2. the same pruned read over ``postings``, handed as an Arrow table to
-   `query._term_block_meta` — the block tables the Spark kernels
-   build from their applyInArrow input — so only block METADATA is
-   materialized eagerly (compressed bytes + per-block bounds).
-   Scoring calls the SAME kernel entry as the Spark path
-   (`query._topk_query`) over the whole index at once: with
-   ``use_wand`` the lazy block-max kernel, so a head term's tail
-   blocks are never decoded when the top-k threshold retires them
-   (Lucene-style in-list skipping — the reference's ES serving
-   analog, search/elasticsearch.go:66); without it the brute oracle.
-   One decode path and one kernel entry ⇒ rank identity between
-   serve and cluster modes is structural, and the pinned tie-break
-   (round(score,9) desc, docid asc) is replicated exactly.
-   Decoded blocks persist across queries in a block-granular store
-   (bounded by decoded postings, LRU by term), so warm queries
-   decode nothing; raw block metadata sits in its own LRU keyed by
-   term.
+   `query._term_block_meta` (the Spark kernels' block tables), so only
+   block METADATA — compressed bytes + per-block bounds — is
+   materialized eagerly. Scoring calls the SAME kernel entry as the
+   Spark path (`query._topk_query`) over the whole index at once: with
+   ``use_wand`` the lazy block-max kernel, which never decodes the
+   tail blocks the top-k threshold retires (the reference's ES
+   in-list skipping, search/elasticsearch.go:66); without it the brute
+   oracle. One kernel entry ⇒ serve ≡ cluster rank identity, pinned
+   tie-break included. Both serving tiers keep block tables and the
+   kernel's decoded blocks in one `TermCache` (warm queries do no IO
+   and no decode) and answers in one `ResultCache`.
 
 At 10^12 docs this is how a serving tier in front of the index works:
 each frontend holds the manifest + term→df cache; every query reads
@@ -39,10 +34,12 @@ path (`query.bm25_topk_indexed`) remains the batch/analytics flavor.
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from . import bm25
 from .index import Manifest, TermFiles
-from .query import (_POSTING_COLS, _term_block_meta, _topk_query,
-                    analyze_query)
+from .query import (_POSTING_COLS, _memo_postings, _term_block_meta,
+                    _topk_query, analyze_query)
 
 
 _ARENAS_RETAINED = False
@@ -86,6 +83,100 @@ def _retain_malloc_arenas():
         pass
 
 
+class TermCache:
+    """The serving tiers' per-term cache: ``meta`` holds RAW block
+    tables (compressed bytes + bounds — skips the pruned read) in LRU
+    order, ``store`` the lazy kernel's DECODED blocks at block
+    granularity (skips decode). Keys are opaque (a term, or a
+    (field, term) pair). Eviction is LRU by key over a posting-
+    equivalent budget; head terms dominate query logs, so hot queries
+    do no IO and no decode. Hit/miss/eviction counts land in the
+    caller's ``stats`` dict, next to `index.TermFiles.read`'s."""
+
+    def __init__(self, max_postings: int = 16_000_000):
+        self.max_postings = max_postings
+        self.meta: OrderedDict = OrderedDict()
+        self.store: dict = {}
+        # incremental eviction accounting: per-key cost + running
+        # total, recharged only for keys a query touched — per-query
+        # eviction overhead is O(|Q|), not O(cached keys)
+        self._cost: dict = {}
+        self._cost_total = 0
+
+    def missing(self, keys, stats: dict) -> list:
+        """The keys with no cached block table, in ``keys`` order."""
+        miss = [k for k in keys if k not in self.meta]
+        stats["term_cache_misses"] = (stats.get("term_cache_misses", 0)
+                                      + len(miss))
+        stats["term_cache_hits"] = (stats.get("term_cache_hits", 0)
+                                    + len(keys) - len(miss))
+        return miss
+
+    def put(self, entries: dict):
+        self.meta.update(entries)
+
+    def take(self, keys) -> dict:
+        """{key: block table} of the cached ``keys``, each touched."""
+        out = {}
+        for k in keys:
+            meta = self.meta.get(k)
+            if meta is not None:
+                self.meta.move_to_end(k)
+                out[k] = meta
+        return out
+
+    def charge(self, touched, stats: dict):
+        """Recharge the ``touched`` cached keys (their memos are the
+        only ones a query can change), then LRU-evict until the budget
+        holds, keeping at least one entry."""
+        for k in touched:
+            new = _memo_postings(self.meta[k], self.store.get(k, {}))
+            self._cost_total += new - self._cost.get(k, 0)
+            self._cost[k] = new
+        evicted = 0
+        while self._cost_total > self.max_postings and len(self.meta) > 1:
+            k, _ = self.meta.popitem(last=False)
+            self._cost_total -= self._cost.pop(k, 0)
+            self.store.pop(k, None)
+            evicted += 1
+        stats["term_cache_evicted"] = evicted
+
+
+class ResultCache:
+    """EXACT result cache — the serving analog of the reference's
+    frontend result cache (frontend/search.go:439-453, 1 h TTL keyed on
+    the full request). No TTL needed: a serving tier holds one
+    immutable published snapshot (manifest swap ⇒ new tier), so a
+    request key maps to exactly one answer and a hit is provably
+    identical to a recompute (pytest gate). LRU, budgeted by TOTAL
+    cached tuples at 1 + len(answer) per entry: a result tuple costs
+    ~120 B of Python objects, so an entry-count cap would let a large-k
+    caller grow memory k× per entry, and the +1 bounds empty answers.
+    ``max_tuples = 0`` caches nothing; a lowered budget applies from
+    the next put."""
+
+    def __init__(self, max_tuples: int = 500_000):
+        self.max_tuples = max_tuples
+        self._entries: OrderedDict = OrderedDict()
+        self._tuples = 0
+
+    def get(self, key):
+        hit = self._entries.get(key)
+        if hit is not None:
+            self._entries.move_to_end(key)
+            return list(hit)
+
+    def put(self, key, res: list):
+        old = self._entries.pop(key, None)
+        if old is not None:
+            self._tuples -= 1 + len(old)
+        self._entries[key] = list(res)
+        self._tuples += 1 + len(res)
+        while self._tuples > self.max_tuples:
+            _, old = self._entries.popitem(last=False)
+            self._tuples -= 1 + len(old)
+
+
 class LocalIndex:
     """Driver/serving-process handle on an on-disk index."""
 
@@ -101,46 +192,13 @@ class LocalIndex:
         self._postings = TermFiles(f"{root}/postings", self.n_buckets)
         self._stats = TermFiles(f"{root}/term_stats", self.n_buckets)
         self._df_cache: dict[str, int] = {}
-        # two-level cache (the serving analog of the reference's
-        # result cache, frontend/search.go:439-453 — ours caches the
-        # expensive artifacts, score-exact rather than TTL-stale):
-        # _meta_cache holds RAW per-term block tables (compressed
-        # bytes + bounds — cheap, skips the pruned read), _store holds
-        # DECODED blocks at block granularity (what the lazy kernel
-        # actually touched — skips decode). Eviction is LRU by term
-        # over the decoded-postings budget; head terms dominate query
-        # logs, so hot queries do no IO and no decode.
-        from collections import OrderedDict
-        self._meta_cache: OrderedDict[str, dict] = OrderedDict()
-        self._store: dict[str, dict] = {}
-        self.term_cache_max_postings = 16_000_000
-        # incremental eviction accounting: per-term decoded cost +
-        # running total, recharged only for terms a query touched —
-        # per-query eviction overhead is O(|Q|), not O(cached terms)
-        self._cost: dict[str, int] = {}
-        self._cost_total = 0
-        #: per-query kernel stats of the LAST topk/topk_batch call:
-        #: {query: {"blocks_decoded", "blocks_total", ..., and the
-        #: batch's pruned reads "terms_read", "row_groups_read"}}
+        self.terms = TermCache()
+        #: ``results.max_tuples = 0`` forces every query through the
+        #: kernel (bench uses this so latencies measure scoring)
+        self.results = ResultCache()
+        #: per-query kernel stats of the LAST topk/topk_batch call, with
+        #: the batch's pruned reads and ``term_cache_*`` counters
         self.last_stats: dict[str, dict] = {}
-        # EXACT result cache — the serving analog of the reference's
-        # frontend result cache (frontend/search.go:439-453, 1 h TTL
-        # keyed on the full request). Ours needs no TTL: a LocalIndex
-        # holds one immutable published snapshot (manifest swap ⇒ new
-        # LocalIndex), so a (query, k, offset, msm, kernel) key maps
-        # to exactly one answer and a hit is provably identical to a
-        # recompute (pytest gate). Bounded LRU, budgeted by TOTAL
-        # cached result tuples: a (docid, score) tuple costs ~120 B of
-        # Python object overhead, so an entry-count cap alone would
-        # let a deep-paging / large-k caller grow memory by k× per
-        # entry. Entry-count cap stays as a secondary bound.
-        self._result_cache: OrderedDict[tuple, list] = OrderedDict()
-        self.result_cache_max = 50_000
-        self.result_cache_max_tuples = 500_000
-        self._result_cache_tuples = 0
-        #: set False to force every query through the kernel (bench
-        #: uses this so published latencies measure scoring, not memo)
-        self.result_cache_enabled = True
 
     # -- lookups ----------------------------------------------------------
     def stats_for(self, terms: list[str],
@@ -170,49 +228,26 @@ class LocalIndex:
         """Serve many queries with ONE pruned postings read (shared
         scan for the union of terms), then per-query kernels — the
         shape of a batched serving tier."""
-        out = {}
-        misses = queries
-        if self.result_cache_enabled:
-            misses = []
-            for q in queries:
-                key = (q, k, use_wand, min_should_match, offset)
-                hit = self._result_cache.get(key)
-                if hit is not None:
-                    self._result_cache.move_to_end(key)
-                    out[q] = list(hit)
-                else:
-                    misses.append(q)
-            if not misses:
-                self.last_stats = {q: {"result_cache_hit": True}
-                                   for q in queries}
-                return out
+        out, misses = {}, []
+        for q in queries:
+            hit = self.results.get((q, k, use_wand, min_should_match, offset))
+            if hit is None:
+                misses.append(q)
+            else:
+                out[q] = hit
         computed = self._topk_batch_kernel(misses, k, use_wand,
                                            min_should_match, offset)
-        if self.result_cache_enabled:
-            for q, res in computed.items():
-                key = (q, k, use_wand, min_should_match, offset)
-                old = self._result_cache.pop(key, None)
-                if old is not None:
-                    self._result_cache_tuples -= len(old)
-                self._result_cache[key] = list(res)
-                self._result_cache_tuples += len(res)
-            while self._result_cache and (
-                    len(self._result_cache) > self.result_cache_max
-                    or self._result_cache_tuples
-                    > self.result_cache_max_tuples):
-                _, old = self._result_cache.popitem(last=False)
-                self._result_cache_tuples -= len(old)
-            for q in queries:
-                if q in out:
-                    self.last_stats.setdefault(
-                        q, {"result_cache_hit": True})
+        for q, res in computed.items():
+            self.results.put((q, k, use_wand, min_should_match, offset), res)
+        for q in out:
+            self.last_stats.setdefault(q, {"result_cache_hit": True})
         out.update(computed)
         return out
 
     def _topk_batch_kernel(self, queries: list[str], k: int,
                            use_wand: bool, min_should_match: bool,
                            offset: int):
-        # reset up front so the early returns below don't leave the
+        # reset up front so the early return below doesn't leave the
         # PREVIOUS call's per-query stats for topk_batch to merge
         # cache-hit markers into
         self.last_stats = {}
@@ -230,21 +265,13 @@ class LocalIndex:
         # whole index (shard ranges partition the docid space, so each
         # term's block ordinals are globally docid-ordered) — decode
         # happens lazily inside the kernel, block by block, only when
-        # a block's bound can still beat the global θ. Cache hits skip
-        # the pruned read; the persistent segment store skips decode.
-        missing = [t for t in live if t not in self._meta_cache]
+        # a block's bound can still beat the global θ.
+        missing = self.terms.missing(live, reads)
         if missing:
             idf_m = {t: bm25.idf(n_docs, dfs[t]) for t in missing}
-            self._meta_cache.update(_term_block_meta(
+            self.terms.put(_term_block_meta(
                 self._postings.read(missing, _POSTING_COLS, reads), idf_m))
-        tb_all = {}
-        for t in live:
-            meta = self._meta_cache.get(t)
-            if meta is not None:
-                self._meta_cache.move_to_end(t)
-                tb_all[t] = meta
-        if not tb_all:
-            return {q: [] for q in queries}
+        tb_all = self.terms.take(live)
 
         out = {}
         for q in queries:
@@ -257,59 +284,12 @@ class LocalIndex:
             tb = {t: tb_all[t] for t in present}
             qstats = dict(reads)
             d, s = _topk_query(tb, k + max(0, offset), req, self.k1, self.b,
-                               avgdl, use_wand, stats=qstats, store=self._store)
+                               avgdl, use_wand, stats=qstats,
+                               store=self.terms.store)
             self.last_stats[q] = qstats
             out[q] = [(int(di), float(si))
                       for di, si in zip(d[offset:], s[offset:])]
-        self._evict(touched=live)
+        self.terms.charge(tb_all, reads)
+        for qstats in self.last_stats.values():
+            qstats["term_cache_evicted"] = reads["term_cache_evicted"]
         return out
-
-    def _decoded_cost(self, t: str) -> int:
-        """Posting-equivalent memory cost of one cached term — the
-        quantity _evict budgets. Derived from the ACTUAL live arrays
-        (not a counter that could drift), which is also what lets the
-        adversarial-replay pytest verify the accounted total against
-        ground truth."""
-        st = self._store.get(t, {})
-        n = st.get("np", 0)
-        ist = st.get("istream")
-        if ist is not None:
-            # memoized TA stream + docid lookup: 2 extra
-            # (docid, score) copies of every folded posting
-            n += 2 * int(ist["d"].size)
-        meta = self._meta_cache.get(t)
-        if meta is not None:
-            if meta.get("dense") is not None:
-                n += int(meta["dense"][0].size)
-            order = meta.get("impact_order")
-            if order is not None:
-                n += int(order.size)
-            n += meta.get("nd_total", 0) // 4
-        return n
-
-    def _evict(self, touched=()):
-        """LRU-evict terms until decoded postings fit the budget.
-        Decoded cost per term = lazily-decoded segment postings (docid
-        AND impact-prefix chunks — both land in ``np``), a memoized
-        dense decode if the kernel bailed out, the memoized TA impact
-        permutation (int64 per posting — the same order of magnitude
-        as a decoded stream), and the raw compressed table at ~1/4
-        posting-equivalent (varint bytes vs 16 B decoded) — otherwise
-        a skip-heavy head term parks its FULL compressed list in
-        _meta_cache at zero cost and a long-running tier grows without
-        bound. Only ``touched`` terms are recharged (their artifacts
-        are the only ones a query can change), so the per-query cost
-        is O(|Q| + evictions), not O(cached terms)."""
-        for t in touched:
-            new = self._decoded_cost(t) if t in self._meta_cache else 0
-            self._cost_total += new - self._cost.get(t, 0)
-            if new:
-                self._cost[t] = new
-            else:
-                self._cost.pop(t, None)
-        while (self._cost_total > self.term_cache_max_postings
-               and len(self._meta_cache) > 1):
-            t = next(iter(self._meta_cache))
-            self._cost_total -= self._cost.pop(t, 0)
-            self._meta_cache.pop(t)
-            self._store.pop(t, None)

@@ -132,9 +132,9 @@ def test_fielded_serving_bounds_carry_field_boost(roots):
     root = roots[None]
     idx = FieldedLocalIndex(root)
     idx.topk("bob dylan guitar", k=10, use_wand=True)
-    assert idx._meta_cache, "query should have populated the tb cache"
+    assert idx.terms.meta, "query should have populated the tb cache"
     checked = 0
-    for (field, term), meta in idx._meta_cache.items():
+    for (field, term), meta in idx.terms.meta.items():
         # tld key scores with boost 1.0 (fielded.py _query_plan)
         boost = idx.fields[field]["boost"] if field in idx.fields else 1.0
         dset = pads.dataset(f"{root}/fields/{field}/postings",
@@ -153,9 +153,9 @@ def test_fielded_serving_bounds_carry_field_boost(roots):
 @pytest.mark.spark
 def test_fielded_tld_only_bail_charges_cache(roots, tmp_path):
     """A query whose only retrievable block tables are TLD entries
-    bails with [] — but the entries it parked in _meta_cache must be
+    bails with [] — but the entries it parked in the term cache must be
     charged to the incremental eviction accounting, or a long-running
-    tier grows the cache past arr_cache_max_postings unseen."""
+    tier grows the cache past terms.max_postings unseen."""
     idx = FieldedLocalIndex(roots[None])
     tlds = [t for t in ("com", "org", "net", "io", "de", "jp", "uk")
             if idx.stats_for("tld", [t])]
@@ -168,23 +168,71 @@ def test_fielded_tld_only_bail_charges_cache(roots, tmp_path):
         idx._post[name] = TermFiles(str(tmp_path / "no_postings"),
                                     idx.n_buckets)
     assert idx.topk("bob dylan", k=5, tld_boost=tlds[0]) == []
-    parked = [k for k in idx._meta_cache if k[0] == "tld"]
+    parked = [k for k in idx.terms.meta if k[0] == "tld"]
     assert parked, "tld block table should have been cached"
-    assert all(k in idx._cost for k in parked)
-    assert idx._cost_total == sum(idx._cost.values())
-    assert idx._cost_total > 0
+    assert all(k in idx.terms._cost for k in parked)
+    assert idx.terms._cost_total == sum(idx.terms._cost.values())
+    assert idx.terms._cost_total > 0
 
 
 @pytest.mark.spark
 def test_fielded_last_stats_count_pruned_reads(roots):
-    """The fielded tier reports its pruned reads like serve.LocalIndex:
-    a cold query reads row groups, the same terms warm read none."""
+    """The fielded tier reports its pruned reads and term-cache counters
+    like serve.LocalIndex: a cold query reads row groups and misses, the
+    same terms warm read none and hit; a tiny budget evicts."""
     idx = FieldedLocalIndex(roots[None])
-    idx.result_cache_enabled = False
+    idx.results.max_tuples = 0
     idx.topk("bob dylan guitar", k=10)
     cold = idx.last_stats
     assert cold["terms_read"] > 0 and cold["row_groups_read"] > 0
     assert "blocks_decoded" in cold
+    assert cold["term_cache_misses"] > 0 and cold["term_cache_hits"] == 0
+    assert cold["term_cache_evicted"] == 0
     idx.topk("bob dylan guitar", k=10)
     warm = idx.last_stats
     assert warm["terms_read"] == 0 and warm["row_groups_read"] == 0
+    assert warm["term_cache_hits"] > 0 and warm["term_cache_misses"] == 0
+    idx.terms.max_postings = 1
+    idx.topk("bob dylan guitar", k=10)
+    assert idx.last_stats["term_cache_evicted"] > 0
+
+
+@pytest.mark.spark
+def test_fielded_no_match_resets_last_stats(roots):
+    """A query that returns before the kernel (no token, or no term in
+    any field) must not report the previous query's kernel stats."""
+    idx = FieldedLocalIndex(roots[None])
+    idx.results.max_tuples = 0
+    for q in ["", "?!", "zzzqnotaterm"]:
+        idx.topk("bob dylan guitar", k=10)
+        assert "blocks_decoded" in idx.last_stats
+        assert idx.topk(q, k=10) == []
+        assert "blocks_decoded" not in idx.last_stats, q
+        assert "term_cache_hits" not in idx.last_stats, q
+
+
+@pytest.mark.spark
+def test_fielded_zipfian_replay_eviction_churn(roots, zipfian_replay):
+    """The adversarial Zipfian eviction gate of test_serve, run on the
+    fielded tier through the same shared caches: (field, term) keys,
+    small budgets, answers equal to an unbounded no-cache tier."""
+    import pyarrow.dataset as ds
+
+    root = roots[None]
+    idx = FieldedLocalIndex(root)
+    idx.terms.max_postings = 300             # force eviction churn
+    idx.results.max_tuples = 400             # force tuple-budget churn
+    ref = FieldedLocalIndex(root)            # unbounded reference tier
+    ref.results.max_tuples = 0
+
+    df = {}
+    for name, spec in idx.fields.items():
+        if spec["shingle"]:
+            continue
+        stats = ds.dataset(f"{root}/fields/{name}/term_stats",
+                           partitioning=ds.partitioning(flavor="hive")) \
+            .to_table(columns=["term", "df"]).to_pydict()
+        for t, d in zip(stats["term"], stats["df"]):
+            df[t] = df.get(t, 0) + d
+    vocab = sorted(df, key=lambda t: (-df[t], t))
+    zipfian_replay(idx, ref, vocab)

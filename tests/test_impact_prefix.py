@@ -188,7 +188,7 @@ def test_warm_repeat_is_decode_free(big_prefix_index):
     memoized impact stream: zero chunk or block decodes, and the
     absence-proof snapshot keeps random access at zero too."""
     li = LocalIndex(big_prefix_index)
-    li.result_cache_enabled = False  # repeats must re-enter the kernel
+    li.results.max_tuples = 0  # repeats must re-enter the kernel
     li.topk("bob dylan", k=10)
     li.topk("bob dylan", k=10)   # resyncs ld with probe-decoded blocks
     li.topk("bob dylan", k=10)
@@ -200,7 +200,7 @@ def test_warm_repeat_is_decode_free(big_prefix_index):
 
 def test_cold_decode_is_bounded(big_prefix_index):
     li = LocalIndex(big_prefix_index)
-    li.result_cache_enabled = False
+    li.results.max_tuples = 0
     li.topk("bob", k=10)
     st = li.last_stats["bob"]
     assert st.get("prefix_ta"), st
@@ -210,7 +210,7 @@ def test_cold_decode_is_bounded(big_prefix_index):
     assert st["blocks_decoded"] < 0.25 * st["blocks_total"], st
     assert st["prefix_chunks_decoded"] < st["prefix_chunks_total"], st
     li2 = LocalIndex(big_prefix_index)
-    li2.result_cache_enabled = False
+    li2.results.max_tuples = 0
     li2.topk("bob dylan", k=10)
     st = li2.last_stats["bob dylan"]
     assert st.get("prefix_ta"), st

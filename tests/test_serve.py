@@ -14,7 +14,7 @@ import pytest
 from jivesearch_spark import oracle
 from jivesearch_spark.index import IndexParams, build_index
 from jivesearch_spark.query import IndexReader, bm25_topk_indexed
-from jivesearch_spark.serve import LocalIndex
+from jivesearch_spark.serve import LocalIndex, ResultCache
 
 SF_DIR = "/root/testdata/sf0.001"
 PARAMS = IndexParams(docs_per_shard=100, n_buckets=8, bucket_batch=4)
@@ -106,92 +106,47 @@ def test_serve_latency_budget(built):
 def test_evict_bounds_raw_block_tables(built):
     """Eviction must charge the RAW compressed block tables, not only
     decoded postings: a skip-heavy head term decodes almost nothing
-    yet parks its full compressed list in _meta_cache — with a
+    yet parks its full compressed list in the term cache — with a
     decoded-only budget a long-running tier accumulates raw bytes
     without bound (review finding, round 3)."""
     idx = LocalIndex(built)
-    idx.result_cache_enabled = False  # repeats must re-enter the kernel
-    idx.term_cache_max_postings = 50  # tiny: force eviction every query
+    idx.results.max_tuples = 0  # repeats must re-enter the kernel
+    idx.terms.max_postings = 50  # tiny: force eviction every query
     qs = [q for q in QUERIES if q]
     want = {q: idx.topk(q, 10) for q in qs}
     for q in qs * 3:
         idx.topk(q, 10)
-        raw = sum(m.get("nd_total", 0) for m in idx._meta_cache.values())
-        # budget + one in-flight query's worth is the ceiling: _evict
+        raw = sum(m.get("nd_total", 0) for m in idx.terms.meta.values())
+        # budget + one in-flight query's worth is the ceiling: charge()
         # runs after scoring and must keep at least one entry
-        assert len(idx._meta_cache) <= 4, len(idx._meta_cache)
+        assert len(idx.terms.meta) <= 4, len(idx.terms.meta)
         assert raw <= 4 * 50 + max(m.get("nd_total", 0)
-                                   for m in idx._meta_cache.values() or [{}])
+                                   for m in idx.terms.meta.values() or [{}])
     # correctness survives eviction: evicted terms re-read and re-score
     for q in qs:
         assert idx.topk(q, 10) == want[q], q
 
 
-def test_zipfian_replay_eviction_churn(built):
-    """Adversarial serving replay (round-4 verdict ask #8): a Zipfian
-    query log — mixed 1-3 term queries, occasional deep paging and
-    large k (the result-cache tuple-budget attack from the round-4
-    ADVICE) — against SMALL budgets must keep memory bounded through
-    eviction churn AND keep answers identical to an unbounded tier.
-
-    "Bounded memory" is asserted against ground truth, not a counter:
-    _decoded_cost derives each term's cost from the live arrays, and
-    the test recomputes the accounted total from scratch every batch
-    (a drifting counter would fail loudly). The result-cache tuple
-    budget is likewise re-summed from the cached lists."""
-    import random
-
+def test_zipfian_replay_eviction_churn(built, zipfian_replay):
+    """Adversarial serving replay (round-4 verdict ask #8) against
+    SMALL budgets keeps memory bounded through eviction churn AND
+    answers identical to an unbounded tier (conftest._zipfian_replay
+    holds the ground-truth checks)."""
     import pyarrow.dataset as ds
 
     idx = LocalIndex(built)
-    idx.term_cache_max_postings = 1500       # force eviction churn
-    idx.result_cache_max_tuples = 400        # force tuple-budget churn
+    idx.terms.max_postings = 1500            # force eviction churn
+    idx.results.max_tuples = 400             # force tuple-budget churn
     ref = LocalIndex(built)                  # unbounded reference tier
-    ref.result_cache_enabled = False
+    ref.results.max_tuples = 0
 
     stats = ds.dataset(f"{built}/term_stats",
                        partitioning=ds.partitioning(flavor="hive")) \
         .to_table(columns=["term", "df"]).to_pydict()
     by_df = sorted(zip(stats["df"], stats["term"]), reverse=True)
-    vocab = [t for _, t in by_df]
-    rng = random.Random(20260821)
-
-    def zipf_term():
-        r = min(int(rng.paretovariate(1.1)) - 1, len(vocab) - 1)
-        return vocab[r]
-
-    log = []
-    for _ in range(240):
-        q = " ".join(zipf_term() for _ in range(rng.randint(1, 3)))
-        k = rng.choice([10, 10, 10, 100, 500])      # large-k attack
-        off = rng.choice([0, 0, 0, 40])             # deep-paging attack
-        log.append((q, k, off))
-
-    single_max = 0
-    for i, (q, k, off) in enumerate(log):
-        got = idx.topk(q, k, offset=off)
-        single_max = max(single_max, idx._decoded_cost(
-            max(idx._meta_cache, key=idx._decoded_cost))
-            if idx._meta_cache else 0)
-        if i % 40 == 39:
-            # decoded-cost accounting == ground truth over live arrays
-            true_total = sum(idx._decoded_cost(t)
-                             for t in idx._meta_cache)
-            assert idx._cost_total == true_total, (i, idx._cost_total,
-                                                   true_total)
-            # budget holds up to one oversized resident entry
-            assert (true_total
-                    <= idx.term_cache_max_postings + single_max), i
-            # result-cache tuple accounting == ground truth, ≤ budget
-            tup = sum(len(v) for v in idx._result_cache.values())
-            assert idx._result_cache_tuples == tup
-            assert tup <= idx.result_cache_max_tuples
-            # correctness through churn: evicted terms re-read, cache
-            # hits byte-identical to an unbounded no-cache tier
-            assert got == ref.topk(q, k, offset=off), (q, k, off)
-    # churn actually happened (the test would be vacuous otherwise)
-    assert len(idx._meta_cache) < len({t for q, _, _ in log
-                                       for t in q.split()})
+    log, _ = zipfian_replay(idx, ref, [t for _, t in by_df])
+    assert len(idx.terms.meta) < len({t for q, _, _ in log
+                                      for t in q.split()})
 
 
 def test_result_cache_exact_and_bounded(built):
@@ -201,10 +156,11 @@ def test_result_cache_exact_and_bounded(built):
     idx = LocalIndex(built)
     qs = [q for q in QUERIES if q]
     # kernel answers with the cache bypassed are the truth
-    idx.result_cache_enabled = False
+    idx.results.max_tuples = 0
     want = {(q, off): idx.topk(q, 10, offset=off)
             for q in qs for off in (0, 3)}
-    idx.result_cache_enabled = True
+    assert not idx.results._entries
+    idx.results = ResultCache()
     for (q, off), w in want.items():     # miss → compute+store
         assert idx.topk(q, 10, offset=off) == w, (q, off)
     for (q, off), w in want.items():     # hit → identical
@@ -215,13 +171,20 @@ def test_result_cache_exact_and_bounded(built):
     b = idx.topk(qs[0], 10)
     assert a == b[:5] and len(b) >= len(a)
     # bounded: overflow evicts oldest, newest stays servable
-    idx.result_cache_max = 4
-    idx._result_cache.clear()
+    idx.results = ResultCache(max_tuples=4 * 11)
     for i, (q, off) in enumerate(want):
         idx.topk(q, 10, offset=off)
-    assert len(idx._result_cache) <= 4
+    tup = sum(1 + len(v) for v in idx.results._entries.values())
+    assert idx.results._tuples == tup <= 4 * 11
+    assert len(idx.results._entries) < len(want)
     q_last, off_last = list(want)[-1]
     assert idx.topk(q_last, 10, offset=off_last) == want[(q_last, off_last)]
+    # each entry costs 1 + len(answer) tuples, so a stream of no-match
+    # queries is bounded by the same budget
+    idx.results = ResultCache(max_tuples=50)
+    for i in range(200):
+        assert idx.topk(f"zzznomatch{i}", 10) == []
+    assert len(idx.results._entries) == idx.results._tuples == 50
 
 
 #: non-ASCII terms of the row-group fixture (the standard analyzer
@@ -338,15 +301,22 @@ def test_small_row_groups_serve_matches_spark_path(spark, built_small_rg):
 
 
 def test_last_stats_count_pruned_reads(built):
-    """Every kernel-run query reports the batch's pruned reads: a cold
-    query reads row groups, the same terms warm read none."""
+    """Every kernel-run query reports the batch's pruned reads and
+    term-cache counters: a cold query reads row groups and misses, the
+    same terms warm read none and hit; a tiny budget evicts."""
     idx = LocalIndex(built)
-    idx.result_cache_enabled = False
+    idx.results.max_tuples = 0
     q = "spark group query"
     idx.topk(q, 10)
     cold = idx.last_stats[q]
     assert cold["terms_read"] > 0 and cold["row_groups_read"] > 0
     assert "blocks_decoded" in cold
+    assert cold["term_cache_misses"] > 0 and cold["term_cache_hits"] == 0
+    assert cold["term_cache_evicted"] == 0
     idx.topk(q, 10)
     warm = idx.last_stats[q]
     assert warm["terms_read"] == 0 and warm["row_groups_read"] == 0
+    assert warm["term_cache_hits"] > 0 and warm["term_cache_misses"] == 0
+    idx.terms.max_postings = 1
+    idx.topk(q, 10)
+    assert idx.last_stats[q]["term_cache_evicted"] > 0

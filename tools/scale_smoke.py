@@ -75,7 +75,7 @@ def main():
 
     # ---- rank identity gate (lazy prefix-TA == brute decode-all) ----
     li = LocalIndex(IDX)
-    li.result_cache_enabled = False
+    li.results.max_tuples = 0
     for name, q in QUERIES:
         lazy = li.topk(q, k=10, use_wand=True)
         brute = li.topk(q, k=10, use_wand=False)
@@ -92,7 +92,7 @@ def main():
         stats0 = {}
         for _ in range(REPS):
             li = LocalIndex(IDX)        # fresh: pays discovery + read
-            li.result_cache_enabled = False
+            li.results.max_tuples = 0
             t0 = time.time()
             li.topk(q, k=10)
             colds.append((time.time() - t0) * 1000)
