@@ -159,10 +159,10 @@ def _score_shard_np(tbl, idf: dict, k1: float, b: float, avgdl: float,
 
     Builds the raw block tables with ``_term_block_meta`` and runs
     ``_topk_query`` on them, so the Spark path, the batch path and the
-    serving tier share one decode path and one kernel entry:
-    ``use_wand`` selects the lazy block-max kernel, otherwise every
-    block decodes and ``_topk_brute`` scores every candidate — the
-    oracle the rank-identity gates compare against.
+    serving tier share one decode path and one kernel entry and so
+    choose the same finisher for the same lists. ``use_wand=False``
+    always runs ``_topk_brute`` — the oracle the rank-identity gates
+    compare against.
     """
     return _topk_query(_term_block_meta(tbl, idf), k, msm_req, k1, b,
                        avgdl, use_wand, stats=stats)
@@ -562,6 +562,8 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
       sub-indexes each carry their own).
     """
     zero = (np.empty(0, dtype=np.int64), np.empty(0))
+    if stats is not None:
+        stats["finisher"] = "lazy"   # a hand-off below overwrites it
     no_cand = no_cand or set()
     terms = sorted(t for t in tb if t not in no_cand)
     extras = sorted(t for t in tb if t in no_cand)
@@ -585,7 +587,7 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
         # defeats block-level bounds); memoizes impact permutations on
         # the tb entries so a serving tier's warm queries skip the sort
         dense_fn = lambda dense: _topk_impact_ordered(dense, k, msm_req,  # noqa: E731
-                                                      meta=tb)
+                                                      meta=tb, stats=stats)
     nt = len(terms)
     n_keys = len(keys_all)
     dfs_of = np.array([int(tb[t]["nd"].sum()) for t in terms])
@@ -682,6 +684,8 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
             stats["blocks_decoded"] = blocks_all
             stats["blocks_total"] = blocks_all
             stats["dense_bailout"] = True
+            # a caller's dense_fn scores every candidate exhaustively
+            stats["finisher"] = "impact_ta" if default_finisher else "brute"
         return dense_fn(dense)
 
     # upfront strictly-flat bailout (≤2 terms): when EVERY block bound
@@ -816,7 +820,8 @@ _TA_SLACK = 2e-9
 
 
 def _topk_impact_ordered(dense: dict, k: int, msm_req: int,
-                         meta: dict | None = None):
+                         meta: dict | None = None,
+                         stats: dict | None = None):
     """Exact top-k over fully-decoded term arrays via Fagin's
     threshold algorithm (TA): each term's postings are visited in
     DESCENDING score order (impact order), candidates are scored
@@ -833,7 +838,8 @@ def _topk_impact_ordered(dense: dict, k: int, msm_req: int,
 
     ``meta``: optional {term: dict} whose entries memoize the impact
     permutation across calls (the serving tier passes the cached tb
-    entries, so warm queries skip the argsort too).
+    entries, so warm queries skip the argsort too). ``stats["finisher"]``
+    becomes ``dense_merge`` when the fallback runs.
     """
     names = sorted(dense)
     if not names:
@@ -870,6 +876,8 @@ def _topk_impact_ordered(dense: dict, k: int, msm_req: int,
             # over the (already decoded) arrays; θ is a valid lower
             # bound for its pool extraction, and the merge's complete
             # exact totals supersede the partial got_* pools
+            if stats is not None:
+                stats["finisher"] = "dense_merge"
             return _topk_dense_merge(dense, k, msm_req, theta=theta)
         cands = []
         for t in names:
@@ -1335,6 +1343,7 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
                 stats["blocks_total"] = blocks_total
             stats["dense_bailout"] = True
             stats["dense_merge"] = True
+            stats["finisher"] = "dense_merge"
             stats["cands_consumed"] = int(scored.size)
         return _topk_dense_merge(dense, k, msm_req, theta=theta)
 
@@ -1505,6 +1514,7 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
     if stats is not None:
         stats["cands_consumed"] = int(scored.size)
         stats["prefix_ta"] = True
+        stats["finisher"] = "prefix_ta"
         stats["prefix_chunks_decoded"] = n_pref
         stats["prefix_chunks_total"] = int(
             sum(tb[t]["iub"].size for t in terms
@@ -1559,20 +1569,64 @@ def _topk_brute(terms: dict, k: int, msm_req: int):
     return _pinned_topk(cand, total, k)
 
 
+#: the lazy sweep's per-list floor, in postings. With ``use_wand``, a
+#: query whose lists hold at most n_lists × _LAZY_FLOOR postings (Σ df
+#: over regular blocks) is answered by brute: below it one bulk decode
+#: and score pass costs less than the sweep's per-wave bound
+#: bookkeeping (``compute_prio``, range-max tables, per-key probes).
+#: Kernel-only ``_topk_query`` ms, k=10, min of 9 interleaved runs on a
+#: 4-core VM, over a 200k-doc saturated corpus (5 head terms at doc
+#: rates .55/.35/.25/.15/.08 with tf 1-3, 8-40 zipf(1.2) filler words
+#: per doc over 5k words, default IndexParams); cold = fresh block
+#: tables, warm = the same call repeated:
+#:
+#:   lists  postings   lazy cold/warm   brute cold/warm
+#:     1       6,075     1.23 / 0.53      0.79 / 0.29
+#:     1      10,939     1.13 / 0.76      1.02 / 0.50
+#:     1      12,436     1.40 / 0.65      1.08 / 0.52
+#:     1      14,588     1.24 / 0.67      1.34 / 0.68
+#:     1      15,600     1.31 / 0.65      1.29 / 0.65
+#:     1      16,277     1.04 / 0.48      1.39 / 0.73
+#:     1      20,010     1.36 / 0.71      1.64 / 0.94
+#:     1      30,402     1.32 / 0.69      2.36 / 1.39
+#:     1      42,547     1.38 / 0.73      3.50 / 2.05
+#:     2      13,834    15.88 / 4.05      2.27 / 1.20
+#:     2      31,739    24.21 / 5.19      4.51 / 2.72
+#:     2      48,322    18.34 / 4.54      7.75 / 4.93
+#:     2      72,949    13.21 / 3.36      8.71 / 6.26
+#:
+#: Single terms cross at ~15-16k postings; two-term queries cross
+#: later (warm ~45k), so the single-term crossover is the floor.
+_LAZY_FLOOR = 16384
+
+
 def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
                 avgdl: float, use_wand: bool, stats: dict | None = None,
                 store: dict | None = None):
     """THE single-field top-k entry: the Spark kernels and the serving
-    tier all call it, so ``use_wand`` means one thing everywhere. With
-    it, the lazy block-max kernel (decoded blocks land in ``store``
-    when given); without it, decode every block (memoized on the tb
-    entries) and score exhaustively with ``_topk_brute``."""
-    if use_wand:
+    tier all call it, so ``use_wand`` means one thing everywhere.
+
+    The finisher is chosen once, up front, from what the input shows:
+    brute (decode every block, memoized on the tb entries as
+    ``dense``, and score exhaustively with ``_topk_brute``) when the
+    lists hold at most ``len(tb) × _LAZY_FLOOR`` postings, else the
+    lazy block-max kernel (decoded blocks land in ``store`` when
+    given), which may still hand off mid-sweep. Without ``use_wand``
+    it is always brute — the oracle. ``stats`` gets ``finisher`` (the
+    path that produced the answer) and ``reason`` (the two figures the
+    choice compared)."""
+    postings = sum(int(m["nd"].sum()) for m in tb.values())
+    lazy_floor = len(tb) * _LAZY_FLOOR
+    if stats is not None:
+        stats["reason"] = {"postings": postings, "lazy_floor": lazy_floor}
+    if use_wand and postings > lazy_floor:
         return _topk_blockmax_lazy(tb, k, msm_req, k1, b, avgdl,
                                    stats=stats, store=store)
-    if stats is not None:
-        n = sum(m["ub"].size for m in tb.values())
-        stats.update(blocks_decoded=n, blocks_total=n, dense_bailout=True)
+    if stats is not None:   # a resident ``dense`` memo decodes nothing
+        stats.update(blocks_decoded=sum(m["ub"].size for m in tb.values()
+                                        if m.get("dense") is None),
+                     blocks_total=sum(m["ub"].size for m in tb.values()),
+                     dense_bailout=True, finisher="brute")
     return _topk_brute(_dense_arrays_from_tb(tb, k1, b, avgdl), k, msm_req)
 
 

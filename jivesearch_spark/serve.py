@@ -16,14 +16,20 @@ read of a few posting lists. This module is that read path:
    `query._term_block_meta` (the Spark kernels' block tables), so only
    block METADATA — compressed bytes + per-block bounds — is
    materialized eagerly. Scoring calls the SAME kernel entry as the
-   Spark path (`query._topk_query`) over the whole index at once: with
-   ``use_wand`` the lazy block-max kernel, which never decodes the
-   tail blocks the top-k threshold retires (the reference's ES
-   in-list skipping, search/elasticsearch.go:66); without it the brute
-   oracle. One kernel entry ⇒ serve ≡ cluster rank identity, pinned
-   tie-break included. Both serving tiers keep block tables and the
-   kernel's decoded blocks in one `TermCache` (warm queries do no IO
-   and no decode) and answers in one `ResultCache`.
+   Spark path (`query._topk_query`) over the whole index at once. With
+   ``use_wand`` it picks the finisher once from the query's posting
+   count: brute while the lists hold at most n_lists ×
+   `query._LAZY_FLOOR` postings (one bulk pass beats the sweep's
+   per-wave bookkeeping there), else the lazy block-max kernel, which
+   never decodes the tail blocks the top-k threshold retires (the
+   reference's ES in-list skipping, search/elasticsearch.go:66).
+   Without it, always the brute oracle. Each query's ``last_stats``
+   entry names its ``finisher`` and the ``reason`` figures. One kernel
+   entry ⇒ serve ≡ cluster rank identity, pinned tie-break included
+   (the Spark path decides per shard; every finisher answers like the
+   oracle, so the ranks agree). Both serving tiers keep block tables
+   and the kernel's decoded blocks in one `TermCache` (warm queries do
+   no IO and no decode) and answers in one `ResultCache`.
 
 At 10^12 docs this is how a serving tier in front of the index works:
 each frontend holds the manifest + term→df cache; every query reads

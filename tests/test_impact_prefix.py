@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from jivesearch_spark import bm25, codec
 from jivesearch_spark.index import IndexParams, build_index
-from jivesearch_spark.query import IndexReader, bm25_topk_indexed
+from jivesearch_spark.query import (IndexReader, _topk_blockmax_lazy,
+                                    analyze_query, bm25_topk_indexed)
 from jivesearch_spark.serve import LocalIndex
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -81,6 +82,19 @@ def big_prefix_index(spark, tmp_path_factory):
     build_index(_docs(spark, n=20000, lo=18, hi=28), root, BIG_PARAMS,
                 id_col="docid", url_col="url", log=lambda *a: None)
     return root
+
+
+def _sweep(li, q, k=10, msm_req=0):
+    """The lazy block-max kernel over the tier's own cached block
+    tables and decoded-block store: on this corpus the lists are short
+    enough that ``_topk_query`` answers by brute, and the prefix TA is
+    reached from the sweep. ``li.topk(q)`` caches the tables first.
+    Returns (pinned rows, kernel stats)."""
+    st = {}
+    d, s = _topk_blockmax_lazy(
+        li.terms.take(sorted(set(analyze_query(li.man, q)))), k, msm_req,
+        li.k1, li.b, li.man.avgdl, stats=st, store=li.terms.store)
+    return [(int(di), round(float(si), 9)) for di, si in zip(d, s)], st
 
 
 def test_prefix_rows_written_and_consistent(spark, prefix_index):
@@ -155,11 +169,13 @@ def test_rank_identity_all_paths(spark, big_prefix_index):
             spark_rows = [(r.docid, round(r.score, 9)) for r in
                           bm25_topk_indexed(reader, q, k=k).collect()]
             lazy = [(d, round(s, 9)) for d, s in li.topk(q, k=k)]
-            if li.last_stats.get(q, {}).get("prefix_ta"):
+            swept, st = _sweep(li, q, k)
+            if st.get("prefix_ta"):
                 saw_prefix_ta = True
             brute = [(d, round(s, 9))
                      for d, s in li.topk(q, k=k, use_wand=False)]
             assert lazy == brute == spark_rows, (q, k)
+            assert swept == brute, (q, k)
     assert saw_prefix_ta, "the saturated corpus must exercise the prefix TA"
 
 
@@ -181,6 +197,9 @@ def test_rank_identity_msm_and_paging(spark, big_prefix_index):
                      li.topk(q, k=k, offset=off, min_should_match=True,
                              use_wand=False)]
             assert lazy == brute == spark_rows, (q, k, off)
+            req = bm25.msm_required(len(set(analyze_query(li.man, q))))
+            swept, _ = _sweep(li, q, k + off, req)
+            assert swept[off:] == brute, (q, k, off)
 
 
 def test_warm_repeat_is_decode_free(big_prefix_index):
@@ -188,11 +207,10 @@ def test_warm_repeat_is_decode_free(big_prefix_index):
     memoized impact stream: zero chunk or block decodes, and the
     absence-proof snapshot keeps random access at zero too."""
     li = LocalIndex(big_prefix_index)
-    li.results.max_tuples = 0  # repeats must re-enter the kernel
     li.topk("bob dylan", k=10)
-    li.topk("bob dylan", k=10)   # resyncs ld with probe-decoded blocks
-    li.topk("bob dylan", k=10)
-    st = li.last_stats["bob dylan"]
+    _sweep(li, "bob dylan")
+    _sweep(li, "bob dylan")   # resyncs ld with probe-decoded blocks
+    _, st = _sweep(li, "bob dylan")
     assert st.get("prefix_ta"), st
     assert st["blocks_decoded"] == 0, st
     assert st.get("prefix_chunks_decoded", 0) == 0, st
@@ -200,9 +218,8 @@ def test_warm_repeat_is_decode_free(big_prefix_index):
 
 def test_cold_decode_is_bounded(big_prefix_index):
     li = LocalIndex(big_prefix_index)
-    li.results.max_tuples = 0
     li.topk("bob", k=10)
-    st = li.last_stats["bob"]
+    _, st = _sweep(li, "bob")
     assert st.get("prefix_ta"), st
     # the single head term is the pure win case: candidates come
     # straight off the impact prefix, so only a handful of covering
@@ -210,13 +227,11 @@ def test_cold_decode_is_bounded(big_prefix_index):
     assert st["blocks_decoded"] < 0.25 * st["blocks_total"], st
     assert st["prefix_chunks_decoded"] < st["prefix_chunks_total"], st
     li2 = LocalIndex(big_prefix_index)
-    li2.results.max_tuples = 0
     li2.topk("bob dylan", k=10)
-    st = li2.last_stats["bob dylan"]
+    _, st = _sweep(li2, "bob dylan")
     assert st.get("prefix_ta"), st
     # warm repeat decodes nothing new
-    li2.topk("bob dylan", k=10)
-    st2 = li2.last_stats["bob dylan"]
+    _, st2 = _sweep(li2, "bob dylan")
     assert st2["blocks_decoded"] == 0, (st, st2)
 
 

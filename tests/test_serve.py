@@ -320,3 +320,21 @@ def test_last_stats_count_pruned_reads(built):
     idx.terms.max_postings = 1
     idx.topk(q, 10)
     assert idx.last_stats[q]["term_cache_evicted"] > 0
+
+
+def test_warm_brute_repeat_reports_no_decode(built):
+    """This fixture's lists sit under the lazy sweep's floor, so the
+    tier answers by brute up front; a warm repeat reuses every list's
+    memoized decode and reports the blocks it decoded: none."""
+    idx = LocalIndex(built)
+    idx.results.max_tuples = 0
+    q = "spark group query"
+    idx.topk(q, 10)
+    cold = idx.last_stats[q]
+    assert cold["finisher"] == "brute", cold
+    assert cold["reason"]["postings"] <= cold["reason"]["lazy_floor"], cold
+    assert cold["blocks_decoded"] == cold["blocks_total"] > 0, cold
+    idx.topk(q, 10)
+    warm = idx.last_stats[q]
+    assert warm["finisher"] == "brute", warm
+    assert warm["blocks_decoded"] == 0, warm

@@ -1,7 +1,8 @@
 """Top-k kernels: lazy block-max rank identity vs brute, decode
-skipping, the dense-merge finisher, and k=0 / empty edge inputs.
+skipping, the dense-merge finisher, the up-front brute-or-lazy choice
+in ``_topk_query``, and k=0 / empty edge inputs.
 
-Pure-numpy tests (no Spark session) over synthetic postings built as
+Pure-numpy tests (one Spark test aside) over synthetic postings built as
 Arrow tables with the posting schema — the same input the Spark
 applyInArrow kernels and the serving tier's pruned read hand to
 ``_term_block_meta`` and ``_topk_query``, so these gates are the fast
@@ -23,7 +24,9 @@ import pyarrow as pa
 import pytest
 
 from jivesearch_spark import bm25, codec
-from jivesearch_spark.query import _score_shard_np
+from jivesearch_spark.query import (_LAZY_FLOOR, _dense_arrays_from_tb,
+                                    _score_shard_np, _term_block_meta,
+                                    _topk_blockmax_lazy, _topk_brute)
 
 K1, B, AVGDL = 1.2, 0.75, 90.0
 
@@ -56,6 +59,13 @@ def _make_tbl(rng, n_docs, spec, idf, zipf=False, shards=1):
     return pa.Table.from_pylist(rows, schema=POSTINGS)
 
 
+def _lazy(tbl, idf, k, msm):
+    """The lazy block-max kernel itself, whatever finisher
+    ``_topk_query`` would pick for these list lengths."""
+    return _topk_blockmax_lazy(_term_block_meta(tbl, idf), k, msm,
+                               K1, B, AVGDL)
+
+
 def test_lazy_kernel_rank_identical_to_brute():
     rng = np.random.default_rng(7)
     n_docs, fails = 20000, []
@@ -68,7 +78,7 @@ def test_lazy_kernel_rank_identical_to_brute():
                         shards=1 + trial % 3)
         for k, msm in itertools.product((1, 10, 137),
                                         (0, max(1, n_terms - 1), n_terms)):
-            d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, k, msm, True)
+            d1, s1 = _lazy(tbl, idf, k, msm)
             d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, k, msm, False)
             if not (np.array_equal(d1, d0)
                     and np.allclose(s1, s0, atol=1e-12)):
@@ -104,14 +114,14 @@ def test_lazy_kernel_empty_and_degenerate():
     rng = np.random.default_rng(3)
     # empty table with the posting schema → empty result, both modes
     tbl = POSTINGS.empty_table()
-    for wand in (True, False):
-        d, s = _score_shard_np(tbl, {}, K1, B, AVGDL, 10, 0, wand)
+    for d, s in (_lazy(tbl, {}, 10, 0),
+                 _score_shard_np(tbl, {}, K1, B, AVGDL, 10, 0, False)):
         assert d.size == 0 and s.size == 0
     # one tiny list, k larger than the corpus
     spec = {"only": 5}
     idf = {"only": float(bm25.idf(100, 5))}
     tbl = _make_tbl(rng, 100, spec, idf)
-    d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, 50, 0, True)
+    d1, s1 = _lazy(tbl, idf, 50, 0)
     d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 50, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
     assert d1.size == 5
@@ -119,7 +129,7 @@ def test_lazy_kernel_empty_and_degenerate():
     spec = {"a": 40, "b": 40}
     idf = {t: float(bm25.idf(100, 40)) for t in spec}
     tbl = _make_tbl(rng, 100, spec, idf)
-    d1, _ = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 3, True)
+    d1, _ = _lazy(tbl, idf, 10, 3)
     d0, _ = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 3, False)
     assert d1.size == 0 and d0.size == 0
 
@@ -167,8 +177,6 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
     store stays untouched (zero lazy decodes — the decode-all happens
     once, memoized on tb as 'dense'). A skewed 2-term query must still
     take the lazy path and skip blocks."""
-    from jivesearch_spark.query import _term_block_meta, _topk_blockmax_lazy
-
     rng = np.random.default_rng(5)
     n_docs = 100_000
 
@@ -216,7 +224,7 @@ def test_lazy_kernel_paging_window(offset_k):
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
     tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
     kk = offset + k
-    d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, kk, 0, True)
+    d1, s1 = _lazy(tbl, idf, kk, 0)
     d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, kk, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
 
@@ -228,10 +236,7 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
     tf-norm only). Regression for the bound/weight mismatch: with raw
     bounds the kernel over-retires blocks that still hold top-k
     winners and silently returns wrong results."""
-    from jivesearch_spark.query import (_dense_arrays_from_tb,
-                                        _term_block_meta,
-                                        _topk_blockmax_lazy,
-                                        _topk_impact_ordered)
+    from jivesearch_spark.query import _topk_impact_ordered
     rng = np.random.default_rng(7)
     k1, b, avgdl = 1.2, 0.75, 6.0
     n = 120_000
@@ -304,7 +309,7 @@ def test_dense_merge_matches_brute(id_stride, msm):
     """_topk_dense_merge ≡ _topk_brute on both branches (dense
     scatter for small spans, (docid, term)-lexsort + reduceat for
     sparse/re-id'd spaces), with and without minimum-should-match."""
-    from jivesearch_spark.query import _topk_brute, _topk_dense_merge
+    from jivesearch_spark.query import _topk_dense_merge
     rng = np.random.default_rng(11)
     for trial in range(10):
         dense = _dense_from_lists(_merge_cases(rng, 3000, id_stride))
@@ -319,7 +324,7 @@ def test_dense_merge_theta_bound_exact():
     """theta (a valid k-th-best lower bound) must not change the
     result — including a too-tight theta, which the widen guard
     recovers from, and the rounded-tie slack at the pool boundary."""
-    from jivesearch_spark.query import _topk_brute, _topk_dense_merge
+    from jivesearch_spark.query import _topk_dense_merge
     rng = np.random.default_rng(12)
     dense = _dense_from_lists(_merge_cases(rng, 3000, 1))
     want = _topk_brute(dense, 10, 0)
@@ -352,7 +357,7 @@ def test_dense_merge_fewer_than_k_and_empty():
 def test_k_zero_is_empty():
     """k=0 answers empty on every path instead of raising from the
     top-k selection (np.partition with an out-of-bounds kth)."""
-    from jivesearch_spark.query import _topk_brute, _topk_dense_merge
+    from jivesearch_spark.query import _topk_dense_merge
     rng = np.random.default_rng(21)
     spec = {"x": 900, "y": 400, "z": 60}
     idf = {t: float(bm25.idf(5000, d)) for t, d in spec.items()}
@@ -361,7 +366,119 @@ def test_k_zero_is_empty():
         for msm in (0, 2):
             d, s = _score_shard_np(tbl, idf, K1, B, AVGDL, 0, msm, wand)
             assert d.size == 0 and s.size == 0, (wand, msm)
+    for msm in (0, 2):
+        d, s = _lazy(tbl, idf, 0, msm)
+        assert d.size == 0 and s.size == 0, msm
     dense = _dense_from_lists({"a": (np.arange(20), np.linspace(1, 2, 20))})
     for fn in (_topk_brute, _topk_dense_merge):
         d, s = fn(dense, 0, 0)
         assert d.size == 0 and s.size == 0, fn
+
+
+#: (list sizes, finisher) straddling the up-front choice: brute while
+#: Σ df ≤ n_lists × _LAZY_FLOOR ("at most"), lazy one posting above it.
+#: The floor is per query, not per list: ``a`` alone would be over it.
+CHOICE_CASES = [
+    ({"a": _LAZY_FLOOR}, "brute"),
+    ({"a": _LAZY_FLOOR + 1}, "lazy"),
+    ({"a": 2 * _LAZY_FLOOR - 300, "b": 300}, "brute"),
+    ({"a": 2 * _LAZY_FLOOR - 300, "b": 301}, "lazy"),
+]
+
+
+@pytest.fixture(scope="module")
+def choice_tables():
+    rng = np.random.default_rng(31)
+    n_docs = 100_000
+    out = []
+    for spec, finisher in CHOICE_CASES:
+        idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
+        out.append((spec, finisher, _make_tbl(rng, n_docs, spec, idf,
+                                              zipf=True), idf))
+    return out
+
+
+def test_finisher_chosen_from_posting_count(choice_tables):
+    """One and two lists just under and just over n_lists × F: the
+    entry picks brute at or below the floor and the lazy sweep above
+    it, and says why in ``reason``."""
+    for spec, finisher, tbl, idf in choice_tables:
+        st = {}
+        _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, True, stats=st)
+        assert st["finisher"] == finisher, (spec, st)
+        assert st["reason"] == {"postings": sum(spec.values()),
+                                "lazy_floor": len(spec) * _LAZY_FLOOR}, st
+        assert st.get("dense_bailout", False) == (finisher == "brute"), st
+        st = {}
+        _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False, stats=st)
+        assert st["finisher"] == "brute", (spec, st)
+
+
+@pytest.mark.parametrize("offset", [0, 7])
+@pytest.mark.parametrize("msm", [0, 2])
+def test_finisher_choice_rank_identical_to_brute(choice_tables, offset, msm):
+    """Either side of the floor answers exactly what ``_topk_brute``
+    answers, for k = 0, 1, 10 and more than the matches, paged."""
+    fails = []
+    for spec, _, tbl, idf in choice_tables:
+        dense = _dense_arrays_from_tb(_term_block_meta(tbl, idf),
+                                      K1, B, AVGDL)
+        for k in (0, 1, 10, sum(spec.values()) + 5):
+            kk = offset + k
+            d1, s1 = _score_shard_np(tbl, idf, K1, B, AVGDL, kk, msm, True)
+            d0, s0 = _topk_brute(dense, kk, msm)
+            if not (np.array_equal(d1[offset:], d0[offset:])
+                    and np.array_equal(np.round(s1[offset:], 9),
+                                       np.round(s0[offset:], 9))):
+                fails.append((spec, k))
+    assert not fails, fails
+
+
+def _choice_docs(spark, n=24_000, seed=17):
+    """Head term ``a`` in 90 % of docs (over one list's floor), ``b``
+    in 50 %, ``c`` in 20 %, ``d`` in 1 %, tf 1-3, plus zipf filler."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        words = []
+        for t, p in (("a", 0.9), ("b", 0.5), ("c", 0.2), ("d", 0.01)):
+            if rng.random() < p:
+                words += [t] * int(rng.integers(1, 4))
+        words += [f"w{min(int(rng.zipf(1.3)), 200)}"
+                  for _ in range(int(rng.integers(4, 12)))]
+        rng.shuffle(words)
+        rows.append((i, " ".join(words)))
+    return spark.createDataFrame(rows, "docid long, text string")
+
+
+@pytest.mark.spark
+def test_serving_mixed_choices_match_spark_path(spark, tmp_path):
+    """``LocalIndex.topk`` ≡ ``bm25_topk_indexed`` on a mix of queries
+    under and over the floor. The Spark path decides per shard (three
+    shards here, so its lists are shorter) and the serving tier over
+    the whole index: each finisher answers like the oracle, so the
+    choices may differ and the ranks may not."""
+    from jivesearch_spark.index import IndexParams, build_index
+    from jivesearch_spark.query import IndexReader, bm25_topk_indexed
+    from jivesearch_spark.serve import LocalIndex
+
+    root = str(tmp_path / "idx")
+    build_index(_choice_docs(spark), root,
+                IndexParams(docs_per_shard=8192, n_buckets=4),
+                url_col=None, log=lambda *a: None)
+    reader, li = IndexReader(spark, root), LocalIndex(root)
+    seen = set()
+    for q in ["a", "a b", "b", "b c", "a c d", "d w3"]:
+        for k, msm in ((10, False), (25, True)):
+            want = [(r.docid, round(r.score, 9)) for r in
+                    bm25_topk_indexed(reader, q, k,
+                                      min_should_match=msm).collect()]
+            got = [(d, round(s, 9))
+                   for d, s in li.topk(q, k, min_should_match=msm)]
+            assert got == want, (q, k, msm)
+            st = li.last_stats[q]
+            reason = st["reason"]
+            under = reason["postings"] <= reason["lazy_floor"]
+            assert (st["finisher"] == "brute") == under, (q, st)
+            seen.add(under)
+    assert seen == {True, False}, "the set must straddle the floor"

@@ -9,9 +9,12 @@ per rep — pays dataset discovery + footer + block-table read) and warm
 (same instance, result cache disabled so the kernel runs), 5-rep
 median, with the bench interference monitor stamping the window.
 
-Rank identity is gated on the same index before any timing: the lazy
-prefix-TA path (use_wand=True) must equal the brute decode-all path
-(use_wand=False) per query.
+Rank identity is gated on the same index before any timing: the served
+path (use_wand=True, whichever finisher `query._topk_query` picks) must
+equal the brute decode-all path (use_wand=False) per query. Each timed
+query prints the cold run's ``finisher`` (the path that answered) and
+``reason`` (the posting count and lazy floor the choice compared) from
+``last_stats``.
 
     python tools/scale_smoke.py [n_pages] [--reps K]
 """
@@ -73,7 +76,7 @@ def main():
     else:
         print(f"[smoke] reusing index: {man.n_docs} docs", flush=True)
 
-    # ---- rank identity gate (lazy prefix-TA == brute decode-all) ----
+    # ---- rank identity gate (served == brute decode-all) ----
     li = LocalIndex(IDX)
     li.results.max_tuples = 0
     for name, q in QUERIES:
@@ -81,7 +84,7 @@ def main():
         brute = li.topk(q, k=10, use_wand=False)
         assert [(d, round(s, 9)) for d, s in lazy] == \
             [(d, round(s, 9)) for d, s in brute], (name, lazy, brute)
-    print("[smoke] rank identity OK (lazy == brute, all queries)",
+    print("[smoke] rank identity OK (served == brute, all queries)",
           flush=True)
     del li
 
@@ -104,12 +107,13 @@ def main():
         out[f"{name}_cold_ms"] = round(statistics.median(colds), 1)
         out[f"{name}_warm_ms"] = round(statistics.median(warms), 1)
         out[f"{name}_blocks"] = int(stats0.get("blocks_decoded", -1))
-        out[f"{name}_dense_merge"] = bool(stats0.get("dense_merge", False))
+        out[f"{name}_finisher"] = stats0.get("finisher")
+        out[f"{name}_reason"] = stats0.get("reason")
         print(f"[smoke] {name:8s} ({q!r}): cold "
               f"{out[f'{name}_cold_ms']} ms  warm "
               f"{out[f'{name}_warm_ms']} ms  blocks "
-              f"{out[f'{name}_blocks']}"
-              + (" [dense-merge]" if out[f"{name}_dense_merge"] else ""),
+              f"{out[f'{name}_blocks']}  finisher "
+              f"{out[f'{name}_finisher']}  reason {out[f'{name}_reason']}",
               flush=True)
     m = mon.stop()
     out["window_interference"] = [m["steal_frac_a"], m["steal_frac_b"],
