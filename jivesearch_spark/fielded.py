@@ -30,7 +30,8 @@ Query modes:
   after the MSM filter exactly like the reference's should-clause.
 - ``FieldedLocalIndex.topk`` — the serving-tier flavor (open-once
   `index.TermFiles` pruned reads, no Spark job), same kernel, same
-  `serve.TermCache` / `serve.ResultCache` as `serve.LocalIndex`.
+  `serve.TermCache` / `serve.ResultCache` as `serve.LocalIndex`, the
+  result cache keyed on the query's `_analyze` sets.
 """
 
 from __future__ import annotations
@@ -171,12 +172,18 @@ class FieldedReader:
                 if self._df_cache[(field, t)] > 0}
 
 
-def _query_plan(reader, query: str, tld_boost: str | None):
-    """Shared driver-side prep: analyzed terms, per-(field,term) idf,
+def _analyze(query: str) -> tuple[tuple, tuple]:
+    """A query's sorted unigram and bigram sets: every token input of
+    its plan (bigrams keep word order: "dylan bob" ≠ "bob dylan")."""
+    toks = analyze.py_tokens(query)
+    return (tuple(sorted(set(toks))),
+            tuple(sorted(set(analyze.py_bigrams(toks)))))
+
+
+def _query_plan(reader, analyzed: tuple, tld_boost: str | None):
+    """Shared query prep from `_analyze` sets: per-(field,term) idf,
     boost, avgdl; returns None when no term matches anything."""
-    q_tokens = analyze.py_tokens(query)
-    q_terms = sorted(set(q_tokens))
-    q_bigrams = sorted(set(analyze.py_bigrams(q_tokens)))
+    q_terms, q_bigrams = analyzed
     if not q_terms:
         return None
 
@@ -293,7 +300,7 @@ def bm25_fielded_indexed(reader: FieldedReader, query: str, k: int = 10,
     kernels fetch top-(offset+k), the merge skips ``offset``)."""
     spark = reader.spark
     empty = spark.createDataFrame([], "doc_id string, score double")
-    plan = _query_plan(reader, query, tld_boost)
+    plan = _query_plan(reader, _analyze(query), tld_boost)
     if plan is None:
         return empty
     if not shingles:
@@ -353,8 +360,8 @@ class FieldedLocalIndex:
                                    self.n_buckets) for n in names}
         self._stats = {n: TermFiles(os.path.join(root, "fields", n, "term_stats"),
                                     self.n_buckets) for n in names}
-        #: the last topk call's pruned reads, term-cache counters and
-        #: kernel stats
+        #: the last topk call's ``result_cache_hit`` and, on a kernel
+        #: run, its pruned reads, term-cache counters and kernel stats
         self.last_stats: dict = {}
         self._urls = None
         self._df_cache: dict[tuple[str, str], int] = {}
@@ -385,8 +392,8 @@ class FieldedLocalIndex:
              tld_boost: str | None = None,
              min_should_match: bool = True,
              offset: int = 0, use_wand: bool = True) -> list[tuple[str, float]]:
-        ck = (query, k, shingles, tld_boost, min_should_match, offset,
-              use_wand)
+        ck = (_analyze(query), k, shingles, tld_boost, min_should_match,
+              offset, use_wand)
         hit = self.results.get(ck)
         if hit is not None:
             self.last_stats = {"result_cache_hit": True}
@@ -395,12 +402,13 @@ class FieldedLocalIndex:
         self.results.put(ck, res)
         return res
 
-    def _topk_kernel(self, query, k, shingles, tld_boost,
+    def _topk_kernel(self, analyzed, k, shingles, tld_boost,
                      min_should_match, offset, use_wand):
         # reset up front, so no early return reports the PREVIOUS
         # query's kernel stats
-        self.last_stats = {"terms_read": 0, "row_groups_read": 0}
-        plan = _query_plan(self, query, tld_boost)
+        self.last_stats = {"terms_read": 0, "row_groups_read": 0,
+                           "result_cache_hit": False}
+        plan = _query_plan(self, analyzed, tld_boost)
         if plan is None:
             return []
         if not shingles:

@@ -196,9 +196,11 @@ class _LazyBytes:
         return self._a.take(idxs).to_pylist()
 
 
-def _term_block_meta(tbl, idf: dict) -> dict:
+def _term_block_meta(tbl, idf) -> dict:
     """Group a postings Arrow table into per-term RAW block metadata —
-    no decode. Sorted (term, shard, block_id) with Arrow compute +
+    no decode. ``idf`` is a {term: weight} dict, or a callable of the
+    term's df = Σ n_docs of its regular blocks. Sorted (term, shard,
+    block_id) with Arrow compute +
     numpy run boundaries, so each term's block ordinals are
     docid-ordered and disjoint (shard ranges partition the docid space
     in shard order); the same code serves one shard (the Spark
@@ -247,6 +249,7 @@ def _term_block_meta(tbl, idf: dict) -> dict:
     # regular rows ascending block_id (docid order)
     for term, sl, cols, byt in _groups(reg_t, "ascending"):
         n = sl.stop - sl.start
+        df = int(cols["n_docs"][sl].sum())
         out[term] = {
             "first": cols["first_docid"][sl].astype(np.int64),
             "last": cols["last_docid"][sl].astype(np.int64),
@@ -259,11 +262,11 @@ def _term_block_meta(tbl, idf: dict) -> dict:
             "deltas": _LazyBytes(byt["deltas"].slice(sl.start, n)),
             "tfs": _LazyBytes(byt["tfs"].slice(sl.start, n)),
             "dls": _LazyBytes(byt["dls"].slice(sl.start, n)),
-            "w": idf[term],
+            "w": idf(df) if callable(idf) else idf[term],
             # total postings across blocks — _memo_postings charges the
             # RAW compressed table against the term-cache budget with
             # this (≈2-4 B/posting varint vs 16 B/posting decoded)
-            "nd_total": int(cols["n_docs"][sl].sum()),
+            "nd_total": df,
         }
     if imp_t is not None:
         # impact rows: rank = -block_id - 1 ascending ⇔ block_id DESC
@@ -290,7 +293,8 @@ def _memo_postings(meta: dict, st: dict) -> int:
     dense bailout decode, the TA impact permutation, and the raw
     compressed table at ~1/4 posting-equivalent — otherwise a
     skip-heavy head term parks its FULL compressed list at zero cost
-    and a long-running tier grows without bound."""
+    and a long-running tier grows without bound. The +1 per entry
+    bounds the empty entries of terms the index lacks."""
     n = st.get("np", 0)
     ist = st.get("istream")
     if ist is not None:
@@ -300,7 +304,7 @@ def _memo_postings(meta: dict, st: dict) -> int:
     order = meta.get("impact_order")
     if order is not None:
         n += int(order.size)
-    return n + meta.get("nd_total", 0) // 4
+    return 1 + n + meta.get("nd_total", 0) // 4
 
 
 def _bm25_scores(d: dict, tf: np.ndarray, dl: np.ndarray,

@@ -7,16 +7,17 @@ The reference serves queries from Elasticsearch at millisecond latency
 scheduling. Spark builds the index; serving a top-k query is a pruned
 read of a few posting lists. This module is that read path:
 
-1. ``term_stats`` lookup through `index.TermFiles`, which opens each
-   ``bucket=N`` file once and keeps its row groups' ``term`` min/max:
-   a first-seen term reads only the row groups whose range holds it,
-   with no per-query dataset planning or footer re-read — IO per
-   query is O(|Q| posting lists) regardless of corpus size.
-2. the same pruned read over ``postings``, handed as an Arrow table to
-   `query._term_block_meta` (the Spark kernels' block tables), so only
-   block METADATA — compressed bytes + per-block bounds — is
-   materialized eagerly. Scoring calls the SAME kernel entry as the
-   Spark path (`query._topk_query`) over the whole index at once. With
+1. a pruned ``postings`` read through `index.TermFiles`, which opens
+   each ``bucket=N`` file once and keeps its row groups' ``term``
+   min/max: a first-seen term reads only the row groups whose range
+   holds it, with no per-query dataset planning or footer re-read —
+   IO per query is O(|Q| posting lists) regardless of corpus size.
+2. the read goes as an Arrow table to `query._term_block_meta` (the
+   Spark kernels' block tables; a term's df is the Σ n_docs of its
+   regular blocks, so no ``term_stats`` lookup), so only block
+   METADATA — compressed bytes + per-block bounds — is materialized
+   eagerly. Scoring calls the SAME kernel entry as the Spark path
+   (`query._topk_query`) over the whole index at once. With
    ``use_wand`` it picks the finisher once from the query's posting
    count: brute while the lists hold at most n_lists ×
    `query._LAZY_FLOOR` postings (one bulk pass beats the sweep's
@@ -29,10 +30,12 @@ read of a few posting lists. This module is that read path:
    (the Spark path decides per shard; every finisher answers like the
    oracle, so the ranks agree). Both serving tiers keep block tables
    and the kernel's decoded blocks in one `TermCache` (warm queries do
-   no IO and no decode) and answers in one `ResultCache`.
+   no IO and no decode) and answers in one `ResultCache`, keyed on the
+   ANALYZED request: a retyped form of a warm query (other case,
+   spacing or word order) is a hit, not a kernel run.
 
 At 10^12 docs this is how a serving tier in front of the index works:
-each frontend holds the manifest + term→df cache; every query reads
+each frontend holds the manifest + term cache; every query reads
 only its own terms' blocks (bucket directory + row-group pruning means
 the files behave like a sharded KV store keyed by term). The Spark
 path (`query.bm25_topk_indexed`) remains the batch/analytics flavor.
@@ -151,10 +154,13 @@ class TermCache:
 class ResultCache:
     """EXACT result cache — the serving analog of the reference's
     frontend result cache (frontend/search.go:439-453, 1 h TTL keyed on
-    the full request). No TTL needed: a serving tier holds one
+    the full request). The tiers key it on the ANALYZED request (the
+    sorted term set — plus, fielded, the sorted bigram set — with
+    every other option the kernel reads), so surface variants of one
+    query share an entry. No TTL needed: a serving tier holds one
     immutable published snapshot (manifest swap ⇒ new tier), so a
-    request key maps to exactly one answer and a hit is provably
-    identical to a recompute (pytest gate). LRU, budgeted by TOTAL
+    key maps to exactly one answer and a hit is provably identical to
+    a recompute (pytest gate). LRU, budgeted by TOTAL
     cached tuples at 1 + len(answer) per entry: a result tuple costs
     ~120 B of Python objects, so an entry-count cap would let a large-k
     caller grow memory k× per entry, and the +1 bounds empty answers.
@@ -196,26 +202,14 @@ class LocalIndex:
         self.k1 = self.man.params["k1"]
         self.b = self.man.params["b"]
         self._postings = TermFiles(f"{root}/postings", self.n_buckets)
-        self._stats = TermFiles(f"{root}/term_stats", self.n_buckets)
-        self._df_cache: dict[str, int] = {}
         self.terms = TermCache()
         #: ``results.max_tuples = 0`` forces every query through the
         #: kernel (bench uses this so latencies measure scoring)
         self.results = ResultCache()
-        #: per-query kernel stats of the LAST topk/topk_batch call, with
-        #: the batch's pruned reads and ``term_cache_*`` counters
+        #: per-query stats of the LAST topk/topk_batch call: every entry
+        #: carries ``result_cache_hit``; kernel runs add the batch's
+        #: pruned reads, ``term_cache_*`` counters and kernel stats
         self.last_stats: dict[str, dict] = {}
-
-    # -- lookups ----------------------------------------------------------
-    def stats_for(self, terms: list[str],
-                  stats: dict | None = None) -> dict[str, int]:
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            tbl = self._stats.read(missing, ["term", "df"], stats)
-            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-            for t in missing:
-                self._df_cache[t] = int(found.get(t, 0))
-        return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
 
     # -- query ------------------------------------------------------------
     def topk(self, query: str, k: int = 10, use_wand: bool = True,
@@ -232,70 +226,64 @@ class LocalIndex:
                    min_should_match: bool = False,
                    offset: int = 0):
         """Serve many queries with ONE pruned postings read (shared
-        scan for the union of terms), then per-query kernels — the
-        shape of a batched serving tier."""
-        out, misses = {}, []
-        for q in queries:
-            hit = self.results.get((q, k, use_wand, min_should_match, offset))
-            if hit is None:
-                misses.append(q)
-            else:
-                out[q] = hit
-        computed = self._topk_batch_kernel(misses, k, use_wand,
-                                           min_should_match, offset)
-        for q, res in computed.items():
-            self.results.put((q, k, use_wand, min_should_match, offset), res)
-        for q in out:
-            self.last_stats.setdefault(q, {"result_cache_hit": True})
-        out.update(computed)
-        return out
+        scan for the union of terms), then one kernel per distinct
+        sorted analyzed-term tuple — the result-cache key, so surface
+        variants of one intent (case, spacing, word order, repeats)
+        share one entry and one kernel run."""
+        keys = {q: tuple(sorted(set(analyze_query(self.man, q))))
+                for q in queries}
+        opts = (k, use_wand, min_should_match, offset)
+        answers = {ts: self.results.get((ts, *opts))
+                   for ts in dict.fromkeys(keys.values())}
+        computed, stats = self._topk_batch_kernel(
+            [ts for ts, hit in answers.items() if hit is None], *opts)
+        for ts, res in computed.items():
+            self.results.put((ts, *opts), res)
+        stats.update((ts, {"result_cache_hit": True})
+                     for ts in answers if ts not in computed)
+        answers.update(computed)
+        self.last_stats = {q: stats[ts] for q, ts in keys.items()
+                           if ts in stats}
+        return {q: list(answers[ts]) for q, ts in keys.items()}
 
-    def _topk_batch_kernel(self, queries: list[str], k: int,
+    def _topk_batch_kernel(self, term_sets: list[tuple], k: int,
                            use_wand: bool, min_should_match: bool,
                            offset: int):
-        # reset up front so the early return below doesn't leave the
-        # PREVIOUS call's per-query stats for topk_batch to merge
-        # cache-hit markers into
-        self.last_stats = {}
-        analyzed = {q: sorted(set(analyze_query(self.man, q)))
-                    for q in queries}
-        all_terms = sorted({t for ts in analyzed.values() for t in ts})
-        if not all_terms:
-            return {q: [] for q in queries}
-        reads = {"terms_read": 0, "row_groups_read": 0}  # df + postings
-        dfs = self.stats_for(all_terms, reads)
-        live = [t for t in all_terms if t in dfs]
+        """({terms: answer}, {terms: stats}); stats only for kernel runs."""
+        out, stats = {}, {}
+        all_terms = sorted({t for ts in term_sets for t in ts})
+        reads = {"terms_read": 0, "row_groups_read": 0}
         n_docs, avgdl = self.man.n_docs, self.man.avgdl
 
         # fetch RAW block tables once for the whole batch and the
         # whole index (shard ranges partition the docid space, so each
         # term's block ordinals are globally docid-ordered) — decode
         # happens lazily inside the kernel, block by block, only when
-        # a block's bound can still beat the global θ.
-        missing = self.terms.missing(live, reads)
+        # a block's bound can still beat the global θ. A term's df is
+        # the Σ n_docs of the regular blocks this read returns; a term
+        # the index lacks is cached as an empty entry, so its repeats
+        # skip the read and the term-cache budget bounds it.
+        missing = self.terms.missing(all_terms, reads)
         if missing:
-            idf_m = {t: bm25.idf(n_docs, dfs[t]) for t in missing}
-            self.terms.put(_term_block_meta(
-                self._postings.read(missing, _POSTING_COLS, reads), idf_m))
-        tb_all = self.terms.take(live)
+            tb = _term_block_meta(
+                self._postings.read(missing, _POSTING_COLS, reads),
+                lambda df: bm25.idf(n_docs, df))
+            self.terms.put({t: tb.get(t, {}) for t in missing})
+        tb_all = self.terms.take(all_terms)
 
-        out = {}
-        for q in queries:
-            q_terms = analyzed[q]
-            present = [t for t in q_terms if t in tb_all]
-            if not present:
-                out[q] = []
+        for terms in term_sets:
+            tb = {t: tb_all[t] for t in terms if tb_all[t]}
+            if not tb:
+                out[terms] = []
                 continue
-            req = bm25.msm_required(len(q_terms)) if min_should_match else 0
-            tb = {t: tb_all[t] for t in present}
-            qstats = dict(reads)
+            qstats = stats[terms] = dict(reads, result_cache_hit=False)
+            req = bm25.msm_required(len(terms)) if min_should_match else 0
             d, s = _topk_query(tb, k + max(0, offset), req, self.k1, self.b,
                                avgdl, use_wand, stats=qstats,
                                store=self.terms.store)
-            self.last_stats[q] = qstats
-            out[q] = [(int(di), float(si))
-                      for di, si in zip(d[offset:], s[offset:])]
+            out[terms] = [(int(di), float(si))
+                          for di, si in zip(d[offset:], s[offset:])]
         self.terms.charge(tb_all, reads)
-        for qstats in self.last_stats.values():
+        for qstats in stats.values():
             qstats["term_cache_evicted"] = reads["term_cache_evicted"]
-        return out
+        return out, stats

@@ -212,6 +212,26 @@ def test_fielded_no_match_resets_last_stats(roots):
 
 
 @pytest.mark.spark
+def test_fielded_result_cache_keys_on_analyzed_query(roots):
+    """Case and spacing variants share one result-cache entry; word
+    order changes the shingle clauses, so "dylan bob" gets its own.
+    Every answer equals its own uncached one."""
+    idx = FieldedLocalIndex(roots[None])
+    ref = FieldedLocalIndex(roots[None])
+    ref.results.max_tuples = 0
+    a = idx.topk("Bob DYLAN", k=10)
+    assert idx.last_stats["result_cache_hit"] is False
+    b = idx.topk(" bob   dylan ", k=10)
+    assert idx.last_stats == {"result_cache_hit": True}
+    assert a and a == b == ref.topk("bob dylan", k=10)
+    assert len(idx.results._entries) == 1
+    c = idx.topk("dylan bob", k=10)
+    assert idx.last_stats["result_cache_hit"] is False
+    assert len(idx.results._entries) == 2
+    assert c == ref.topk("dylan bob", k=10)
+
+
+@pytest.mark.spark
 def test_fielded_zipfian_replay_eviction_churn(roots, zipfian_replay):
     """The adversarial Zipfian eviction gate of test_serve, run on the
     fielded tier through the same shared caches: (field, term) keys,

@@ -245,3 +245,24 @@ def test_decode_postings_df_ignores_prefix_rows(spark, prefix_index):
     got = {r.term: r.cnt for r in
            tf.groupBy("term").agg(F.count("*").alias("cnt")).collect()}
     assert got == want
+
+
+def test_served_df_ignores_prefix_rows(spark, prefix_index):
+    """The serving tier takes df from the postings it reads, summing
+    regular blocks only: a head term's impact-prefix rows repeat
+    postings, so counting them would shrink its idf. The served answer
+    equals the Spark path's, which reads df from term_stats."""
+    reader = IndexReader(spark, prefix_index)
+    li = LocalIndex(prefix_index)
+    for q in ["bob", "bob dylan", "dylan w3"]:
+        for wand in (True, False):
+            spark_rows = [(r.docid, round(r.score, 9)) for r in
+                          bm25_topk_indexed(reader, q, 10,
+                                            use_wand=wand).collect()]
+            served = [(d, round(s, 9))
+                      for d, s in li.topk(q, 10, use_wand=wand)]
+            assert served == spark_rows, (q, wand)
+    for r in reader.term_stats.where("term IN ('bob', 'dylan')").collect():
+        meta = li.terms.meta[r.term]
+        assert meta.get("iub") is not None, r.term   # prefix rows read
+        assert meta["w"] == bm25.idf(li.man.n_docs, r.df), r.term

@@ -338,3 +338,114 @@ def test_warm_brute_repeat_reports_no_decode(built):
     warm = idx.last_stats[q]
     assert warm["finisher"] == "brute", warm
     assert warm["blocks_decoded"] == 0, warm
+
+
+def _pin(rows):
+    return sorted((-round(s, 9), d) for d, s in rows)
+
+
+def _variants(q):
+    """Surface forms of ``q`` that analyze to the same term set."""
+    import random
+
+    words = q.split()
+    shuffled = list(words)
+    random.Random(q).shuffle(shuffled)
+    return [q.upper(), q.title(), "  " + "   ".join(words) + " ",
+            " ".join(reversed(words)), " ".join(shuffled),
+            " ".join(words + words[:1]), ", ".join(words) + "!",
+            ";".join(w.capitalize() for w in words)]
+
+
+def test_result_cache_keys_on_analyzed_terms(built):
+    """Retyped forms of a warm query (case, spacing, word order, a
+    repeated word, punctuation) hit the entry its canonical form put,
+    and every hit equals the kernel's answer with the cache bypassed."""
+    ref = LocalIndex(built)
+    ref.results.max_tuples = 0
+    idx = LocalIndex(built)
+    for q in [q for q in QUERIES if q]:
+        for wand in (True, False):
+            want = _pin(ref.topk(q, 10, use_wand=wand))
+            idx.topk(q, 10, use_wand=wand)
+            for v in _variants(q):
+                got = idx.topk(v, 10, use_wand=wand)
+                assert idx.last_stats[v] == {"result_cache_hit": True}, v
+                assert _pin(got) == want, (q, v, wand)
+
+
+def test_result_cache_key_holds_every_kernel_input(built):
+    """The same terms under another k, offset, min_should_match or
+    use_wand miss once (a kernel run), then hit; each answer equals
+    its own cache-bypassed one."""
+    ref = LocalIndex(built)
+    ref.results.max_tuples = 0
+    idx = LocalIndex(built)
+    q = "table scan merge sort filter"
+    idx.topk(q, 10)
+    assert idx.last_stats[q]["result_cache_hit"] is False
+    v = "Filter SORT merge  scan table"
+    for opts in ({"k": 5}, {"offset": 3}, {"min_should_match": True},
+                 {"use_wand": False}):
+        args = {"k": 10, **opts}
+        for hit in (False, True):
+            got = idx.topk(v, **args)
+            assert idx.last_stats[v]["result_cache_hit"] is hit, (opts, hit)
+            assert _pin(got) == _pin(ref.topk(q, **args)), opts
+
+
+def test_cold_batch_runs_kernel_once_per_intent(built, monkeypatch):
+    """Two surface variants of one intent in one cold batch share one
+    kernel run and one answer."""
+    from jivesearch_spark import serve
+
+    calls = []
+    real = serve._topk_query
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(serve, "_topk_query", counted)
+    idx = LocalIndex(built)
+    v1, v2 = "spark group query", "QUERY  Group, spark"
+    out = idx.topk_batch([v1, v2], 10)
+    assert len(calls) == 1
+    assert out[v1] == out[v2] and out[v1]
+    assert idx.last_stats[v1]["result_cache_hit"] is False
+    assert idx.last_stats[v2]["result_cache_hit"] is False
+
+
+def test_df_derived_from_postings_matches_term_stats(built):
+    """The tier takes each term's df from the postings it reads (Σ
+    n_docs over regular blocks) instead of a term_stats lookup; for
+    every indexed term that equals the stored df, so the idf weight is
+    the one the Spark path computes."""
+    import pyarrow.dataset as ds
+
+    from jivesearch_spark import bm25
+
+    stats = ds.dataset(f"{built}/term_stats",
+                       partitioning=ds.partitioning(flavor="hive")) \
+        .to_table(columns=["term", "df"]).to_pydict()
+    want = dict(zip(stats["term"], stats["df"]))
+    idx = LocalIndex(built)
+    idx.topk(" ".join(sorted(want)), 10)
+    assert set(idx.terms.meta) == set(want)
+    for t, df in want.items():
+        meta = idx.terms.meta[t]
+        assert int(meta["nd"].sum()) == df, t
+        assert meta["w"] == bm25.idf(idx.man.n_docs, df), t
+
+
+def test_absent_terms_are_budgeted(built):
+    """Terms the index lacks are cached as empty entries that the term
+    cache's budget bounds: a stream of distinct absent terms never
+    grows the accounted cost past the budget."""
+    idx = LocalIndex(built)
+    idx.terms.max_postings = 50
+    for i in range(500):
+        assert idx.topk(f"zzzabsent{i}", 10) == []
+        assert idx.terms._cost_total <= 50, i
+        assert len(idx.terms.meta) <= 50, i
+    assert "zzzabsent499" in idx.terms.meta
