@@ -22,16 +22,22 @@ bucketing, resume manifests) — fields are just short documents. The
 reference runs one ES index per language; `lang` partitions map to one
 fielded root per language, built from a lang-filtered base.
 
-Query modes:
+Query modes — both build one block table over (field, term) keys and
+call `query._topk_query`, the kernel entry every other caller uses.
+`_field_meta` pins each field's rules on its entries: w = idf × boost,
+the field's avgdl, boost-scaled bounds, and the cross-field MSM marks
+(a unigram key's ``group`` is its base term, shingle keys have none,
+the tld key is ``probe_only``: it adds score but never generates
+candidates, like the reference's non-qualifying regional clause).
 - ``bm25_fielded_indexed`` — one Spark job: pruned per-field scans
-  union'd with a field tag, one kernel per shard decoding each
-  (field, term) once, scoring = Σ boost_f · bm25_f, cross-field MSM
-  (distinct base terms matched in ANY unigram field), tld bonus added
-  after the MSM filter exactly like the reference's should-clause.
+  union'd with a field tag, one brute kernel per shard decoding each
+  (field, term) once, idf from the global df (`FieldedReader.stats_for`).
 - ``FieldedLocalIndex.topk`` — the serving-tier flavor (open-once
-  `index.TermFiles` pruned reads, no Spark job), same kernel, same
-  `serve.TermCache` / `serve.ResultCache` as `serve.LocalIndex`, the
-  result cache keyed on the query's `_analyze` sets.
+  `index.TermFiles` pruned reads, no Spark job): the same up-front
+  brute-or-lazy choice as `serve.LocalIndex`, df taken from the
+  postings rows it reads, the same `serve.TermCache` /
+  `serve.ResultCache`, the result cache keyed on the query's
+  `_analyze` sets.
 """
 
 from __future__ import annotations
@@ -39,15 +45,13 @@ from __future__ import annotations
 import json
 import os
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import analyze, bm25
 from .hashing import term_bucket
 from .index import IndexParams, Manifest, TermFiles, assign_doc_ids, build_index
-from .query import (_POSTING_COLS, _dense_arrays_from_tb, _pinned_topk,
-                    _term_block_meta, _topk_blockmax_lazy, _topk_table)
+from .query import _POSTING_COLS, _term_block_meta, _topk_query, _topk_table
 from .serve import ResultCache, TermCache
 from .session import ensure_shipped
 
@@ -180,114 +184,84 @@ def _analyze(query: str) -> tuple[tuple, tuple]:
             tuple(sorted(set(analyze.py_bigrams(toks)))))
 
 
-def _query_plan(reader, analyzed: tuple, tld_boost: str | None):
-    """Shared query prep from `_analyze` sets: per-(field,term) idf,
-    boost, avgdl; returns None when no term matches anything."""
+def _weight(n_docs: int, boost: float):
+    """A field's w as a callable of df: idf × boost, the oracle's
+    evaluation order (bm25.bm25_fielded_topk)."""
+    return lambda df: bm25.idf(n_docs, df) * boost
+
+
+def _query_plan(reader, analyzed: tuple, tld_boost: str | None,
+                shingles: bool):
+    """Shared query prep from `_analyze` sets: one spec per field the
+    query reads — its terms, boost, avgdl, shingle flag and ``w`` (see
+    `_weight`) — the tld field as a ``probe_only`` spec; None when the
+    query has no token. Terms are not checked against the index here:
+    the serving tier takes df from the postings rows it reads, the
+    Spark path pins the global df with `_pin_global_df`."""
     q_terms, q_bigrams = analyzed
     if not q_terms:
         return None
-
     n_docs = reader.man[TLD_FIELD].n_docs
-    plan = {"q_terms": q_terms, "n_docs": n_docs, "per_field": {},
-            "tld": None}
+    specs = {}
     for name, spec in reader.fields.items():
         terms = q_bigrams if spec["shingle"] else q_terms
-        if not terms:
-            continue
-        dfs = reader.stats_for(name, terms)
-        if not dfs:
-            continue
-        idf = {t: bm25.idf(n_docs, d) for t, d in dfs.items()}
-        plan["per_field"][name] = {
-            "terms": sorted(dfs), "idf": idf, "boost": spec["boost"],
-            "avgdl": reader.man[name].avgdl, "shingle": spec["shingle"],
-        }
+        if terms and (shingles or not spec["shingle"]):
+            specs[name] = {"terms": list(terms),
+                           "w": _weight(n_docs, spec["boost"]),
+                           "boost": spec["boost"],
+                           "avgdl": reader.man[name].avgdl,
+                           "shingle": spec["shingle"], "probe_only": False}
     if tld_boost and tld_boost not in TLD_SKIP:
-        dfs = reader.stats_for(TLD_FIELD, [tld_boost])
-        if tld_boost in dfs:
-            plan["tld"] = {
-                "terms": [tld_boost],
-                "idf": {tld_boost: bm25.idf(n_docs, dfs[tld_boost])},
-                "boost": 1.0, "avgdl": 1.0, "shingle": False,
-            }
-    return plan if plan["per_field"] else None
+        specs[TLD_FIELD] = {"terms": [tld_boost], "w": _weight(n_docs, 1.0),
+                            "boost": 1.0, "avgdl": 1.0, "shingle": False,
+                            "probe_only": True}
+    return {"q_terms": q_terms, "specs": specs}
 
 
-def _plan_specs(plan) -> dict:
-    """{field: spec} of every field a plan reads, the tld field included."""
-    specs = dict(plan["per_field"])
-    if plan["tld"]:
-        specs[TLD_FIELD] = plan["tld"]
-    return specs
+def _pin_global_df(reader: FieldedReader, plan) -> bool:
+    """Keep only the terms each field holds, with ``w`` pinned from the
+    GLOBAL df (a Spark kernel sees one shard, so the df of its rows is
+    local). False when no text field holds a query term."""
+    for name, spec in list(plan["specs"].items()):
+        dfs = reader.stats_for(name, spec["terms"])
+        if dfs:
+            spec.update(terms=sorted(dfs),
+                        w={t: spec["w"](d) for t, d in dfs.items()})
+        else:
+            del plan["specs"][name]
+    return any(name != TLD_FIELD for name in plan["specs"])
 
 
 def _field_meta(tbl, spec) -> dict:
     """Per-term raw block tables of ONE field's postings (Arrow table),
-    scored as that field: w = idf × boost (the oracle's evaluation
-    order, bm25.bm25_fielded_topk), the field's own avgdl, and block
-    bounds boost-scaled to match — the stored max_score_ub is
+    scored as that field: w = idf × boost, the field's own avgdl, and
+    block bounds boost-scaled to match — the stored max_score_ub is
     idf × max tf-norm (codec.encode_blocks), so unscaled bounds would
-    let the lazy kernel retire blocks that still hold top-k winners."""
+    let the lazy kernel retire blocks that still hold top-k winners.
+    The entries also carry the cross-field MSM marks every finisher
+    reads (`query._group_of`): a unigram key's group is its base
+    term, a shingle key has none, and the tld key is ``probe_only``."""
     boost = spec["boost"]
-    tb = _term_block_meta(tbl, {t: w * boost for t, w in spec["idf"].items()})
-    for meta in tb.values():
+    tb = _term_block_meta(tbl, spec["w"])
+    for term, meta in tb.items():
         meta["avgdl"] = spec["avgdl"]
         meta["ub"] = meta["ub"] * boost
         if meta.get("iub") is not None:
             meta["iub"] = meta["iub"] * boost
+        meta["group"] = None if spec["shingle"] or spec["probe_only"] else term
+        meta["probe_only"] = spec["probe_only"]
     return tb
 
 
 def _score_fielded(tbl, plan, k1, b, k, msm_req):
-    """Kernel for one doc range (a shard, or the whole index): ``tbl``
-    is an Arrow table of (field, term, block…) rows. Returns (docids,
-    scores) top-k."""
+    """Kernel for one shard: ``tbl`` is an Arrow table of (field, term,
+    block…) rows. Returns (docids, scores) top-k, by brute."""
     import pyarrow.compute as pc
     tb = {}
-    for field, spec in _plan_specs(plan).items():
+    for field, spec in plan["specs"].items():
         sub = tbl.filter(pc.equal(tbl["field"], field))
         tb.update({(field, t): m for t, m in _field_meta(sub, spec).items()})
-    return _score_from_arrays(_dense_arrays_from_tb(tb, k1, b, 1.0), plan,
-                              k, msm_req)
-
-
-def _score_from_arrays(arrays, plan, k, msm_req):
-    """Score + MSM + tld bonus + top-k from decoded per-(field, term)
-    arrays (scores already ×idf×boost)."""
-    score_keys = [kk for kk in arrays if kk[0] != TLD_FIELD]
-    if not score_keys:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    cand = np.unique(np.concatenate([arrays[kk]["docids"]
-                                     for kk in score_keys]))
-    total = np.zeros(cand.size)
-    # matched base terms per candidate, unigram fields only (J2
-    # cross_fields MSM); fixed accumulation order for determinism
-    matched = {}
-    for field, term in sorted(score_keys):
-        arr = arrays[(field, term)]
-        pos = np.searchsorted(arr["docids"], cand)
-        pos_c = np.minimum(pos, arr["docids"].size - 1)
-        hit = arr["docids"][pos_c] == cand
-        total += np.where(hit, arr["scores"][pos_c], 0.0)
-        if not plan["per_field"][field]["shingle"]:
-            m = matched.get(term)
-            matched[term] = hit if m is None else (m | hit)
-    if msm_req:
-        n_matched = np.zeros(cand.size, dtype=np.int32)
-        for hit in matched.values():
-            n_matched += hit.astype(np.int32)
-        keep = n_matched >= msm_req
-        cand, total = cand[keep], total[keep]
-    # tld bonus joins AFTER the MSM filter (reference adds the regional
-    # clause as a non-qualifying should)
-    tld_key = next((kk for kk in arrays if kk[0] == TLD_FIELD), None)
-    if tld_key is not None and cand.size:
-        arr = arrays[tld_key]
-        pos = np.searchsorted(arr["docids"], cand)
-        pos_c = np.minimum(pos, arr["docids"].size - 1)
-        hit = arr["docids"][pos_c] == cand
-        total += np.where(hit, arr["scores"][pos_c], 0.0)
-    return _pinned_topk(cand, total, k)
+    return _topk_query(tb, k, msm_req, k1, b, 1.0, use_wand=False)
 
 
 def bm25_fielded_indexed(reader: FieldedReader, query: str, k: int = 10,
@@ -300,20 +274,15 @@ def bm25_fielded_indexed(reader: FieldedReader, query: str, k: int = 10,
     kernels fetch top-(offset+k), the merge skips ``offset``)."""
     spark = reader.spark
     empty = spark.createDataFrame([], "doc_id string, score double")
-    plan = _query_plan(reader, _analyze(query), tld_boost)
-    if plan is None:
+    plan = _query_plan(reader, _analyze(query), tld_boost, shingles)
+    if plan is None or not _pin_global_df(reader, plan):
         return empty
-    if not shingles:
-        plan["per_field"] = {n: s for n, s in plan["per_field"].items()
-                             if not s["shingle"]}
-        if not plan["per_field"]:
-            return empty
     k1 = reader.man[TLD_FIELD].params["k1"]
     b = reader.man[TLD_FIELD].params["b"]
     req = bm25.msm_required(len(plan["q_terms"])) if min_should_match else 0
 
     frames = []
-    for name, spec in _plan_specs(plan).items():
+    for name, spec in plan["specs"].items():
         terms = spec["terms"]
         bks = sorted({term_bucket(t, reader.n_buckets) for t in terms})
         frames.append(
@@ -358,26 +327,12 @@ class FieldedLocalIndex:
         # a zero-posting field (all-null tld) has no files: reads empty
         self._post = {n: TermFiles(os.path.join(root, "fields", n, "postings"),
                                    self.n_buckets) for n in names}
-        self._stats = {n: TermFiles(os.path.join(root, "fields", n, "term_stats"),
-                                    self.n_buckets) for n in names}
-        #: the last topk call's ``result_cache_hit`` and, on a kernel
-        #: run, its pruned reads, term-cache counters and kernel stats
+        #: the last topk call's ``result_cache_hit`` and its pruned
+        #: reads; a kernel run adds term-cache counters and kernel stats
         self.last_stats: dict = {}
         self._urls = None
-        self._df_cache: dict[tuple[str, str], int] = {}
         self.terms = TermCache()    # keyed by (field, term)
         self.results = ResultCache()
-
-    def stats_for(self, field: str, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in terms if (field, t) not in self._df_cache]
-        if missing:
-            tbl = self._stats[field].read(missing, ["term", "df"],
-                                          self.last_stats)
-            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-            for t in missing:
-                self._df_cache[(field, t)] = int(found.get(t, 0))
-        return {t: self._df_cache[(field, t)] for t in terms
-                if self._df_cache[(field, t)] > 0}
 
     def _url_of(self, docids):
         import pyarrow.dataset as ds
@@ -408,64 +363,42 @@ class FieldedLocalIndex:
         # query's kernel stats
         self.last_stats = {"terms_read": 0, "row_groups_read": 0,
                            "result_cache_hit": False}
-        plan = _query_plan(self, analyzed, tld_boost)
+        plan = _query_plan(self, analyzed, tld_boost, shingles)
         if plan is None:
             return []
-        if not shingles:
-            plan["per_field"] = {n: s for n, s in plan["per_field"].items()
-                                 if not s["shingle"]}
-            if not plan["per_field"]:
-                return []
         k1 = self.man[TLD_FIELD].params["k1"]
         b = self.man[TLD_FIELD].params["b"]
         req = bm25.msm_required(len(plan["q_terms"])) if min_should_match else 0
 
-        specs = _plan_specs(plan)
         # per-(field, term) RAW block tables: cache hits skip the
         # pruned read; misses are fetched per field in one batched
-        # read. _field_meta pins w = idf×boost, boost-scaled bounds and
-        # the per-field avgdl on each entry, so the lazy kernel scores
-        # every field with its own stats while sweeping ONE global
-        # bound table.
-        tb = {}
-        for name, spec in specs.items():
+        # read, df from the rows it returns. A term the field lacks is
+        # cached as an empty entry, so its repeats skip the read and
+        # the term-cache budget bounds it. Term-cache counters land in
+        # last_stats on kernel runs only, as in serve.LocalIndex.
+        tb, cache = {}, {}
+        for name, spec in plan["specs"].items():
             keys = [(name, t) for t in spec["terms"]]
-            missing = self.terms.missing(keys, self.last_stats)
+            missing = self.terms.missing(keys, cache)
             if missing:
-                tbl = self._post[name].read([t for _, t in missing],
-                                            _POSTING_COLS, self.last_stats)
-                self.terms.put({(name, t): meta for t, meta
-                                in _field_meta(tbl, spec).items()})
+                got = _field_meta(self._post[name].read(
+                    [t for _, t in missing], _POSTING_COLS, self.last_stats),
+                    spec)
+                self.terms.put({key: got.get(key[1], {}) for key in missing})
             tb.update(self.terms.take(keys))
-        if not any(key[0] != TLD_FIELD for key in tb):
-            # charge the entries this query DID load (TLD-only block
-            # tables) before bailing, or the incremental accounting
-            # never sees them and the cache grows past its budget
-            self.terms.charge(tb, self.last_stats)
+        live = {key: m for key, m in tb.items() if m}
+        # only text keys generate candidates: no live one, no kernel
+        ran = any(key[0] != TLD_FIELD for key in live)
+        if ran:
+            docids, scores = _topk_query(
+                live, k + max(0, offset), req, k1, b, 1.0, use_wand,
+                stats=self.last_stats, store=self.terms.store)
+        # charge every entry this query touched, the empty and the
+        # tld-only ones too, or the cache grows past its budget unseen
+        self.terms.charge(tb, cache)
+        if not ran:
             return []
-
-        # cross_fields MSM groups: a candidate's matched count = the
-        # DISTINCT base terms hit in ANY unigram field; shingle keys
-        # score but never qualify, the tld key scores but never
-        # generates candidates (the reference's non-qualifying
-        # regional should-clause)
-        msm_group = {key: (key[1] if key[0] != TLD_FIELD
-                           and not specs[key[0]]["shingle"] else None)
-                     for key in tb}
-        no_cand = {key for key in tb if key[0] == TLD_FIELD}
-
-        def dense_score(dense):
-            return _score_from_arrays(dense, plan, k + max(0, offset), req)
-
-        if use_wand:
-            docids, scores = _topk_blockmax_lazy(
-                tb, k + max(0, offset), req, k1, b, 1.0,
-                stats=self.last_stats, store=self.terms.store,
-                msm_group=msm_group, no_cand=no_cand, dense_fn=dense_score)
-        else:
-            docids, scores = dense_score(
-                _dense_arrays_from_tb(tb, k1, b, 1.0))
-        self.terms.charge(tb, self.last_stats)
+        self.last_stats.update(cache)
         docids, scores = docids[offset:], scores[offset:]
         if not docids.size:
             return []

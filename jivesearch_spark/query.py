@@ -480,12 +480,21 @@ def _scores_bulk(d: dict, tf: np.ndarray, dl: np.ndarray,
     return _bm25_scores(d, tf, dl, k1, b, avgdl)
 
 
+def _group_of(key, entry: dict):
+    """The MSM group a tb entry (or its decoded arrays) counts toward:
+    its ``group`` mark, else the key itself — one group per list, the
+    single-field rule. A None group scores but never qualifies (fielded
+    shingle keys), and so does a ``probe_only`` entry, which adds score
+    to candidates but never generates them (the fielded tld key)."""
+    return None if entry.get("probe_only") else entry.get("group", key)
+
+
 def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
                           keys=None) -> dict:
     """Decode EVERY block of the given tb entries into brute-kernel
-    arrays ({docids, scores}), memoizing the decode on the tb
-    entry (``dense``) so callers holding tb (e.g. a serving-tier block
-    cache) pay the bulk decode once. Compact decode (minimal dtypes)
+    arrays ({docids, scores} plus the entry's MSM marks), memoizing
+    the decode on the tb entry (``dense``) so callers holding tb (e.g.
+    a serving-tier block cache) pay the bulk decode once. Compact decode (minimal dtypes)
     + per-distinct-(tf, dl) score evaluation keep this pass
     memory-bandwidth-lean — it is the dense-merge finisher's main
     cost at millions of postings."""
@@ -499,17 +508,17 @@ def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
             sc = _scores_bulk(d, tf, dl, k1, b, avgdl)
             full = (dd, sc)
             d["dense"] = full
-        dense[t] = {"docids": full[0], "scores": full[1]}
+        arrs = dense[t] = {"docids": full[0], "scores": full[1]}
+        for m in ("group", "probe_only"):   # read by `_group_of`
+            if m in d:
+                arrs[m] = d[m]
     return dense
 
 
 def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
                         k1: float, b: float, avgdl: float,
                         stats: dict | None = None,
-                        store: dict | None = None,
-                        msm_group: dict | None = None,
-                        no_cand=None,
-                        dense_fn=None):
+                        store: dict | None = None):
     """Lazy block-max top-k (score-neutral, rank-identical to brute).
 
     Vectorized equivalent of DAAT block-max WAND's in-list skipping
@@ -542,56 +551,33 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     queries pay at most one wave of bookkeeping instead of per-wave
     probing over the whole index.
 
-    Generalizations for the serving tiers (all optional, defaults
-    reproduce the single-field Spark-kernel semantics):
+    Generalizations for the serving tiers and the fielded tb:
 
     * ``store``: a persistent dict {key -> {"seg", "np"}} that
       outlives the call — decoded blocks accumulate across queries
       (the serving tier's block-granular cache), so warm queries
       decode nothing. The caller owns eviction.
-    * ``msm_group``: {key -> base term or None} — MSM counts DISTINCT
-      non-None groups hit (the fielded cross_fields rule); None keys
-      score but never qualify. Default: every key is its own group.
-    * ``no_cand``: keys that contribute score and bound but never
-      generate candidates (the reference's non-qualifying tld
-      should-clause) — their blocks are probe-only.
-    * ``dense_fn(dense_arrays)``: the brute kernel the flat-regime
-      bailouts delegate to (default ``_topk_impact_ordered``); fielded
-      passes its own cross-field scorer. REQUIRED whenever
-      ``msm_group``/``no_cand`` are used — the default finisher counts
-      every key toward MSM and generates candidates from every list,
-      so it would silently diverge from the wave path exactly when the
-      data triggers a dense bailout.
+    * MSM counts the DISTINCT groups hit (`_group_of`): every key is
+      its own group unless its tb entry carries a ``group`` mark (the
+      fielded cross_fields rule); a ``probe_only`` entry contributes
+      score and bound but never generates candidates (the reference's
+      non-qualifying tld should-clause). A sweep over such marks
+      hands off to the grouped ``_topk_brute``, since the TA
+      finishers count every key toward MSM and generate candidates
+      from every list.
     * per-key ``avgdl`` in a tb entry overrides the global (fielded
       sub-indexes each carry their own).
     """
     zero = (np.empty(0, dtype=np.int64), np.empty(0))
     if stats is not None:
         stats["finisher"] = "lazy"   # a hand-off below overwrites it
-    no_cand = no_cand or set()
-    terms = sorted(t for t in tb if t not in no_cand)
-    extras = sorted(t for t in tb if t in no_cand)
+    grp_of = {t: _group_of(t, m) for t, m in tb.items()}
+    terms = sorted(t for t in tb if not tb[t].get("probe_only"))
+    extras = sorted(t for t in tb if tb[t].get("probe_only"))
     keys_all = terms + extras
     if not terms or k <= 0:     # θ is the k-th best: nothing to sweep for
         return zero
-    if msm_group is None:
-        grp_of = {t: t for t in terms}          # per-key counting
-        grp_of.update({t: None for t in extras})
-    else:
-        grp_of = msm_group
-    default_finisher = dense_fn is None
-    if dense_fn is None:
-        if msm_group is not None or extras:
-            raise ValueError(
-                "msm_group/no_cand require an explicit dense_fn: the "
-                "default impact-ordered finisher counts every key "
-                "toward MSM and generates candidates from every list")
-        # flat-regime finisher: impact-ordered TA (early termination by
-        # per-doc score spread, which survives the tf-saturation that
-        # defeats block-level bounds); memoizes impact permutations on
-        # the tb entries so a serving tier's warm queries skip the sort
-        dense_fn = lambda dense: _topk_impact_ordered(dense, k, msm_req,  # noqa: E731
-                                                      meta=tb, stats=stats)
+    grouped = any(g != t for t, g in grp_of.items())
     nt = len(terms)
     n_keys = len(keys_all)
     dfs_of = np.array([int(tb[t]["nd"].sum()) for t in terms])
@@ -666,13 +652,17 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     n_decoded = 0
 
     def go_dense():
-        # impact-prefix TA when the index carries prefix chunks (and
-        # the caller uses the default single-field semantics): cold
+        # grouped or probe-only keys: the grouped brute. Otherwise the
+        # impact-prefix TA when the index carries prefix chunks: cold
         # cost is O(prefix + candidates), never O(df) — the round-3
-        # cold-latency scale fix. Indexes without prefixes (or custom
-        # fielded finishers) keep the decode-everything path.
+        # cold-latency scale fix; indexes without prefixes decode
+        # everything and finish with the impact-ordered TA (early
+        # termination by per-doc score spread, which survives the
+        # tf-saturation that defeats block-level bounds; it memoizes
+        # impact permutations on the tb entries so a serving tier's
+        # warm queries skip the sort).
         nonlocal store
-        if default_finisher and any(
+        if not grouped and any(
                 tb[t].get("iub") is not None and tb[t]["iub"].size
                 for t in keys_all):
             if store is None:
@@ -688,9 +678,10 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
             stats["blocks_decoded"] = blocks_all
             stats["blocks_total"] = blocks_all
             stats["dense_bailout"] = True
-            # a caller's dense_fn scores every candidate exhaustively
-            stats["finisher"] = "impact_ta" if default_finisher else "brute"
-        return dense_fn(dense)
+            stats["finisher"] = "brute" if grouped else "impact_ta"
+        if grouped:
+            return _topk_brute(dense, k, msm_req)
+        return _topk_impact_ordered(dense, k, msm_req, meta=tb, stats=stats)
 
     # upfront strictly-flat bailout (≤2 terms): when EVERY block bound
     # is identical (uniform corpora — same tf/dl everywhere), any θ
@@ -732,7 +723,7 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     batch = 8
     while remaining.any():
         if msm_req:
-            alive = {grp_of.get(terms[ti]) for ti in range(nt)
+            alive = {grp_of[terms[ti]] for ti in range(nt)
                      if not exhausted[ti]}
             alive.discard(None)
             if len(alive) < msm_req:
@@ -795,7 +786,7 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
         for ki in range(len(keys_all)):   # fixed accumulation order
             contrib, hit = probe(ki, cand)
             total += contrib
-            g = grp_of.get(keys_all[ki])
+            g = grp_of[keys_all[ki]]
             if g is not None:
                 m = gm.get(g)
                 gm[g] = hit if m is None else (m | hit)
@@ -1532,21 +1523,27 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
 
 
 def _exact_scores_over(sources: dict, names, cand: np.ndarray):
-    """Σ per-list contributions + hit counts for sorted-unique ``cand``.
+    """Σ per-list contributions + MSM groups hit (`_group_of`) for
+    sorted-unique ``cand``.
 
     THE exact-scoring probe every kernel path shares; ``names`` fixes
     the accumulation order (the determinism rule — float addition is
     not associative, and the pinned oracle sums in sorted-term order).
     """
     total = np.zeros(cand.size)
-    matched = np.zeros(cand.size, dtype=np.int32)
+    hits: dict = {}
     for t in names:
         td = sources[t]
         pos = np.searchsorted(td["docids"], cand)
         pos_c = np.minimum(pos, td["docids"].size - 1)
         hit = td["docids"][pos_c] == cand
         total += np.where(hit, td["scores"][pos_c], 0.0)
-        matched += hit.astype(np.int32)
+        g = _group_of(t, td)
+        if g is not None:
+            hits[g] = hits[g] | hit if g in hits else hit
+    matched = np.zeros(cand.size, dtype=np.int32)
+    for hit in hits.values():
+        matched += hit
     return total, matched
 
 
@@ -1561,12 +1558,15 @@ def _drop_scored(cand: np.ndarray, scored: np.ndarray) -> np.ndarray:
 
 def _topk_brute(terms: dict, k: int, msm_req: int):
     """Exhaustive top-k over fully decoded term arrays ({docids,
-    scores} per term): every candidate is scored exactly in
-    sorted-term order — the oracle every pruning finisher must match."""
-    if not terms:
+    scores} per term, plus any MSM marks): every candidate is scored
+    exactly in sorted-term order, probe-only lists last — the oracle
+    every pruning finisher must match."""
+    names = sorted(t for t in terms if not terms[t].get("probe_only"))
+    if not names:
         return np.empty(0, dtype=np.int64), np.empty(0)
-    cand = np.unique(np.concatenate([terms[t]["docids"] for t in terms]))
-    total, matched = _exact_scores_over(terms, sorted(terms), cand)
+    cand = np.unique(np.concatenate([terms[t]["docids"] for t in names]))
+    names += sorted(t for t in terms if terms[t].get("probe_only"))
+    total, matched = _exact_scores_over(terms, names, cand)
     if msm_req:
         ok = matched >= msm_req
         cand, total = cand[ok], total[ok]
@@ -1607,8 +1607,12 @@ _LAZY_FLOOR = 16384
 def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
                 avgdl: float, use_wand: bool, stats: dict | None = None,
                 store: dict | None = None):
-    """THE single-field top-k entry: the Spark kernels and the serving
-    tier all call it, so ``use_wand`` means one thing everywhere.
+    """THE top-k entry: every Spark kernel and both serving tiers,
+    fielded included, call it, so ``use_wand`` means one thing
+    everywhere. The fielded rules ride on the tb entries, not on
+    parameters: ``w``, ``avgdl`` and boosted bounds per key, and the
+    cross-field MSM ``group`` / ``probe_only`` marks (`_group_of`)
+    that every finisher reads.
 
     The finisher is chosen once, up front, from what the input shows:
     brute (decode every block, memoized on the tb entries as

@@ -127,26 +127,74 @@ def test_evict_bounds_raw_block_tables(built):
         assert idx.topk(q, 10) == want[q], q
 
 
+def _replay_small_budgets(root, zipfian_replay):
+    """conftest._zipfian_replay on a tier with small budgets, against an
+    unbounded no-cache tier, over the index vocabulary by df."""
+    import pyarrow.dataset as ds
+
+    idx = LocalIndex(root)
+    idx.terms.max_postings = 1500            # force eviction churn
+    idx.results.max_tuples = 400             # force tuple-budget churn
+    ref = LocalIndex(root)                   # unbounded reference tier
+    ref.results.max_tuples = 0
+
+    stats = ds.dataset(f"{root}/term_stats",
+                       partitioning=ds.partitioning(flavor="hive")) \
+        .to_table(columns=["term", "df"]).to_pydict()
+    by_df = sorted(zip(stats["df"], stats["term"]), reverse=True)
+    log, _ = zipfian_replay(idx, ref, [t for _, t in by_df])
+    return idx, log
+
+
 def test_zipfian_replay_eviction_churn(built, zipfian_replay):
     """Adversarial serving replay (round-4 verdict ask #8) against
     SMALL budgets keeps memory bounded through eviction churn AND
     answers identical to an unbounded tier (conftest._zipfian_replay
     holds the ground-truth checks)."""
-    import pyarrow.dataset as ds
-
-    idx = LocalIndex(built)
-    idx.terms.max_postings = 1500            # force eviction churn
-    idx.results.max_tuples = 400             # force tuple-budget churn
-    ref = LocalIndex(built)                  # unbounded reference tier
-    ref.results.max_tuples = 0
-
-    stats = ds.dataset(f"{built}/term_stats",
-                       partitioning=ds.partitioning(flavor="hive")) \
-        .to_table(columns=["term", "df"]).to_pydict()
-    by_df = sorted(zip(stats["df"], stats["term"]), reverse=True)
-    log, _ = zipfian_replay(idx, ref, [t for _, t in by_df])
+    idx, log = _replay_small_budgets(built, zipfian_replay)
     assert len(idx.terms.meta) < len({t for q, _, _ in log
                                       for t in q.split()})
+
+
+@pytest.fixture(scope="module")
+def built_multiblock(spark, tmp_path_factory):
+    """Head terms a/b/c/d in 80/50/25/10 % of 8000 docs at tf 1-5, plus
+    4-15 zipf(1.3) filler words over w1-w300: the head lists span
+    tens of blocks, so a lazy sweep decodes a different share of them
+    from one query to the next."""
+    import numpy as np
+
+    rng = np.random.default_rng(29)
+    rows = []
+    for i in range(8000):
+        words = []
+        for t, p in (("a", 0.8), ("b", 0.5), ("c", 0.25), ("d", 0.1)):
+            if rng.random() < p:
+                words += [t] * int(rng.integers(1, 6))
+        words += [f"w{min(int(rng.zipf(1.3)), 300)}"
+                  for _ in range(int(rng.integers(4, 16)))]
+        rng.shuffle(words)
+        rows.append((i, " ".join(words)))
+    root = str(tmp_path_factory.mktemp("serve_index") / "multiblock")
+    build_index(spark.createDataFrame(rows, "docid long, text string"), root,
+                IndexParams(docs_per_shard=4096, n_buckets=4), url_col=None,
+                log=lambda *a: None)
+    return root
+
+
+def test_zipfian_replay_recharges_resident_keys(built_multiblock,
+                                                zipfian_replay, monkeypatch):
+    """The same replay over multi-block lists with the lazy floor at 0:
+    the sweep decodes more blocks of a resident term from one query to
+    the next, so a resident key's cost changes after its first charge.
+    The replay's accounted-total check then fails on a
+    `TermCache.charge` that skips the keys it charged before (on the
+    few-block fixture above, every sweep decodes whole lists at once
+    and such a charge goes unnoticed)."""
+    from jivesearch_spark import query
+
+    monkeypatch.setattr(query, "_LAZY_FLOOR", 0)
+    _replay_small_budgets(built_multiblock, zipfian_replay)
 
 
 def test_result_cache_exact_and_bounded(built):

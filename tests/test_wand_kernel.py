@@ -482,3 +482,74 @@ def test_serving_mixed_choices_match_spark_path(spark, tmp_path):
             assert (st["finisher"] == "brute") == under, (q, st)
             seen.add(under)
     assert seen == {True, False}, "the set must straddle the floor"
+
+
+# ---------------------------------------------------------------------------
+# fielded-shaped tables: MSM group and probe-only marks on the entries
+# ---------------------------------------------------------------------------
+
+#: ``<base>@<field>`` keys count toward MSM once per base term, the
+#: ``@shingle`` key scores without a group, ``tld`` is probe-only
+GROUPED = {"a@title": 3000, "a@desc": 9000, "b@title": 600,
+           "b@desc": 4000, "c@desc": 12000, "ab@shingle": 400,
+           "tld": 7000}
+#: two candidate lists of one group plus a probe-only list, every
+#: posting tf=1 and dl=AVGDL: strictly flat block bounds
+GROUPED_FLAT = {"a@title": 5000, "a@desc": 4000, "tld": 6600}
+
+
+def _grouped_tb(tbl, idf, marks=True):
+    """The block table with the marks fielded._field_meta pins."""
+    tb = _term_block_meta(tbl, idf)
+    for key, m in (tb.items() if marks else ()):
+        base, _, field = key.partition("@")
+        m["group"] = base if field not in ("", "shingle") else None
+        m["probe_only"] = key == "tld"
+    return tb
+
+
+def _flat_tbl(rng, n_docs, spec, idf):
+    rows = []
+    for term, df_ in spec.items():
+        docids = np.sort(rng.choice(n_docs, size=df_, replace=False))
+        for blk in codec.encode_blocks(
+                docids.astype(np.int64), np.ones(df_, dtype=np.int64),
+                np.full(df_, int(AVGDL), dtype=np.int64), idf[term],
+                K1, B, AVGDL):
+            blk["term"] = term
+            blk["shard"] = 0
+            rows.append(blk)
+    return pa.Table.from_pylist(rows, schema=POSTINGS)
+
+
+@pytest.mark.parametrize("flat", [False, True])
+def test_grouped_lazy_sweep_matches_grouped_brute(flat):
+    """The lazy sweep reads the MSM group and probe-only marks from
+    the tb entries and answers exactly what the grouped ``_topk_brute``
+    answers — docids and float scores — for k = 0, 1, 10 and more than
+    the matches, with and without MSM. Strictly flat bounds send the
+    sweep to the grouped brute up front; spread bounds sweep lazily."""
+    rng = np.random.default_rng(23)
+    n_docs = 20_000
+    spec = GROUPED_FLAT if flat else GROUPED
+    idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
+    tbl = (_flat_tbl(rng, n_docs, spec, idf) if flat
+           else _make_tbl(rng, n_docs, spec, idf, zipf=True, shards=2))
+    fails, finishers = [], set()
+    for msm, k in itertools.product((0, 1, 2), (0, 1, 10, n_docs + 1)):
+        st = {}
+        d1, s1 = _topk_blockmax_lazy(_grouped_tb(tbl, idf), k, msm,
+                                     K1, B, AVGDL, stats=st)
+        d0, s0 = _topk_brute(_dense_arrays_from_tb(_grouped_tb(tbl, idf),
+                                                   K1, B, AVGDL), k, msm)
+        if not (np.array_equal(d1, d0) and np.array_equal(s1, s0)):
+            fails.append((msm, k))
+        if k:
+            finishers.add(st["finisher"])
+    assert not fails, fails
+    assert finishers == ({"brute"} if flat else {"lazy"}), finishers
+    # the marks are load-bearing: counting every key as its own group
+    # and letting tld generate candidates answers differently
+    dense = _dense_arrays_from_tb(_grouped_tb(tbl, idf, marks=False),
+                                  K1, B, AVGDL)
+    assert not np.array_equal(_topk_brute(dense, 50, 2)[0], d0[:50])
