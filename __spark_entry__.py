@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from jivesearch_spark import analyze, bm25  # noqa: E402
+from jivesearch_spark import analyze, bm25, codec  # noqa: E402
 from jivesearch_spark.session import ensure_shipped  # noqa: E402
 
 DEFAULT_SF = "/root/testdata/sf0.001"
@@ -122,13 +122,17 @@ def q_bm25_fielded_indexed(spark, sf_dir):
             # a regenerated sf_dir at the same path must not replay
             # against a stale index (cache keys only the path). Every
             # per-field sub-index records corpus n_docs in its manifest.
+            # An index written under another codec layout is rebuilt
+            # too: readers refuse it.
             try:
                 with open(os.path.join(root, "fields", "tld",
                                        "manifest.json")) as fh:
-                    n_cached = json.load(fh).get("n_docs")
+                    cached = json.load(fh)
             except (OSError, ValueError):
-                n_cached = None
-            if n_cached != expected:
+                cached = {}
+            if (cached.get("n_docs") != expected
+                    or cached.get("params", {}).get("codec_version")
+                    != codec.CODEC_VERSION):
                 shutil.rmtree(root, ignore_errors=True)
         if not os.path.exists(meta_p):
             # url = zero-padded doc_id so url-rank docids preserve the
@@ -217,11 +221,13 @@ def _ensure_index(spark, sf_dir) -> str:
         h = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
         root = f"/tmp/jivesearch_index_{h}"
         man = Manifest.load(root)
-        # validate a pre-existing index against the CURRENT table: the
-        # cache keys only the path, so a regenerated sf_dir must
-        # trigger a rebuild, not a stale replay
+        # validate a pre-existing index against the CURRENT table and
+        # codec: the cache keys only the path, so a regenerated sf_dir
+        # or an index written under another codec layout must trigger
+        # a rebuild, not a stale replay
         if man is not None and man.done:
-            if man.n_docs != _docs(spark, sf_dir).count():
+            if (man.n_docs != _docs(spark, sf_dir).count()
+                    or man.params["codec_version"] != codec.CODEC_VERSION):
                 shutil.rmtree(root, ignore_errors=True)
                 man = None
         if man is None or not man.done:

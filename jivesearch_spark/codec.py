@@ -7,6 +7,15 @@ frequencies, and doc lengths — plus block-max metadata
 query time. Carrying dl inside the block makes scoring self-contained:
 no N-row doc-length broadcast at 10^12-doc scale.
 
+On disk a block is ONE binary value, ``blk``: a fixed little-endian
+header (``BLK_HEADER``: first_docid, last_docid, n_docs, max_score_ub
+and the byte lengths of the deltas and tfs streams) followed by the
+deltas, tfs and dls streams. A cold read's cost is per column chunk,
+so one chunk carries all of a block's metadata and bytes, and the
+reader parses a whole read's headers in one numpy gather
+(``parse_blk``) and decodes straight from the Arrow values buffer
+(``decode_blocks_concat``) — no per-block Python objects.
+
 Both encode and decode are vectorized over whole arrays (numpy byte
 matrices), so the mapInArrow build and applyInArrow score kernels
 stay Arrow-batch fast — no per-posting Python.
@@ -22,7 +31,16 @@ from __future__ import annotations
 import numpy as np
 
 BLOCK_SIZE = 128
-CODEC_VERSION = 1
+#: 2 = the packed ``blk`` layout (1 was one column per block field);
+#: readers refuse an index written under another version
+CODEC_VERSION = 2
+
+#: the fixed header that starts every ``blk`` value; the dls stream
+#: runs from the end of the tfs stream to the end of the value
+BLK_HEADER = np.dtype([("first_docid", "<i8"), ("last_docid", "<i8"),
+                       ("n_docs", "<i4"), ("max_score_ub", "<f8"),
+                       ("n_deltas", "<i4"), ("n_tfs", "<i4")])
+HEADER_BYTES = BLK_HEADER.itemsize
 
 
 def varint_encode(values: np.ndarray) -> bytes:
@@ -191,13 +209,13 @@ def encode_blocks_frame(docids: np.ndarray, tfs: np.ndarray,
 
     ``group_starts`` marks each (term, shard) group's first row; every
     group is split into BLOCK_SIZE blocks. All three varint streams are
-    encoded in ONE vectorized pass over the whole frame, then sliced
-    per block by cumulative byte offsets — the encode-side analog of
-    ``decode_blocks_concat`` (3 numpy passes instead of 3 calls per
-    block). Byte output is identical to per-block ``encode_blocks``.
+    encoded in ONE vectorized pass over the whole frame and packed into
+    ``blk`` values by byte offsets (``pack_blocks``) — the encode-side
+    analog of ``decode_blocks_concat``. Each value is
+    ``pack_block`` of the matching per-block ``encode_blocks`` row.
 
-    Returns (block_starts, block_meta dict of arrays, deltas/tfs/dls
-    byte lists) where block_meta has block_id, first_docid,
+    Returns (block_starts, block_meta dict of arrays, blk values,
+    blk offsets) where block_meta has block_id, first_docid,
     last_docid, n_docs, max_score_ub.
     """
     n = docids.size
@@ -220,18 +238,111 @@ def encode_blocks_frame(docids: np.ndarray, tfs: np.ndarray,
     deltas[1:] = (docids[1:] - docids[:-1]).astype(np.uint64)
     deltas[block_starts] = docids[block_starts].astype(np.uint64)
 
-    out_bytes = []
+    streams = []
     for stream in (deltas, np.asarray(tfs, dtype=np.uint64),
                    np.asarray(dls, dtype=np.uint64)):
-        buf = varint_encode(stream)
-        ends = np.cumsum(varint_lengths(stream))
-        b0 = np.empty(block_starts.size, dtype=np.int64)
-        b0[0] = 0
-        b0[1:] = ends[block_starts[1:] - 1]
-        b1 = ends[block_ends - 1]
-        out_bytes.append([buf[i:j] for i, j in zip(b0, b1)])
+        buf = np.frombuffer(varint_encode(stream), dtype=np.uint8)
+        ends = np.concatenate([[0], np.cumsum(varint_lengths(stream))])
+        streams.append((buf, ends[np.append(block_starts, n)]))
+    values, offsets = pack_blocks(meta["first_docid"], meta["last_docid"],
+                                  meta["n_docs"], meta["max_score_ub"],
+                                  streams)
+    return block_starts, meta, values, offsets
 
-    return block_starts, meta, out_bytes[0], out_bytes[1], out_bytes[2]
+
+def pack_blocks(first_docid, last_docid, n_docs, max_score_ub, streams):
+    """Pack blocks into ``blk`` values → (values uint8, offsets int64
+    of n+1). ``streams`` is the (buf, bounds) pair of deltas, tfs and
+    dls: ``buf`` holds that stream for every block in order and block
+    i's bytes are ``buf[bounds[i]:bounds[i + 1]]``. Vectorized: one
+    header array and one scatter per stream, no per-block Python."""
+    n = len(n_docs)
+    hdr = np.empty(n, dtype=BLK_HEADER)
+    hdr["first_docid"] = first_docid
+    hdr["last_docid"] = last_docid
+    hdr["n_docs"] = n_docs
+    hdr["max_score_ub"] = max_score_ub
+    lens = [np.diff(bounds) for _, bounds in streams]
+    hdr["n_deltas"], hdr["n_tfs"] = lens[0], lens[1]
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(HEADER_BYTES + lens[0] + lens[1] + lens[2], out=offsets[1:])
+    values = np.empty(int(offsets[-1]), dtype=np.uint8)
+    values[(offsets[:-1, None] + np.arange(HEADER_BYTES)).ravel()] = \
+        hdr.view(np.uint8)
+    at = offsets[:-1] + HEADER_BYTES      # where block i's next stream goes
+    for (buf, bounds), ln in zip(streams, lens):
+        # byte j of stream s (block i) lands at at[i] + j - bounds[i]
+        values[np.repeat(at - bounds[:-1], ln)
+               + np.arange(bounds[0], bounds[-1])] = buf[bounds[0]:bounds[-1]]
+        at = at + ln
+    return values, offsets
+
+
+def pack_block(row: dict) -> bytes:
+    """One ``blk`` value from a logical block row (``encode_blocks``
+    output) — the per-block reference ``pack_blocks`` must match."""
+    hdr = np.zeros(1, dtype=BLK_HEADER)
+    for f in ("first_docid", "last_docid", "n_docs", "max_score_ub"):
+        hdr[f] = row[f]
+    hdr["n_deltas"], hdr["n_tfs"] = len(row["deltas"]), len(row["tfs"])
+    return hdr.tobytes() + row["deltas"] + row["tfs"] + row["dls"]
+
+
+def unpack_block(blk: bytes) -> dict:
+    """Inverse of ``pack_block``: the logical fields of one value."""
+    h = np.frombuffer(blk[:HEADER_BYTES], dtype=BLK_HEADER)[0]
+    t0 = HEADER_BYTES + int(h["n_deltas"])
+    t1 = t0 + int(h["n_tfs"])
+    return {"first_docid": int(h["first_docid"]),
+            "last_docid": int(h["last_docid"]),
+            "n_docs": int(h["n_docs"]),
+            "max_score_ub": float(h["max_score_ub"]),
+            "deltas": bytes(blk[HEADER_BYTES:t0]),
+            "tfs": bytes(blk[t0:t1]), "dls": bytes(blk[t1:])}
+
+
+def blk_array(values: np.ndarray, offsets: np.ndarray):
+    """``pack_blocks`` output as an Arrow binary array (no copy of the
+    values)."""
+    import pyarrow as pa
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise OverflowError("blk values exceed one Arrow binary array; "
+                            "encode fewer groups per batch")
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(values)])
+
+
+def blk_buffers(arr):
+    """(values uint8, offsets int64 of n+1) views of an Arrow binary
+    column (chunked or sliced; a chunked one is combined first)."""
+    import pyarrow as pa
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    n = len(arr)
+    _, obuf, vbuf = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    if obuf is None:   # an empty array may carry no buffers at all
+        return np.empty(0, dtype=np.uint8), np.zeros(n + 1, dtype=np.int64)
+    offsets = np.frombuffer(obuf, dtype=odt)[arr.offset:arr.offset + n + 1]
+    values = (np.frombuffer(vbuf, dtype=np.uint8) if vbuf is not None
+              else np.empty(0, dtype=np.uint8))
+    return values, offsets.astype(np.int64)
+
+
+def parse_blk(values: np.ndarray, lo: np.ndarray, hi: np.ndarray):
+    """Headers of the ``blk`` values ``values[lo[i]:hi[i]]`` in one
+    gather → (BLK_HEADER array, stream offsets (n, 4) int64: where each
+    value's deltas, tfs and dls start, and where it ends)."""
+    lo = np.asarray(lo, dtype=np.int64)
+    hdr = values[lo[:, None] + np.arange(HEADER_BYTES)].view(
+        BLK_HEADER).reshape(-1)
+    so = np.empty((lo.size, 4), dtype=np.int64)
+    so[:, 0] = lo + HEADER_BYTES
+    so[:, 1] = so[:, 0] + hdr["n_deltas"]
+    so[:, 2] = so[:, 1] + hdr["n_tfs"]
+    so[:, 3] = hi
+    return hdr, so
 
 
 def decode_block(deltas: bytes, tfs: bytes, dls: bytes, n_docs: int):
@@ -242,15 +353,18 @@ def decode_block(deltas: bytes, tfs: bytes, dls: bytes, n_docs: int):
         varint_decode(dls, n_docs).astype(np.int64)
 
 
-def decode_blocks_concat(deltas_bufs, tfs_bufs, dls_bufs, n_docs,
+def decode_blocks_concat(values: np.ndarray, so: np.ndarray, n_docs,
                          compact: bool = False):
-    """Decode MANY blocks in one vectorized pass.
+    """Decode MANY blocks in one vectorized pass, straight from a
+    ``blk`` values buffer: ``so`` holds each block's stream offsets
+    (``parse_blk``), in the order the postings come out.
 
-    Varints are self-delimiting, so the concatenation of per-block
-    byte streams decodes as one stream; the per-block delta→docid
+    One gather copies every block's deltas, then tfs, then dls bytes
+    into one buffer. Varints are self-delimiting, so each stream's
+    concatenation decodes as one stream; the per-block delta→docid
     cumsum is recovered as a segmented cumsum (global cumsum minus a
-    per-block base). One numpy call per posting list instead of one
-    per 128-posting block — the serving/scoring hot path.
+    per-block base). One numpy call per stream for the whole set of
+    blocks — the serving/scoring hot path.
 
     ``compact=True`` keeps tf/dl in their minimal decoded dtype
     (uint8 view for the common all-1-byte streams — no 8× widening
@@ -262,7 +376,16 @@ def decode_blocks_concat(deltas_bufs, tfs_bufs, dls_bufs, n_docs,
     if total == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    d = varint_decode(b"".join(deltas_bufs), total, compact=compact)
+    so = np.asarray(so, dtype=np.int64)
+    lo, hi = so[:, :3].T.ravel(), so[:, 1:].T.ravel()   # stream-major
+    lens = hi - lo
+    if lo.size == 3:   # one block: its three streams are one slice
+        raw = values[lo[0]:hi[2]]
+    else:
+        raw = values[np.repeat(lo - (np.cumsum(lens) - lens), lens)
+                     + np.arange(int(lens.sum()))]
+    cut = np.cumsum(lens.reshape(3, -1).sum(axis=1))
+    d = varint_decode(raw[:cut[0]], total, compact=compact)
     # cumsum in int64 regardless of the decoded dtype (uint64 values
     # are < 2^61 so the signed view/cast is exact)
     csum = np.cumsum(d.view(np.int64) if d.dtype == np.uint64 else d,
@@ -274,8 +397,8 @@ def decode_blocks_concat(deltas_bufs, tfs_bufs, dls_bufs, n_docs,
     nz = starts > 0
     base[nz] = csum[starts[nz] - 1]
     docids = csum - np.repeat(base, n_docs)
-    tfs = varint_decode(b"".join(tfs_bufs), total, compact=compact)
-    dls = varint_decode(b"".join(dls_bufs), total, compact=compact)
+    tfs = varint_decode(raw[cut[0]:cut[1]], total, compact=compact)
+    dls = varint_decode(raw[cut[1]:cut[2]], total, compact=compact)
     if not compact:
         tfs = tfs.astype(np.int64)
         dls = dls.astype(np.int64)

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -148,6 +149,7 @@ class FieldedReader:
         for name in list(self.fields) + [TLD_FIELD]:
             d = os.path.join(root, "fields", name)
             self.man[name] = Manifest.load(d)
+            self.man[name].check_codec(d)
             # a field can legitimately index zero tokens (e.g. an
             # all-null tld column) — stage 2 then writes no postings
             # dir at all; substitute an empty frame with the schema
@@ -235,9 +237,10 @@ def _pin_global_df(reader: FieldedReader, plan) -> bool:
 def _field_meta(tbl, spec) -> dict:
     """Per-term raw block tables of ONE field's postings (Arrow table),
     scored as that field: w = idf × boost, the field's own avgdl, and
-    block bounds boost-scaled to match — the stored max_score_ub is
-    idf × max tf-norm (codec.encode_blocks), so unscaled bounds would
-    let the lazy kernel retire blocks that still hold top-k winners.
+    block bounds boost-scaled to match — the stored max_score_ub (in
+    each ``blk`` header) is idf × max tf-norm (codec.encode_blocks), so
+    unscaled bounds would let the lazy kernel retire blocks that still
+    hold top-k winners.
     The entries also carry the cross-field MSM marks every finisher
     reads (`query._group_of`): a unigram key's group is its base
     term, a shingle key has none, and the tld key is ``probe_only``."""
@@ -323,12 +326,17 @@ class FieldedLocalIndex:
         names = list(self.fields) + [TLD_FIELD]
         self.man: dict[str, Manifest] = {
             n: Manifest.load(os.path.join(root, "fields", n)) for n in names}
+        for n, man in self.man.items():
+            man.check_codec(os.path.join(root, "fields", n))
         self.n_buckets = self.man[TLD_FIELD].params["n_buckets"]
         # a zero-posting field (all-null tld) has no files: reads empty
         self._post = {n: TermFiles(os.path.join(root, "fields", n, "postings"),
                                    self.n_buckets) for n in names}
         #: the last topk call's ``result_cache_hit`` and its pruned
-        #: reads; a kernel run adds term-cache counters and kernel stats
+        #: reads; a kernel run adds term-cache counters, kernel stats
+        #: and ``ms`` = {read, meta, kernel}: its per-field
+        #: `TermFiles.read` and block-table parse summed, and
+        #: `query._topk_query`
         self.last_stats: dict = {}
         self._urls = None
         self.terms = TermCache()    # keyed by (field, term)
@@ -377,22 +385,30 @@ class FieldedLocalIndex:
         # the term-cache budget bounds it. Term-cache counters land in
         # last_stats on kernel runs only, as in serve.LocalIndex.
         tb, cache = {}, {}
+        ms = {"read": 0.0, "meta": 0.0}
         for name, spec in plan["specs"].items():
             keys = [(name, t) for t in spec["terms"]]
             missing = self.terms.missing(keys, cache)
             if missing:
-                got = _field_meta(self._post[name].read(
-                    [t for _, t in missing], _POSTING_COLS, self.last_stats),
-                    spec)
+                t0 = time.perf_counter()
+                tbl = self._post[name].read(
+                    [t for _, t in missing], _POSTING_COLS, self.last_stats)
+                t1 = time.perf_counter()
+                got = _field_meta(tbl, spec)
+                ms["read"] += 1e3 * (t1 - t0)
+                ms["meta"] += 1e3 * (time.perf_counter() - t1)
                 self.terms.put({key: got.get(key[1], {}) for key in missing})
             tb.update(self.terms.take(keys))
         live = {key: m for key, m in tb.items() if m}
         # only text keys generate candidates: no live one, no kernel
         ran = any(key[0] != TLD_FIELD for key in live)
         if ran:
+            t0 = time.perf_counter()
             docids, scores = _topk_query(
                 live, k + max(0, offset), req, k1, b, 1.0, use_wand,
                 stats=self.last_stats, store=self.terms.store)
+            self.last_stats["ms"] = dict(
+                ms, kernel=1e3 * (time.perf_counter() - t0))
         # charge every entry this query touched, the empty and the
         # tld-only ones too, or the cache grows past its budget unseen
         self.terms.charge(tb, cache)

@@ -54,10 +54,10 @@ MANIFEST = "manifest.json"
 #: on-disk row schemas (readers pass these explicitly so a
 #: legitimately empty table — e.g. a zero-token field sub-index —
 #: reads as an empty frame instead of failing schema inference)
-POSTINGS_SCHEMA = (
-    "bucket int, term string, shard int, block_id int, first_docid long, "
-    "last_docid long, n_docs int, max_score_ub double, "
-    "deltas binary, tfs binary, dls binary")
+#: ``blk`` packs a block's bounds and its three varint streams into
+#: one value (codec.pack_blocks; layout in codec.BLK_HEADER): the cost
+#: of a cold read is per column chunk, so a read decodes four
+POSTINGS_SCHEMA = "bucket int, term string, shard int, block_id int, blk binary"
 TERM_STATS_SCHEMA = "term string, df long, cf long, bucket int"
 #: column -> Arrow type of those schemas (TermFiles' read of no files)
 _ARROW_TYPES = {n: {"int": "int32", "long": "int64"}.get(t, t) for n, t in (
@@ -130,12 +130,24 @@ class Manifest:
         # forward-compat: params added after a manifest was written get
         # their defaults, so old indexes stay resumable/readable —
         # EXCEPT analyzer_profile, which must stay "" (unknown) for
-        # pre-versioning manifests rather than claiming the current one
+        # pre-versioning manifests rather than claiming the current
+        # one, and codec_version, whose absence means the first layout
         defaults = asdict(IndexParams())
         defaults["analyzer_profile"] = ""
+        defaults["codec_version"] = 1
         for key, val in defaults.items():
             d.setdefault("params", {}).setdefault(key, val)
         return cls(**d)
+
+    def check_codec(self, root: str) -> None:
+        """Refuse postings written under another codec layout: read as
+        this build's layout they would decode to garbage, not fail."""
+        got = self.params.get("codec_version")
+        if got != codec.CODEC_VERSION:
+            raise ValueError(
+                f"index at {root} was written with codec version {got}; "
+                f"this build reads codec version {codec.CODEC_VERSION} — "
+                "rebuild the index")
 
     def save(self, root: str) -> None:
         os.makedirs(root, exist_ok=True)
@@ -323,6 +335,8 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
         man = Manifest(params=asdict(params))
     elif man.params != asdict(params):
         raise ValueError("resume with different params; rebuild instead")
+    elif man.done:
+        return man   # published: its build scratch is already gone
 
     tf_path = os.path.join(out_dir, "tf_staging")
     stats_path = os.path.join(out_dir, "term_stats")
@@ -489,11 +503,12 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
             tfn = (tf_a * (k1 + 1.0)
                    / (tf_a + k1 * (1.0 - b + b * dl_a / max(avgdl, 1e-9))))
             scores_flat = np.repeat(idf_g, sizes) * tfn
-            bs, meta, deltas_b, tfs_b, dls_b = codec.encode_blocks_frame(
+            bs, meta, blk_v, blk_o = codec.encode_blocks_frame(
                 docid_a, tf_a, dl_a, scores_flat, off[:-1].astype(np.int64))
             # block → source group (row) index
             gi = np.searchsorted(off, bs, side="right") - 1
             bid = meta["block_id"]
+            n_docs_b = meta["n_docs"]
 
             if imp_prefix > 0:
                 # impact-ordered prefix rows (block_id = -(rank+1)):
@@ -524,7 +539,7 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
                         ic_bid.append(-(c0 // codec.BLOCK_SIZE) - 1)
                         ic_gi.append(g)
                 if ic_did:
-                    ibs, imeta, id_b, it_b, il_b = codec.encode_blocks_frame(
+                    _, imeta, iblk_v, iblk_o = codec.encode_blocks_frame(
                         np.concatenate(ic_did), np.concatenate(ic_tf),
                         np.concatenate(ic_dl), np.concatenate(ic_sc),
                         np.asarray(ic_starts, dtype=np.int64))
@@ -532,13 +547,12 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
                     # block each; override ids with the impact ranks
                     gi = np.concatenate([gi, np.asarray(ic_gi)])
                     bid = np.concatenate([bid, np.asarray(ic_bid)])
-                    meta = {k: np.concatenate([meta[k], imeta[k]])
-                            for k in ("first_docid", "last_docid",
-                                      "n_docs", "max_score_ub")}
-                    deltas_b += id_b
-                    tfs_b += it_b
-                    dls_b += il_b
+                    n_docs_b = np.concatenate([n_docs_b, imeta["n_docs"]])
+                    blk_v = np.concatenate([blk_v, iblk_v])
+                    blk_o = np.concatenate([blk_o, iblk_o[1:] + blk_o[-1]])
 
+            # n_docs rides along for the write's postings metric only;
+            # the stage-2 write drops it (it is inside blk)
             yield pa.record_batch([
                 pa.array(bucket_a[gi].astype(np.int32, copy=False),
                          type=pa.int32()),
@@ -546,16 +560,9 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
                 pa.array(shard_a[gi].astype(np.int32, copy=False),
                          type=pa.int32()),
                 pa.array(bid, type=pa.int32()),
-                pa.array(meta["first_docid"], type=pa.int64()),
-                pa.array(meta["last_docid"], type=pa.int64()),
-                pa.array(meta["n_docs"], type=pa.int32()),
-                pa.array(meta["max_score_ub"], type=pa.float64()),
-                pa.array(deltas_b, type=pa.binary()),
-                pa.array(tfs_b, type=pa.binary()),
-                pa.array(dls_b, type=pa.binary()),
-            ], names=["bucket", "term", "shard", "block_id", "first_docid",
-                      "last_docid", "n_docs", "max_score_ub",
-                      "deltas", "tfs", "dls"])
+                codec.blk_array(blk_v, blk_o),
+                pa.array(n_docs_b, type=pa.int32()),
+            ], names=["bucket", "term", "shard", "block_id", "blk", "n_docs"])
 
     stats = spark.read.schema(TERM_STATS_SCHEMA).parquet(stats_path)
     if id_col not in docs.columns:
@@ -683,7 +690,8 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
             # collided pair still writes term-sorted per-bucket
             # files). Total row order (term, shard, block_id) keeps
             # output bytes parallelism-invariant (determinism gate).
-            enc = part.mapInArrow(_encode_stream, schema=POSTINGS_SCHEMA)
+            enc = part.mapInArrow(_encode_stream,
+                                  schema=f"{POSTINGS_SCHEMA}, n_docs int")
             # JIVESEARCH_POSTINGS_COLOCATE=0 restores the shuffle-free
             # many-files-per-bucket write (A/B attribution knob only —
             # both halves of a scaling pair inherit the same default)
@@ -691,18 +699,24 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
                 enc = (enc.repartition(4 * max(1, len(batch)), "bucket")
                        .sortWithinPartitions("bucket", "term", "shard",
                                              "block_id"))
+            # "bytes" counts the varint streams (each blk value minus
+            # its fixed header)
             out = (enc.observe(obs,
                             F.count(F.lit(1)).alias("blocks"),
                             F.approx_count_distinct("term").alias("terms"),
                             F.sum("n_docs").alias("postings"),
-                            F.sum(F.length("deltas") + F.length("tfs")
-                                  + F.length("dls")).alias("bytes")))
+                            F.sum(F.length("blk")
+                                  - F.lit(codec.HEADER_BYTES)).alias("bytes"))
+                   .drop("n_docs"))
             for bk in batch:  # idempotent: wipe any partial output of a crashed run
                 d = os.path.join(post_path, f"bucket={bk}")
                 if os.path.exists(d):
                     shutil.rmtree(d)
+            # blk values are unique: a dictionary page for them is pure
+            # overhead, which parquet-mr writes unless told not to
             (out.write.mode("append").partitionBy("bucket")
              .option("parquet.block.size", str(params.row_group_bytes))
+             .option("parquet.enable.dictionary#blk", "false")
              .parquet(post_path))
 
             m = obs.get  # metrics harvested from the write job itself
@@ -740,6 +754,10 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
             frame.unpersist()
         except Exception:
             pass
+    # build scratch: only a resume reads it, and a done build never
+    # resumes — left in place it is most of the published directory
+    for scratch in ("docid_staging", "tf_staging"):
+        shutil.rmtree(os.path.join(out_dir, scratch), ignore_errors=True)
     return man
 
 
@@ -824,6 +842,8 @@ def merge_indexes(spark, seg_dirs: list[str], out_dir: str,
     mans = [Manifest.load(d) for d in seg_dirs]
     if any(m is None or not m.done for m in mans):
         raise ValueError("all segments must be complete")
+    for d, m in zip(seg_dirs, mans):
+        m.check_codec(d)
     if params is None:
         # inherit the segments' params — in particular the analyzer:
         # queries against the merged index are tokenized by its
@@ -881,24 +901,26 @@ def merge_indexes(spark, seg_dirs: list[str], out_dir: str,
 
 
 def _decode_postings_df(spark, postings_path: str) -> DataFrame:
-    """postings parquet → (term, docid, dl, tf) rows, vectorized decode."""
-    import pandas as pd
-
+    """postings parquet → (term, docid, dl, tf) rows: each Arrow batch
+    is parsed and decoded in one vectorized pass."""
     ensure_shipped(spark)
 
     def _dec(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                docids, tfs, dls = codec.decode_block(r.deltas, r.tfs, r.dls, r.n_docs)
-                outs.append(pd.DataFrame({
-                    "term": r.term, "docid": docids, "dl": dls, "tf": tfs}))
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"term": pd.Series(dtype="str"), "docid": pd.Series(dtype="int64"),
-                 "dl": pd.Series(dtype="int64"), "tf": pd.Series(dtype="int64")})
+        import pyarrow as pa
+        for rb in batches:
+            values, offsets = codec.blk_buffers(rb.column("blk"))
+            hdr, so = codec.parse_blk(values, offsets[:-1], offsets[1:])
+            n_docs = hdr["n_docs"].astype(np.int64)
+            docids, tfs, dls = codec.decode_blocks_concat(values, so, n_docs)
+            rows = np.repeat(np.arange(rb.num_rows), n_docs)
+            yield pa.record_batch(
+                [rb.column("term").take(pa.array(rows)), pa.array(docids),
+                 pa.array(dls), pa.array(tfs)],
+                names=["term", "docid", "dl", "tf"])
 
     # impact-prefix rows (block_id < 0) are a redundant reordering of
     # the docid blocks — decoding them too would duplicate postings
     return (spark.read.parquet(postings_path)
             .where(F.col("block_id") >= 0)
-            .mapInPandas(_dec, schema="term string, docid long, dl long, tf long"))
+            .select("term", "blk")
+            .mapInArrow(_dec, schema="term string, docid long, dl long, tf long"))

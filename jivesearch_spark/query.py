@@ -37,8 +37,7 @@ from .index import Manifest
 from .session import ensure_shipped
 
 #: postings columns every top-k reader selects (Spark scan or pyarrow read)
-_POSTING_COLS = ["term", "shard", "block_id", "first_docid", "last_docid",
-                 "n_docs", "max_score_ub", "deltas", "tfs", "dls"]
+_POSTING_COLS = ["term", "shard", "block_id", "blk"]
 
 
 def analyze_query(man: Manifest, query: str) -> list[str]:
@@ -73,6 +72,7 @@ class IndexReader:
         self.man = Manifest.load(root)
         if self.man is None or not self.man.done:
             raise ValueError(f"no complete index at {root}")
+        self.man.check_codec(root)
         self.n_buckets = self.man.params["n_buckets"]
         self.postings = spark.read.parquet(f"{root}/postings")
         self.term_stats = spark.read.parquet(f"{root}/term_stats")
@@ -168,120 +168,86 @@ def _score_shard_np(tbl, idf: dict, k1: float, b: float, avgdl: float,
                        avgdl, use_wand, stats=stats)
 
 
-class _LazyBytes:
-    """Sequence view over an Arrow binary column: block bytes are
-    materialized per ordinal at decode time. The serving cold path
-    decodes a fraction of the blocks it reads bounds for (prefix-TA:
-    ~a third), so eagerly converting every row's compressed bytes to
-    Python objects (what ``to_pandas``+``tolist`` did) paid for
-    postings that never decode; bulk paths (__iter__, the brute
-    oracle) still convert in one ``to_pylist`` call."""
-    __slots__ = ("_a",)
-
-    def __init__(self, arr):
-        self._a = arr
-
-    def __len__(self):
-        return len(self._a)
-
-    def __getitem__(self, i):
-        return self._a[i].as_py()
-
-    def __iter__(self):
-        return iter(self._a.to_pylist())
-
-    def take(self, idxs) -> list:
-        """Bulk materialize many ordinals in one Arrow call (the
-        block-batch decode path)."""
-        return self._a.take(idxs).to_pylist()
-
-
 def _term_block_meta(tbl, idf) -> dict:
-    """Group a postings Arrow table into per-term RAW block metadata —
-    no decode. ``idf`` is a {term: weight} dict, or a callable of the
-    term's df = Σ n_docs of its regular blocks. Sorted (term, shard,
-    block_id) with Arrow compute +
-    numpy run boundaries, so each term's block ordinals are
+    """Group a postings Arrow table (``_POSTING_COLS``; ``shard`` may
+    be absent) into per-term RAW block tables — no decode. ``idf`` is a
+    {term: weight} dict, or a callable of the term's df = Σ n_docs of
+    its regular blocks. The same code serves one shard (the Spark
+    kernels' applyInArrow input, which arrives unsorted) or the whole
+    index (the serving tiers' pruned read).
+
+    One numpy pass: the term column is dictionary-encoded, one
+    ``lexsort`` over (term, prefix flag, shard, block order) orders
+    the rows, and ``codec.parse_blk`` reads every row's ``blk`` header
+    in one gather. So each term's regular block ordinals are
     docid-ordered and disjoint (shard ranges partition the docid space
-    in shard order); the same code serves one shard (the Spark
-    kernels' applyInArrow input) or the whole index (the serving
-    tiers' pruned read). Compressed block bytes stay as _LazyBytes
-    column slices, so blocks that are never decoded are never
-    converted to Python objects.
+    in shard order). Every entry's arrays are slices of the read's
+    arrays; its block bytes stay in the Arrow values buffer (``buf``)
+    with per-block stream offsets (``so``, see ``codec.parse_blk``),
+    so blocks that are never decoded are never copied.
 
     Impact-ordered prefix rows (block_id < 0, written by the build when
     a (term, shard) list exceeds ``impact_min`` — index.IndexParams)
     are split into separate per-term arrays (``iub``/``ind``/``ishard``
-    /``ideltas``…, sorted (shard, rank) so within a shard chunk k holds
+    /``iso``, sorted (shard, rank) so within a shard chunk k holds
     impact ranks [k·B, (k+1)·B)); the regular docid-block arrays never
     see them, so every existing consumer decodes each posting once."""
+    n = tbl.num_rows
+    if not n:   # an empty read or shard has no runs to group
+        return {}
     import pyarrow.compute as pc
-    has_shard = "shard" in tbl.column_names
-    neg_mask = pc.less(tbl["block_id"], 0)
-    imp_t = tbl.filter(neg_mask) if pc.any(neg_mask).as_py() else None
-    reg_t = tbl.filter(pc.invert(neg_mask)) if imp_t is not None else tbl
-
-    def _groups(t, blk_order):
-        if not len(t):   # an empty read or shard has no runs to group
-            return
-        keys = ([("term", "ascending")]
-                + ([("shard", "ascending")] if has_shard else [])
-                + [("block_id", blk_order)])
-        t = t.sort_by(keys).combine_chunks()
-        enc = pc.dictionary_encode(t["term"].combine_chunks())
-        codes = enc.indices.to_numpy()
-        names = enc.dictionary.to_pylist()
-        change = np.flatnonzero(np.diff(codes)) + 1
-        starts = np.concatenate([[0], change]).astype(np.int64)
-        ends = np.concatenate([change, [codes.size]]).astype(np.int64)
-        cols = {c: t[c].to_numpy(zero_copy_only=False)
-                for c in ("first_docid", "last_docid", "n_docs",
-                          "max_score_ub")}
-        cols["shard"] = (t["shard"].to_numpy(zero_copy_only=False)
-                        if has_shard else np.zeros(codes.size,
-                                                   dtype=np.int64))
-        byt = {c: t[c].combine_chunks()
-               for c in ("deltas", "tfs", "dls")}
-        for si, ei in zip(starts.tolist(), ends.tolist()):
-            yield names[int(codes[si])], slice(si, ei), cols, byt
+    enc = pc.dictionary_encode(tbl.column("term")).combine_chunks()
+    names = enc.dictionary.to_pylist()
+    by_name = sorted(range(len(names)), key=names.__getitem__)
+    rank = np.empty(len(names), dtype=np.int64)
+    rank[by_name] = np.arange(len(names))
+    code = rank[enc.indices.to_numpy()]
+    names = [names[i] for i in by_name]
+    bid = tbl.column("block_id").to_numpy()
+    shard = (tbl.column("shard").to_numpy() if "shard" in tbl.column_names
+             else np.zeros(n, dtype=np.int64))
+    neg = bid < 0
+    # regular rows ascending block_id (docid order); impact rows by
+    # rank = -block_id - 1 ascending
+    order = np.lexsort((np.where(neg, -bid - 1, bid), shard, neg, code))
+    code, neg, shard = code[order], neg[order], shard[order].astype(np.int64)
+    buf, offsets = codec.blk_buffers(tbl.column("blk"))
+    hdr, so = codec.parse_blk(buf, offsets[:-1][order], offsets[1:][order])
+    first = hdr["first_docid"].astype(np.int64)
+    last = hdr["last_docid"].astype(np.int64)
+    nd = hdr["n_docs"].astype(np.int64)
+    ub = hdr["max_score_ub"].astype(np.float64)
+    starts = np.flatnonzero(np.concatenate(
+        [[True], (code[1:] != code[:-1]) | (neg[1:] != neg[:-1])]))
+    ends = np.append(starts[1:], n)
+    dfs = np.add.reduceat(nd, starts).tolist()
 
     out = {}
-    # regular rows ascending block_id (docid order)
-    for term, sl, cols, byt in _groups(reg_t, "ascending"):
-        n = sl.stop - sl.start
-        df = int(cols["n_docs"][sl].sum())
-        out[term] = {
-            "first": cols["first_docid"][sl].astype(np.int64),
-            "last": cols["last_docid"][sl].astype(np.int64),
-            "nd": cols["n_docs"][sl].astype(np.int64),
-            "ub": cols["max_score_ub"][sl].astype(np.float64),
-            # shard of each regular block — the prefix TA needs it to
-            # tell short lists (full blocks generate candidates) from
-            # prefix-covered ones (only their top-P chunks do)
-            "bshard": cols["shard"][sl].astype(np.int64),
-            "deltas": _LazyBytes(byt["deltas"].slice(sl.start, n)),
-            "tfs": _LazyBytes(byt["tfs"].slice(sl.start, n)),
-            "dls": _LazyBytes(byt["dls"].slice(sl.start, n)),
-            "w": idf(df) if callable(idf) else idf[term],
-            # total postings across blocks — _memo_postings charges the
-            # RAW compressed table against the term-cache budget with
-            # this (≈2-4 B/posting varint vs 16 B/posting decoded)
-            "nd_total": df,
-        }
-    if imp_t is not None:
-        # impact rows: rank = -block_id - 1 ascending ⇔ block_id DESC
-        for term, sl, cols, byt in _groups(imp_t, "descending"):
-            d = out.get(term)
-            if d is None:   # prefix rows imply regular rows; be safe
-                continue
-            n = sl.stop - sl.start
-            d["iub"] = cols["max_score_ub"][sl].astype(np.float64)
-            d["ind"] = cols["n_docs"][sl].astype(np.int64)
-            d["ishard"] = cols["shard"][sl].astype(np.int64)
-            d["ideltas"] = _LazyBytes(byt["deltas"].slice(sl.start, n))
-            d["itfs"] = _LazyBytes(byt["tfs"].slice(sl.start, n))
-            d["idls"] = _LazyBytes(byt["dls"].slice(sl.start, n))
-            d["nd_total"] += int(cols["n_docs"][sl].sum())
+    for si, ei, df in zip(starts.tolist(), ends.tolist(), dfs):
+        term = names[code[si]]
+        if not neg[si]:
+            out[term] = {
+                "first": first[si:ei], "last": last[si:ei],
+                "nd": nd[si:ei], "ub": ub[si:ei],
+                # shard of each regular block — the prefix TA needs it
+                # to tell short lists (full blocks generate candidates)
+                # from prefix-covered ones (only their top-P chunks do)
+                "bshard": shard[si:ei],
+                "buf": buf, "so": so[si:ei],
+                "w": idf(df) if callable(idf) else idf[term],
+                # total postings across blocks — _memo_postings charges
+                # the RAW compressed table against the term-cache
+                # budget with this (≈2-4 B/posting varint vs 16
+                # B/posting decoded)
+                "nd_total": df,
+            }
+            continue
+        d = out.get(term)
+        if d is None:   # prefix rows imply regular rows; be safe
+            continue
+        d["iub"], d["ind"] = ub[si:ei], nd[si:ei]
+        d["ishard"], d["iso"] = shard[si:ei], so[si:ei]
+        d["nd_total"] += df
     return out
 
 
@@ -334,9 +300,8 @@ def _ensure_blocks(d: dict, st: dict, ords, k1: float, b: float,
     if not new:
         return 0
     na = np.asarray(new, dtype=np.int64)
-    dd, tf, dl = codec.decode_blocks_concat(    # one Arrow take per stream
-        d["deltas"].take(na), d["tfs"].take(na), d["dls"].take(na),
-        d["nd"][na])
+    dd, tf, dl = codec.decode_blocks_concat(d["buf"], d["so"][na],
+                                            d["nd"][na])
     sc = _bm25_scores(d, tf, dl, k1, b, avgdl)
     offs = np.concatenate([[0], np.cumsum(d["nd"][na])])
     for i, o in enumerate(new):
@@ -494,21 +459,36 @@ def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
     """Decode EVERY block of the given tb entries into brute-kernel
     arrays ({docids, scores} plus the entry's MSM marks), memoizing
     the decode on the tb entry (``dense``) so callers holding tb (e.g.
-    a serving-tier block cache) pay the bulk decode once. Compact decode (minimal dtypes)
-    + per-distinct-(tf, dl) score evaluation keep this pass
+    a serving-tier block cache) pay the bulk decode once. The entries
+    without a memo are decoded together, one
+    ``codec.decode_blocks_concat`` call per values buffer they live in
+    (one for a query whose terms came from one read), and scored per
+    entry with its own ``w`` and ``avgdl``. Compact decode (minimal
+    dtypes) + per-distinct-(tf, dl) score evaluation keep this pass
     memory-bandwidth-lean — it is the dense-merge finisher's main
     cost at millions of postings."""
+    keys = sorted(tb) if keys is None else keys
+    todo: dict = {}
+    for t in keys:
+        if tb[t].get("dense") is None:
+            todo.setdefault(id(tb[t]["buf"]), []).append(t)
+    for ts in todo.values():
+        parts = [tb[t] for t in ts]
+        dd, tf, dl = codec.decode_blocks_concat(
+            parts[0]["buf"], np.concatenate([d["so"] for d in parts]),
+            np.concatenate([d["nd"] for d in parts]), compact=True)
+        o = 0
+        for d in parts:
+            sl = slice(o, o + int(d["nd"].sum()))
+            o = sl.stop
+            # a lone entry keeps the decode; shared ones copy their
+            # slice, so evicting one term frees its postings
+            d["dense"] = (dd[sl] if len(parts) == 1 else dd[sl].copy(),
+                          _scores_bulk(d, tf[sl], dl[sl], k1, b, avgdl))
     dense = {}
-    for t in (keys if keys is not None else sorted(tb)):
+    for t in keys:
         d = tb[t]
-        full = d.get("dense")
-        if full is None:
-            dd, tf, dl = codec.decode_blocks_concat(
-                d["deltas"], d["tfs"], d["dls"], d["nd"], compact=True)
-            sc = _scores_bulk(d, tf, dl, k1, b, avgdl)
-            full = (dd, sc)
-            d["dense"] = full
-        arrs = dense[t] = {"docids": full[0], "scores": full[1]}
+        arrs = dense[t] = {"docids": d["dense"][0], "scores": d["dense"][1]}
         for m in ("group", "probe_only"):   # read by `_group_of`
             if m in d:
                 arrs[m] = d[m]
@@ -1191,9 +1171,8 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
             ci = int(u["ref"][ui])
             got = st["iseg"].get(ci)
             if got is None:
-                dd, tf, dl = codec.decode_block(
-                    d["ideltas"][ci], d["itfs"][ci], d["idls"][ci],
-                    int(d["ind"][ci]))
+                dd, tf, dl = codec.decode_blocks_concat(
+                    d["buf"], d["iso"][ci:ci + 1], d["ind"][ci:ci + 1])
                 got = st["iseg"][ci] = (dd, _bm25_scores(d, tf, dl,
                                                          k1, b, avgdl))
                 st["np"] += int(d["ind"][ci])

@@ -11,12 +11,18 @@ read of a few posting lists. This module is that read path:
    each ``bucket=N`` file once and keeps its row groups' ``term``
    min/max: a first-seen term reads only the row groups whose range
    holds it, with no per-query dataset planning or footer re-read —
-   IO per query is O(|Q| posting lists) regardless of corpus size.
+   IO per query is O(|Q| posting lists) regardless of corpus size. A
+   postings row is (term, shard, block_id, blk): ``blk`` packs the
+   block's bounds and its three varint streams into one value
+   (`codec.BLK_HEADER`), so the read decodes 4 column chunks per row
+   group.
 2. the read goes as an Arrow table to `query._term_block_meta` (the
    Spark kernels' block tables; a term's df is the Σ n_docs of its
-   regular blocks, so no ``term_stats`` lookup), so only block
-   METADATA — compressed bytes + per-block bounds — is materialized
-   eagerly. Scoring calls the SAME kernel entry as the Spark path
+   regular blocks, so no ``term_stats`` lookup), which parses every
+   ``blk`` header in one numpy pass and leaves the block bytes in the
+   Arrow values buffer: only block METADATA — per-block bounds and
+   stream offsets — is materialized eagerly. Scoring calls the SAME
+   kernel entry as the Spark path
    (`query._topk_query`) over the whole index at once. With
    ``use_wand`` it picks the finisher once from the query's posting
    count: brute while the lists hold at most n_lists ×
@@ -43,6 +49,7 @@ path (`query.bm25_topk_indexed`) remains the batch/analytics flavor.
 
 from __future__ import annotations
 
+import time
 from collections import OrderedDict
 
 from . import bm25
@@ -198,6 +205,7 @@ class LocalIndex:
         self.man = Manifest.load(root)
         if self.man is None or not self.man.done:
             raise ValueError(f"no complete index at {root}")
+        self.man.check_codec(root)
         self.n_buckets = self.man.params["n_buckets"]
         self.k1 = self.man.params["k1"]
         self.b = self.man.params["b"]
@@ -208,7 +216,9 @@ class LocalIndex:
         self.results = ResultCache()
         #: per-query stats of the LAST topk/topk_batch call: every entry
         #: carries ``result_cache_hit``; kernel runs add the batch's
-        #: pruned reads, ``term_cache_*`` counters and kernel stats
+        #: pruned reads, ``term_cache_*`` counters, kernel stats and
+        #: ``ms`` = {read, meta, kernel}: the batch's `TermFiles.read`
+        #: and block-table parse, and this query's `query._topk_query`
         self.last_stats: dict[str, dict] = {}
 
     # -- query ------------------------------------------------------------
@@ -263,11 +273,15 @@ class LocalIndex:
         # the Σ n_docs of the regular blocks this read returns; a term
         # the index lacks is cached as an empty entry, so its repeats
         # skip the read and the term-cache budget bounds it.
+        ms = {"read": 0.0, "meta": 0.0}
         missing = self.terms.missing(all_terms, reads)
         if missing:
-            tb = _term_block_meta(
-                self._postings.read(missing, _POSTING_COLS, reads),
-                lambda df: bm25.idf(n_docs, df))
+            t0 = time.perf_counter()
+            tbl = self._postings.read(missing, _POSTING_COLS, reads)
+            t1 = time.perf_counter()
+            tb = _term_block_meta(tbl, lambda df: bm25.idf(n_docs, df))
+            ms["read"] = 1e3 * (t1 - t0)
+            ms["meta"] = 1e3 * (time.perf_counter() - t1)
             self.terms.put({t: tb.get(t, {}) for t in missing})
         tb_all = self.terms.take(all_terms)
 
@@ -278,9 +292,11 @@ class LocalIndex:
                 continue
             qstats = stats[terms] = dict(reads, result_cache_hit=False)
             req = bm25.msm_required(len(terms)) if min_should_match else 0
+            t0 = time.perf_counter()
             d, s = _topk_query(tb, k + max(0, offset), req, self.k1, self.b,
                                avgdl, use_wand, stats=qstats,
                                store=self.terms.store)
+            qstats["ms"] = dict(ms, kernel=1e3 * (time.perf_counter() - t0))
             out[terms] = [(int(di), float(si))
                           for di, si in zip(d[offset:], s[offset:])]
         self.terms.charge(tb_all, reads)

@@ -6,7 +6,7 @@ same urls, same scores — in both Spark and serving modes.
 import pytest
 from pyspark.sql import functions as F
 
-from jivesearch_spark import bm25, corpus
+from jivesearch_spark import bm25, codec, corpus
 from jivesearch_spark.extract import extract_page
 from jivesearch_spark.fielded import (FieldedLocalIndex, FieldedReader,
                                       bm25_fielded_indexed,
@@ -118,6 +118,29 @@ def test_fielded_empty_query(spark, roots):
 
 
 @pytest.mark.spark
+def test_fielded_readers_refuse_other_codec_version(spark, roots, tmp_path):
+    """One field written under another codec layout makes both fielded
+    readers refuse the whole root, naming both versions."""
+    import json
+    import os
+    import shutil
+    root = str(tmp_path / "old")
+    shutil.copytree(roots[None], root)
+    path = os.path.join(root, "fields", "title", "manifest.json")
+    with open(path) as f:
+        m = json.load(f)
+    m["params"]["codec_version"] = 1
+    with open(path, "w") as f:
+        json.dump(m, f)
+    want = (f"codec version 1; this build reads codec version "
+            f"{codec.CODEC_VERSION}")
+    with pytest.raises(ValueError, match=want):
+        FieldedReader(spark, root)
+    with pytest.raises(ValueError, match=want):
+        FieldedLocalIndex(root)
+
+
+@pytest.mark.spark
 def test_fielded_serving_bounds_carry_field_boost(roots):
     """The lazy kernel retires blocks by comparing bounds against θ
     computed from boost-scaled scores (w = idf × boost), so the cached
@@ -143,7 +166,9 @@ def test_fielded_serving_bounds_carry_field_boost(roots):
                             partitioning="hive")
         pdf = dset.to_table(
             filter=pads.field("term") == term,
-            columns=["shard", "block_id", "max_score_ub"]).to_pandas()
+            columns=["shard", "block_id", "blk"]).to_pandas()
+        pdf["max_score_ub"] = [codec.unpack_block(b)["max_score_ub"]
+                               for b in pdf["blk"]]
         stored = pdf.sort_values(["shard", "block_id"],
                                  kind="mergesort")["max_score_ub"].values
         assert np.allclose(np.sort(meta["ub"]), np.sort(stored * boost),
@@ -204,6 +229,21 @@ def test_fielded_last_stats_count_pruned_reads(roots):
     idx.terms.max_postings = 1
     idx.topk("bob dylan guitar", k=10)
     assert idx.last_stats["term_cache_evicted"] > 0
+
+
+@pytest.mark.spark
+def test_fielded_last_stats_time_each_stage(roots):
+    """A kernel run reports ms = {read, meta, kernel}, the per-field
+    reads and parses summed: cold reads take time, a warm repeat none."""
+    idx = FieldedLocalIndex(roots[None])
+    idx.results.max_tuples = 0
+    idx.topk("bob dylan", k=10, tld_boost="uk")
+    cold = idx.last_stats["ms"]
+    assert set(cold) == {"read", "meta", "kernel"}, cold
+    assert cold["read"] > 0 and cold["meta"] > 0 and cold["kernel"] > 0
+    idx.topk("bob dylan", k=10, tld_boost="uk")
+    warm = idx.last_stats["ms"]
+    assert warm["read"] == 0 and warm["meta"] == 0 and warm["kernel"] > 0
 
 
 @pytest.mark.spark

@@ -23,6 +23,7 @@ Gates here:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +58,22 @@ def _docs(spark, n=3000, seed=11, lo=8, hi=40):
 
 PARAMS = IndexParams(n_buckets=4, bucket_batch=4, docs_per_shard=1024,
                      impact_prefix=512, impact_min=64)
+
+
+def _unpacked(pdf):
+    """Postings rows with each ``blk``'s n_docs and max_score_ub as
+    columns."""
+    heads = [codec.unpack_block(bytes(b)) for b in pdf["blk"]]
+    return pdf.assign(n_docs=[h["n_docs"] for h in heads],
+                      max_score_ub=[h["max_score_ub"] for h in heads])
+
+
+def _decode(blks):
+    """(docids, tfs, dls) of ``blk`` values, in order."""
+    values, off = codec.blk_buffers(
+        pa.array([bytes(b) for b in blks], pa.binary()))
+    hdr, so = codec.parse_blk(values, off[:-1], off[1:])
+    return codec.decode_blocks_concat(values, so, hdr["n_docs"])
 
 #: big enough that head-term lists exceed the sweep's
 #: imminent-exhaustion guard, so the flat-bound regime actually bails
@@ -99,8 +116,8 @@ def _sweep(li, q, k=10, msm_req=0):
 
 def test_prefix_rows_written_and_consistent(spark, prefix_index):
     post = spark.read.parquet(f"{prefix_index}/postings")
-    pdf = post.select("term", "shard", "block_id", "n_docs",
-                      "max_score_ub").toPandas()
+    pdf = _unpacked(post.select("term", "shard", "block_id", "blk")
+                    .toPandas())
     neg = pdf[pdf.block_id < 0]
     pos = pdf[pdf.block_id >= 0]
     assert len(neg) > 0, "saturated head terms must have prefix rows"
@@ -125,19 +142,15 @@ def test_prefix_rows_written_and_consistent(spark, prefix_index):
 
 def test_prefix_postings_are_subset_reordering(spark, prefix_index):
     post = spark.read.parquet(f"{prefix_index}/postings")
-    pdf = post.where("term = 'bob'").toPandas()
+    pdf = _unpacked(post.where("term = 'bob'").toPandas())
     for shard, g in pdf.groupby("shard"):
         reg = g[g.block_id >= 0].sort_values("block_id")
         pre = g[g.block_id < 0]
         if not len(pre):
             continue
-        rd, rt, rl = codec.decode_blocks_concat(
-            reg["deltas"].tolist(), reg["tfs"].tolist(),
-            reg["dls"].tolist(), reg["n_docs"].values)
+        rd, rt, rl = _decode(reg["blk"])
         full = {(int(a), int(b), int(c)) for a, b, c in zip(rd, rt, rl)}
-        pd_, pt, pl = codec.decode_blocks_concat(
-            pre["deltas"].tolist(), pre["tfs"].tolist(),
-            pre["dls"].tolist(), pre["n_docs"].values)
+        pd_, pt, pl = _decode(pre["blk"])
         assert len(pd_) == len(set(pd_.tolist())), "prefix docids unique"
         for a, b, c in zip(pd_, pt, pl):
             assert (int(a), int(b), int(c)) in full
@@ -149,8 +162,9 @@ def test_build_determinism_with_prefixes(spark, tmp_path):
         build_index(docs, out, PARAMS, id_col="docid", url_col="url",
                     log=lambda *a: None)
         df = spark.read.parquet(f"{out}/postings")
-        return sorted((r.term, r.shard, r.block_id, bytes(r.deltas),
-                       bytes(r.tfs), bytes(r.dls))
+        return sorted((r.term, r.shard, r.block_id,
+                       *(codec.unpack_block(bytes(r.blk))[c]
+                         for c in ("deltas", "tfs", "dls")))
                       for r in df.collect())
 
     a = build(3, str(tmp_path / "a"))

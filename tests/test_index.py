@@ -10,8 +10,10 @@
 
 import os
 import shutil
+import time
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from jivesearch_spark import bm25, codec, oracle
@@ -93,7 +95,7 @@ def test_codec_frame_encode_equals_per_block():
         L = np.concatenate([g[2] for g in groups])
         tfn = T * (k1 + 1.0) / (T + k1 * (1 - b + b * L / avgdl))
         idf_row = np.concatenate([np.full(g[0].size, g[3]) for g in groups])
-        bs, meta, db, tb, lb = codec.encode_blocks_frame(
+        bs, meta, values, offsets = codec.encode_blocks_frame(
             D, T, L, idf_row * tfn, np.array(starts))
         ref = []
         for docids, tfs, dls, idf in groups:
@@ -105,7 +107,10 @@ def test_codec_frame_encode_equals_per_block():
                                      meta["first_docid"][i],
                                      meta["last_docid"][i], meta["n_docs"][i])
             assert abs(r["max_score_ub"] - meta["max_score_ub"][i]) < 1e-12
-            assert (r["deltas"], r["tfs"], r["dls"]) == (db[i], tb[i], lb[i])
+            got = codec.unpack_block(
+                values[offsets[i]:offsets[i + 1]].tobytes())
+            assert (r["deltas"], r["tfs"], r["dls"]) == (
+                got["deltas"], got["tfs"], got["dls"])
 
 
 @pytest.mark.spark
@@ -120,11 +125,11 @@ def test_head_term_skew_bounded_by_shards(spark, tmp_path):
     root = str(tmp_path / "skew")
     build_index(docs, root, PARAMS, url_col=None, log=lambda *a: None)
 
-    from pyspark.sql import functions as F
     post = spark.read.parquet(f"{root}/postings").where("term = 'zzhead'")
-    per_shard = {r["shard"]: r["n"] for r in
-                 post.groupBy("shard")
-                 .agg(F.sum("n_docs").alias("n")).collect()}
+    per_shard = {}
+    for r in post.select("shard", "blk").collect():
+        n = codec.unpack_block(bytes(r["blk"]))["n_docs"]
+        per_shard[r["shard"]] = per_shard.get(r["shard"], 0) + n
     n_docs = docs.count()
     assert len(per_shard) == -(-n_docs // PARAMS.docs_per_shard)
     assert all(n <= PARAMS.docs_per_shard for n in per_shard.values())
@@ -144,9 +149,11 @@ def test_codec_concat_decode_property():
         tfs = rng.integers(1, 50, n).astype(np.int64)
         dls = rng.integers(1, 500, n).astype(np.int64)
         rows = list(codec.encode_blocks(docids, tfs, dls, 1.0))
+        values, off = codec.blk_buffers(
+            pa.array([codec.pack_block(r) for r in rows], pa.binary()))
+        _, so = codec.parse_blk(values, off[:-1], off[1:])
         d, t, l = codec.decode_blocks_concat(
-            [r["deltas"] for r in rows], [r["tfs"] for r in rows],
-            [r["dls"] for r in rows], [r["n_docs"] for r in rows])
+            values, so, [r["n_docs"] for r in rows])
         assert np.array_equal(d, docids)
         assert np.array_equal(t, tfs)
         assert np.array_equal(l, dls)
@@ -186,12 +193,12 @@ def test_indexed_msm(spark, docs, built):
 
 def _postings_bytes(spark, root):
     df = spark.read.parquet(f"{root}/postings")
-    rows = df.select("term", "shard", "block_id", "first_docid", "n_docs",
-                     "max_score_ub", "deltas", "tfs", "dls").collect()
+    rows = [(r.term, r.shard, r.block_id, codec.unpack_block(bytes(r.blk)))
+            for r in df.select("term", "shard", "block_id", "blk").collect()]
     return sorted(
-        (r.term, r.shard, r.block_id, r.first_docid, r.n_docs,
-         round(r.max_score_ub, 12), bytes(r.deltas), bytes(r.tfs), bytes(r.dls))
-        for r in rows)
+        (term, shard, bid, u["first_docid"], u["n_docs"],
+         round(u["max_score_ub"], 12), u["deltas"], u["tfs"], u["dls"])
+        for term, shard, bid, u in rows)
 
 
 @pytest.mark.spark
@@ -223,26 +230,106 @@ def test_two_segment_merge_equals_single_build(spark, docs, built, tmp_path):
 
 
 @pytest.mark.spark
+def test_postings_files_hold_packed_blk_without_dictionary(built):
+    """On disk a postings row is (term, shard, block_id, blk), and the
+    unique blk values are written without a dictionary page."""
+    import glob
+
+    import pyarrow.parquet as pq
+    files = glob.glob(os.path.join(built, "postings", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        assert md.schema.names == ["term", "shard", "block_id", "blk"], f
+        for i in range(md.num_row_groups):
+            chunk = md.row_group(i).column(md.schema.names.index("blk"))
+            assert not chunk.has_dictionary_page, (f, i)
+            assert not {"PLAIN_DICTIONARY", "RLE_DICTIONARY"} & set(
+                chunk.encodings), (f, i, chunk.encodings)
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_after_first_batch(msg):
+    if str(msg).startswith("[index] buckets_"):   # logged after its commit
+        raise _Crash(msg)
+
+
+@pytest.mark.spark
 def test_resume_skips_completed_batches_and_matches(spark, docs, built, tmp_path):
     root = str(tmp_path / "resume")
-    build_index(docs, root, PARAMS, url_col=None, log=lambda *a: None)
-    # simulate a crash after the first bucket-batch: drop the second
-    # batch's outputs + manifest entry, then resume
+    # a real crash after the first bucket-batch commits: the manifest
+    # is not done and the staged tf the second batch needs is on disk
+    with pytest.raises(_Crash):
+        build_index(docs, root, PARAMS, url_col=None,
+                    log=_crash_after_first_batch)
     man = Manifest.load(root)
-    keys = sorted(man.completed_batches)
-    assert len(keys) == 2
-    victim = man.completed_batches.pop(keys[1])
-    man.done = False
-    man.save(root)
-    for bk in victim["buckets"]:
-        shutil.rmtree(os.path.join(root, "postings", f"bucket={bk}"))
+    assert not man.done and len(man.completed_batches) == 1
+    assert os.path.isdir(os.path.join(root, "tf_staging"))
+    # doc_meta is written beside stage 2: let the crashed build's write
+    # land before the resume decides whether to write it again
+    deadline = time.monotonic() + 120
+    while not os.path.exists(os.path.join(root, "doc_meta", "_SUCCESS")):
+        assert time.monotonic() < deadline, "doc_meta write never finished"
+        time.sleep(0.2)
 
     logs = []
     man2 = build_index(docs.limit(0), root, PARAMS, url_col=None,
                        resume=True, log=logs.append)
     assert man2.done
+    assert len(man2.completed_batches) == 2
     assert any("skipping" in str(m) for m in logs)  # batch 1 not rebuilt
     assert _postings_bytes(spark, root) == _postings_bytes(spark, built)
+
+
+@pytest.mark.spark
+def test_done_build_drops_scratch_and_resume_returns_it(spark, docs, tmp_path):
+    """A published index holds no build scratch, and resuming a done
+    build returns its manifest without reading or writing anything."""
+    from pyspark.sql import functions as F
+    root = str(tmp_path / "scratch")
+    urls = docs.withColumn("url", F.format_string(
+        "https://x.example.com/%d", F.col("docid"))).drop("docid")
+    man = build_index(urls, root, PARAMS, id_col="docid", url_col="url",
+                      log=lambda *a: None)
+    assert man.done
+    for scratch in ("docid_staging", "tf_staging"):
+        assert not os.path.exists(os.path.join(root, scratch)), scratch
+
+    def snapshot():
+        return sorted((os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+                      for d, _, fs in os.walk(root) for f in fs)
+    before = snapshot()
+    logs = []
+    again = build_index(urls.limit(0), root, PARAMS, id_col="docid",
+                        url_col="url", resume=True, log=logs.append)
+    assert again == man and logs == []
+    assert snapshot() == before
+
+
+@pytest.mark.spark
+def test_readers_refuse_other_codec_version(spark, built, tmp_path):
+    """A manifest from another codec layout is refused by every reader
+    and by merge, naming both versions."""
+    import json
+
+    from jivesearch_spark import serve
+    root = str(tmp_path / "old")
+    shutil.copytree(built, root)
+    with open(os.path.join(root, "manifest.json")) as f:
+        m = json.load(f)
+    m["params"]["codec_version"] = 1
+    with open(os.path.join(root, "manifest.json"), "w") as f:
+        json.dump(m, f)
+    want = f"codec version 1; this build reads codec version {codec.CODEC_VERSION}"
+    for opener in (lambda: IndexReader(spark, root),
+                   lambda: serve.LocalIndex(root),
+                   lambda: merge_indexes(spark, [root], str(tmp_path / "m"),
+                                         log=lambda *a: None)):
+        with pytest.raises(ValueError, match=want):
+            opener()
 
 
 @pytest.mark.spark

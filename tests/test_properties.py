@@ -11,6 +11,7 @@ session needed: these are the exact functions the Arrow UDFs call.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
@@ -63,9 +64,11 @@ def test_block_codec_roundtrip_and_blockmax_bound(postings, idf, avgdl):
     assert np.array_equal(np.concatenate(got_l), dls)
 
     # vectorized concat decode ≡ per-block decode
+    values, off = codec.blk_buffers(
+        pa.array([codec.pack_block(b) for b in blocks], pa.binary()))
+    _, so = codec.parse_blk(values, off[:-1], off[1:])
     cd, ct, cl = codec.decode_blocks_concat(
-        [b["deltas"] for b in blocks], [b["tfs"] for b in blocks],
-        [b["dls"] for b in blocks], [b["n_docs"] for b in blocks])
+        values, so, [b["n_docs"] for b in blocks])
     assert np.array_equal(cd, docids)
     assert np.array_equal(ct, tfs)
     assert np.array_equal(cl, dls)

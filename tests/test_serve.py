@@ -370,6 +370,21 @@ def test_last_stats_count_pruned_reads(built):
     assert idx.last_stats[q]["term_cache_evicted"] > 0
 
 
+def test_last_stats_time_each_stage(built):
+    """Every kernel-run entry carries ms = {read, meta, kernel}: a cold
+    query spends time reading, its warm repeat reads nothing."""
+    idx = LocalIndex(built)
+    idx.results.max_tuples = 0
+    q = "spark group query"
+    idx.topk(q, 10)
+    cold = idx.last_stats[q]["ms"]
+    assert set(cold) == {"read", "meta", "kernel"}, cold
+    assert cold["read"] > 0 and cold["meta"] > 0 and cold["kernel"] > 0
+    idx.topk(q, 10)
+    warm = idx.last_stats[q]["ms"]
+    assert warm["read"] == 0 and warm["meta"] == 0 and warm["kernel"] > 0
+
+
 def test_warm_brute_repeat_reports_no_decode(built):
     """This fixture's lists sit under the lazy sweep's floor, so the
     tier answers by brute up front; a warm repeat reuses every list's

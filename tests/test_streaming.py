@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from jivesearch_spark import corpus
+from jivesearch_spark import codec, corpus
 from jivesearch_spark.extract import extract_pages_df
 from jivesearch_spark.index import IndexParams, assign_doc_ids, build_index
 
@@ -19,10 +19,11 @@ N_PAGES = 300
 
 def _postings_bytes(spark, root):
     rows = (spark.read.parquet(os.path.join(root, "postings"))
-            .select("bucket", "term", "shard", "block_id", "deltas", "tfs", "dls")
+            .select("bucket", "term", "shard", "block_id", "blk")
             .collect())
     return sorted((r["bucket"], r["term"], r["shard"], r["block_id"],
-                   bytes(r["deltas"]), bytes(r["tfs"]), bytes(r["dls"]))
+                   *(codec.unpack_block(bytes(r["blk"]))[c]
+                     for c in ("deltas", "tfs", "dls")))
                   for r in rows)
 
 

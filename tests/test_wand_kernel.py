@@ -33,9 +33,14 @@ K1, B, AVGDL = 1.2, 0.75, 90.0
 #: the postings columns a Spark kernel receives (index.POSTINGS_SCHEMA)
 POSTINGS = pa.schema([
     ("term", pa.string()), ("shard", pa.int32()), ("block_id", pa.int32()),
-    ("first_docid", pa.int64()), ("last_docid", pa.int64()),
-    ("n_docs", pa.int32()), ("max_score_ub", pa.float64()),
-    ("deltas", pa.binary()), ("tfs", pa.binary()), ("dls", pa.binary())])
+    ("blk", pa.binary())])
+
+
+def _table(rows, schema=POSTINGS):
+    """Logical block rows (``codec.encode_blocks`` plus term/shard) →
+    the postings Arrow table, each row's fields packed into ``blk``."""
+    return pa.Table.from_pylist(
+        [dict(r, blk=codec.pack_block(r)) for r in rows], schema=schema)
 
 
 def _make_tbl(rng, n_docs, spec, idf, zipf=False, shards=1):
@@ -56,7 +61,7 @@ def _make_tbl(rng, n_docs, spec, idf, zipf=False, shards=1):
                 blk["term"] = term
                 blk["shard"] = s
                 rows.append(blk)
-    return pa.Table.from_pylist(rows, schema=POSTINGS)
+    return _table(rows)
 
 
 def _lazy(tbl, idf, k, msm):
@@ -192,7 +197,7 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
             blk["term"] = term
             blk["shard"] = 0
             rows.append(blk)
-    tbl = pa.Table.from_pylist(rows, schema=POSTINGS)
+    tbl = _table(rows)
     tb = _term_block_meta(tbl, idf)
     store, st = {}, {}
     d1, s1 = _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
@@ -249,7 +254,7 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
                                    avgdl=avgdl):
         blk["term"] = "bob"
         rows.append(blk)
-    tbl = pa.Table.from_pylist(rows)
+    tbl = _table(rows, POSTINGS.remove(POSTINGS.get_field_index("shard")))
 
     def topk(scale_ub):
         tb = _term_block_meta(tbl, {"bob": idf * boost})
@@ -519,7 +524,7 @@ def _flat_tbl(rng, n_docs, spec, idf):
             blk["term"] = term
             blk["shard"] = 0
             rows.append(blk)
-    return pa.Table.from_pylist(rows, schema=POSTINGS)
+    return _table(rows)
 
 
 @pytest.mark.parametrize("flat", [False, True])

@@ -115,10 +115,10 @@ def main():
                 df_a = pdf["df"].values.astype(np.float64)
                 idf = np.log(1.0 + (n_docs_c - df_a + 0.5) / (df_a + 0.5))
                 tfn = (tf_a * 2.2 / (tf_a + 1.2 * (0.25 + 0.75 * dl_a / avgdl)))
-                bs, meta, d_b, t_b, l_b = codec.encode_blocks_frame(
+                bs, meta, _, blk_o = codec.encode_blocks_frame(
                     docid_a, tf_a, dl_a, idf * tfn, starts)
                 yield pd.DataFrame({"n": meta["n_docs"],
-                                    "b": [len(x) for x in d_b]})
+                                    "b": np.diff(blk_o)})
 
         out = part.mapInPandas(_enc, schema="n int, b int")
         out.agg(F.sum("n"), F.sum("b")).collect()
