@@ -36,8 +36,8 @@ candidates, like the reference's non-qualifying regional clause).
   `index.TermFiles` pruned reads, no Spark job): the same up-front
   brute-or-lazy choice as `serve.LocalIndex`, df taken from the
   postings rows it reads, the same `serve.TermCache` /
-  `serve.ResultCache`, the result cache keyed on the query's
-  `_analyze` sets.
+  `serve.ResultCache`, whose ranked-prefix entries are keyed on the
+  query's `_analyze` sets and options, not on k and offset.
 """
 
 from __future__ import annotations
@@ -333,7 +333,8 @@ class FieldedLocalIndex:
         self._post = {n: TermFiles(os.path.join(root, "fields", n, "postings"),
                                    self.n_buckets) for n in names}
         #: the last topk call's ``result_cache_hit`` and its pruned
-        #: reads; a kernel run adds term-cache counters, kernel stats
+        #: reads; a kernel run adds ``depth`` (the ranks computed for
+        #: the result-cache entry), term-cache counters, kernel stats
         #: and ``ms`` = {read, meta, kernel}: its per-field
         #: `TermFiles.read` and block-table parse summed, and
         #: `query._topk_query`
@@ -355,18 +356,27 @@ class FieldedLocalIndex:
              tld_boost: str | None = None,
              min_should_match: bool = True,
              offset: int = 0, use_wand: bool = True) -> list[tuple[str, float]]:
-        ck = (_analyze(query), k, shingles, tld_boost, min_should_match,
-              offset, use_wand)
-        hit = self.results.get(ck)
+        """Top-k (url, score), rank-identical to `bm25_fielded_indexed`.
+        The result-cache key is the query's `_analyze` sets plus every
+        kernel option but k and offset, with the MSM requirement as
+        the kernel reads it: pages inside a cached prefix are slices
+        of one entry (`serve.ResultCache`)."""
+        k, offset = max(0, k), max(0, offset)
+        analyzed = _analyze(query)
+        req = bm25.msm_required(len(analyzed[0])) if min_should_match else 0
+        key = (analyzed, shingles, tld_boost, req, use_wand)
+        hit = self.results.get(key, k, offset)
         if hit is not None:
             self.last_stats = {"result_cache_hit": True}
             return hit
-        res = self._topk_kernel(*ck)
-        self.results.put(ck, res)
-        return res
+        depth = self.results.depth(k, offset)
+        ranks = self._topk_kernel(*key, depth)
+        self.results.put(key, ranks, depth)
+        return ranks[offset:offset + k]
 
-    def _topk_kernel(self, analyzed, k, shingles, tld_boost,
-                     min_should_match, offset, use_wand):
+    def _topk_kernel(self, analyzed, shingles, tld_boost, req, use_wand,
+                     depth):
+        """The top-``depth`` (url, score) ranks of one result-cache key."""
         # reset up front, so no early return reports the PREVIOUS
         # query's kernel stats
         self.last_stats = {"terms_read": 0, "row_groups_read": 0,
@@ -376,7 +386,6 @@ class FieldedLocalIndex:
             return []
         k1 = self.man[TLD_FIELD].params["k1"]
         b = self.man[TLD_FIELD].params["b"]
-        req = bm25.msm_required(len(plan["q_terms"])) if min_should_match else 0
 
         # per-(field, term) RAW block tables: cache hits skip the
         # pruned read; misses are fetched per field in one batched
@@ -405,17 +414,17 @@ class FieldedLocalIndex:
         if ran:
             t0 = time.perf_counter()
             docids, scores = _topk_query(
-                live, k + max(0, offset), req, k1, b, 1.0, use_wand,
+                live, depth, req, k1, b, 1.0, use_wand,
                 stats=self.last_stats, store=self.terms.store)
             self.last_stats["ms"] = dict(
                 ms, kernel=1e3 * (time.perf_counter() - t0))
+            self.last_stats["depth"] = depth
         # charge every entry this query touched, the empty and the
         # tld-only ones too, or the cache grows past its budget unseen
         self.terms.charge(tb, cache)
         if not ran:
             return []
         self.last_stats.update(cache)
-        docids, scores = docids[offset:], scores[offset:]
         if not docids.size:
             return []
         urls = self._url_of(docids)

@@ -16,7 +16,10 @@ they feed is honored by ``query.bm25_topk_indexed``,
 ``query.bm25_topk_batch``, ``serve.LocalIndex.topk``,
 ``fielded.bm25_fielded_indexed`` and ``fielded.FieldedLocalIndex.topk``
 (kernels fetch top-(offset+k) internally, so page N costs one slightly
-deeper top-k, never a rescan).
+deeper top-k, never a rescan; a negative offset is page 1). The serving
+tiers' ``serve.ResultCache`` is not keyed on ``offset``: a miss ranks
+the first ``serve.PREFETCH_PAGES`` pages, and every page inside a
+cached prefix is a slice of it.
 """
 
 from __future__ import annotations

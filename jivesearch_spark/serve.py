@@ -36,9 +36,11 @@ read of a few posting lists. This module is that read path:
    (the Spark path decides per shard; every finisher answers like the
    oracle, so the ranks agree). Both serving tiers keep block tables
    and the kernel's decoded blocks in one `TermCache` (warm queries do
-   no IO and no decode) and answers in one `ResultCache`, keyed on the
-   ANALYZED request: a retyped form of a warm query (other case,
-   spacing or word order) is a hit, not a kernel run.
+   no IO and no decode) and ranked prefixes in one `ResultCache`,
+   keyed on the ANALYZED request without its page: a miss ranks the
+   first `PREFETCH_PAGES` pages, so a retyped form of a warm query
+   (other case, spacing or word order) and its pages 2-3 are slices
+   of one entry, not kernel runs.
 
 At 10^12 docs this is how a serving tier in front of the index works:
 each frontend holds the manifest + term cache; every query reads
@@ -158,39 +160,91 @@ class TermCache:
         stats["term_cache_evicted"] = evicted
 
 
+#: pages a result-cache miss computes, in units of the request's k: a
+#: miss of page 1 also ranks pages 2-3, so the deeper pages and the
+#: other surface forms of a warm intent are slices of one entry, not
+#: kernel runs (prefetching result pages: Fagni et al., TOIS 2006).
+#: `query._pinned_topk` thresholds before it sorts, so on the brute
+#: path a top-30 costs what a top-10 costs. The lazy finishers at
+#: scale: kernel-only `query._topk_query` ms, min of 9 interleaved
+#: runs on a 4-core VM, the 200k-doc corpus of `query._LAZY_FLOOR`;
+#: cold = fresh block tables and store, warm = the same call again:
+#:
+#:   query (postings)             k=10 cold/warm      k=30 cold/warm
+#:   bob (110k)                   15.43 / 10.86 lazy   3.93 / 2.19 prefix_ta
+#:   dylan (70k)                   7.69 / 5.11 lazy    3.62 / 1.82 prefix_ta
+#:   w1 (193k)                     2.82 / 1.67 lazy    2.89 / 1.73 prefix_ta
+#:   bob dylan (180k)             45.69 / 15.14       36.67 / 12.44 prefix_ta
+#:   guitar live (80k)            22.52 / 5.92        28.33 / 7.19 prefix_ta
+#:   w1 w2 (355k)                 17.52 / 5.62        22.40 / 6.72 prefix_ta
+#:   bob dylan guitar (230k)      71.94 / 39.39       64.46 / 69.27 dense_merge
+#:   dylan w3 w7 (267k)           60.54 / 67.16       59.03 / 85.97 dense_merge
+#:   5 head terms (276k)          88.38 / 176.73      95.38 / 167.56 dense_merge
+PREFETCH_PAGES = 3
+
+
+class _Prefix(list):
+    """The top-``depth`` ranks of one result-cache key: fewer than
+    ``depth`` ranks means they are every match."""
+    __slots__ = ("depth",)
+
+
 class ResultCache:
     """EXACT result cache — the serving analog of the reference's
     frontend result cache (frontend/search.go:439-453, 1 h TTL keyed on
-    the full request). The tiers key it on the ANALYZED request (the
+    the full request, page included). An entry here holds a RANKED
+    PREFIX, not one page: the tiers key it on the ANALYZED request (the
     sorted term set — plus, fielded, the sorted bigram set — with
-    every other option the kernel reads), so surface variants of one
-    query share an entry. No TTL needed: a serving tier holds one
+    every other option the kernel reads except k and offset), so
+    surface variants of one query and every page inside the prefix
+    share an entry. The pinned (-round(score, 9), docid) order is
+    total, so every top-k is a prefix of every deeper top-N and a page
+    sliced from a prefix equals the page the kernel computes.
+
+    A miss computes `depth` ranks (the first `PREFETCH_PAGES` pages);
+    `get` answers ranks [offset, offset + k) from an entry at least
+    k + offset deep, or from an exhaustive one (fewer ranks than its
+    depth: it holds every match); a deeper miss recomputes and
+    replaces the entry. No TTL needed: a serving tier holds one
     immutable published snapshot (manifest swap ⇒ new tier), so a
-    key maps to exactly one answer and a hit is provably identical to
-    a recompute (pytest gate). LRU, budgeted by TOTAL
-    cached tuples at 1 + len(answer) per entry: a result tuple costs
-    ~120 B of Python objects, so an entry-count cap would let a large-k
-    caller grow memory k× per entry, and the +1 bounds empty answers.
-    ``max_tuples = 0`` caches nothing; a lowered budget applies from
-    the next put."""
+    key maps to exactly one ranking (pytest gate). LRU, budgeted by
+    TOTAL cached tuples at 1 + len(ranks) per entry: a result tuple
+    costs ~120 B of Python objects, so an entry-count cap would let a
+    large-k caller grow memory k× per entry, and the +1 bounds empty
+    answers. ``max_tuples = 0`` caches nothing (a miss then computes
+    exactly k + offset ranks); a lowered budget applies from the next
+    put."""
 
     def __init__(self, max_tuples: int = 500_000):
         self.max_tuples = max_tuples
-        self._entries: OrderedDict = OrderedDict()
+        self._entries: OrderedDict = OrderedDict()   # key → _Prefix
         self._tuples = 0
 
-    def get(self, key):
-        hit = self._entries.get(key)
-        if hit is not None:
-            self._entries.move_to_end(key)
-            return list(hit)
+    def depth(self, k: int, offset: int) -> int:
+        """Ranks a miss of page [offset, offset + k) computes: the
+        first `PREFETCH_PAGES` pages too, unless that entry would not
+        fit the budget (then exactly k + offset)."""
+        deep = max(k + offset, PREFETCH_PAGES * k)
+        return deep if deep < self.max_tuples else k + offset
 
-    def put(self, key, res: list):
+    def get(self, key, k: int, offset: int):
+        """Ranks [offset, offset + k) of the entry under ``key``; None
+        when there is none or it is too shallow to answer."""
+        ranks = self._entries.get(key)
+        if ranks is None or (k + offset > ranks.depth
+                             and len(ranks) >= ranks.depth):
+            return None
+        self._entries.move_to_end(key)
+        return ranks[offset:offset + k]
+
+    def put(self, key, ranks: list, depth: int):
+        """Store the top-``depth`` ``ranks`` under ``key``."""
         old = self._entries.pop(key, None)
         if old is not None:
             self._tuples -= 1 + len(old)
-        self._entries[key] = list(res)
-        self._tuples += 1 + len(res)
+        entry = self._entries[key] = _Prefix(ranks)
+        entry.depth = depth
+        self._tuples += 1 + len(entry)
         while self._tuples > self.max_tuples:
             _, old = self._entries.popitem(last=False)
             self._tuples -= 1 + len(old)
@@ -215,7 +269,8 @@ class LocalIndex:
         #: kernel (bench uses this so latencies measure scoring)
         self.results = ResultCache()
         #: per-query stats of the LAST topk/topk_batch call: every entry
-        #: carries ``result_cache_hit``; kernel runs add the batch's
+        #: carries ``result_cache_hit``; kernel runs add ``depth`` (the
+        #: ranks computed for the result-cache entry), the batch's
         #: pruned reads, ``term_cache_*`` counters, kernel stats and
         #: ``ms`` = {read, meta, kernel}: the batch's `TermFiles.read`
         #: and block-table parse, and this query's `query._topk_query`
@@ -237,31 +292,42 @@ class LocalIndex:
                    offset: int = 0):
         """Serve many queries with ONE pruned postings read (shared
         scan for the union of terms), then one kernel per distinct
-        sorted analyzed-term tuple — the result-cache key, so surface
-        variants of one intent (case, spacing, word order, repeats)
-        share one entry and one kernel run."""
-        keys = {q: tuple(sorted(set(analyze_query(self.man, q))))
-                for q in queries}
-        opts = (k, use_wand, min_should_match, offset)
-        answers = {ts: self.results.get((ts, *opts))
-                   for ts in dict.fromkeys(keys.values())}
-        computed, stats = self._topk_batch_kernel(
-            [ts for ts, hit in answers.items() if hit is None], *opts)
-        for ts, res in computed.items():
-            self.results.put((ts, *opts), res)
-        stats.update((ts, {"result_cache_hit": True})
-                     for ts in answers if ts not in computed)
-        answers.update(computed)
-        self.last_stats = {q: stats[ts] for q, ts in keys.items()
-                           if ts in stats}
-        return {q: list(answers[ts]) for q, ts in keys.items()}
+        result-cache key that misses: (sorted analyzed terms,
+        ``use_wand``, effective MSM requirement). Surface variants of
+        one intent (case, spacing, word order, repeats) and every page
+        inside a cached prefix share one entry and one kernel run. The
+        requirement folds to 0 when it is ≤ 1: every single-field list
+        is its own MSM group, so any candidate meets a requirement of
+        one. A batch whose requests all hit skips the kernel and its
+        term-cache bookkeeping."""
+        k, offset = max(0, k), max(0, offset)
+        keys = {}
+        for q in queries:
+            terms = tuple(sorted(set(analyze_query(self.man, q))))
+            req = bm25.msm_required(len(terms)) if min_should_match else 0
+            keys[q] = (terms, use_wand, req if req > 1 else 0)
+        answers = {key: self.results.get(key, k, offset)
+                   for key in dict.fromkeys(keys.values())}
+        missed = [key for key, hit in answers.items() if hit is None]
+        stats = {key: {"result_cache_hit": True}
+                 for key, hit in answers.items() if hit is not None}
+        if missed:
+            depth = self.results.depth(k, offset)
+            computed, kstats = self._topk_batch_kernel(missed, depth)
+            for key, ranks in computed.items():
+                self.results.put(key, ranks, depth)
+                answers[key] = ranks[offset:offset + k]
+            stats.update(kstats)
+        self.last_stats = {q: stats[key] for q, key in keys.items()
+                           if key in stats}
+        return {q: list(answers[key]) for q, key in keys.items()}
 
-    def _topk_batch_kernel(self, term_sets: list[tuple], k: int,
-                           use_wand: bool, min_should_match: bool,
-                           offset: int):
-        """({terms: answer}, {terms: stats}); stats only for kernel runs."""
+    def _topk_batch_kernel(self, keys: list[tuple], depth: int):
+        """({key: top-``depth`` ranks}, {key: stats}) for result-cache
+        keys (terms, use_wand, msm requirement); stats only for kernel
+        runs."""
         out, stats = {}, {}
-        all_terms = sorted({t for ts in term_sets for t in ts})
+        all_terms = sorted({t for ts, _, _ in keys for t in ts})
         reads = {"terms_read": 0, "row_groups_read": 0}
         n_docs, avgdl = self.man.n_docs, self.man.avgdl
 
@@ -285,20 +351,19 @@ class LocalIndex:
             self.terms.put({t: tb.get(t, {}) for t in missing})
         tb_all = self.terms.take(all_terms)
 
-        for terms in term_sets:
+        for key in keys:
+            terms, use_wand, req = key
             tb = {t: tb_all[t] for t in terms if tb_all[t]}
             if not tb:
-                out[terms] = []
+                out[key] = []
                 continue
-            qstats = stats[terms] = dict(reads, result_cache_hit=False)
-            req = bm25.msm_required(len(terms)) if min_should_match else 0
+            qstats = stats[key] = dict(reads, result_cache_hit=False,
+                                       depth=depth)
             t0 = time.perf_counter()
-            d, s = _topk_query(tb, k + max(0, offset), req, self.k1, self.b,
-                               avgdl, use_wand, stats=qstats,
-                               store=self.terms.store)
+            d, s = _topk_query(tb, depth, req, self.k1, self.b, avgdl,
+                               use_wand, stats=qstats, store=self.terms.store)
             qstats["ms"] = dict(ms, kernel=1e3 * (time.perf_counter() - t0))
-            out[terms] = [(int(di), float(si))
-                          for di, si in zip(d[offset:], s[offset:])]
+            out[key] = [(int(di), float(si)) for di, si in zip(d, s)]
         self.terms.charge(tb_all, reads)
         for qstats in stats.values():
             qstats["term_cache_evicted"] = reads["term_cache_evicted"]

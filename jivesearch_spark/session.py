@@ -10,6 +10,7 @@ a no-op after the first call.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -18,25 +19,29 @@ _SHIPPED_SESSIONS: set[int] = set()
 
 
 def package_zip() -> str:
-    """Build (or reuse) a zip of jivesearch_spark for --py-files/addPyFile."""
+    """Build (or reuse) a zip of jivesearch_spark for --py-files/addPyFile.
+
+    The zip is named after a hash of the package's sources, so two
+    checkouts that share one temp dir each ship their own tree, and an
+    unchanged tree reuses its zip."""
     import jivesearch_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(jivesearch_spark.__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "jivesearch_spark_pyfiles.zip")
+    files = sorted(os.path.join(root, name)
+                   for root, _dirs, names in os.walk(pkg_dir)
+                   for name in names if name.endswith(".py"))
+    digest = hashlib.sha1()
+    for p in files:
+        digest.update(os.path.relpath(p, pkg_dir).encode() + b"\0")
+        with open(p, "rb") as f:
+            digest.update(f.read() + b"\0")
+    zpath = os.path.join(tempfile.gettempdir(),
+                         f"jivesearch_spark_pyfiles-{digest.hexdigest()[:16]}.zip")
 
-    newest = 0.0
-    files = []
-    for root, _dirs, names in os.walk(pkg_dir):
-        for name in names:
-            if name.endswith(".py"):
-                p = os.path.join(root, name)
-                files.append(p)
-                newest = max(newest, os.path.getmtime(p))
-
-    if not os.path.exists(zpath) or os.path.getmtime(zpath) < newest:
-        tmp = zpath + ".tmp"
+    if not os.path.exists(zpath):
+        tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for p in sorted(files):
+            for p in files:
                 arc = os.path.join("jivesearch_spark", os.path.relpath(p, pkg_dir))
                 zf.write(p, arc)
         os.replace(tmp, zpath)

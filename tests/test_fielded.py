@@ -281,6 +281,59 @@ def test_fielded_result_cache_keys_on_analyzed_query(roots):
 
 
 @pytest.mark.spark
+def test_fielded_result_cache_pages_match_uncached_tier(spark_docs, roots):
+    """Seeded random request sequences on the fielded tier (k in {0, 1,
+    10, > matches}, offsets inside, beyond and past the matches,
+    min_should_match, use_wand, shingles, a regional tld, three result
+    budgets): every answer equals a max_tuples = 0 tier's and the
+    pure-Python oracle's page."""
+    import random
+
+    from jivesearch_spark import oracle
+
+    docs = {r.url: r.asDict() for r in spark_docs.collect()}
+    for d in docs.values():
+        d["index"] = bool(d["index"])
+    ora = oracle.FieldedIndex(docs)
+    ref = FieldedLocalIndex(roots[None])
+    ref.results.max_tuples = 0
+    words = ["bob", "dylan", "jimi", "hendrix", "guitar", "woodstock",
+             "example", "page", "title", "the", "zzzabsent"]
+    runs = []
+    for seed, budget in [(1, 500_000), (2, 200), (3, 40)]:
+        rng = random.Random(seed)
+        idx = FieldedLocalIndex(roots[None])
+        idx.results.max_tuples = budget
+        intents = [" ".join(rng.sample(words, rng.randint(1, 3)))
+                   for _ in range(10)]
+        for _ in range(40):
+            q = rng.choice(intents)
+            if rng.random() < 0.5:
+                q = q.title()
+            opts = {"shingles": rng.random() < 0.8,
+                    "tld_boost": rng.choice([None, None, "uk", "com"]),
+                    "min_should_match": rng.random() < 0.5}
+            n = len(ref.topk(q, 10 ** 4, use_wand=False, **opts))
+            k = rng.choice([0, 1, 10, 10, 10, n + 5])
+            off = rng.choice([0, 0, 10, 20, 30, n, n + 3])
+            wand = rng.random() < 0.7
+            got = idx.topk(q, k, offset=off, use_wand=wand, **opts)
+            st = idx.last_stats
+            runs.append((k + off, st.get("result_cache_hit"), st.get("depth")))
+            assert got == ref.topk(q, k, offset=off, use_wand=wand, **opts), (
+                seed, q, k, off, wand, opts)
+            want = ora.topk(q, k + off, **opts)[off:]
+            assert [u for u, _ in got] == [u for u, _ in want], (q, opts)
+            assert all(abs(s - w) < 1e-6 for (_, s), (_, w)
+                       in zip(got, want)), (q, opts)
+        tup = sum(1 + len(v) for v in idx.results._entries.values())
+        assert idx.results._tuples == tup <= budget
+    assert any(hit and end > 10 for end, hit, _ in runs)
+    assert any(d is not None and d > end for end, _, d in runs)
+    assert any(d is not None and d == end > 0 for end, _, d in runs)
+
+
+@pytest.mark.spark
 def test_fielded_zipfian_replay_eviction_churn(roots, zipfian_replay):
     """The adversarial Zipfian eviction gate of test_serve, run on the
     fielded tier through the same shared caches: (field, term) keys,

@@ -81,6 +81,8 @@ def test_serve_offset_matches_spark(spark, built):
             bm25_topk_indexed(reader, Q, 20).collect()]
     page2 = [(d, round(s, 9)) for d, s in idx.topk(Q, 10, offset=10)]
     assert page2 == deep[10:20]
+    # a negative offset is page 1, as on the Spark path
+    assert [(d, round(s, 9)) for d, s in idx.topk(Q, 10, offset=-5)] == deep[:10]
     # offset past the result set → empty, not an error
     assert idx.topk("zzzznotaterm", 10, offset=10) == []
     assert idx.topk(Q, 10, offset=10**6) == []

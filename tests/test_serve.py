@@ -14,7 +14,7 @@ import pytest
 from jivesearch_spark import oracle
 from jivesearch_spark.index import IndexParams, build_index
 from jivesearch_spark.query import IndexReader, bm25_topk_indexed
-from jivesearch_spark.serve import LocalIndex, ResultCache
+from jivesearch_spark.serve import PREFETCH_PAGES, LocalIndex, ResultCache
 
 SF_DIR = "/root/testdata/sf0.001"
 PARAMS = IndexParams(docs_per_shard=100, n_buckets=8, bucket_batch=4)
@@ -127,22 +127,26 @@ def test_evict_bounds_raw_block_tables(built):
         assert idx.topk(q, 10) == want[q], q
 
 
+def _vocab(root):
+    """The index's terms, most frequent first."""
+    import pyarrow.dataset as ds
+
+    stats = ds.dataset(f"{root}/term_stats",
+                       partitioning=ds.partitioning(flavor="hive")) \
+        .to_table(columns=["term", "df"]).to_pydict()
+    return [t for _, t in sorted(zip(stats["df"], stats["term"]),
+                                 reverse=True)]
+
+
 def _replay_small_budgets(root, zipfian_replay):
     """conftest._zipfian_replay on a tier with small budgets, against an
     unbounded no-cache tier, over the index vocabulary by df."""
-    import pyarrow.dataset as ds
-
     idx = LocalIndex(root)
     idx.terms.max_postings = 1500            # force eviction churn
     idx.results.max_tuples = 400             # force tuple-budget churn
     ref = LocalIndex(root)                   # unbounded reference tier
     ref.results.max_tuples = 0
-
-    stats = ds.dataset(f"{root}/term_stats",
-                       partitioning=ds.partitioning(flavor="hive")) \
-        .to_table(columns=["term", "df"]).to_pydict()
-    by_df = sorted(zip(stats["df"], stats["term"]), reverse=True)
-    log, _ = zipfian_replay(idx, ref, [t for _, t in by_df])
+    log, _ = zipfian_replay(idx, ref, _vocab(root))
     return idx, log
 
 
@@ -209,12 +213,12 @@ def test_result_cache_exact_and_bounded(built):
             for q in qs for off in (0, 3)}
     assert not idx.results._entries
     idx.results = ResultCache()
-    for (q, off), w in want.items():     # miss → compute+store
+    for (q, off), w in want.items():     # miss → compute+store a prefix
         assert idx.topk(q, 10, offset=off) == w, (q, off)
     for (q, off), w in want.items():     # hit → identical
         assert idx.topk(q, 10, offset=off) == w, (q, off)
         assert idx.last_stats.get(q, {}).get("result_cache_hit"), q
-    # distinct (k, offset, msm, kernel) keys never collide
+    # a page sliced from a cached prefix equals the computed page
     a = idx.topk(qs[0], 5)
     b = idx.topk(qs[0], 10)
     assert a == b[:5] and len(b) >= len(a)
@@ -438,23 +442,96 @@ def test_result_cache_keys_on_analyzed_terms(built):
 
 
 def test_result_cache_key_holds_every_kernel_input(built):
-    """The same terms under another k, offset, min_should_match or
-    use_wand miss once (a kernel run), then hit; each answer equals
-    its own cache-bypassed one."""
+    """One kernel run ranks the first PREFETCH_PAGES pages of an intent.
+    Every (k, offset) page inside that prefix, in any surface form, is
+    a hit; a page beyond it misses once, and the deeper entry then
+    serves every shallower page. Another use_wand, or an MSM
+    requirement above one, is another entry; on a one-term query the
+    requirement is one, which every candidate meets, so min_should_match
+    hits the plain entry. Each answer equals its cache-bypassed one."""
     ref = LocalIndex(built)
     ref.results.max_tuples = 0
     idx = LocalIndex(built)
     q = "table scan merge sort filter"
-    idx.topk(q, 10)
-    assert idx.last_stats[q]["result_cache_hit"] is False
     v = "Filter SORT merge  scan table"
-    for opts in ({"k": 5}, {"offset": 3}, {"min_should_match": True},
-                 {"use_wand": False}):
-        args = {"k": 10, **opts}
-        for hit in (False, True):
-            got = idx.topk(v, **args)
-            assert idx.last_stats[v]["result_cache_hit"] is hit, (opts, hit)
-            assert _pin(got) == _pin(ref.topk(q, **args)), opts
+    deep = PREFETCH_PAGES * 10
+    # the prefix must not hold every match, or any page would hit
+    assert len(ref.topk(q, 10 ** 4)) > deep + 10
+
+    def served(query, hit, want_q=q, **args):
+        got = idx.topk(query, **args)
+        st = idx.last_stats[query]
+        if hit:
+            assert st == {"result_cache_hit": True}, (query, args)
+        else:
+            assert st["result_cache_hit"] is False, (query, args)
+        assert got == ref.topk(want_q, **args), (query, args)
+        return st
+
+    assert served(q, False, k=10)["depth"] == deep
+    for k, off in [(10, 0), (10, 10), (10, 20), (5, 25), (deep, 0), (1, 29),
+                   (0, deep), (5, 3)]:
+        served(v, True, k=k, offset=off)
+    # beyond the prefix: one kernel run at the request's own depth
+    assert served(v, False, k=10, offset=deep)["depth"] == deep + 10
+    for k, off in [(10, deep), (deep + 10, 0), (10, 0), (20, 15)]:
+        served(v, True, k=k, offset=off)
+    for opts in ({"use_wand": False}, {"min_should_match": True}):
+        served(v, False, k=10, **opts)
+        served(v, True, k=10, offset=20, **opts)
+    one = "merge"
+    served(one, False, one, k=10)
+    for off in (0, 20):
+        served(one.upper(), True, one, k=10, offset=off,
+               min_should_match=True)
+
+
+def test_result_cache_pages_match_uncached_tier(docs, built):
+    """Seeded random request sequences (k in {0, 1, 10, > matches},
+    offsets inside, beyond and past the matches, min_should_match,
+    use_wand, retyped forms, three result budgets) on one cached tier:
+    every answer equals a max_tuples = 0 tier's and the pure-Python
+    oracle's page (the brute spec, whose MSM requirement is never
+    folded), ranks and scores."""
+    import random
+
+    ora = oracle.SingleFieldIndex({r.docid: r.text for r in docs.collect()})
+    ref = LocalIndex(built)
+    ref.results.max_tuples = 0
+    vocab = _vocab(built)
+    words = vocab[:12] + vocab[len(vocab) // 2:][:6] + ["zzzabsent"]
+    runs = []
+    for seed, budget in [(1, 500_000), (2, 200), (3, 40)]:
+        rng = random.Random(seed)
+        idx = LocalIndex(built)
+        idx.results.max_tuples = budget
+        intents = [rng.sample(words, rng.randint(1, 4)) for _ in range(12)]
+        for _ in range(60):
+            terms = rng.choice(intents)
+            q = " ".join(rng.sample(terms, len(terms)))
+            if rng.random() < 0.5:
+                q = q.upper()
+            n = len(ref.topk(q, 10 ** 4, use_wand=False))
+            k = rng.choice([0, 1, 10, 10, 10, n + 5])
+            off = rng.choice([0, 0, 10, 20, 30, n, n + 3])
+            msm, wand = rng.random() < 0.5, rng.random() < 0.7
+            got = idx.topk(q, k, use_wand=wand, min_should_match=msm,
+                           offset=off)
+            st = idx.last_stats.get(q, {})
+            runs.append((k + off, st.get("result_cache_hit"), st.get("depth")))
+            assert got == ref.topk(q, k, use_wand=wand, min_should_match=msm,
+                                   offset=off), (seed, q, k, off, msm, wand)
+            want = ora.topk(q, k + off, min_should_match=msm)[off:]
+            assert [d for d, _ in got] == [d for d, _ in want], (q, k, off)
+            assert all(abs(s - w) < 1e-9 for (_, s), (_, w)
+                       in zip(got, want)), (q, k, off)
+        tup = sum(1 + len(v) for v in idx.results._entries.values())
+        assert idx.results._tuples == tup <= budget
+    # the sequences reach every branch: pages served from a deeper
+    # prefix, prefetching misses, and misses at the request's own depth
+    assert any(hit and end > 10 for end, hit, _ in runs)
+    assert any(d is not None and d > end for end, _, d in runs)
+    assert any(d is not None and d == end > 0 for end, _, d in runs)
 
 
 def test_cold_batch_runs_kernel_once_per_intent(built, monkeypatch):
