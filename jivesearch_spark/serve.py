@@ -56,6 +56,7 @@ from collections import OrderedDict
 
 from . import bm25
 from .index import Manifest, TermFiles
+from .paging import MAX_NUMBER
 from .query import (_POSTING_COLS, _memo_postings, _term_block_meta,
                     _topk_query, analyze_query)
 
@@ -164,6 +165,20 @@ class TermCache:
 #: miss of page 1 also ranks pages 2-3, so the deeper pages and the
 #: other surface forms of a warm intent are slices of one entry, not
 #: kernel runs (prefetching result pages: Fagni et al., TOIS 2006).
+#: Only a page the frontend can request prefetches (k ≤
+#: `paging.MAX_NUMBER`, so an entry holds at most 2 · MAX_NUMBER
+#: extra ranks); a larger k computes exactly k + offset.
+#:
+#: Why three pages: a published page-depth distribution. Silverstein,
+#: Henzinger, Marais and Moricz, "Analysis of a very large web search
+#: engine query log" (SIGIR Forum 33(1), 1999; ~1 billion AltaVista
+#: requests, screens of 10 results) report 85.2 % of queries viewing
+#: one screen, 7.5 % two, 3.0 % three and 4.3 % more: three pages
+#: hold every page that 95.7 % of queries view, and 71 % of the
+#: queries that page on at all stop by page 3. `perfbench`'s 10 % / 5 %
+#: page-2 / page-3 shares are of that order.
+#:
+#: The cost, paid on every miss, also on traffic that never pages:
 #: `query._pinned_topk` thresholds before it sorts, so on the brute
 #: path a top-30 costs what a top-10 costs. The lazy finishers at
 #: scale: kernel-only `query._topk_query` ms, min of 9 interleaved
@@ -180,6 +195,10 @@ class TermCache:
 #:   bob dylan guitar (230k)      71.94 / 39.39       64.46 / 69.27 dense_merge
 #:   dylan w3 w7 (267k)           60.54 / 67.16       59.03 / 85.97 dense_merge
 #:   5 head terms (276k)          88.38 / 176.73      95.38 / 167.56 dense_merge
+#:   sum of the nine             332.5 / 327.6       316.7 / 354.9
+#:
+#: so a top-30 miss costs 0.25× (one head term) to 1.76× (a warm
+#: 3-term dense merge) a top-10 one, 0.95× cold and 1.08× warm summed.
 PREFETCH_PAGES = 3
 
 
@@ -201,7 +220,8 @@ class ResultCache:
     total, so every top-k is a prefix of every deeper top-N and a page
     sliced from a prefix equals the page the kernel computes.
 
-    A miss computes `depth` ranks (the first `PREFETCH_PAGES` pages);
+    A miss computes `depth` ranks (the first `PREFETCH_PAGES` pages
+    for k ≤ `paging.MAX_NUMBER`, else exactly k + offset);
     `get` answers ranks [offset, offset + k) from an entry at least
     k + offset deep, or from an exhaustive one (fewer ranks than its
     depth: it holds every match); a deeper miss recomputes and
@@ -222,10 +242,12 @@ class ResultCache:
 
     def depth(self, k: int, offset: int) -> int:
         """Ranks a miss of page [offset, offset + k) computes: the
-        first `PREFETCH_PAGES` pages too, unless that entry would not
-        fit the budget (then exactly k + offset)."""
+        first `PREFETCH_PAGES` pages too, when k is a page the frontend
+        can request (k ≤ `paging.MAX_NUMBER`) and that entry fits the
+        budget; else exactly k + offset."""
         deep = max(k + offset, PREFETCH_PAGES * k)
-        return deep if deep < self.max_tuples else k + offset
+        return (deep if k <= MAX_NUMBER and deep < self.max_tuples
+                else k + offset)
 
     def get(self, key, k: int, offset: int):
         """Ranks [offset, offset + k) of the entry under ``key``; None

@@ -21,12 +21,14 @@ _SHIPPED_SESSIONS: set[int] = set()
 def package_zip() -> str:
     """Build (or reuse) a zip of jivesearch_spark for --py-files/addPyFile.
 
-    The zip is named after a hash of the package's sources, so two
-    checkouts that share one temp dir each ship their own tree, and an
-    unchanged tree reuses its zip."""
+    The zip is named after the package directory, so two checkouts that
+    share one temp dir each ship their own tree and each leaves one zip
+    there. Its comment holds a hash of the package's sources: a tree
+    whose hash differs (an edit) rebuilds the zip in place, and an
+    unchanged tree reuses it."""
     import jivesearch_spark
 
-    pkg_dir = os.path.dirname(os.path.abspath(jivesearch_spark.__file__))
+    pkg_dir = os.path.dirname(os.path.realpath(jivesearch_spark.__file__))
     files = sorted(os.path.join(root, name)
                    for root, _dirs, names in os.walk(pkg_dir)
                    for name in names if name.endswith(".py"))
@@ -35,16 +37,23 @@ def package_zip() -> str:
         digest.update(os.path.relpath(p, pkg_dir).encode() + b"\0")
         with open(p, "rb") as f:
             digest.update(f.read() + b"\0")
+    sources = digest.hexdigest().encode()
+    name = hashlib.sha1(pkg_dir.encode()).hexdigest()[:16]
     zpath = os.path.join(tempfile.gettempdir(),
-                         f"jivesearch_spark_pyfiles-{digest.hexdigest()[:16]}.zip")
-
-    if not os.path.exists(zpath):
-        tmp = f"{zpath}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for p in files:
-                arc = os.path.join("jivesearch_spark", os.path.relpath(p, pkg_dir))
-                zf.write(p, arc)
-        os.replace(tmp, zpath)
+                         f"jivesearch_spark_pyfiles-{name}.zip")
+    try:
+        with zipfile.ZipFile(zpath) as zf:
+            if zf.comment == sources:
+                return zpath
+    except (OSError, zipfile.BadZipFile):
+        pass
+    tmp = f"{zpath}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.comment = sources
+        for p in files:
+            arc = os.path.join("jivesearch_spark", os.path.relpath(p, pkg_dir))
+            zf.write(p, arc)
+    os.replace(tmp, zpath)
     return zpath
 
 

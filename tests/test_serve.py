@@ -13,6 +13,7 @@ import pytest
 
 from jivesearch_spark import oracle
 from jivesearch_spark.index import IndexParams, build_index
+from jivesearch_spark.paging import MAX_NUMBER
 from jivesearch_spark.query import IndexReader, bm25_topk_indexed
 from jivesearch_spark.serve import PREFETCH_PAGES, LocalIndex, ResultCache
 
@@ -237,6 +238,35 @@ def test_result_cache_exact_and_bounded(built):
     for i in range(200):
         assert idx.topk(f"zzznomatch{i}", 10) == []
     assert len(idx.results._entries) == idx.results._tuples == 50
+
+
+def test_large_k_request_does_not_flush_the_result_cache(built):
+    """Only a page the frontend can request (k ≤ paging.MAX_NUMBER)
+    prefetches PREFETCH_PAGES pages; a larger k computes and caches
+    exactly k + offset ranks, so one bulk request neither multiplies
+    its kernel depth nor evicts the warm entries a prefetched entry of
+    PREFETCH_PAGES · k ranks would."""
+    cache = ResultCache(max_tuples=5000)
+    assert cache.depth(10, 0) == PREFETCH_PAGES * 10
+    assert cache.depth(10, 40) == 50
+    assert cache.depth(MAX_NUMBER, 0) == PREFETCH_PAGES * MAX_NUMBER
+    assert cache.depth(MAX_NUMBER + 1, 0) == MAX_NUMBER + 1
+    assert cache.depth(100_000, 7) == 100_007
+    for i in range(100):                 # 100 warm intents, 3100 tuples
+        cache.put(("warm", i), list(range(cache.depth(10, 0))),
+                  cache.depth(10, 0))
+    big = cache.depth(1000, 0)
+    assert big < 5000 - cache._tuples < PREFETCH_PAGES * 1000
+    cache.put(("bulk",), list(range(big)), big)
+    assert len(cache._entries) == 101
+    assert all(cache.get(("warm", i), 10, 20) == list(range(20, 30))
+               for i in range(100))
+    # the tiers run the kernel at that depth
+    idx = LocalIndex(built)
+    idx.topk("merge part", MAX_NUMBER)
+    assert idx.last_stats["merge part"]["depth"] == PREFETCH_PAGES * MAX_NUMBER
+    idx.topk("slow", MAX_NUMBER + 1, offset=3)
+    assert idx.last_stats["slow"]["depth"] == MAX_NUMBER + 4
 
 
 #: non-ASCII terms of the row-group fixture (the standard analyzer

@@ -32,7 +32,8 @@ def test_checkouts_sharing_a_temp_dir_ship_their_own_tree(tmp_path,
     temp dir in either order, each ship their own source: the newer
     zip of one tree must never stand in for the other, even when the
     other's files are older (an archive of a parent commit keeps its
-    commit times). An unchanged tree reuses its zip."""
+    commit times). An unchanged tree reuses its zip; an edited one
+    rebuilds it in place."""
     a = _tree(str(tmp_path / "a"), "tree a")
     b = _tree(str(tmp_path / "b"), "tree b")
     old = 1_000_000_000
@@ -56,7 +57,11 @@ def test_checkouts_sharing_a_temp_dir_ship_their_own_tree(tmp_path,
     assert ship(a) == za and "tree a" in _shipped_init(ship(a))
     built = os.path.getmtime(za)
     assert ship(a) == za and os.path.getmtime(za) == built
-    # an edit ships the edited source
+    # an edit ships the edited source from the same path: a tree
+    # leaves one zip in the temp dir however often it changes
     with open(os.path.join(a, "__init__.py"), "a") as f:
         f.write("EDITED = True\n")
-    assert "EDITED = True" in _shipped_init(ship(a))
+    assert ship(a) == za and "EDITED = True" in _shipped_init(za)
+    assert "tree b" in _shipped_init(ship(b))
+    assert sorted(os.listdir(shared)) == sorted(
+        os.path.basename(z) for z in (za, zb))
