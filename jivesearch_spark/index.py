@@ -80,8 +80,9 @@ class IndexParams:
     #: score-descending chunks (block_id = -(rank+1), docid-sorted
     #: within each chunk so the delta codec applies unchanged). A cold
     #: saturated-bounds query then runs the TA finisher over O(prefix)
-    #: decoded postings instead of O(df) — the round-3 cold-latency
-    #: scale risk. 0 disables (no impact rows are written).
+    #: decoded postings instead of O(df). 0 disables (no impact rows
+    #: are written): a lazy sweep that hands off then ends in brute,
+    #: which decodes every block of the query's lists.
     impact_prefix: int = 8192
     #: lists at or below this length skip prefix emission: decoding
     #: their full docid blocks is already O(prefix)-cheap, and not

@@ -255,21 +255,18 @@ def _memo_postings(meta: dict, st: dict) -> int:
     """Posting-equivalent memory of one term's block table ``meta`` and
     decoded-store entry ``st`` (the cost `serve.TermCache` budgets),
     summed from the LIVE arrays: decoded blocks and prefix chunks
-    (``np``), the memoized TA stream (2 copies per folded posting), a
-    dense bailout decode, the TA impact permutation, and the raw
-    compressed table at ~1/4 posting-equivalent — otherwise a
-    skip-heavy head term parks its FULL compressed list at zero cost
-    and a long-running tier grows without bound. The +1 per entry
-    bounds the empty entries of terms the index lacks."""
+    (``np``), the memoized prefix-TA stream (2 copies per folded
+    posting), a bulk ``dense`` decode, and the raw compressed table at
+    ~1/4 posting-equivalent — otherwise a skip-heavy head term parks
+    its FULL compressed list at zero cost and a long-running tier
+    grows without bound. The +1 per entry bounds the empty entries of
+    terms the index lacks."""
     n = st.get("np", 0)
     ist = st.get("istream")
     if ist is not None:
         n += 2 * int(ist["d"].size)
     if meta.get("dense") is not None:
         n += int(meta["dense"][0].size)
-    order = meta.get("impact_order")
-    if order is not None:
-        n += int(order.size)
     return 1 + n + meta.get("nd_total", 0) // 4
 
 
@@ -521,15 +518,19 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     highest own-ub), which collapses the bound for head-term blocks;
     a head term's tail blocks are then retired wholesale without
     decode — the cost is sublinear in head-term df whenever θ
-    separates from the head term's block maxima. A degenerate flat
-    corpus (every block bound ≈ θ) cannot skip anything; that regime
-    is detected UPFRONT for ≤2-term queries (no block's own bound
-    sits below its term's max ⇒ nothing is ever retirable, so the
-    kernel goes dense before any wave bookkeeping) and mid-sweep
-    otherwise (as soon as θ exists: skippable share of remaining
-    blocks < 25% with no imminent list exhaustion) — flat-bound
-    queries pay at most one wave of bookkeeping instead of per-wave
-    probing over the whole index.
+    separates from the head term's block maxima.
+
+    Hand-offs: a flat corpus (every block bound ≈ θ) cannot skip
+    anything, so the sweep hands off — UPFRONT for ≤2-term queries
+    whose bounds are strictly flat (``handoff = {"why":
+    "flat_bounds"}``), else mid-sweep as soon as θ exists and retires
+    < 25 % of the remaining blocks with no list close to exhaustion
+    (``{"why": "no_separation", "skippable", "remaining"}``, in
+    blocks). It hands off to ``_topk_impact_prefix`` when some list
+    carries prefix chunks and no key carries MSM marks, else to the
+    brute exit ``_topk_query`` uses (``_topk_brute_exit``) — the only
+    path for an index built with ``impact_prefix = 0``. Flat-bound
+    queries thus pay at most one wave of bookkeeping.
 
     Generalizations for the serving tiers and the fielded tb:
 
@@ -542,9 +543,9 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
       fielded cross_fields rule); a ``probe_only`` entry contributes
       score and bound but never generates candidates (the reference's
       non-qualifying tld should-clause). A sweep over such marks
-      hands off to the grouped ``_topk_brute``, since the TA
-      finishers count every key toward MSM and generate candidates
-      from every list.
+      hands off to the grouped ``_topk_brute``, since the prefix TA
+      counts every key toward MSM and generates candidates from
+      every list.
     * per-key ``avgdl`` in a tb entry overrides the global (fielded
       sub-indexes each carry their own).
     """
@@ -631,17 +632,12 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
 
     n_decoded = 0
 
-    def go_dense():
-        # grouped or probe-only keys: the grouped brute. Otherwise the
-        # impact-prefix TA when the index carries prefix chunks: cold
-        # cost is O(prefix + candidates), never O(df) — the round-3
-        # cold-latency scale fix; indexes without prefixes decode
-        # everything and finish with the impact-ordered TA (early
-        # termination by per-doc score spread, which survives the
-        # tf-saturation that defeats block-level bounds; it memoizes
-        # impact permutations on the tb entries so a serving tier's
-        # warm queries skip the sort).
+    def go_dense(handoff: dict):
+        # the prefix TA's cold cost is O(prefix + candidates), never
+        # O(df); without prefix chunks, or with MSM marks, the brute exit
         nonlocal store
+        if stats is not None:
+            stats["handoff"] = handoff
         if not grouped and any(
                 tb[t].get("iub") is not None and tb[t]["iub"].size
                 for t in keys_all):
@@ -653,15 +649,8 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
                                        store, stats=stats,
                                        n_base=n_decoded,
                                        blocks_total=blocks_all)
-        dense = _dense_arrays_from_tb(tb, k1, b, avgdl, keys=keys_all)
-        if stats is not None:
-            stats["blocks_decoded"] = blocks_all
-            stats["blocks_total"] = blocks_all
-            stats["dense_bailout"] = True
-            stats["finisher"] = "brute" if grouped else "impact_ta"
-        if grouped:
-            return _topk_brute(dense, k, msm_req)
-        return _topk_impact_ordered(dense, k, msm_req, meta=tb, stats=stats)
+        return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats,
+                                n_base=n_decoded)
 
     # upfront strictly-flat bailout (≤2 terms): when EVERY block bound
     # is identical (uniform corpora — same tf/dl everywhere), any θ
@@ -672,7 +661,7 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     if nt <= 2:
         prio0 = compute_prio()
         if prio0.max() - prio0.min() <= _WAND_SLACK:
-            return go_dense()
+            return go_dense({"why": "flat_bounds"})
 
     # ---- lazy decoded-block store (caller-persistent when given) ----
     if store is None:
@@ -712,20 +701,16 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
         live = remaining & (prio >= theta - _WAND_SLACK)
         if not live.any():
             break
-        # dense bailout: θ exists yet provably retires almost nothing,
-        # and no list is close enough to exhaustion for the bounds to
-        # collapse soon — the bound distribution is too flat for θ to
-        # separate (the brute-force regime). Decode everything and
-        # finish with the brute kernel's single vectorized pass: the
-        # flat regime then costs one wave of bookkeeping, not per-wave
-        # probing over the whole index.
+        # hand-off: θ exists yet retires almost nothing, and no list is
+        # close enough to exhaustion for the bounds to collapse soon
         if np.isfinite(theta):
             n_rem = int(remaining.sum())
             skippable = n_rem - int(live.sum())
             imminent = bool(((n_left > 0) & (n_left <= 2 * batch)
                              & ~exhausted).any())
             if skippable < 0.25 * n_rem and not imminent:
-                return go_dense()
+                return go_dense({"why": "no_separation",
+                                 "skippable": skippable, "remaining": n_rem})
         # cheap-exhaust: fully visiting a nearly-done list zeroes its
         # mu, collapsing every other term's bound — the lever that
         # lets a rare strong term stop poisoning head-block bounds
@@ -788,94 +773,11 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
-#: stop margin for the impact-ordered sweep: with θ − T > 2·0.5e-9,
-#: round(θ, 9) is STRICTLY greater than round(T, 9), so no unseen doc
-#: can displace a result even on a rounded-score tie + docid tie-break.
+#: stop margin of the prefix TA and pool margin of the dense merge: with
+#: θ − T > 2·0.5e-9, round(θ, 9) is STRICTLY greater than round(T, 9), so
+#: no unseen doc can displace a result even on a rounded-score tie +
+#: docid tie-break.
 _TA_SLACK = 2e-9
-
-
-def _topk_impact_ordered(dense: dict, k: int, msm_req: int,
-                         meta: dict | None = None,
-                         stats: dict | None = None):
-    """Exact top-k over fully-decoded term arrays via Fagin's
-    threshold algorithm (TA): each term's postings are visited in
-    DESCENDING score order (impact order), candidates are scored
-    exactly against every term, and the sweep stops once the k-th
-    best exact score provably beats the bound T = Σ per-term next
-    unseen score — the regime block-max skipping cannot help with
-    (BM25 tf-saturation makes every block bound ≈ the term max for
-    head terms, but per-DOC impacts still spread via dl
-    normalization). Rank-identical to the brute kernel: unseen docs
-    are excluded only when round(θ,9) > round(T,9) is guaranteed
-    (_TA_SLACK). Falls back to the brute single pass if 25% of all
-    postings are consumed without separation (degenerate uniform
-    corpora, where nothing separates anything).
-
-    ``meta``: optional {term: dict} whose entries memoize the impact
-    permutation across calls (the serving tier passes the cached tb
-    entries, so warm queries skip the argsort too). ``stats["finisher"]``
-    becomes ``dense_merge`` when the fallback runs.
-    """
-    names = sorted(dense)
-    if not names:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-    orders = {}
-    for t in names:
-        m = meta.get(t) if meta else None
-        order = m.get("impact_order") if m is not None else None
-        if order is None:
-            order = np.argsort(-dense[t]["scores"], kind="stable")
-            if m is not None:
-                m["impact_order"] = order
-        orders[t] = order
-
-    def exact_scores(cand):
-        return _exact_scores_over(dense, names, cand)
-
-    sizes = {t: dense[t]["docids"].size for t in names}
-    total_postings = sum(sizes.values())
-    pos = {t: 0 for t in names}
-    got_d, got_s, got_m = [], [], []
-    scored = np.empty(0, dtype=np.int64)
-    n_ok, theta, chunk, consumed = 0, -np.inf, 1024, 0
-    while True:
-        heads = [dense[t]["scores"][orders[t][pos[t]]]
-                 for t in names if pos[t] < sizes[t]]
-        if not heads:
-            break
-        T = float(np.sum(heads))
-        if n_ok >= k and theta - T > _TA_SLACK:
-            break
-        if consumed > 0.25 * total_postings:
-            # no separation — finish with the vectorized scatter-merge
-            # over the (already decoded) arrays; θ is a valid lower
-            # bound for its pool extraction, and the merge's complete
-            # exact totals supersede the partial got_* pools
-            if stats is not None:
-                stats["finisher"] = "dense_merge"
-            return _topk_dense_merge(dense, k, msm_req, theta=theta)
-        cands = []
-        for t in names:
-            lo = pos[t]
-            hi = min(lo + chunk, sizes[t])
-            if hi > lo:
-                cands.append(dense[t]["docids"][orders[t][lo:hi]])
-                consumed += hi - lo
-                pos[t] = hi
-        cand = _drop_scored(np.unique(np.concatenate(cands)), scored)
-        chunk = min(chunk * 2, 65536)
-        if cand.size == 0:
-            continue
-        tot, mat = exact_scores(cand)
-        got_d.append(cand)
-        got_s.append(tot)
-        got_m.append(mat)
-        scored = np.union1d(scored, cand)
-        n_ok += int((mat >= msm_req).sum()) if msm_req else cand.size
-        if n_ok >= k:
-            theta = np.partition(_scored_pool(got_s, got_m, msm_req), -k)[-k]
-
-    return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
 #: candidate-flood threshold that flips the prefix-TA sweep into the
@@ -996,17 +898,11 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
                         store: dict, stats: dict | None = None,
                         n_base: int = 0, blocks_total: int | None = None):
     """Flat-bound-regime finisher over an index with impact-ordered
-    prefixes (index.IndexParams.impact_prefix) — the cold-latency
-    scale path.
-
-    The dense→TA bailout used to decode EVERY block of every query
-    term before running the impact-ordered TA (O(df) cold cost —
-    linear in head-term df, the round-3 VERDICT's one genuine
-    100×-scale latency risk). This variant runs the same TA/NRA sweep
-    (Fagin et al., "Optimal aggregation algorithms for middleware",
-    PODS'01) directly over build-time impact-ordered prefix chunks —
-    Lucene's impact-sorted postings analog (public Lucene 8
-    ImpactsEnum design):
+    prefixes (index.IndexParams.impact_prefix): a TA/NRA sweep (Fagin
+    et al., "Optimal aggregation algorithms for middleware", PODS'01)
+    over the build-time impact-ordered prefix chunks — Lucene's
+    impact-sorted postings analog (public Lucene 8 ImpactsEnum design)
+    — so a cold flat-bound query costs O(prefix), not O(df):
 
     * candidate units per term = its prefix chunks (top-P postings of
       each long (term, shard) list, score-descending across chunks)
@@ -1025,13 +921,15 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
       prefix-exhausted shard is the min score of its deepest chunk
       (every posting beyond the prefix scores ≤ the P-th impact by
       construction) — tightened from that chunk's ub once it decodes;
-    * stop when the k-th best exact score beats T by _TA_SLACK (the
-      same round(·,9) rank-identity argument as _topk_impact_ordered).
+    * stop when the k-th best exact score beats T by _TA_SLACK: an
+      unseen doc is dropped only when round(θ, 9) > round(T, 9), so
+      the answer is rank-identical to brute.
 
     Cold cost: O(prefix-chunks touched + candidates·|Q|) decoded
     blocks, independent of head-term df. Degenerate corpora whose
-    prefixes never separate (uniform scores) fall back to
-    decode-everything ONCE — exactly today's behavior, documented.
+    prefixes never separate (uniform scores), and ≥3-term sweeps that
+    flood (``_DENSE_MERGE_*``), flip to ``_topk_dense_merge`` — one
+    decode of everything.
     """
     zero = (np.empty(0, dtype=np.int64), np.empty(0))
     terms = sorted(tb)
@@ -1272,7 +1170,6 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
     got_d, got_s, got_m = [], [], []
     scored = np.empty(0, dtype=np.int64)
     n_ok, theta, batch = 0, -np.inf, 8
-    fellback = False
     # θ = max over two RUNNING k-best pools of per-doc lower bounds:
     # exact totals of probed docs, and PARTIAL sums (found-term
     # contributions) of candidates — actual ≥ partial, each doc
@@ -1392,7 +1289,6 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
             # uniform corpus) — finish with the vectorized exhaustive
             # merge (decode-all is unavoidable here; the merge replaces
             # the old decode-then-re-probe loop)
-            fellback = True
             return _dense_merge_finish()
         batch = min(batch * 2, 4096)
         if not cands:
@@ -1496,34 +1392,9 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
         stats["blocks_decoded"] = n_reg
         if blocks_total is not None:
             stats["blocks_total"] = blocks_total
-        stats["dense_bailout"] = fellback
+        stats["dense_bailout"] = False
 
     return _pools_topk(got_d, got_s, got_m, k, msm_req)
-
-
-def _exact_scores_over(sources: dict, names, cand: np.ndarray):
-    """Σ per-list contributions + MSM groups hit (`_group_of`) for
-    sorted-unique ``cand``.
-
-    THE exact-scoring probe every kernel path shares; ``names`` fixes
-    the accumulation order (the determinism rule — float addition is
-    not associative, and the pinned oracle sums in sorted-term order).
-    """
-    total = np.zeros(cand.size)
-    hits: dict = {}
-    for t in names:
-        td = sources[t]
-        pos = np.searchsorted(td["docids"], cand)
-        pos_c = np.minimum(pos, td["docids"].size - 1)
-        hit = td["docids"][pos_c] == cand
-        total += np.where(hit, td["scores"][pos_c], 0.0)
-        g = _group_of(t, td)
-        if g is not None:
-            hits[g] = hits[g] | hit if g in hits else hit
-    matched = np.zeros(cand.size, dtype=np.int32)
-    for hit in hits.values():
-        matched += hit
-    return total, matched
 
 
 def _drop_scored(cand: np.ndarray, scored: np.ndarray) -> np.ndarray:
@@ -1537,16 +1408,29 @@ def _drop_scored(cand: np.ndarray, scored: np.ndarray) -> np.ndarray:
 
 def _topk_brute(terms: dict, k: int, msm_req: int):
     """Exhaustive top-k over fully decoded term arrays ({docids,
-    scores} per term, plus any MSM marks): every candidate is scored
-    exactly in sorted-term order, probe-only lists last — the oracle
-    every pruning finisher must match."""
+    scores} per term, plus any MSM marks): every candidate gets its
+    exact Σ per-list contributions and the MSM groups it hits
+    (`_group_of`) — the oracle every pruning finisher must match.
+    Lists are summed in sorted-term order, probe-only lists last (the
+    determinism rule: float addition is not associative)."""
     names = sorted(t for t in terms if not terms[t].get("probe_only"))
     if not names:
         return np.empty(0, dtype=np.int64), np.empty(0)
     cand = np.unique(np.concatenate([terms[t]["docids"] for t in names]))
     names += sorted(t for t in terms if terms[t].get("probe_only"))
-    total, matched = _exact_scores_over(terms, names, cand)
+    total = np.zeros(cand.size)
+    hits: dict = {}
+    for t in names:
+        td = terms[t]
+        pos = np.minimum(np.searchsorted(td["docids"], cand),
+                         td["docids"].size - 1)
+        hit = td["docids"][pos] == cand
+        total += np.where(hit, td["scores"][pos], 0.0)
+        g = _group_of(t, td)
+        if g is not None:
+            hits[g] = hits[g] | hit if g in hits else hit
     if msm_req:
+        matched = sum(hits.values(), np.zeros(cand.size, dtype=np.int32))
         ok = matched >= msm_req
         cand, total = cand[ok], total[ok]
     return _pinned_topk(cand, total, k)
@@ -1594,14 +1478,16 @@ def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
     that every finisher reads.
 
     The finisher is chosen once, up front, from what the input shows:
-    brute (decode every block, memoized on the tb entries as
-    ``dense``, and score exhaustively with ``_topk_brute``) when the
-    lists hold at most ``len(tb) × _LAZY_FLOOR`` postings, else the
-    lazy block-max kernel (decoded blocks land in ``store`` when
-    given), which may still hand off mid-sweep. Without ``use_wand``
-    it is always brute — the oracle. ``stats`` gets ``finisher`` (the
-    path that produced the answer) and ``reason`` (the two figures the
-    choice compared)."""
+    brute (``_topk_brute_exit``) when the lists hold at most
+    ``len(tb) × _LAZY_FLOOR`` postings, else the lazy block-max kernel
+    (decoded blocks land in ``store`` when given), which may still
+    hand off (``stats["handoff"]`` says why). Without ``use_wand`` it
+    is always brute — the oracle. ``stats`` gets ``reason`` (the two
+    figures the choice compared) and ``finisher``, the path that
+    produced the answer: ``brute``, ``lazy`` (the sweep ran to the
+    end), ``prefix_ta`` (the sweep handed off to
+    ``_topk_impact_prefix``) or ``dense_merge`` (that TA flipped to
+    ``_topk_dense_merge``)."""
     postings = sum(int(m["nd"].sum()) for m in tb.values())
     lazy_floor = len(tb) * _LAZY_FLOOR
     if stats is not None:
@@ -1609,9 +1495,19 @@ def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
     if use_wand and postings > lazy_floor:
         return _topk_blockmax_lazy(tb, k, msm_req, k1, b, avgdl,
                                    stats=stats, store=store)
-    if stats is not None:   # a resident ``dense`` memo decodes nothing
-        stats.update(blocks_decoded=sum(m["ub"].size for m in tb.values()
-                                        if m.get("dense") is None),
+    return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats)
+
+
+def _topk_brute_exit(tb: dict, k: int, msm_req: int, k1: float, b: float,
+                     avgdl: float, stats: dict | None, n_base: int = 0):
+    """The brute finisher over raw block tables: decode every block
+    (memoized on the tb entries as ``dense``) and score exhaustively
+    with ``_topk_brute``. ``blocks_decoded`` counts the blocks without
+    a resident ``dense`` memo plus ``n_base``, the blocks a lazy sweep
+    decoded before handing off here."""
+    if stats is not None:
+        cold = sum(m["ub"].size for m in tb.values() if m.get("dense") is None)
+        stats.update(blocks_decoded=n_base + cold,
                      blocks_total=sum(m["ub"].size for m in tb.values()),
                      dense_bailout=True, finisher="brute")
     return _topk_brute(_dense_arrays_from_tb(tb, k1, b, avgdl), k, msm_req)

@@ -1,6 +1,7 @@
 """Top-k kernels: lazy block-max rank identity vs brute, decode
-skipping, the dense-merge finisher, the up-front brute-or-lazy choice
-in ``_topk_query``, and k=0 / empty edge inputs.
+skipping, each hand-off of the lazy sweep, the dense-merge finisher,
+the up-front brute-or-lazy choice in ``_topk_query``, and k=0 / empty
+edge inputs.
 
 Pure-numpy tests (one Spark test aside) over synthetic postings built as
 Arrow tables with the posting schema — the same input the Spark
@@ -142,9 +143,11 @@ def test_lazy_kernel_empty_and_degenerate():
 def test_lazy_kernel_flat_bounds_bail_to_dense():
     """Two similar-strength head terms with zipf tfs give θ no
     separation (every block bound ≈ θ): the kernel must detect the
-    flat regime after the first wave, bail to the dense path, and pay
-    ~zero overhead vs brute — the round-2 regression was ~1.3-1.5×
-    (judge microbench: 782/782 decoded AND slower than brute)."""
+    flat regime after the first wave and hand off (``no_separation``)
+    to the brute exit — these tables carry no prefix rows — paying
+    ~zero overhead vs brute. The timed path is lazy sweep → brute
+    against brute alone; the round-2 regression was ~1.3-1.5× (judge
+    microbench: 782/782 decoded AND slower than brute)."""
     import time
     rng = np.random.default_rng(42)
     n_docs = 400_000
@@ -157,21 +160,23 @@ def test_lazy_kernel_flat_bounds_bail_to_dense():
     d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
     assert st.get("dense_bailout"), st
+    assert st["finisher"] == "brute", st
+    ho = st["handoff"]
+    assert ho["why"] == "no_separation", st
+    assert 0 <= ho["skippable"] < 0.25 * ho["remaining"], st
+    assert ho["remaining"] <= st["blocks_total"], st
 
-    def best_of(n, fn):
-        ts = []
-        for _ in range(n):
+    # lazy → brute against brute alone, best of 5 each; the runs
+    # alternate (L, B, L, B, …) so a burst of load hits both sides alike
+    times = {True: [], False: []}
+    for _ in range(5):
+        for wand in (True, False):
             t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        return min(ts)
-
-    t_lazy = best_of(5, lambda: _score_shard_np(tbl, idf, K1, B, AVGDL,
-                                                10, 0, True))
-    t_brute = best_of(5, lambda: _score_shard_np(tbl, idf, K1, B, AVGDL,
-                                                 10, 0, False))
+            _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, wand)
+            times[wand].append(time.perf_counter() - t0)
+    t_lazy, t_brute = min(times[True]), min(times[False])
     # generous margin for shared-VM noise; the regression being guarded
-    # against was ≥1.3×, and the fixed kernel measures ~0.95×
+    # against was ≥1.3×
     assert t_lazy <= 1.25 * t_brute, (t_lazy, t_brute)
 
 
@@ -202,6 +207,7 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
     store, st = {}, {}
     d1, s1 = _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
     assert st.get("dense_bailout"), st
+    assert st["handoff"] == {"why": "flat_bounds"}, st
     assert store == {}, "upfront bailout must precede any lazy decode"
     d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
@@ -213,9 +219,93 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
     tb = _term_block_meta(tbl, idf)
     store, st = {}, {}
     _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
-    assert not st.get("dense_bailout"), st
+    assert not st.get("dense_bailout") and "handoff" not in st, st
     assert st["blocks_decoded"] < st["blocks_total"], st
     assert store  # lazy decodes landed in the persistent store
+
+
+def _spiked_tbl(rng, n_docs, weights, prefix):
+    """Flat block bounds over spread doc scores. Each term is in a doc
+    with probability 0.7 at tf 1-3 and dl 50-199, except one posting
+    per block — on a doc no other term holds where the block has one —
+    at tf 20 and dl 5, the term's top score: every block of a term has
+    the same bound, yet the spikes outscore the rest (so a prefix TA
+    can stop early) and, with a heavy first term, single-term spikes
+    outrank the docs MSM 2 keeps. ``prefix`` > 0 adds each list's top
+    ``prefix`` postings by (score desc, docid) as chunk rows (block_id
+    = -(rank+1), docid-sorted within a chunk), as the build writes
+    them."""
+    bs = codec.BLOCK_SIZE
+    lists = {t: np.flatnonzero(rng.random(n_docs) < 0.7) for t in weights}
+    rows = []
+    for term, w in weights.items():
+        docids = lists[term]
+        tf = rng.integers(1, 4, size=docids.size)
+        dl = rng.integers(50, 200, size=docids.size)
+        alone = ~np.any([np.isin(docids, d) for t, d in lists.items()
+                         if t != term], axis=0)
+        for b0 in range(0, docids.size, bs):
+            j = b0 + int(np.argmax(alone[b0:b0 + bs]))
+            tf[j], dl[j] = 20, 5
+
+        def enc(ix):
+            return codec.encode_blocks(docids[ix], tf[ix], dl[ix], w,
+                                       K1, B, AVGDL)
+
+        rows += [dict(blk, term=term, shard=0)
+                 for blk in enc(np.arange(docids.size))]
+        score = tf / (tf + K1 * (1 - B + B * dl / AVGDL))
+        top = np.lexsort((docids, -score))[:prefix]
+        for c in range(0, top.size, bs):
+            (blk,) = enc(np.sort(top[c:c + bs]))
+            rows.append(dict(blk, term=term, shard=0, block_id=-(c // bs) - 1))
+    return _table(rows)
+
+
+#: (handoff, terms, prefix rows) → the finisher at k ∈ {1, 10} and at
+#: k > matches. Two strictly flat lists hand off before the sweep
+#: whatever k is; three need a θ, which k > matches never sets, so
+#: that sweep runs to its end. A prefix TA that cannot stop early (k >
+#: matches) drains the prefixes and flips to the dense merge.
+GO_DENSE_EXITS = [
+    ("flat_bounds", 2, False, "brute", "brute"),
+    ("flat_bounds", 2, True, "prefix_ta", "dense_merge"),
+    ("no_separation", 3, False, "brute", "lazy"),
+    ("no_separation", 3, True, "prefix_ta", "lazy"),
+]
+
+
+@pytest.mark.parametrize("why,n_terms,prefix,finisher,finisher_all",
+                         GO_DENSE_EXITS)
+def test_go_dense_exits_match_brute(why, n_terms, prefix, finisher,
+                                    finisher_all):
+    """Each lazy-sweep hand-off, with and without prefix rows on the
+    lists, is forced and answers exactly what ``_topk_brute`` answers
+    — docids and float scores — for k = 0, 1, 10 and more than the
+    matches, with and without MSM; ``stats`` names the finisher and
+    why the sweep stopped."""
+    rng = np.random.default_rng(29)
+    n_docs = 8192
+    weights = dict(list({"a": 3.0, "b": 0.3, "c": 0.25}.items())[:n_terms])
+    tbl = _spiked_tbl(rng, n_docs, weights, 512 if prefix else 0)
+    tb = _term_block_meta(tbl, weights)
+    assert all((m.get("iub") is not None) == prefix for m in tb.values())
+    fails = []
+    for msm, k in itertools.product((0, 2), (0, 1, 10, n_docs + 1)):
+        st = {}
+        d1, s1 = _topk_blockmax_lazy(_term_block_meta(tbl, weights), k, msm,
+                                     K1, B, AVGDL, stats=st)
+        d0, s0 = _topk_brute(_dense_arrays_from_tb(
+            _term_block_meta(tbl, weights), K1, B, AVGDL), k, msm)
+        if not (np.array_equal(d1, d0) and np.array_equal(s1, s0)):
+            fails.append((msm, k))
+        want = ("lazy" if k == 0 else finisher if k <= 10 else finisher_all)
+        assert st["finisher"] == want, (msm, k, st)
+        if want == "lazy":
+            assert "handoff" not in st, (msm, k, st)
+        else:
+            assert st["handoff"]["why"] == why, (msm, k, st)
+    assert not fails, fails
 
 
 @pytest.mark.parametrize("offset_k", [(0, 10), (10, 10), (95, 10)])
@@ -241,7 +331,6 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
     tf-norm only). Regression for the bound/weight mismatch: with raw
     bounds the kernel over-retires blocks that still hold top-k
     winners and silently returns wrong results."""
-    from jivesearch_spark.query import _topk_impact_ordered
     rng = np.random.default_rng(7)
     k1, b, avgdl = 1.2, 0.75, 6.0
     n = 120_000
@@ -269,7 +358,7 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
     tb = _term_block_meta(tbl, {"bob": idf * boost})
     for meta in tb.values():
         meta["avgdl"] = avgdl
-    want = _topk_impact_ordered(_dense_arrays_from_tb(tb, k1, b, avgdl), 10, 0)
+    want = _topk_brute(_dense_arrays_from_tb(tb, k1, b, avgdl), 10, 0)
     want = list(zip(want[0].tolist(), np.round(want[1], 6).tolist()))
 
     good, gst = topk(scale_ub=True)
