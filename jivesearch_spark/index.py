@@ -398,22 +398,8 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
             # persist measured vs recompute (round 3, tf now
             # shuffle-free): recompute costs a second tokenize+RLE
             # pass and loses ~15% wall at 4 cores; the persist wins.
-            # JIVESEARCH_TF_PERSIST=0 disables (memory-constrained);
-            # =lc materializes via localCheckpoint instead — raw
-            # Tungsten-row blocks, skipping the columnar-compress cache
-            # build (an allocation-heavy pass that contends across
-            # same-JVM tasks; the stage attribution flagged tf+stats as
-            # the worst-scaling stage). localCheckpoint blocks don't
-            # survive executor loss — on a multi-executor cluster the
-            # resilient choice is the staged-tf parquet path
-            # (bucket_batch < n_buckets), which is also the 100-TB
-            # shape; lc is the single-JVM/local-mode optimum.
-            _tfp = os.environ.get("JIVESEARCH_TF_PERSIST", "1")
-            if _tfp == "lc":
-                tf = tf.localCheckpoint(eager=False)
-            elif _tfp == "1":
-                from pyspark import StorageLevel
-                tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
+            from pyspark import StorageLevel
+            tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
             tf_live = tf
             stats_src = tf
         else:
@@ -633,7 +619,7 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
     # wide binary/text payloads)
     _arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     _arrow_prev = spark.conf.get(_arrow_key, "10000")
-    spark.conf.set(_arrow_key, os.environ.get("JIVESEARCH_ENCODE_ARROW_BATCH", "16384"))
+    spark.conf.set(_arrow_key, "16384")
     # restored in the finally even when an encode batch throws: the
     # override is session-wide and later kernels in the same session
     # carry wide binary/text payloads (the reason the default is small)
@@ -693,13 +679,9 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
             # output bytes parallelism-invariant (determinism gate).
             enc = part.mapInArrow(_encode_stream,
                                   schema=f"{POSTINGS_SCHEMA}, n_docs int")
-            # JIVESEARCH_POSTINGS_COLOCATE=0 restores the shuffle-free
-            # many-files-per-bucket write (A/B attribution knob only —
-            # both halves of a scaling pair inherit the same default)
-            if os.environ.get("JIVESEARCH_POSTINGS_COLOCATE", "1") != "0":
-                enc = (enc.repartition(4 * max(1, len(batch)), "bucket")
-                       .sortWithinPartitions("bucket", "term", "shard",
-                                             "block_id"))
+            enc = (enc.repartition(4 * max(1, len(batch)), "bucket")
+                   .sortWithinPartitions("bucket", "term", "shard",
+                                         "block_id"))
             # "bytes" counts the varint streams (each blk value minus
             # its fixed header)
             out = (enc.observe(obs,

@@ -462,8 +462,8 @@ def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
     (one for a query whose terms came from one read), and scored per
     entry with its own ``w`` and ``avgdl``. Compact decode (minimal
     dtypes) + per-distinct-(tf, dl) score evaluation keep this pass
-    memory-bandwidth-lean — it is the dense-merge finisher's main
-    cost at millions of postings."""
+    memory-bandwidth-lean — it is the brute finisher's main cost at
+    millions of postings."""
     keys = sorted(tb) if keys is None else keys
     todo: dict = {}
     for t in keys:
@@ -773,124 +773,27 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
-#: stop margin of the prefix TA and pool margin of the dense merge: with
-#: θ − T > 2·0.5e-9, round(θ, 9) is STRICTLY greater than round(T, 9), so
-#: no unseen doc can displace a result even on a rounded-score tie +
-#: docid tie-break.
+#: stop margin of the prefix TA and pool margin of brute's span branch:
+#: with θ − T > 2·0.5e-9, round(θ, 9) is STRICTLY greater than
+#: round(T, 9), so no unseen doc can displace a result even on a
+#: rounded-score tie + docid tie-break.
 _TA_SLACK = 2e-9
 
 
-#: candidate-flood threshold that flips the prefix-TA sweep into the
-#: vectorized dense merge: a sweep that has consumed this many
-#: candidates without terminating is in the regime where the NRA bound
-#: cannot separate (≥3 independent dense terms — an unseen doc holding
-#: every term is always possible until the lists exhaust), so finishing
-#: exhaustively-but-vectorized is strictly cheaper than continuing to
+#: candidate-flood threshold that sends the prefix-TA sweep to the
+#: brute exit (``_topk_brute_exit``): a sweep that has consumed this
+#: many candidates without terminating is in the regime where the NRA
+#: bound cannot separate (≥3 independent dense terms — an unseen doc
+#: holding every term is always possible until the lists exhaust), so
+#: one exhaustive bulk pass is strictly cheaper than continuing to
 #: probe per candidate batch.
-_DENSE_MERGE_CANDS = 49152
-#: probe-flood leg of the same detector: flip once random-access
-#: probing has decoded this share of all blocks (plus an absolute
-#: floor so small indexes never flip) — the flood is decode-everything
-#: in disguise, paid with per-round overhead on top
-_DENSE_MERGE_BLOCK_FRAC = 0.2
-_DENSE_MERGE_MIN_BLOCKS = 1500
-
-
-def _topk_dense_merge(dense: dict, k: int, msm_req: int,
-                      theta: float = -np.inf):
-    """Exhaustive vectorized finisher for the all-dense multi-term
-    regime (round-4 verdict ask #1 — the 5-term stress used to decode
-    95% of blocks AND then pay the per-candidate probe machinery over
-    millions of candidates).
-
-    One pass, no per-candidate work: per-term scatter-add of decoded
-    scores into a dense docid-span array (each docid appears at most
-    once per term, so the scatter is exact placement, and the
-    cross-term accumulation runs elementwise in sorted-key order —
-    adding 0.0 for absent terms is an IEEE identity, so totals are
-    float-bit-identical to the brute per-candidate accumulation rule),
-    plus an int scatter for msm counts. Top-k selection partitions on
-    round(score, 9) and resolves the boundary with the pinned
-    (-rounded, docid) lexsort over the ≥-threshold pool only — the
-    same result set as a full-array lexsort. Sparse/re-id'd docid
-    spaces fall back to a (docid, term-position) lexsort + segmented
-    reduceat, which preserves the same per-doc accumulation order.
-
-    Cost: O(total postings) decode (batched varint —
-    codec.decode_blocks_concat) + O(span) scatter + O(n) partition —
-    independent of k's convergence behavior, which is what bounds the
-    cold path when every pruning bound is flat."""
-    zero = (np.empty(0, dtype=np.int64), np.empty(0))
-    names = sorted(dense)
-    parts = [dense[t] for t in names if dense[t]["docids"].size]
-    if not parts or k <= 0:
-        return zero
-    total_np = sum(p["docids"].size for p in parts)
-    lo = min(int(p["docids"].min()) for p in parts)
-    hi = max(int(p["docids"].max()) for p in parts)
-    span = hi - lo + 1
-    if span <= max(4 * total_np, 1 << 22):
-        tot = np.zeros(span)
-        for p in parts:
-            d = p["docids"] if lo == 0 else p["docids"] - lo
-            tot[d] += p["scores"]
-        if msm_req > 1:
-            cnt = np.zeros(span, dtype=np.int32)
-            for p in parts:
-                d = p["docids"] if lo == 0 else p["docids"] - lo
-                cnt[d] += 1
-            tot[cnt < msm_req] = 0.0    # BM25 scores are > 0: 0 ⇔ out
-        # threshold FIRST on the span array (absent docs sit at 0, and
-        # k ≪ matching docs, so the k-th largest is > 0): extracting
-        # only the ≥-threshold pool avoids materializing per-doc
-        # arrays for millions of matches. ``theta`` (the caller's
-        # running k-th-best LOWER bound — ≥ k docs have totals ≥ θ by
-        # construction) skips even the partition pass; otherwise the
-        # k-th largest raw total is found by one np.partition. The
-        # _TA_SLACK margin keeps the pool a superset of every doc
-        # that can still win a rounded-score tie (round(x, 9) of
-        # anything below thr − slack is STRICTLY below the k pool
-        # members' rounded scores). thr at/below the slack (fewer
-        # than k eligible docs) falls back to full extraction.
-        if np.isfinite(theta) and theta > _TA_SLACK:
-            thr = float(theta)
-        else:
-            kq = min(k, span)
-            thr = float(np.partition(tot, span - kq)[span - kq])
-        if thr > _TA_SLACK:
-            live = np.flatnonzero(tot >= thr - _TA_SLACK)
-            if live.size < k:       # θ was above the true k-th: widen
-                kq = min(k, span)
-                thr = float(np.partition(tot, span - kq)[span - kq])
-                live = (np.flatnonzero(tot >= thr - _TA_SLACK)
-                        if thr > _TA_SLACK else np.flatnonzero(tot > 0.0))
-        else:
-            live = np.flatnonzero(tot > 0.0)
-        if live.size == 0:
-            return zero
-        cand = (live + lo).astype(np.int64)
-        total = tot[live]
-    else:
-        # sparse/re-id'd docid space: compact the ids with np.unique,
-        # then run the SAME per-term sequential scatter as the span
-        # branch into the compacted array — np.add.reduceat is NOT
-        # usable here (it sums segments pairwise, which breaks the
-        # strict sorted-term-order float accumulation the rank rule
-        # pins; caught by the dense-merge unit gates)
-        dd = np.concatenate([p["docids"] for p in parts])
-        cand, inv = np.unique(dd, return_inverse=True)
-        total = np.zeros(cand.size)
-        cnt = np.zeros(cand.size, dtype=np.int32)
-        o = 0
-        for p in parts:
-            sl = inv[o:o + p["docids"].size]
-            total[sl] += p["scores"]
-            cnt[sl] += 1
-            o += p["docids"].size
-        if msm_req:
-            m = cnt >= msm_req
-            cand, total = cand[m], total[m]
-    return _pinned_topk(cand, total, k)
+_TA_FLOOD_CANDS = 49152
+#: probe-flood leg of the same detector: go to the brute exit once
+#: random-access probing has decoded this share of all blocks (plus an
+#: absolute floor so small indexes never flip) — the flood is
+#: decode-everything in disguise, paid with per-round overhead on top
+_TA_FLOOD_BLOCK_FRAC = 0.2
+_TA_FLOOD_MIN_BLOCKS = 1500
 
 
 def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
@@ -927,9 +830,10 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
 
     Cold cost: O(prefix-chunks touched + candidates·|Q|) decoded
     blocks, independent of head-term df. Degenerate corpora whose
-    prefixes never separate (uniform scores), and ≥3-term sweeps that
-    flood (``_DENSE_MERGE_*``), flip to ``_topk_dense_merge`` — one
-    decode of everything.
+    prefixes never separate (uniform scores; ``handoff = {"why":
+    "ta_stalled"}``), and ≥3-term sweeps that flood (``_TA_FLOOD_*``;
+    ``{"why": "ta_flood"}``), go to the brute exit
+    (``_topk_brute_exit``) — one decode of everything.
     """
     zero = (np.empty(0, dtype=np.int64), np.empty(0))
     terms = sorted(tb)
@@ -1191,32 +1095,24 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
         if pool.size >= k:
             theta = max(theta, float(pool.min()))
         return pool
-    def _dense_merge_finish():
-        """Flip to the vectorized exhaustive merge: flush the memoized
-        streams (call-exit invariant), bulk-decode everything (batched
-        varint, memoized on tb as ``dense`` — the eviction accounting
-        already charges it), and return the one-pass scatter-sum
-        top-k. Rank-identical to continuing the sweep: the merge
-        computes complete exact totals for every doc, superseding the
-        partial got_* pools."""
+
+    n_chunks = int(sum(tb[t]["iub"].size for t in terms
+                       if tb[t].get("iub") is not None))
+
+    def _brute_finish(why: str):
+        """Hand off to the brute exit: flush the memoized streams
+        (call-exit invariant), then decode and score everything.
+        Rank-identical to continuing the sweep: brute computes complete
+        exact totals for every doc, superseding the partial got_*
+        pools. ``n_reg`` (the blocks decoded so far) is its base."""
         _finalize()
-        dense = _dense_arrays_from_tb(tb, k1, b, avgdl)
         if stats is not None:
-            stats["prefix_ta"] = True
-            stats["prefix_chunks_decoded"] = n_pref
-            stats["prefix_chunks_total"] = int(
-                sum(tb[t]["iub"].size for t in terms
-                    if tb[t].get("iub") is not None))
-            stats["blocks_decoded"] = (blocks_total
-                                       if blocks_total is not None
-                                       else n_reg)
-            if blocks_total is not None:
-                stats["blocks_total"] = blocks_total
-            stats["dense_bailout"] = True
-            stats["dense_merge"] = True
-            stats["finisher"] = "dense_merge"
-            stats["cands_consumed"] = int(scored.size)
-        return _topk_dense_merge(dense, k, msm_req, theta=theta)
+            stats.update(prefix_ta=True, prefix_chunks_decoded=n_pref,
+                         prefix_chunks_total=n_chunks,
+                         cands_consumed=int(scored.size),
+                         handoff={"why": why})
+        return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats,
+                                n_base=n_reg)
 
     while True:
         T = float(np.sum([bound(t) for t in terms]))
@@ -1231,16 +1127,16 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
         # time with per-round overhead on top). Both measured one
         # one-sided way: terminating query shapes on the 6.63M-doc
         # smoke stay under 37k candidates / 12% probe-decoded blocks;
-        # flood shapes blow through both. The exhaustive merge is then
+        # flood shapes blow through both. The brute exit is then
         # strictly cheaper AND bounded: O(total postings), not
         # O(rounds · flood).
         if len(terms) >= 3 and (
-                scored.size > _DENSE_MERGE_CANDS
+                scored.size > _TA_FLOOD_CANDS
                 or (blocks_total is not None
-                    and n_reg - n_base > max(_DENSE_MERGE_MIN_BLOCKS,
+                    and n_reg - n_base > max(_TA_FLOOD_MIN_BLOCKS,
                                              int(blocks_total
-                                                 * _DENSE_MERGE_BLOCK_FRAC)))):
-            return _dense_merge_finish()
+                                                 * _TA_FLOOD_BLOCK_FRAC)))):
+            return _brute_finish("ta_flood")
         cands = []
         progressed = False
         for t in terms:
@@ -1286,10 +1182,9 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
             if T <= 0.0:
                 break
             # prefixes exhausted without separation (degenerate
-            # uniform corpus) — finish with the vectorized exhaustive
-            # merge (decode-all is unavoidable here; the merge replaces
-            # the old decode-then-re-probe loop)
-            return _dense_merge_finish()
+            # uniform corpus): decode-all is unavoidable here, so
+            # finish with the brute exit
+            return _brute_finish("ta_stalled")
         batch = min(batch * 2, 4096)
         if not cands:
             continue
@@ -1386,9 +1281,7 @@ def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
         stats["prefix_ta"] = True
         stats["finisher"] = "prefix_ta"
         stats["prefix_chunks_decoded"] = n_pref
-        stats["prefix_chunks_total"] = int(
-            sum(tb[t]["iub"].size for t in terms
-                if tb[t].get("iub") is not None))
+        stats["prefix_chunks_total"] = n_chunks
         stats["blocks_decoded"] = n_reg
         if blocks_total is not None:
             stats["blocks_total"] = blocks_total
@@ -1412,12 +1305,61 @@ def _topk_brute(terms: dict, k: int, msm_req: int):
     exact Σ per-list contributions and the MSM groups it hits
     (`_group_of`) — the oracle every pruning finisher must match.
     Lists are summed in sorted-term order, probe-only lists last (the
-    determinism rule: float addition is not associative)."""
+    determinism rule: float addition is not associative); a
+    probe-only list adds score only to docs a generating list holds.
+
+    Two accumulations, one answer. When the generating lists' docid
+    span is at most 4 × their postings, every list is scatter-added
+    into a span-sized array: a docid occurs once per list, so the
+    scatter is exact placement, and a doc's totals see the same
+    additions in the same order as below (an absent list adds
+    nothing; adding 0.0 is an IEEE identity), so scores are
+    float-bit-identical. MSM groups are counted the same way, and the
+    k-th largest total is taken on the span array BEFORE candidates
+    are extracted: only docs within ``_TA_SLACK`` of it reach
+    ``_pinned_topk`` (threshold-first selection, *Cache-Efficient
+    Top-k Aggregation*, VLDB'23). A sparser span (rare terms over a
+    large docid range) takes its candidates from ``np.unique`` and
+    looks each list up with ``searchsorted``."""
     names = sorted(t for t in terms if not terms[t].get("probe_only"))
-    if not names:
+    probes = sorted(t for t in terms if terms[t].get("probe_only"))
+    gen = [terms[t]["docids"] for t in names if terms[t]["docids"].size]
+    if not gen or k <= 0:
         return np.empty(0, dtype=np.int64), np.empty(0)
-    cand = np.unique(np.concatenate([terms[t]["docids"] for t in names]))
-    names += sorted(t for t in terms if terms[t].get("probe_only"))
+    lo = min(int(d[0]) for d in gen)
+    span = max(int(d[-1]) for d in gen) - lo + 1
+    if span <= 4 * sum(d.size for d in gen):
+        tot = np.zeros(span)
+        for t in names:
+            tot[terms[t]["docids"] - lo] += terms[t]["scores"]
+        held = tot > 0.0 if probes else None   # BM25 scores are > 0
+        for t in probes:
+            d, s = terms[t]["docids"], terms[t]["scores"]
+            i, j = np.searchsorted(d, (lo, lo + span))
+            d, s = d[i:j] - lo, s[i:j]
+            m = held[d]
+            tot[d[m]] += s[m]
+        if msm_req:
+            groups: dict = {}
+            for t in names:
+                g = _group_of(t, terms[t])
+                if g is not None:
+                    groups.setdefault(g, []).append(terms[t]["docids"])
+            cnt = np.zeros(span, dtype=np.int32)
+            for ds in groups.values():
+                cnt[(ds[0] if len(ds) == 1
+                     else np.unique(np.concatenate(ds))) - lo] += 1
+            tot[cnt < msm_req] = 0.0
+        # the k-th largest total, with a _TA_SLACK margin, bounds every
+        # doc that can still win a rounded-score tie; at or below the
+        # slack (fewer than k eligible docs) every eligible doc is kept
+        kq = min(k, span)
+        thr = float(np.partition(tot, span - kq)[span - kq])
+        live = np.flatnonzero(tot >= thr - _TA_SLACK if thr > _TA_SLACK
+                              else tot > 0.0)
+        return _pinned_topk(live + lo, tot[live], k)
+    cand = np.unique(np.concatenate(gen))
+    names += probes
     total = np.zeros(cand.size)
     hits: dict = {}
     for t in names:
@@ -1484,10 +1426,10 @@ def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
     hand off (``stats["handoff"]`` says why). Without ``use_wand`` it
     is always brute — the oracle. ``stats`` gets ``reason`` (the two
     figures the choice compared) and ``finisher``, the path that
-    produced the answer: ``brute``, ``lazy`` (the sweep ran to the
-    end), ``prefix_ta`` (the sweep handed off to
-    ``_topk_impact_prefix``) or ``dense_merge`` (that TA flipped to
-    ``_topk_dense_merge``)."""
+    produced the answer: ``brute`` (also when the sweep or the prefix
+    TA handed off to the brute exit), ``lazy`` (the sweep ran to the
+    end) or ``prefix_ta`` (the sweep handed off to
+    ``_topk_impact_prefix``, which ran to its stop)."""
     postings = sum(int(m["nd"].sum()) for m in tb.values())
     lazy_floor = len(tb) * _LAZY_FLOOR
     if stats is not None:
@@ -1504,7 +1446,7 @@ def _topk_brute_exit(tb: dict, k: int, msm_req: int, k1: float, b: float,
     (memoized on the tb entries as ``dense``) and score exhaustively
     with ``_topk_brute``. ``blocks_decoded`` counts the blocks without
     a resident ``dense`` memo plus ``n_base``, the blocks a lazy sweep
-    decoded before handing off here."""
+    (and a prefix TA after it) decoded before handing off here."""
     if stats is not None:
         cold = sum(m["ub"].size for m in tb.values() if m.get("dense") is None)
         stats.update(blocks_decoded=n_base + cold,

@@ -70,7 +70,8 @@ def _retain_malloc_arenas():
     M_MMAP_THRESHOLD (128 KB default) is otherwise a fresh mmap that
     is unmapped on free, so each query's bulk arrays re-page-fault at
     this VM's hypervisor-amplified fault rate (~250 MB/s measured —
-    the dense-merge decode spent more time faulting than decoding).
+    a bulk decode of millions of postings spent more time faulting
+    than decoding).
     A serving tier's RSS then sits at its bounded high-water mark
     (the eviction budgets bound peak usage), which is the right
     trade for a latency tier. No-op off glibc."""
@@ -181,24 +182,26 @@ class TermCache:
 #: The cost, paid on every miss, also on traffic that never pages:
 #: `query._pinned_topk` thresholds before it sorts, so on the brute
 #: path a top-30 costs what a top-10 costs. The lazy finishers at
-#: scale: kernel-only `query._topk_query` ms, min of 9 interleaved
-#: runs on a 4-core VM, the 200k-doc corpus of `query._LAZY_FLOOR`;
-#: cold = fresh block tables and store, warm = the same call again:
+#: scale: kernel-only `query._topk_query` ms, min of 27 runs (3
+#: processes × 9 interleaved) on a 4-core VM, the 200k-doc corpus of
+#: `query._LAZY_FLOOR`; cold = fresh block tables and store, warm = the
+#: same call again. The 3-term rows end in brute cold (the prefix TA
+#: floods) and in the prefix TA warm; the 5-term row ends in brute:
 #:
 #:   query (postings)             k=10 cold/warm      k=30 cold/warm
-#:   bob (110k)                   15.43 / 10.86 lazy   3.93 / 2.19 prefix_ta
-#:   dylan (70k)                   7.69 / 5.11 lazy    3.62 / 1.82 prefix_ta
-#:   w1 (193k)                     2.82 / 1.67 lazy    2.89 / 1.73 prefix_ta
-#:   bob dylan (180k)             45.69 / 15.14       36.67 / 12.44 prefix_ta
-#:   guitar live (80k)            22.52 / 5.92        28.33 / 7.19 prefix_ta
-#:   w1 w2 (355k)                 17.52 / 5.62        22.40 / 6.72 prefix_ta
-#:   bob dylan guitar (230k)      71.94 / 39.39       64.46 / 69.27 dense_merge
-#:   dylan w3 w7 (267k)           60.54 / 67.16       59.03 / 85.97 dense_merge
-#:   5 head terms (276k)          88.38 / 176.73      95.38 / 167.56 dense_merge
-#:   sum of the nine             332.5 / 327.6       316.7 / 354.9
+#:   bob (110k)                   12.76 / 9.45 lazy    2.99 / 1.45 prefix_ta
+#:   dylan (70k)                   5.89 / 4.03 lazy    2.26 / 1.15 prefix_ta
+#:   w1 (193k)                     1.70 / 1.02 lazy    1.67 / 1.05 prefix_ta
+#:   bob dylan (180k)             29.70 / 8.61        29.07 / 8.13 prefix_ta
+#:   guitar live (80k)            20.68 / 5.45        25.39 / 6.55 prefix_ta
+#:   w1 w2 (355k)                 10.80 / 3.98        15.00 / 4.57 prefix_ta
+#:   bob dylan guitar (230k)      64.81 / 34.34       62.63 / 66.06
+#:   dylan w3 w7 (268k)           51.80 / 56.11       51.27 / 77.12
+#:   5 head terms (276k)          72.37 / 161.79      71.89 / 157.06 brute
+#:   sum of the nine             270.5 / 284.8       262.2 / 323.1
 #:
-#: so a top-30 miss costs 0.25× (one head term) to 1.76× (a warm
-#: 3-term dense merge) a top-10 one, 0.95× cold and 1.08× warm summed.
+#: so a top-30 miss costs 0.23× (one head term) to 1.92× (a warm
+#: 3-term prefix TA) a top-10 one, 0.97× cold and 1.13× warm summed.
 PREFETCH_PAGES = 3
 
 

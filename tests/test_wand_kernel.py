@@ -1,7 +1,7 @@
 """Top-k kernels: lazy block-max rank identity vs brute, decode
-skipping, each hand-off of the lazy sweep, the dense-merge finisher,
-the up-front brute-or-lazy choice in ``_topk_query``, and k=0 / empty
-edge inputs.
+skipping, each hand-off of the lazy sweep and of the prefix TA, both
+accumulations of the brute finisher, the up-front brute-or-lazy choice
+in ``_topk_query``, and k=0 / empty edge inputs.
 
 Pure-numpy tests (one Spark test aside) over synthetic postings built as
 Arrow tables with the posting schema — the same input the Spark
@@ -266,10 +266,11 @@ def _spiked_tbl(rng, n_docs, weights, prefix):
 #: k > matches. Two strictly flat lists hand off before the sweep
 #: whatever k is; three need a θ, which k > matches never sets, so
 #: that sweep runs to its end. A prefix TA that cannot stop early (k >
-#: matches) drains the prefixes and flips to the dense merge.
+#: matches) drains the prefixes and goes to the brute exit
+#: (``handoff = {"why": "ta_stalled"}``).
 GO_DENSE_EXITS = [
     ("flat_bounds", 2, False, "brute", "brute"),
-    ("flat_bounds", 2, True, "prefix_ta", "dense_merge"),
+    ("flat_bounds", 2, True, "prefix_ta", "brute"),
     ("no_separation", 3, False, "brute", "lazy"),
     ("no_separation", 3, True, "prefix_ta", "lazy"),
 ]
@@ -304,7 +305,12 @@ def test_go_dense_exits_match_brute(why, n_terms, prefix, finisher,
         if want == "lazy":
             assert "handoff" not in st, (msm, k, st)
         else:
-            assert st["handoff"]["why"] == why, (msm, k, st)
+            # a prefix TA that reaches brute says so in place of the
+            # sweep's reason
+            ta_exit = prefix and want == "brute"
+            assert st["handoff"]["why"] == ("ta_stalled" if ta_exit
+                                            else why), (msm, k, st)
+            assert st.get("prefix_ta", False) == prefix, (msm, k, st)
     assert not fails, fails
 
 
@@ -372,24 +378,49 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
     assert bad != want
 
 
+def test_prefix_ta_flood_exit_matches_brute(monkeypatch):
+    """The prefix TA's flood detector, forced by a low
+    ``_TA_FLOOD_CANDS`` on a 3-term table with prefix rows: the sweep
+    hands off to the TA, which goes to the brute exit after its first
+    round of candidates and answers exactly what ``_topk_brute``
+    answers — docids and float scores — with ``stats`` naming brute,
+    the flood, and the prefix chunks the TA decoded first."""
+    from jivesearch_spark import query
+    monkeypatch.setattr(query, "_TA_FLOOD_CANDS", 8)
+    rng = np.random.default_rng(29)
+    weights = {"a": 3.0, "b": 0.3, "c": 0.25}
+    tbl = _spiked_tbl(rng, 8192, weights, 512)
+    for msm, k in itertools.product((0, 2), (1, 10)):
+        st = {}
+        d1, s1 = _topk_blockmax_lazy(_term_block_meta(tbl, weights), k, msm,
+                                     K1, B, AVGDL, stats=st)
+        d0, s0 = _topk_brute(_dense_arrays_from_tb(
+            _term_block_meta(tbl, weights), K1, B, AVGDL), k, msm)
+        assert np.array_equal(d1, d0) and np.array_equal(s1, s0), (msm, k)
+        assert st["finisher"] == "brute", (msm, k, st)
+        assert st["handoff"] == {"why": "ta_flood"}, (msm, k, st)
+        assert st["prefix_ta"] and st["prefix_chunks_decoded"] > 0, st
+
+
 # ---------------------------------------------------------------------------
-# dense-merge finisher (round-5): rank identity in every branch
+# the brute finisher: span scatter and np.unique accumulations
 # ---------------------------------------------------------------------------
 
 def _dense_from_lists(lists):
-    """{term: (docids, scores)} → the _topk_dense_merge input shape."""
+    """{term: (docids, scores)} → the _topk_brute input shape."""
     return {t: {"docids": np.asarray(d, dtype=np.int64),
                 "scores": np.asarray(s, dtype=np.float64)}
             for t, (d, s) in lists.items()}
 
 
 def _merge_cases(rng, n_docs, id_stride):
-    """Random multi-term posting sets; ``id_stride`` > 1 spreads the
-    docid space so span ≫ postings — forcing the sparse
-    sort-merge branch instead of the dense scatter."""
+    """Random 5-list posting sets of 150-399 postings each over
+    ``n_docs`` docs, so the span is at most 4 × the postings at
+    ``id_stride`` 1; a large stride spreads the docid space so the
+    span is far wider than the postings."""
     lists = {}
     for ti in range(5):
-        n = int(rng.integers(1, 400))
+        n = int(rng.integers(150, 400))
         d = id_stride * np.sort(rng.choice(np.arange(n_docs), size=n,
                                            replace=False))
         s = rng.uniform(0.01, 3.0, size=n)
@@ -397,61 +428,75 @@ def _merge_cases(rng, n_docs, id_stride):
     return lists
 
 
+def _reference_ranking(lists: dict, msm: int) -> list:
+    """Independent per-doc oracle in plain Python: every doc a
+    generating list holds gets Σ of its scores in sorted-key order,
+    probe-only keys last, and the MSM groups it hits (``group`` mark,
+    else the key; None and probe-only keys count for none), ranked by
+    the pinned (-round(score, 9), docid) rule."""
+    gen = sorted(t for t in lists if not lists[t].get("probe_only"))
+    order = gen + sorted(t for t in lists if lists[t].get("probe_only"))
+    maps = {t: dict(zip(lists[t]["docids"].tolist(),
+                        lists[t]["scores"].tolist())) for t in order}
+    rows = []
+    for doc in {d for t in gen for d in maps[t]}:
+        total, groups = 0.0, set()
+        for t in order:
+            if doc in maps[t]:
+                total += maps[t][doc]
+                if not lists[t].get("probe_only"):
+                    groups.add(lists[t].get("group", t))
+        groups.discard(None)
+        if len(groups) >= msm:
+            rows.append((-float(np.round(total, 9)), doc, total))
+    return [(d, s) for _, d, s in sorted(rows)]
+
+
 @pytest.mark.parametrize("id_stride", [1, 10**9])
 @pytest.mark.parametrize("msm", [0, 3])
 def test_dense_merge_matches_brute(id_stride, msm):
-    """_topk_dense_merge ≡ _topk_brute on both branches (dense
-    scatter for small spans, (docid, term)-lexsort + reduceat for
-    sparse/re-id'd spaces), with and without minimum-should-match."""
-    from jivesearch_spark.query import _topk_dense_merge
+    """``_topk_brute`` ≡ a pure-Python per-doc sum, docids and float
+    bits, on both accumulations: ``id_stride`` 1 puts the docid span
+    within 4 × the postings (the span scatter), 10**9 far outside it
+    (``np.unique`` + ``searchsorted``). Each case runs without marks
+    and with fielded-style marks (two keys of one MSM group, a key of
+    no group, a probe-only key), for k = 0, 1, 10 and more than the
+    matches."""
     rng = np.random.default_rng(11)
-    for trial in range(10):
+    for trial, marks in itertools.product(range(10), (False, True)):
         dense = _dense_from_lists(_merge_cases(rng, 3000, id_stride))
-        got = _topk_dense_merge(dense, 10, msm)
-        want = _topk_brute(dense, 10, msm)
-        assert got[0].tolist() == want[0].tolist(), trial
-        assert all(float(a) == float(b)
-                   for a, b in zip(got[1], want[1])), trial
-
-
-def test_dense_merge_theta_bound_exact():
-    """theta (a valid k-th-best lower bound) must not change the
-    result — including a too-tight theta, which the widen guard
-    recovers from, and the rounded-tie slack at the pool boundary."""
-    from jivesearch_spark.query import _topk_dense_merge
-    rng = np.random.default_rng(12)
-    dense = _dense_from_lists(_merge_cases(rng, 3000, 1))
-    want = _topk_brute(dense, 10, 0)
-    kth = float(np.min(want[1]))
-    for theta in (-np.inf, 0.0, kth / 2, kth, kth - 1e-10):
-        got = _topk_dense_merge(dense, 10, 0, theta=theta)
-        assert got[0].tolist() == want[0].tolist(), theta
-        assert all(float(a) == float(b)
-                   for a, b in zip(got[1], want[1])), theta
-    # a theta ABOVE the true k-th (never produced by the sweep, but
-    # the widen guard makes even that safe)
-    got = _topk_dense_merge(dense, 10, 0, theta=kth * 1.5)
-    assert got[0].tolist() == want[0].tolist()
+        gen = [d["docids"] for d in dense.values()]
+        span = max(int(d[-1]) for d in gen) - min(int(d[0]) for d in gen)
+        assert (span < 4 * sum(d.size for d in gen)) == (id_stride == 1)
+        if marks:
+            dense["t0"]["group"] = dense["t1"]["group"] = "g"
+            dense["t2"]["group"] = None
+            dense["t4"]["probe_only"] = True
+        want = _reference_ranking(dense, msm)
+        for k in (0, 1, 10, len(want) + 5):
+            d, s = _topk_brute(dense, k, msm)
+            assert d.tolist() == [x for x, _ in want[:k]], (trial, marks, k)
+            assert (s.view(np.int64).tolist()
+                    == np.array([x for _, x in want[:k]]).view(
+                        np.int64).tolist()), (trial, marks, k)
 
 
 def test_dense_merge_fewer_than_k_and_empty():
-    from jivesearch_spark.query import _topk_dense_merge
     # fewer eligible docs than k
     dense = _dense_from_lists({"a": ([5, 9], [1.0, 2.0]),
                                "b": ([9], [0.5])})
-    d, s = _topk_dense_merge(dense, 10, 0)
+    d, s = _topk_brute(dense, 10, 0)
     assert d.tolist() == [9, 5] and np.allclose(s, [2.5, 1.0])
     # msm excludes everything
-    d, s = _topk_dense_merge(dense, 10, 2)
+    d, s = _topk_brute(dense, 10, 2)
     assert d.tolist() == [9]
-    d, s = _topk_dense_merge({}, 10, 0)
+    d, s = _topk_brute({}, 10, 0)
     assert d.size == 0
 
 
 def test_k_zero_is_empty():
     """k=0 answers empty on every path instead of raising from the
     top-k selection (np.partition with an out-of-bounds kth)."""
-    from jivesearch_spark.query import _topk_dense_merge
     rng = np.random.default_rng(21)
     spec = {"x": 900, "y": 400, "z": 60}
     idf = {t: float(bm25.idf(5000, d)) for t, d in spec.items()}
@@ -464,9 +509,8 @@ def test_k_zero_is_empty():
         d, s = _lazy(tbl, idf, 0, msm)
         assert d.size == 0 and s.size == 0, msm
     dense = _dense_from_lists({"a": (np.arange(20), np.linspace(1, 2, 20))})
-    for fn in (_topk_brute, _topk_dense_merge):
-        d, s = fn(dense, 0, 0)
-        assert d.size == 0 and s.size == 0, fn
+    d, s = _topk_brute(dense, 0, 0)
+    assert d.size == 0 and s.size == 0
 
 
 #: (list sizes, finisher) straddling the up-front choice: brute while
