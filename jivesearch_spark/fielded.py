@@ -31,7 +31,8 @@ the tld key is ``probe_only``: it adds score but never generates
 candidates, like the reference's non-qualifying regional clause).
 - ``bm25_fielded_indexed`` — one Spark job: pruned per-field scans
   union'd with a field tag, one brute kernel per shard decoding each
-  (field, term) once, idf from the global df (`FieldedReader.stats_for`).
+  (field, term) once, idf from the global df (`FieldedReader.stats_for`:
+  a driver-side `index.TermFiles` read of each field's term_stats).
 - ``FieldedLocalIndex.topk`` — the serving-tier flavor (open-once
   `index.TermFiles` pruned reads, no Spark job): the same up-front
   brute-or-lazy choice as `serve.LocalIndex`, df taken from the
@@ -144,8 +145,7 @@ class FieldedReader:
         self.fields = {f["name"]: f for f in self.meta["fields"]}
         self.man: dict[str, Manifest] = {}
         self.postings: dict[str, DataFrame] = {}
-        self.stats: dict[str, DataFrame] = {}
-        from .index import POSTINGS_SCHEMA, TERM_STATS_SCHEMA
+        from .index import POSTINGS_SCHEMA
         for name in list(self.fields) + [TLD_FIELD]:
             d = os.path.join(root, "fields", name)
             self.man[name] = Manifest.load(d)
@@ -157,9 +157,10 @@ class FieldedReader:
             self.postings[name] = (spark.read.schema(POSTINGS_SCHEMA).parquet(p)
                                    if os.path.isdir(p)
                                    else spark.createDataFrame([], POSTINGS_SCHEMA))
-            self.stats[name] = spark.read.schema(
-                TERM_STATS_SCHEMA).parquet(f"{d}/term_stats")
         self.n_buckets = self.man[TLD_FIELD].params["n_buckets"]
+        #: per-field term_stats, read on the driver (no Spark job)
+        self.stats = {n: TermFiles(os.path.join(root, "fields", n, "term_stats"),
+                                   self.n_buckets) for n in self.man}
         self.doc_meta = spark.read.parquet(f"{root}/doc_meta")
         self._df_cache: dict[tuple[str, str], int] = {}
         ensure_shipped(spark)
@@ -167,11 +168,8 @@ class FieldedReader:
     def stats_for(self, field: str, terms: list[str]) -> dict[str, int]:
         missing = [t for t in terms if (field, t) not in self._df_cache]
         if missing:
-            bks = sorted({term_bucket(t, self.n_buckets) for t in missing})
-            rows = (self.stats[field]
-                    .where(F.col("bucket").isin(bks) & F.col("term").isin(missing))
-                    .select("term", "df").collect())
-            found = {r["term"]: r["df"] for r in rows}
+            tbl = self.stats[field].read(missing, ["term", "df"])
+            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
             for t in missing:
                 self._df_cache[(field, t)] = int(found.get(t, 0))
         return {t: self._df_cache[(field, t)] for t in terms
@@ -360,11 +358,15 @@ class FieldedLocalIndex:
         The result-cache key is the query's `_analyze` sets plus every
         kernel option but k and offset, with the MSM requirement as
         the kernel reads it: pages inside a cached prefix are slices
-        of one entry (`serve.ResultCache`)."""
+        of one entry (`serve.ResultCache`). A requirement of 1 keys as
+        0, as in `serve.LocalIndex.topk_batch`: it arises only for a
+        one-term query, whose candidates all hold that term (its only
+        shingle key, a repeated word, matches only docs whose field
+        holds the unigram; the tld key generates none)."""
         k, offset = max(0, k), max(0, offset)
         analyzed = _analyze(query)
         req = bm25.msm_required(len(analyzed[0])) if min_should_match else 0
-        key = (analyzed, shingles, tld_boost, req, use_wand)
+        key = (analyzed, shingles, tld_boost, req if req > 1 else 0, use_wand)
         hit = self.results.get(key, k, offset)
         if hit is not None:
             self.last_stats = {"result_cache_hit": True}

@@ -22,10 +22,13 @@ Architecture (the 10^12-doc design point, tested at small scale):
   parallelism — the determinism gate (FIXTURES.md §4).
 - **Resumable two-stage build** (the reference's staged-publish
   pattern, postgresql.go:320-369, re-expressed as snapshot commits):
-  stage 1 materializes tf + term_stats + doc tables and commits a
-  manifest; stage 2 encodes postings bucket-batch by bucket-batch,
-  committing per-batch lineage + row/byte/term metrics to the
-  manifest. A killed build rerun with resume=True skips every
+  stage 1 stages the url + text columns, materializes term_stats and
+  commits a manifest (with its step seconds); stage 2 encodes the
+  postings and commits lineage + row/byte/term metrics to the
+  manifest. By default stage 2 is one encode job over tf persisted in
+  the session; with bucket_batch < n_buckets tf is staged to parquet
+  and encoded bucket-batch by bucket-batch, each batch committed on
+  its own. A killed build rerun with resume=True skips every
   committed batch (idempotent: batches write to their own dirs).
 
 Everything relational is DataFrame built-ins (codegen); the only
@@ -68,7 +71,12 @@ _ARROW_TYPES = {n: {"int": "int32", "long": "int64"}.get(t, t) for n, t in (
 class IndexParams:
     docs_per_shard: int = 1 << 20      # postings group bound (skew cap)
     n_buckets: int = 16                # term-hash parquet partitions
-    bucket_batch: int = 8              # buckets committed per stage-2 job
+    #: buckets committed per stage-2 encode job; 0 (the default)
+    #: resolves to n_buckets, so stage 2 is ONE job over tf persisted
+    #: in the session. Below n_buckets, tf is staged to parquet and
+    #: each batch commits to the manifest on its own (resume
+    #: granularity for very large builds).
+    bucket_batch: int = 0
     k1: float = 1.2
     b: float = 0.75
     block_size: int = codec.BLOCK_SIZE
@@ -106,6 +114,8 @@ class IndexParams:
     row_group_bytes: int = 1 << 20
 
     def __post_init__(self):
+        if not self.bucket_batch:
+            self.bucket_batch = self.n_buckets
         if not self.analyzer_profile:
             from . import analyze_lang
             self.analyzer_profile = analyze_lang.LANG_PROFILE
@@ -118,6 +128,9 @@ class Manifest:
     avgdl: float = 0.0
     n_shards: int = 0
     stage1_done: bool = False
+    #: stage-1 step -> seconds, recorded at its commit: staging_write,
+    #: offsets, tf_stats (a pre-id'd build: tf_stats, count)
+    stage1_steps: dict = field(default_factory=dict)
     completed_batches: dict = field(default_factory=dict)  # batch_key -> metrics
     done: bool = False
 
@@ -349,25 +362,36 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
     # corpus stats ride on the staging offsets (n_docs) and an
     # .observe(sum(cf)) on the stats write (Σcf ≡ Σdl) instead of
     # separate agg jobs, and doc_meta — needed only by readers, not by
-    # the encode — is written CONCURRENTLY with stage 2.
-    tf_live = None  # in-session persisted tf (single-batch fast path)
+    # the encode — is written CONCURRENTLY with stage 2. Each step's
+    # seconds land in the manifest's ``stage1_steps`` at the commit.
+    tf_live = None  # in-session persisted tf (one-job stage 2)
     if not man.stage1_done:
-        t0 = time.time()
+        t0 = t_step = time.time()
+
+        def step(name):
+            nonlocal t_step
+            now = time.time()
+            man.stage1_steps[name] = round(now - t_step, 2)
+            t_step = now
+            log(f"[index] stage1: {name.replace('_', ' ')} +{now - t0:.1f}s")
+
         n_all = None
         if id_col not in docs.columns:
-            # persist the upstream (extraction is expensive) for the
-            # duration of the staging write: repartitionByRange runs a
-            # boundary-sampling job over the full input BEFORE the
-            # shuffle write — without the cache that executes the
-            # extractor twice.
-            raw = docs.persist()
+            # stage only what the index reads after this point: the tf
+            # pass reads the text (or pre-tokenized) column and
+            # doc_meta the url. Persist the upstream (extraction is
+            # expensive) for the duration of the staging write:
+            # repartitionByRange runs a boundary-sampling job over the
+            # full input BEFORE the shuffle write — without the cache
+            # that executes the extractor twice.
+            raw = docs.select(url_col, toks_col or text_col).persist()
             staging = stage_docs_for_ids(
                 raw, key=url_col,
                 staging_dir=os.path.join(out_dir, "docid_staging"))
             raw.unpersist()  # everything reads the staged parquet now
-            log(f"[index] stage1: staging write +{time.time()-t0:.1f}s")
+            step("staging_write")
             off_df, n_all = _staged_offsets(spark, staging, url_col)
-            log(f"[index] stage1: offsets +{time.time()-t0:.1f}s")
+            step("offsets")
             docs = _enumerate_with_offsets(
                 spark.read.parquet(staging), off_df, url_col)
             id_col = "docid"
@@ -384,17 +408,14 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
 
         from pyspark.sql import Observation
         obs = Observation("corpus_stats")
-        single_batch = params.bucket_batch >= params.n_buckets
-        if single_batch:
-            # fast path: the whole stage-2 runs as ONE batch, so the tf
-            # table never needs to be materialized to parquet —
-            # term_stats is the only checkpoint (saves a full
-            # write+read of the largest intermediate; crucial when disk
-            # IO, not CPU, is the scaling bottleneck). tf is persisted
-            # (memory, spill-to-disk) so the explode+groupBy shuffle
-            # runs ONCE for stats + encode instead of twice; resume
-            # granularity = stage boundary (on resume tf is rebuilt
-            # from the docid staging).
+        if params.bucket_batch >= params.n_buckets:
+            # the default: stage 2 is ONE encode job, so the tf table
+            # is never written to parquet — term_stats is the only
+            # checkpoint (saves a full write+read of the largest
+            # intermediate). tf is persisted (memory, spill-to-disk)
+            # so its tokenize + run-length pass runs ONCE for stats,
+            # encode and doc_meta; resume granularity = stage boundary
+            # (on resume tf is rebuilt from the docid staging).
             # persist measured vs recompute (round 3, tf now
             # shuffle-free): recompute costs a second tokenize+RLE
             # pass and loses ~15% wall at 4 cores; the persist wins.
@@ -403,8 +424,11 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
             tf_live = tf
             stats_src = tf
         else:
-            # co-locate each bucket before the partitioned write: one
-            # file per bucket per batch instead of (tasks × buckets)
+            # per-batch commits (bucket_batch < n_buckets): each encode
+            # job re-reads its buckets of the staged tf, and a resume
+            # skips the committed batches. Co-locate each bucket before
+            # the partitioned write: one file per bucket instead of
+            # (tasks × buckets)
             tf.repartition(params.n_buckets, "bucket") \
                 .write.mode("overwrite").partitionBy("bucket").parquet(tf_path)
             stats_src = spark.read.parquet(tf_path)
@@ -425,12 +449,13 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
          .option("parquet.block.size", str(params.row_group_bytes))
          .parquet(stats_path))
         sum_dl = float(obs.get["sum_dl"] or 0)
-        log(f"[index] stage1: tf+stats +{time.time()-t0:.1f}s")
+        step("tf_stats")
 
         if n_all is None:
             # pre-id'd path: no staging offsets to read the size from —
             # count the docs frame (cached above; cheap single agg)
             n_all = docs.count()
+            step("count")
         man.n_docs = n_all
         man.avgdl = (sum_dl / n_all) if n_all else 0.0
         man.n_shards = max(1, -(-n_all // params.docs_per_shard))
@@ -563,9 +588,9 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
     elif os.path.exists(tf_path):
         tf_source = spark.read.parquet(tf_path)
     else:
-        # fast path (no staged tf): derive tf live from the docs — from
-        # the in-session persisted frame, or reconstructed
-        # deterministically from the docid staging on resume.
+        # a resumed one-job build (no staged tf): rebuild tf from the
+        # docs — the caller's pre-id'd frame, or the docid staging
+        # enumerated above (deterministic, so the ids are the same).
         tf_source = _tf_table(docs, id_col, text_col, toks_col).withColumn(
             "bucket", F.pmod(F.hash("term"), F.lit(params.n_buckets)))
 

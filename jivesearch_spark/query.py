@@ -2,8 +2,9 @@
 
 Query plan (SURVEY.md §3.1 stages 6-7, re-expressed for Spark):
 
-1. term_stats lookup for the analyzed query terms — bucket-partition
-   pruning + term row-group pushdown; |Q| rows to the driver → idf.
+1. term_stats lookup for the analyzed query terms — a driver-side
+   `index.TermFiles` read (bucket file + row-group term ranges), no
+   Spark job; |Q| rows → idf.
 2. postings scan filtered to ``bucket IN buckets(Q) AND term IN Q`` —
    Catalyst pushes both into the parquet scan (directory pruning +
    row-group min/max on term), so IO is proportional to the query's
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import analyze, bm25, codec
-from .index import Manifest
+from .index import Manifest, TermFiles
 from .session import ensure_shipped
 
 #: postings columns every top-k reader selects (Spark scan or pyarrow read)
@@ -76,6 +77,7 @@ class IndexReader:
         self.n_buckets = self.man.params["n_buckets"]
         self.postings = spark.read.parquet(f"{root}/postings")
         self.term_stats = spark.read.parquet(f"{root}/term_stats")
+        self._stats_files = TermFiles(f"{root}/term_stats", self.n_buckets)
         self._df_cache: dict[str, int] = {}
         ensure_shipped(spark)
 
@@ -85,14 +87,12 @@ class IndexReader:
         return sorted({term_bucket(t, self.n_buckets) for t in terms})
 
     def stats_for(self, terms: list[str]) -> dict[str, int]:
-        # per-term df memoized: a repeated term costs zero Spark jobs
+        # per-term df memoized; a miss is one driver-side pruned read
+        # of term_stats, no Spark job
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            bks = self.buckets_of(missing)
-            rows = (self.term_stats
-                    .where(F.col("bucket").isin(bks) & F.col("term").isin(missing))
-                    .select("term", "df").collect())
-            found = {r["term"]: r["df"] for r in rows}
+            tbl = self._stats_files.read(missing, ["term", "df"])
+            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
             for t in missing:
                 self._df_cache[t] = int(found.get(t, 0))
         return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}

@@ -11,7 +11,7 @@ from jivesearch_spark.extract import extract_page
 from jivesearch_spark.fielded import (FieldedLocalIndex, FieldedReader,
                                       bm25_fielded_indexed,
                                       build_fielded_index)
-from jivesearch_spark.index import IndexParams, TermFiles
+from jivesearch_spark.index import TERM_STATS_SCHEMA, IndexParams, TermFiles
 from jivesearch_spark.queries import QUERY_SET
 
 N_DOCS = 600
@@ -405,3 +405,58 @@ def test_fielded_absent_terms_are_budgeted(roots):
         assert idx.terms._cost_total <= 50, i
         assert len(idx.terms.meta) <= 50, i
     assert ("title", "zzzabsent499") in idx.terms.meta
+
+
+@pytest.mark.spark
+def test_fielded_one_term_msm_ranks_as_none(roots):
+    """A one-term query's MSM requirement (1) ranks as no requirement,
+    with shingles and a tld boost on, so the result-cache key folds it
+    to 0: for every one-term QUERY_SET query, and its repeated-word
+    form (whose one shingle key is "w w"), the kernel ranks the same
+    at requirement 1 and 0, and min_should_match=False hits the entry
+    min_should_match=True put."""
+    from jivesearch_spark.fielded import _analyze
+    idx = FieldedLocalIndex(roots[None])
+    one_term = [q for q in QUERY_SET
+                if q.lang is None and len(_analyze(q.q)[0]) == 1]
+    assert len(one_term) >= 5
+    matched = 0
+    for q in one_term:
+        tld = q.region_tld or "uk"
+        for text in (q.q, f"{q.q} {q.q}"):
+            analyzed = _analyze(text)
+            assert bm25.msm_required(len(analyzed[0])) == 1
+            for use_wand in (True, False):
+                ranks = [idx._topk_kernel(analyzed, True, tld, req, use_wand,
+                                          N_DOCS) for req in (1, 0)]
+                assert ranks[0] == ranks[1], (text, use_wand)
+            matched += bool(ranks[0])
+            want = idx.topk(text, 10, tld_boost=tld, min_should_match=True)
+            assert idx.last_stats["result_cache_hit"] is False
+            got = idx.topk(text, 10, tld_boost=tld, min_should_match=False)
+            assert idx.last_stats == {"result_cache_hit": True}
+            assert got == want == ranks[0][:10]
+    assert matched >= 4
+
+
+@pytest.mark.spark
+def test_fielded_stats_for_reads_term_stats_without_a_spark_job(spark, roots):
+    """FieldedReader.stats_for reads each field's df on the driver: the
+    same values a Spark scan of its term_stats gives, and no Spark job."""
+    sc = spark.sparkContext
+    terms = ["bob", "dylan", "guitar", "zzzzqqqqxxxx"]
+    reader = FieldedReader(spark, roots[None])
+    group = "fielded_stats_for_no_job"
+    sc.setJobGroup(group, "FieldedReader.stats_for")
+    try:
+        got = {name: reader.stats_for(name, terms) for name in reader.man}
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        want = {name: {r.term: r.df for r in spark.read.schema(
+                    TERM_STATS_SCHEMA).parquet(
+                    f"{roots[None]}/fields/{name}/term_stats")
+                    .where(F.col("term").isin(terms)).collect()}
+                for name in reader.man}
+        assert sc.statusTracker().getJobIdsForGroup(group)  # the scans are seen
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want and any(got.values())

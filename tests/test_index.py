@@ -288,10 +288,8 @@ def test_resume_skips_completed_batches_and_matches(spark, docs, built, tmp_path
 def test_done_build_drops_scratch_and_resume_returns_it(spark, docs, tmp_path):
     """A published index holds no build scratch, and resuming a done
     build returns its manifest without reading or writing anything."""
-    from pyspark.sql import functions as F
     root = str(tmp_path / "scratch")
-    urls = docs.withColumn("url", F.format_string(
-        "https://x.example.com/%d", F.col("docid"))).drop("docid")
+    urls = _url_docs(docs)
     man = build_index(urls, root, PARAMS, id_col="docid", url_col="url",
                       log=lambda *a: None)
     assert man.done
@@ -307,6 +305,77 @@ def test_done_build_drops_scratch_and_resume_returns_it(spark, docs, tmp_path):
                         url_col="url", resume=True, log=logs.append)
     assert again == man and logs == []
     assert snapshot() == before
+
+
+def _url_docs(docs):
+    from pyspark.sql import functions as F
+    return docs.withColumn("url", F.format_string(
+        "https://x.example.com/%d", F.col("docid"))).drop("docid")
+
+
+def _crash_after_stage1(msg):
+    if str(msg).startswith("[index] stage1 done"):   # logged after its commit
+        raise _Crash(msg)
+
+
+@pytest.mark.spark
+def test_default_build_encodes_in_one_job_from_url_text_staging(
+        spark, docs, tmp_path):
+    """Default params encode stage 2 in one job: no tf staging, one
+    committed batch, and a docid staging of url + text only. A crash
+    after the stage-1 commit resumes from that staging to the same
+    postings bytes."""
+    params = IndexParams()
+    assert params == IndexParams(bucket_batch=params.n_buckets)
+    urls = _url_docs(docs)
+    seen = {}
+
+    def inspect(msg):   # the scratch is gone once the build is done
+        if str(msg).startswith("[index] stage1 done"):
+            seen["staged"] = set(spark.read.parquet(
+                os.path.join(clean, "docid_staging")).columns)
+            seen["tf_staging"] = os.path.exists(os.path.join(clean, "tf_staging"))
+
+    clean = str(tmp_path / "clean")
+    man = build_index(urls, clean, url_col="url", log=inspect)
+    assert man.done and man.params["bucket_batch"] == params.n_buckets
+    assert seen == {"staged": {"url", "text", "__pid"}, "tf_staging": False}
+    assert list(man.completed_batches) == [f"buckets_0_{params.n_buckets - 1}"]
+    assert set(man.stage1_steps) == {"staging_write", "offsets", "tf_stats"}
+    assert all(s >= 0 for s in man.stage1_steps.values())
+
+    root = str(tmp_path / "resume")
+    with pytest.raises(_Crash):
+        build_index(urls, root, url_col="url", log=_crash_after_stage1)
+    crashed = Manifest.load(root)
+    assert crashed.stage1_done and not crashed.completed_batches
+    assert not os.path.exists(os.path.join(root, "tf_staging"))
+    man2 = build_index(urls.limit(0), root, url_col="url", resume=True,
+                       log=lambda *a: None)
+    assert man2.done and list(man2.completed_batches) == list(man.completed_batches)
+    assert man2.stage1_steps == crashed.stage1_steps   # stage 1 not re-run
+    assert _postings_bytes(spark, root) == _postings_bytes(spark, clean)
+
+
+@pytest.mark.spark
+def test_stats_for_reads_term_stats_without_a_spark_job(spark, built):
+    """IndexReader.stats_for reads df on the driver: the same values a
+    Spark scan of term_stats gives, and no Spark job."""
+    from pyspark.sql import functions as F
+    sc = spark.sparkContext
+    terms = ["the", "fast", "merge", "zzz-not-a-term", "query"]
+    reader = IndexReader(spark, built)
+    group = "stats_for_no_job"
+    sc.setJobGroup(group, "IndexReader.stats_for")
+    try:
+        got = reader.stats_for(terms)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        want = {r.term: r.df for r in reader.term_stats
+                .where(F.col("term").isin(terms)).collect()}
+        assert sc.statusTracker().getJobIdsForGroup(group)  # the scan is seen
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want and len(want) == 4
 
 
 @pytest.mark.spark
