@@ -31,9 +31,11 @@ from __future__ import annotations
 import numpy as np
 
 BLOCK_SIZE = 128
-#: 2 = the packed ``blk`` layout (1 was one column per block field);
+#: 3 = the packed ``blk`` layout, docid blocks only (2 also held
+#: impact-ordered prefix rows at negative block_id, which a version-3
+#: reader would count as postings; 1 was one column per block field);
 #: readers refuse an index written under another version
-CODEC_VERSION = 2
+CODEC_VERSION = 3
 
 #: the fixed header that starts every ``blk`` value; the dls stream
 #: runs from the end of the tfs stream to the end of the value

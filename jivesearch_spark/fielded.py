@@ -247,8 +247,6 @@ def _field_meta(tbl, spec) -> dict:
     for term, meta in tb.items():
         meta["avgdl"] = spec["avgdl"]
         meta["ub"] = meta["ub"] * boost
-        if meta.get("iub") is not None:
-            meta["iub"] = meta["iub"] * boost
         meta["group"] = None if spec["shingle"] or spec["probe_only"] else term
         meta["probe_only"] = spec["probe_only"]
     return tb

@@ -81,21 +81,6 @@ class IndexParams:
     b: float = 0.75
     block_size: int = codec.BLOCK_SIZE
     codec_version: int = codec.CODEC_VERSION
-    #: impact-ordered prefix (Lucene's impact-sorted postings analog,
-    #: public Lucene 8 ImpactsEnum design): for every (term, shard)
-    #: posting list longer than ``impact_min``, the top
-    #: ``impact_prefix`` postings BY SCORE are additionally written as
-    #: score-descending chunks (block_id = -(rank+1), docid-sorted
-    #: within each chunk so the delta codec applies unchanged). A cold
-    #: saturated-bounds query then runs the TA finisher over O(prefix)
-    #: decoded postings instead of O(df). 0 disables (no impact rows
-    #: are written): a lazy sweep that hands off then ends in brute,
-    #: which decodes every block of the query's lists.
-    impact_prefix: int = 8192
-    #: lists at or below this length skip prefix emission: decoding
-    #: their full docid blocks is already O(prefix)-cheap, and not
-    #: duplicating them bounds the storage overhead to head terms
-    impact_min: int = 1024
     #: "standard" (analyze.tokens) or an analyze_lang analyzer name
     #: ("english", "french", "cjk", …) — the same chain is applied to
     #: queries at read time (rank identity requires one spec).
@@ -468,7 +453,6 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
     # ---- stage 2: encode postings, bucket-batch at a time ----
     n_docs, avgdl = man.n_docs, man.avgdl
     k1, b, dps = params.k1, params.b, params.docs_per_shard
-    imp_prefix, imp_min = params.impact_prefix, params.impact_min
 
     def _encode_stream(batch_iter):
         """mapInArrow over GROUPED rows: one row per (term, shard)
@@ -519,50 +503,6 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
                 docid_a, tf_a, dl_a, scores_flat, off[:-1].astype(np.int64))
             # block → source group (row) index
             gi = np.searchsorted(off, bs, side="right") - 1
-            bid = meta["block_id"]
-            n_docs_b = meta["n_docs"]
-
-            if imp_prefix > 0:
-                # impact-ordered prefix rows (block_id = -(rank+1)):
-                # per long group, the top-P postings by (-score, docid)
-                # re-chunked in impact order, each chunk docid-sorted so
-                # the SAME delta codec + decode path applies. Python
-                # loops only over the batch's LONG groups (head terms —
-                # a handful per 16k-group batch); all selection/sort
-                # work inside is numpy.
-                ic_did, ic_tf, ic_dl, ic_sc = [], [], [], []
-                ic_starts, ic_bid, ic_gi = [], [], []
-                base = 0
-                for g in np.flatnonzero(sizes > imp_min):
-                    lo, hi = off[g], off[g + 1]
-                    s_g = scores_flat[lo:hi]
-                    d_g = docid_a[lo:hi]
-                    # total order: score desc, docid asc (byte determinism)
-                    order = np.lexsort((d_g, -s_g))[:imp_prefix]
-                    for c0 in range(0, order.size, codec.BLOCK_SIZE):
-                        ch = order[c0:c0 + codec.BLOCK_SIZE]
-                        ch = ch[np.argsort(d_g[ch], kind="stable")]
-                        ic_did.append(d_g[ch])
-                        ic_tf.append(tf_a[lo:hi][ch])
-                        ic_dl.append(dl_a[lo:hi][ch])
-                        ic_sc.append(s_g[ch])
-                        ic_starts.append(base)
-                        base += ch.size
-                        ic_bid.append(-(c0 // codec.BLOCK_SIZE) - 1)
-                        ic_gi.append(g)
-                if ic_did:
-                    _, imeta, iblk_v, iblk_o = codec.encode_blocks_frame(
-                        np.concatenate(ic_did), np.concatenate(ic_tf),
-                        np.concatenate(ic_dl), np.concatenate(ic_sc),
-                        np.asarray(ic_starts, dtype=np.int64))
-                    # each passed group is one ≤BLOCK_SIZE chunk → one
-                    # block each; override ids with the impact ranks
-                    gi = np.concatenate([gi, np.asarray(ic_gi)])
-                    bid = np.concatenate([bid, np.asarray(ic_bid)])
-                    n_docs_b = np.concatenate([n_docs_b, imeta["n_docs"]])
-                    blk_v = np.concatenate([blk_v, iblk_v])
-                    blk_o = np.concatenate([blk_o, iblk_o[1:] + blk_o[-1]])
-
             # n_docs rides along for the write's postings metric only;
             # the stage-2 write drops it (it is inside blk)
             yield pa.record_batch([
@@ -571,9 +511,9 @@ def build_index(docs: DataFrame, out_dir: str, params: IndexParams | None = None
                 term_pa.take(pa.array(gi, type=pa.int64())),
                 pa.array(shard_a[gi].astype(np.int32, copy=False),
                          type=pa.int32()),
-                pa.array(bid, type=pa.int32()),
+                pa.array(meta["block_id"], type=pa.int32()),
                 codec.blk_array(blk_v, blk_o),
-                pa.array(n_docs_b, type=pa.int32()),
+                pa.array(meta["n_docs"], type=pa.int32()),
             ], names=["bucket", "term", "shard", "block_id", "blk", "n_docs"])
 
     stats = spark.read.schema(TERM_STATS_SCHEMA).parquet(stats_path)
@@ -926,9 +866,6 @@ def _decode_postings_df(spark, postings_path: str) -> DataFrame:
                  pa.array(dls), pa.array(tfs)],
                 names=["term", "docid", "dl", "tf"])
 
-    # impact-prefix rows (block_id < 0) are a redundant reordering of
-    # the docid blocks — decoding them too would duplicate postings
     return (spark.read.parquet(postings_path)
-            .where(F.col("block_id") >= 0)
             .select("term", "blk")
             .mapInArrow(_dec, schema="term string, docid long, dl long, tf long"))

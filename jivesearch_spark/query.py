@@ -172,26 +172,19 @@ def _term_block_meta(tbl, idf) -> dict:
     """Group a postings Arrow table (``_POSTING_COLS``; ``shard`` may
     be absent) into per-term RAW block tables — no decode. ``idf`` is a
     {term: weight} dict, or a callable of the term's df = Σ n_docs of
-    its regular blocks. The same code serves one shard (the Spark
-    kernels' applyInArrow input, which arrives unsorted) or the whole
-    index (the serving tiers' pruned read).
+    its blocks. The same code serves one shard (the Spark kernels'
+    applyInArrow input, which arrives unsorted) or the whole index (the
+    serving tiers' pruned read).
 
     One numpy pass: the term column is dictionary-encoded, one
-    ``lexsort`` over (term, prefix flag, shard, block order) orders
-    the rows, and ``codec.parse_blk`` reads every row's ``blk`` header
-    in one gather. So each term's regular block ordinals are
-    docid-ordered and disjoint (shard ranges partition the docid space
-    in shard order). Every entry's arrays are slices of the read's
-    arrays; its block bytes stay in the Arrow values buffer (``buf``)
-    with per-block stream offsets (``so``, see ``codec.parse_blk``),
-    so blocks that are never decoded are never copied.
-
-    Impact-ordered prefix rows (block_id < 0, written by the build when
-    a (term, shard) list exceeds ``impact_min`` — index.IndexParams)
-    are split into separate per-term arrays (``iub``/``ind``/``ishard``
-    /``iso``, sorted (shard, rank) so within a shard chunk k holds
-    impact ranks [k·B, (k+1)·B)); the regular docid-block arrays never
-    see them, so every existing consumer decodes each posting once."""
+    ``lexsort`` over (term, shard, block_id) orders the rows, and
+    ``codec.parse_blk`` reads every row's ``blk`` header in one
+    gather. So each term's block ordinals are docid-ordered and
+    disjoint (shard ranges partition the docid space in shard order).
+    Every entry's arrays are slices of the read's arrays; its block
+    bytes stay in the Arrow values buffer (``buf``) with per-block
+    stream offsets (``so``, see ``codec.parse_blk``), so blocks that
+    are never decoded are never copied."""
     n = tbl.num_rows
     if not n:   # an empty read or shard has no runs to group
         return {}
@@ -203,68 +196,47 @@ def _term_block_meta(tbl, idf) -> dict:
     rank[by_name] = np.arange(len(names))
     code = rank[enc.indices.to_numpy()]
     names = [names[i] for i in by_name]
-    bid = tbl.column("block_id").to_numpy()
-    shard = (tbl.column("shard").to_numpy() if "shard" in tbl.column_names
-             else np.zeros(n, dtype=np.int64))
-    neg = bid < 0
-    # regular rows ascending block_id (docid order); impact rows by
-    # rank = -block_id - 1 ascending
-    order = np.lexsort((np.where(neg, -bid - 1, bid), shard, neg, code))
-    code, neg, shard = code[order], neg[order], shard[order].astype(np.int64)
+    keys = [tbl.column("block_id").to_numpy()]
+    if "shard" in tbl.column_names:
+        keys.append(tbl.column("shard").to_numpy())
+    order = np.lexsort((*keys, code))
+    code = code[order]
     buf, offsets = codec.blk_buffers(tbl.column("blk"))
     hdr, so = codec.parse_blk(buf, offsets[:-1][order], offsets[1:][order])
     first = hdr["first_docid"].astype(np.int64)
     last = hdr["last_docid"].astype(np.int64)
     nd = hdr["n_docs"].astype(np.int64)
     ub = hdr["max_score_ub"].astype(np.float64)
-    starts = np.flatnonzero(np.concatenate(
-        [[True], (code[1:] != code[:-1]) | (neg[1:] != neg[:-1])]))
+    starts = np.flatnonzero(np.concatenate([[True], code[1:] != code[:-1]]))
     ends = np.append(starts[1:], n)
     dfs = np.add.reduceat(nd, starts).tolist()
 
     out = {}
     for si, ei, df in zip(starts.tolist(), ends.tolist(), dfs):
         term = names[code[si]]
-        if not neg[si]:
-            out[term] = {
-                "first": first[si:ei], "last": last[si:ei],
-                "nd": nd[si:ei], "ub": ub[si:ei],
-                # shard of each regular block — the prefix TA needs it
-                # to tell short lists (full blocks generate candidates)
-                # from prefix-covered ones (only their top-P chunks do)
-                "bshard": shard[si:ei],
-                "buf": buf, "so": so[si:ei],
-                "w": idf(df) if callable(idf) else idf[term],
-                # total postings across blocks — _memo_postings charges
-                # the RAW compressed table against the term-cache
-                # budget with this (≈2-4 B/posting varint vs 16
-                # B/posting decoded)
-                "nd_total": df,
-            }
-            continue
-        d = out.get(term)
-        if d is None:   # prefix rows imply regular rows; be safe
-            continue
-        d["iub"], d["ind"] = ub[si:ei], nd[si:ei]
-        d["ishard"], d["iso"] = shard[si:ei], so[si:ei]
-        d["nd_total"] += df
+        out[term] = {
+            "first": first[si:ei], "last": last[si:ei],
+            "nd": nd[si:ei], "ub": ub[si:ei],
+            "buf": buf, "so": so[si:ei],
+            "w": idf(df) if callable(idf) else idf[term],
+            # total postings across blocks — _memo_postings charges the
+            # RAW compressed table against the term-cache budget with
+            # this (≈2-4 B/posting varint vs 16 B/posting decoded)
+            "nd_total": df,
+        }
     return out
 
 
 def _memo_postings(meta: dict, st: dict) -> int:
     """Posting-equivalent memory of one term's block table ``meta`` and
     decoded-store entry ``st`` (the cost `serve.TermCache` budgets),
-    summed from the LIVE arrays: decoded blocks and prefix chunks
-    (``np``), the memoized prefix-TA stream (2 copies per folded
-    posting), a bulk ``dense`` decode, and the raw compressed table at
+    summed from the LIVE arrays: the lazy sweep's decoded blocks
+    (``np``), a bulk ``dense`` decode, and the raw compressed table at
     ~1/4 posting-equivalent — otherwise a skip-heavy head term parks
     its FULL compressed list at zero cost and a long-running tier
     grows without bound. The +1 per entry bounds the empty entries of
     terms the index lacks."""
     n = st.get("np", 0)
-    ist = st.get("istream")
-    if ist is not None:
-        n += 2 * int(ist["d"].size)
     if meta.get("dense") is not None:
         n += int(meta["dense"][0].size)
     return 1 + n + meta.get("nd_total", 0) // 4
@@ -283,12 +255,12 @@ def _bm25_scores(d: dict, tf: np.ndarray, dl: np.ndarray,
 
 def _ensure_blocks(d: dict, st: dict, ords, k1: float, b: float,
                    avgdl: float) -> int:
-    """Decode the given regular-block ordinals of one term into its
+    """Decode the given block ordinals of one term into its
     block-granular store entry (segment map). Returns the number of
     NEWLY decoded blocks. Deliberately does NOT maintain a global
     concatenation of everything decoded: rebuilding one after every
-    probe batch is O(total decoded) per call — quadratic over a cold
-    TA sweep (measured: a 3.4M-doc cold head-2 query spent most of
+    probe batch is O(total decoded) per call — quadratic over a long
+    cold sweep (measured: a 3.4M-doc cold head-2 query spent most of
     its 1.07 s re-concatenating ~900k decoded postings hundreds of
     times). Readers build lookups over exactly the blocks they touch
     (_seg_lookup)."""
@@ -526,11 +498,10 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     "flat_bounds"}``), else mid-sweep as soon as θ exists and retires
     < 25 % of the remaining blocks with no list close to exhaustion
     (``{"why": "no_separation", "skippable", "remaining"}``, in
-    blocks). It hands off to ``_topk_impact_prefix`` when some list
-    carries prefix chunks and no key carries MSM marks, else to the
-    brute exit ``_topk_query`` uses (``_topk_brute_exit``) — the only
-    path for an index built with ``impact_prefix = 0``. Flat-bound
-    queries thus pay at most one wave of bookkeeping.
+    blocks). Either hand-off goes to the brute exit ``_topk_query``
+    uses (``_topk_brute_exit``), which reuses the blocks the sweep
+    decoded only through its count. Flat-bound queries thus pay at
+    most one wave of bookkeeping.
 
     Generalizations for the serving tiers and the fielded tb:
 
@@ -542,10 +513,8 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
       its own group unless its tb entry carries a ``group`` mark (the
       fielded cross_fields rule); a ``probe_only`` entry contributes
       score and bound but never generates candidates (the reference's
-      non-qualifying tld should-clause). A sweep over such marks
-      hands off to the grouped ``_topk_brute``, since the prefix TA
-      counts every key toward MSM and generates candidates from
-      every list.
+      non-qualifying tld should-clause); ``_topk_brute`` reads the
+      same marks, so a hand-off keeps the rule.
     * per-key ``avgdl`` in a tb entry overrides the global (fielded
       sub-indexes each carry their own).
     """
@@ -558,7 +527,6 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     keys_all = terms + extras
     if not terms or k <= 0:     # θ is the k-th best: nothing to sweep for
         return zero
-    grouped = any(g != t for t, g in grp_of.items())
     nt = len(terms)
     n_keys = len(keys_all)
     dfs_of = np.array([int(tb[t]["nd"].sum()) for t in terms])
@@ -633,22 +601,8 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     n_decoded = 0
 
     def go_dense(handoff: dict):
-        # the prefix TA's cold cost is O(prefix + candidates), never
-        # O(df); without prefix chunks, or with MSM marks, the brute exit
-        nonlocal store
         if stats is not None:
             stats["handoff"] = handoff
-        if not grouped and any(
-                tb[t].get("iub") is not None and tb[t]["iub"].size
-                for t in keys_all):
-            if store is None:
-                store = {}
-            for t in keys_all:
-                store.setdefault(t, {"seg": {}, "np": 0})
-            return _topk_impact_prefix(tb, k, msm_req, k1, b, avgdl,
-                                       store, stats=stats,
-                                       n_base=n_decoded,
-                                       blocks_total=blocks_all)
         return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats,
                                 n_base=n_decoded)
 
@@ -773,521 +727,11 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
-#: stop margin of the prefix TA and pool margin of brute's span branch:
-#: with θ − T > 2·0.5e-9, round(θ, 9) is STRICTLY greater than
-#: round(T, 9), so no unseen doc can displace a result even on a
-#: rounded-score tie + docid tie-break.
+#: pool margin of brute's span branch: a doc whose total T is below the
+#: k-th largest θ by more than 2·0.5e-9 has round(T, 9) STRICTLY below
+#: round(θ, 9), so it cannot enter the top-k even on a rounded-score
+#: tie + docid tie-break, and is left out of the pool.
 _TA_SLACK = 2e-9
-
-
-#: candidate-flood threshold that sends the prefix-TA sweep to the
-#: brute exit (``_topk_brute_exit``): a sweep that has consumed this
-#: many candidates without terminating is in the regime where the NRA
-#: bound cannot separate (≥3 independent dense terms — an unseen doc
-#: holding every term is always possible until the lists exhaust), so
-#: one exhaustive bulk pass is strictly cheaper than continuing to
-#: probe per candidate batch.
-_TA_FLOOD_CANDS = 49152
-#: probe-flood leg of the same detector: go to the brute exit once
-#: random-access probing has decoded this share of all blocks (plus an
-#: absolute floor so small indexes never flip) — the flood is
-#: decode-everything in disguise, paid with per-round overhead on top
-_TA_FLOOD_BLOCK_FRAC = 0.2
-_TA_FLOOD_MIN_BLOCKS = 1500
-
-
-def _topk_impact_prefix(tb: dict, k: int, msm_req: int,
-                        k1: float, b: float, avgdl: float,
-                        store: dict, stats: dict | None = None,
-                        n_base: int = 0, blocks_total: int | None = None):
-    """Flat-bound-regime finisher over an index with impact-ordered
-    prefixes (index.IndexParams.impact_prefix): a TA/NRA sweep (Fagin
-    et al., "Optimal aggregation algorithms for middleware", PODS'01)
-    over the build-time impact-ordered prefix chunks — Lucene's
-    impact-sorted postings analog (public Lucene 8 ImpactsEnum design)
-    — so a cold flat-bound query costs O(prefix), not O(df):
-
-    * candidate units per term = its prefix chunks (top-P postings of
-      each long (term, shard) list, score-descending across chunks)
-      plus the FULL docid blocks of lists short enough to carry no
-      prefix (≤ impact_min postings — already O(prefix)-cheap);
-    * decoded units feed a per-term score-descending POSTING stream;
-      candidates are drawn a few postings at a time (batch doubling),
-      so the number of exact-scored candidates — and with it the
-      random-access probe cost — grows with what θ actually needs,
-      not with the 128-posting chunk granularity;
-    * candidates are scored EXACTLY by probing every term with
-      decode-on-demand of just the covering docid blocks (shared
-      block store — warm queries decode nothing);
-    * unseen docs are bounded by T = Σ_t max(stream head, next
-      unvisited unit's ub, tail floor), where the tail floor for a
-      prefix-exhausted shard is the min score of its deepest chunk
-      (every posting beyond the prefix scores ≤ the P-th impact by
-      construction) — tightened from that chunk's ub once it decodes;
-    * stop when the k-th best exact score beats T by _TA_SLACK: an
-      unseen doc is dropped only when round(θ, 9) > round(T, 9), so
-      the answer is rank-identical to brute.
-
-    Cold cost: O(prefix-chunks touched + candidates·|Q|) decoded
-    blocks, independent of head-term df. Degenerate corpora whose
-    prefixes never separate (uniform scores; ``handoff = {"why":
-    "ta_stalled"}``), and ≥3-term sweeps that flood (``_TA_FLOOD_*``;
-    ``{"why": "ta_flood"}``), go to the brute exit
-    (``_topk_brute_exit``) — one decode of everything.
-    """
-    zero = (np.empty(0, dtype=np.int64), np.empty(0))
-    terms = sorted(tb)
-    if not terms:
-        return zero
-    n_pref = 0
-    n_reg = n_base
-
-    units = {}
-    for t in terms:
-        d = tb[t]
-        st = store[t]
-        st.setdefault("iseg", {})
-        # CUMULATIVE per-term TA state, memoized across calls on the
-        # persistent block store (the serving tier's warm-query lever:
-        # a repeat query re-consumes the memoized score-desc stream
-        # with a fresh pointer — zero decodes, zero merges):
-        #   d/s  — all folded units' postings, (score desc, docid asc)
-        #   ld/ls — same postings docid-sorted (the NRA exact lookup)
-        #   n    — units folded so far (folding follows the static
-        #          desc-ub unit order, so n IS the resume pointer)
-        #   floors — per-shard tail floor once its deepest chunk folds
-        ist = st.setdefault("istream", {
-            "d": np.empty(0, dtype=np.int64), "s": np.empty(0),
-            "ld": np.empty(0, dtype=np.int64), "ls": np.empty(0),
-            "n": 0, "floors": {}, "ld_np": 0})
-        # refresh the exact-lookup with EVERYTHING decoded so far
-        # (folded chunks + probe/sweep-decoded blocks): a warm repeat
-        # then resolves every candidate from ld — zero random access.
-        # Duplicate postings (a chunk's posting also in its covering
-        # block) are harmless: identical (docid, score), and
-        # searchsorted only needs one. Bound validity is unaffected —
-        # more founds only replace a ≤-bound with the exact value.
-        if ist["ld_np"] != st["np"] and (st["iseg"] or st["seg"]):
-            parts = ([st["iseg"][c] for c in sorted(st["iseg"])]
-                     + [st["seg"][o] for o in sorted(st["seg"])])
-            ld = np.concatenate([p[0] for p in parts])
-            ls = np.concatenate([p[1] for p in parts])
-            dk = np.argsort(ld, kind="stable")
-            ist["ld"], ist["ls"] = ld[dk], ls[dk]
-            ist["ld_np"] = st["np"]
-        # snapshot of regular blocks whose postings are ALL in ld (the
-        # pre-call decode set): a candidate covered by such a block and
-        # NOT found in ld is provably absent from this term — no probe.
-        # Blocks decoded later in THIS call are deliberately excluded
-        # (their postings enter ld only at the next call's resync).
-        segmask = np.zeros(d["ub"].size, dtype=bool)
-        if st["seg"]:
-            segmask[np.fromiter(st["seg"].keys(), dtype=np.int64,
-                                count=len(st["seg"]))] = True
-        iub = d.get("iub")
-        if iub is None:
-            iub = np.empty(0)
-        ish = d.get("ishard", np.empty(0, dtype=np.int64))
-        ind = d.get("ind", np.empty(0, dtype=np.int64))
-        ps = np.unique(ish)
-        short_ords = np.flatnonzero(~np.isin(d["bshard"], ps))
-        u_ub = np.concatenate([iub, d["ub"][short_ords]])
-        u_pref = np.concatenate([np.ones(iub.size, dtype=bool),
-                                 np.zeros(short_ords.size, dtype=bool)])
-        u_ref = np.concatenate([np.arange(iub.size, dtype=np.int64),
-                                short_ords.astype(np.int64)])
-        order = np.argsort(-u_ub, kind="stable")
-        # per prefix shard: deepest chunk + whether a tail exists
-        # beyond the prefix (chunks are (shard, rank)-sorted, so the
-        # last chunk index of a shard is its deepest)
-        tails = {}
-        for s in ps.tolist():
-            sm = ish == s
-            covered = int(ind[sm].sum())
-            total_s = int(d["nd"][d["bshard"] == s].sum())
-            deepest = int(np.flatnonzero(sm)[-1])
-            open_ = covered < total_s
-            ub0 = ist["floors"].get(int(s), float(iub[deepest])) if open_ \
-                else 0.0
-            tails[s] = {"deepest": deepest, "open": open_, "ub": ub0}
-        # two-layer stream: "sd"/"ss" is the BASE (the memoized ist
-        # arrays, sorted score desc / docid asc) consumed from "qb";
-        # "d2"/"s2" is a small sorted DELTA holding postings folded
-        # THIS call, consumed from "q2". Folds merge into the delta
-        # only (one small lexsort); the delta compacts into the base
-        # when it reaches a quarter of it, so the full-stream resort
-        # the old per-flush merge paid on every round is amortized
-        # geometric — O(n log n) total instead of O(rounds · n log n)
-        # (the profiled quadratic-at-flush-granularity cost). The
-        # docid-lookup arrays layer identically ("ld"+"ld2").
-        units[t] = {"ub": u_ub, "pref": u_pref, "ref": u_ref,
-                    "order": order, "p": int(ist["n"]), "tails": tails,
-                    "ist": ist, "segmask": segmask,
-                    "sd": ist["d"], "ss": ist["s"], "qb": 0,
-                    "d2": np.empty(0, dtype=np.int64), "s2": np.empty(0),
-                    "q2": 0,
-                    "ld": ist["ld"], "ls": ist["ls"],
-                    "ld2": np.empty(0, dtype=np.int64),
-                    "ls2": np.empty(0),
-                    "pending": [], "pend_np": 0, "pend_max": -np.inf}
-
-    def _ta_probe(t, nf):
-        """Exact contributions for the not-found-in-ld candidates of
-        one term: candidates whose covering block was already decoded
-        BEFORE this call are provably absent (ld is authoritative for
-        the snapshot) — only the rest pay random access."""
-        nonlocal n_reg
-        d = tb[t]
-        contrib = np.zeros(nf.size)
-        hit = np.zeros(nf.size, dtype=bool)
-        if not d["first"].size:
-            return contrib, hit
-        j = np.searchsorted(d["first"], nf, side="right") - 1
-        jc = np.clip(j, 0, d["first"].size - 1)
-        covered = (j >= 0) & (nf <= d["last"][jc])
-        need = covered & ~units[t]["segmask"][jc]
-        if need.any():
-            st = store[t]
-            n_reg += _ensure_blocks(d, st, jc[need], k1, b, avgdl)
-            cd, cs = _seg_lookup(st, jc[need])
-            pos = np.searchsorted(cd, nf[need])
-            pos_c = np.minimum(pos, cd.size - 1)
-            h = cd[pos_c] == nf[need]
-            contrib[need] = np.where(h, cs[pos_c], 0.0)
-            hit[need] = h
-        return contrib, hit
-
-    def _decode_unit(t: str, ui: int):
-        """Fold unit ``ui`` of term t into the pending batch (merged
-        into the delta layer at the round's flush). The delta pointer
-        resets to 0 on merge: already-consumed docids regenerate as
-        candidates and are dropped by ``scored`` dedup, and a stream
-        head that points at a consumed posting only OVERestimates the
-        unseen bound — conservative, never wrong."""
-        nonlocal n_pref, n_reg
-        u = units[t]
-        d = tb[t]
-        st = store[t]
-        ist = u["ist"]
-        if u["pref"][ui]:
-            ci = int(u["ref"][ui])
-            got = st["iseg"].get(ci)
-            if got is None:
-                dd, tf, dl = codec.decode_blocks_concat(
-                    d["buf"], d["iso"][ci:ci + 1], d["ind"][ci:ci + 1])
-                got = st["iseg"][ci] = (dd, _bm25_scores(d, tf, dl,
-                                                         k1, b, avgdl))
-                st["np"] += int(d["ind"][ci])
-                n_pref += 1
-            sh = int(d["ishard"][ci])
-            tl = u["tails"].get(sh)
-            if tl is not None and tl["deepest"] == ci and tl["open"]:
-                # the P-th impact bounds everything beyond the prefix
-                floor = float(got[1].min())
-                tl["ub"] = min(tl["ub"], floor)
-                ist["floors"][sh] = min(ist["floors"].get(sh, floor), floor)
-        else:
-            o = int(u["ref"][ui])
-            n_reg += _ensure_blocks(d, st, np.asarray([o]), k1, b, avgdl)
-            got = st["seg"][o]
-        # defer the stream merge to _fold_flush: re-sorting the whole
-        # accumulated stream per 128-posting chunk is quadratic over a
-        # cold sweep; one resort per term per round is not
-        u["pending"].append(got)
-        u["pend_np"] += int(got[0].size)
-        if got[1].size:
-            u["pend_max"] = max(u["pend_max"], float(got[1].max()))
-        ist["ld_np"] = -1   # probes may also have decoded: resync next call
-        ist["n"] += 1
-
-    def _fold_flush(t: str):
-        """Merge every unit folded since the last flush into the
-        DELTA layer (small lexsort + small docid resort), compacting
-        delta into base geometrically. Consumed delta postings are
-        kept and re-offered after a merge (q2 resets; ``scored``
-        dedup drops them — the same semantics the old full-stream
-        q=0 reset had), so the stream always contains every folded
-        posting and the head bounds stay valid."""
-        u = units[t]
-        if not u["pending"]:
-            return
-        pd_ = np.concatenate([u["d2"]] + [g[0] for g in u["pending"]])
-        ps_ = np.concatenate([u["s2"]] + [g[1] for g in u["pending"]])
-        key = np.lexsort((pd_, -ps_))
-        u["d2"], u["s2"], u["q2"] = pd_[key], ps_[key], 0
-        ld = np.concatenate([u["ld2"]] + [g[0] for g in u["pending"]])
-        ls = np.concatenate([u["ls2"]] + [g[1] for g in u["pending"]])
-        dk = np.argsort(ld, kind="stable")
-        u["ld2"], u["ls2"] = ld[dk], ls[dk]
-        u["pending"], u["pend_np"], u["pend_max"] = [], 0, -np.inf
-        if u["s2"].size > max(4096, u["ss"].size // 4):
-            _compact(t)
-
-    def _compact(t: str):
-        """Fold the delta layers into the base (and into the memoized
-        ist, which must hold ALL folded postings at call boundaries —
-        the warm path re-consumes it with a fresh pointer)."""
-        u = units[t]
-        if not u["s2"].size:
-            return
-        ist = u["ist"]
-        nd = np.concatenate([u["sd"], u["d2"]])
-        ns = np.concatenate([u["ss"], u["s2"]])
-        key = np.lexsort((nd, -ns))
-        ist["d"], ist["s"] = nd[key], ns[key]
-        u["sd"], u["ss"], u["qb"] = ist["d"], ist["s"], 0
-        u["d2"], u["s2"], u["q2"] = np.empty(0, dtype=np.int64), \
-            np.empty(0), 0
-        ld = np.concatenate([u["ld"], u["ld2"]])
-        ls = np.concatenate([u["ls"], u["ls2"]])
-        dk = np.argsort(ld, kind="stable")
-        # u-local only: ist["ld"] is rebuilt from the segment stores
-        # at the next call's entry resync (ld_np bookkeeping)
-        u["ld"], u["ls"] = ld[dk], ls[dk]
-        u["ld2"], u["ls2"] = np.empty(0, dtype=np.int64), np.empty(0)
-
-    def _finalize():
-        """Call-exit invariant: ist holds every folded posting in one
-        sorted run (ist["n"] is the fold resume pointer — a stream
-        missing folded postings would underbound the term on the next
-        call)."""
-        for t in terms:
-            u = units.get(t)
-            if u is None:
-                continue
-            if u["pending"]:
-                _fold_flush(t)
-            _compact(t)
-
-    def bound(t: str) -> float:
-        u = units[t]
-        head = float(u["ss"][u["qb"]]) if u["qb"] < u["ss"].size else 0.0
-        if u["q2"] < u["s2"].size:
-            head = max(head, float(u["s2"][u["q2"]]))
-        if u["pending"]:    # postings folded but not yet flushed
-            head = max(head, u["pend_max"])
-        nxt = float(u["ub"][u["order"][u["p"]]]) if u["p"] < u["order"].size \
-            else 0.0
-        tail = max((x["ub"] for x in u["tails"].values()), default=0.0)
-        return max(head, nxt, tail)
-
-    got_d, got_s, got_m = [], [], []
-    scored = np.empty(0, dtype=np.int64)
-    n_ok, theta, batch = 0, -np.inf, 8
-    # θ = max over two RUNNING k-best pools of per-doc lower bounds:
-    # exact totals of probed docs, and PARTIAL sums (found-term
-    # contributions) of candidates — actual ≥ partial, each doc
-    # appears at most once per pool (candidates enter the partial
-    # pool once; probes enter the exact pool once), and the k-th best
-    # of either pool alone is a valid bar, so their max is too. In
-    # the saturated regime the true winners sit in BOTH terms'
-    # prefixes, so their partials push θ to near-final BEFORE any
-    # random access — this is what keeps the probe flood bounded.
-    pool_ex = np.empty(0)
-    pool_pt = np.empty(0)
-
-    def _add_pool(pool, vals):
-        nonlocal theta
-        if vals.size:
-            pool = np.concatenate([pool, vals])
-            if pool.size > k:
-                pool = np.partition(pool, -k)[-k:]
-        if pool.size >= k:
-            theta = max(theta, float(pool.min()))
-        return pool
-
-    n_chunks = int(sum(tb[t]["iub"].size for t in terms
-                       if tb[t].get("iub") is not None))
-
-    def _brute_finish(why: str):
-        """Hand off to the brute exit: flush the memoized streams
-        (call-exit invariant), then decode and score everything.
-        Rank-identical to continuing the sweep: brute computes complete
-        exact totals for every doc, superseding the partial got_*
-        pools. ``n_reg`` (the blocks decoded so far) is its base."""
-        _finalize()
-        if stats is not None:
-            stats.update(prefix_ta=True, prefix_chunks_decoded=n_pref,
-                         prefix_chunks_total=n_chunks,
-                         cands_consumed=int(scored.size),
-                         handoff={"why": why})
-        return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats,
-                                n_base=n_reg)
-
-    while True:
-        T = float(np.sum([bound(t) for t in terms]))
-        if n_ok >= k and theta - T > _TA_SLACK:
-            break
-        # all-dense regime detector (≥3 terms): the NRA bound is not
-        # separating — an unseen doc holding every term stays possible
-        # until the lists exhaust — when EITHER the candidate flood
-        # outgrows the threshold, OR the probe phase has already been
-        # forced to decode a material share of all blocks (the probe
-        # flood IS decode-everything, paid one candidate batch at a
-        # time with per-round overhead on top). Both measured one
-        # one-sided way: terminating query shapes on the 6.63M-doc
-        # smoke stay under 37k candidates / 12% probe-decoded blocks;
-        # flood shapes blow through both. The brute exit is then
-        # strictly cheaper AND bounded: O(total postings), not
-        # O(rounds · flood).
-        if len(terms) >= 3 and (
-                scored.size > _TA_FLOOD_CANDS
-                or (blocks_total is not None
-                    and n_reg - n_base > max(_TA_FLOOD_MIN_BLOCKS,
-                                             int(blocks_total
-                                                 * _TA_FLOOD_BLOCK_FRAC)))):
-            return _brute_finish("ta_flood")
-        cands = []
-        progressed = False
-        for t in terms:
-            u = units[t]
-            # keep the stream ahead of the unvisited units so
-            # consumption approximates global impact order (the bound
-            # stays valid either way; this only speeds convergence).
-            # avail counts UNCONSUMED postings across base, delta and
-            # pending; head is the max over the three layer heads.
-            while u["p"] < u["order"].size:
-                avail = (u["ss"].size - u["qb"]) \
-                    + (u["s2"].size - u["q2"]) + u["pend_np"]
-                head = -np.inf
-                if u["qb"] < u["ss"].size:
-                    head = float(u["ss"][u["qb"]])
-                if u["q2"] < u["s2"].size:
-                    head = max(head, float(u["s2"][u["q2"]]))
-                if u["pending"]:
-                    head = max(head, u["pend_max"])
-                has_head = np.isfinite(head)
-                if not (avail < batch
-                        or (has_head
-                            and u["ub"][u["order"][u["p"]]] >= head)):
-                    break
-                _decode_unit(t, int(u["order"][u["p"]]))
-                u["p"] += 1
-            _fold_flush(t)
-            # take up to ``batch`` candidates from EACH layer head —
-            # candidates are an unordered, scored-deduped set, so
-            # over-offering across layers only speeds θ convergence;
-            # the NRA prune drops the hopeless before any probe
-            take = min(batch, u["ss"].size - u["qb"])
-            if take > 0:
-                cands.append(u["sd"][u["qb"]:u["qb"] + take])
-                u["qb"] += take
-                progressed = True
-            t2 = min(batch, u["s2"].size - u["q2"])
-            if t2 > 0:
-                cands.append(u["d2"][u["q2"]:u["q2"] + t2])
-                u["q2"] += t2
-                progressed = True
-        if not progressed:
-            if T <= 0.0:
-                break
-            # prefixes exhausted without separation (degenerate
-            # uniform corpus): decode-all is unavoidable here, so
-            # finish with the brute exit
-            return _brute_finish("ta_stalled")
-        batch = min(batch * 2, 4096)
-        if not cands:
-            continue
-        cand = _drop_scored(np.unique(np.concatenate(cands)), scored)
-        if cand.size == 0:
-            continue
-        # NRA prune before any random access (Fagin's NRA upper
-        # bounds): exact contributions are FREE for postings already
-        # decoded (ld lookup); a term where the candidate was not
-        # found can contribute at most max(next unvisited unit ub,
-        # tail floor). Candidates whose optimistic total provably
-        # cannot reach θ are dropped without touching the docid
-        # blocks — in the tf-saturated regime (scores nearly flat)
-        # this is almost every single-term candidate, which is what
-        # keeps the probe cost O(contenders), not O(consumed).
-        exact_c = {}
-        found_c = {}
-        opt = np.zeros(cand.size)
-        partial = np.zeros(cand.size)
-        matched_f = np.zeros(cand.size, dtype=np.int32)
-        for t in terms:
-            u = units[t]
-            hit = np.zeros(cand.size, dtype=bool)
-            ex = np.zeros(cand.size)
-            for la, ls_ in ((u["ld"], u["ls"]), (u["ld2"], u["ls2"])):
-                if not la.size:
-                    continue
-                pos = np.searchsorted(la, cand)
-                pos_c = np.minimum(pos, la.size - 1)
-                h = la[pos_c] == cand
-                ex = np.where(h, ls_[pos_c], ex)
-                hit |= h
-            exact_c[t], found_c[t] = ex, hit
-            partial += ex
-            matched_f += hit.astype(np.int32)
-            nxt = float(u["ub"][u["order"][u["p"]]]) \
-                if u["p"] < u["order"].size else 0.0
-            tail = max((x["ub"] for x in u["tails"].values()), default=0.0)
-            bnf = max(nxt, tail)
-            opt += np.where(hit, ex, bnf)
-        scored = np.union1d(scored, cand)   # pruned stay pruned: θ only grows
-
-        # partials of THIS round's candidates immediately tighten θ.
-        # msm: a candidate's found-term count UNDERcounts its true
-        # matches, so found-qualified ⇒ qualified (monotone).
-        pool_pt = _add_pool(pool_pt, partial[matched_f >= msm_req]
-                            if msm_req else partial)
-
-        # probe contenders in DESCENDING optimistic-bound order, in
-        # small chunks with θ refreshed between chunks: the strongest
-        # contenders (co-occurring docs) establish θ after ~k probes,
-        # after which one fully-pruned chunk ends the round — probe
-        # cost tracks the number of true contenders, not consumption
-        pos_order = np.lexsort((cand, -opt))
-        chunkp = max(k, 16)
-        i = 0
-        while i < pos_order.size:
-            idxs = pos_order[i:i + chunkp]
-            i += chunkp
-            chunkp = min(chunkp * 2, 2048)
-            if np.isfinite(theta):
-                live_i = idxs[theta - opt[idxs] <= _TA_SLACK]
-                if live_i.size == 0:
-                    break   # opt-desc order: everything after is pruned too
-                idxs = live_i
-            idxs = idxs[np.argsort(cand[idxs])]   # probe wants docid order
-            keep = cand[idxs]
-            total = np.zeros(keep.size)
-            matched = np.zeros(keep.size, dtype=np.int32)
-            for t in terms:   # sorted accumulation order — determinism rule
-                f = found_c[t][idxs]
-                contrib = np.where(f, exact_c[t][idxs], 0.0)
-                hit = f.copy()
-                nf = keep[~f]
-                if nf.size:
-                    # random access only for the not-found terms of
-                    # surviving contenders — decode just the covering
-                    # blocks; found terms already carry exact scores
-                    c2, h2 = _ta_probe(t, nf)
-                    contrib[~f] = c2
-                    hit[~f] = h2
-                total += contrib
-                matched += hit.astype(np.int32)
-            got_d.append(keep)
-            got_s.append(total)
-            got_m.append(matched)
-            n_ok += int((matched >= msm_req).sum()) if msm_req else keep.size
-            pool_ex = _add_pool(pool_ex, total[matched >= msm_req]
-                                if msm_req else total)
-
-    _finalize()
-    if stats is not None:
-        stats["cands_consumed"] = int(scored.size)
-        stats["prefix_ta"] = True
-        stats["finisher"] = "prefix_ta"
-        stats["prefix_chunks_decoded"] = n_pref
-        stats["prefix_chunks_total"] = n_chunks
-        stats["blocks_decoded"] = n_reg
-        if blocks_total is not None:
-            stats["blocks_total"] = blocks_total
-        stats["dense_bailout"] = False
-
-    return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
 
 def _drop_scored(cand: np.ndarray, scored: np.ndarray) -> np.ndarray:
@@ -1379,10 +823,10 @@ def _topk_brute(terms: dict, k: int, msm_req: int):
 
 
 #: the lazy sweep's per-list floor, in postings. With ``use_wand``, a
-#: query whose lists hold at most n_lists × _LAZY_FLOOR postings (Σ df
-#: over regular blocks) is answered by brute: below it one bulk decode
-#: and score pass costs less than the sweep's per-wave bound
-#: bookkeeping (``compute_prio``, range-max tables, per-key probes).
+#: query whose lists hold at most n_lists × _LAZY_FLOOR postings (Σ df)
+#: is answered by brute: below it one bulk decode and score pass costs
+#: less than the sweep's per-wave bound bookkeeping (``compute_prio``,
+#: range-max tables, per-key probes).
 #: Kernel-only ``_topk_query`` ms, k=10, min of 9 interleaved runs on a
 #: 4-core VM, over a 200k-doc saturated corpus (5 head terms at doc
 #: rates .55/.35/.25/.15/.08 with tf 1-3, 8-40 zipf(1.2) filler words
@@ -1423,13 +867,12 @@ def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
     brute (``_topk_brute_exit``) when the lists hold at most
     ``len(tb) × _LAZY_FLOOR`` postings, else the lazy block-max kernel
     (decoded blocks land in ``store`` when given), which may still
-    hand off (``stats["handoff"]`` says why). Without ``use_wand`` it
-    is always brute — the oracle. ``stats`` gets ``reason`` (the two
-    figures the choice compared) and ``finisher``, the path that
-    produced the answer: ``brute`` (also when the sweep or the prefix
-    TA handed off to the brute exit), ``lazy`` (the sweep ran to the
-    end) or ``prefix_ta`` (the sweep handed off to
-    ``_topk_impact_prefix``, which ran to its stop)."""
+    hand off to the brute exit (``stats["handoff"]`` says why).
+    Without ``use_wand`` it is always brute — the oracle. ``stats``
+    gets ``reason`` (the two figures the choice compared) and
+    ``finisher``, the path that produced the answer: ``brute`` (also
+    when the sweep handed off) or ``lazy`` (the sweep ran to the
+    end)."""
     postings = sum(int(m["nd"].sum()) for m in tb.values())
     lazy_floor = len(tb) * _LAZY_FLOOR
     if stats is not None:
@@ -1446,7 +889,7 @@ def _topk_brute_exit(tb: dict, k: int, msm_req: int, k1: float, b: float,
     (memoized on the tb entries as ``dense``) and score exhaustively
     with ``_topk_brute``. ``blocks_decoded`` counts the blocks without
     a resident ``dense`` memo plus ``n_base``, the blocks a lazy sweep
-    (and a prefix TA after it) decoded before handing off here."""
+    decoded before handing off here."""
     if stats is not None:
         cold = sum(m["ub"].size for m in tb.values() if m.get("dense") is None)
         stats.update(blocks_decoded=n_base + cold,

@@ -18,7 +18,7 @@ read of a few posting lists. This module is that read path:
    group.
 2. the read goes as an Arrow table to `query._term_block_meta` (the
    Spark kernels' block tables; a term's df is the Σ n_docs of its
-   regular blocks, so no ``term_stats`` lookup), which parses every
+   blocks, so no ``term_stats`` lookup), which parses every
    ``blk`` header in one numpy pass and leaves the block bytes in the
    Arrow values buffer: only block METADATA — per-block bounds and
    stream offsets — is materialized eagerly. Scoring calls the SAME
@@ -181,27 +181,29 @@ class TermCache:
 #:
 #: The cost, paid on every miss, also on traffic that never pages:
 #: `query._pinned_topk` thresholds before it sorts, so on the brute
-#: path a top-30 costs what a top-10 costs. The lazy finishers at
-#: scale: kernel-only `query._topk_query` ms, min of 27 runs (3
-#: processes × 9 interleaved) on a 4-core VM, the 200k-doc corpus of
-#: `query._LAZY_FLOOR`; cold = fresh block tables and store, warm = the
-#: same call again. The 3-term rows end in brute cold (the prefix TA
-#: floods) and in the prefix TA warm; the 5-term row ends in brute:
+#: path a top-30 costs what a top-10 costs. The lazy sweep at scale:
+#: kernel-only `query._topk_query` ms, min of 27 runs (3 processes × 9)
+#: on a 4-core VM, the 200k-doc corpus of `query._LAZY_FLOOR`; cold =
+#: fresh block tables and store, warm = the same call again. A single
+#: head term runs lazy at k = 10 and hands off to brute at k = 30
+#: (`no_separation`); every multi-term row hands off at both depths:
 #:
-#:   query (postings)             k=10 cold/warm      k=30 cold/warm
-#:   bob (110k)                   12.76 / 9.45 lazy    2.99 / 1.45 prefix_ta
-#:   dylan (70k)                   5.89 / 4.03 lazy    2.26 / 1.15 prefix_ta
-#:   w1 (193k)                     1.70 / 1.02 lazy    1.67 / 1.05 prefix_ta
-#:   bob dylan (180k)             29.70 / 8.61        29.07 / 8.13 prefix_ta
-#:   guitar live (80k)            20.68 / 5.45        25.39 / 6.55 prefix_ta
-#:   w1 w2 (355k)                 10.80 / 3.98        15.00 / 4.57 prefix_ta
-#:   bob dylan guitar (230k)      64.81 / 34.34       62.63 / 66.06
-#:   dylan w3 w7 (268k)           51.80 / 56.11       51.27 / 77.12
-#:   5 head terms (276k)          72.37 / 161.79      71.89 / 157.06 brute
-#:   sum of the nine             270.5 / 284.8       262.2 / 323.1
+#:   query (postings)             k=10 cold/warm        k=30 cold/warm
+#:   bob (110k)                    9.07 / 6.56 lazy      4.18 / 1.60 brute
+#:   dylan (70k)                   4.58 / 3.22 lazy      3.95 / 1.83 brute
+#:   w1 (193k)                     1.27 / 0.76 lazy      9.11 / 3.59 brute
+#:   bob dylan (180k)              8.12 / 2.94 brute     8.07 / 2.96 brute
+#:   guitar live (80k)             4.35 / 2.09 brute     4.23 / 2.09 brute
+#:   w1 w2 (355k)                 14.75 / 3.64 brute    14.93 / 3.66 brute
+#:   bob dylan guitar (230k)      11.17 / 4.45 brute    11.03 / 4.49 brute
+#:   dylan w3 w7 (268k)           12.06 / 4.80 brute    12.43 / 4.84 brute
+#:   5 head terms (276k)          14.61 / 6.14 brute    14.36 / 6.17 brute
+#:   sum of the nine              80.0 / 34.6           82.3 / 31.2
 #:
-#: so a top-30 miss costs 0.23× (one head term) to 1.92× (a warm
-#: 3-term prefix TA) a top-10 one, 0.97× cold and 1.13× warm summed.
+#: so a top-30 miss costs 0.24× (`bob` warm) to 7.2× (`w1` cold: at
+#: k = 10 the sweep decodes 24 of its 1,508 blocks, at k = 30 it hands
+#: off and brute decodes them all) a top-10 one, 1.03× cold and 0.90×
+#: warm summed.
 PREFETCH_PAGES = 3
 
 
@@ -361,7 +363,7 @@ class LocalIndex:
         # term's block ordinals are globally docid-ordered) — decode
         # happens lazily inside the kernel, block by block, only when
         # a block's bound can still beat the global θ. A term's df is
-        # the Σ n_docs of the regular blocks this read returns; a term
+        # the Σ n_docs of the blocks this read returns; a term
         # the index lacks is cached as an empty entry, so its repeats
         # skip the read and the term-cache budget bounds it.
         ms = {"read": 0.0, "meta": 0.0}

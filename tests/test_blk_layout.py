@@ -4,10 +4,9 @@ header codec.BLK_HEADER) round-trips bit-for-bit through parquet,
 order, chunking or slicing of the Arrow table the parse receives.
 
 Pure pyarrow + numpy (no Spark): rows are random logical blocks —
-regular and impact-prefix (negative block_id) rows, streams of 1- to
-10-byte varints, 128-posting blocks — written the way the build lays
-them out (one term-sorted file per ``bucket=N`` directory, several row
-groups each).
+streams of 1- to 10-byte varints, 128-posting blocks — written the way
+the build lays them out (one term-sorted file per ``bucket=N``
+directory, several row groups each).
 """
 
 from __future__ import annotations
@@ -46,10 +45,7 @@ def _random_rows(rng, n_terms=12):
     for ti in range(n_terms):
         term = f"t{ti:02d}" + ("é" if ti % 5 == 0 else "")
         for shard in range(int(rng.integers(1, 4))):
-            bids = list(range(int(rng.integers(1, 6))))
-            if rng.random() < 0.5:   # impact-prefix chunks of this list
-                bids += [-(r + 1) for r in range(int(rng.integers(1, 4)))]
-            for bid in bids:
+            for bid in range(int(rng.integers(1, 6))):
                 wide = rng.random() < 0.2   # a full block of 10-byte varints
                 n = 128 if wide or rng.random() < 0.3 else int(
                     rng.integers(1, 129))
@@ -89,13 +85,11 @@ def _table(rows):
 
 def _expected(rows):
     """What ``_term_block_meta`` must hold per term, from the logical
-    rows: regular blocks by (shard, block_id), prefix chunks by
-    (shard, rank)."""
+    rows: its blocks by (shard, block_id)."""
     out = {}
-    for r in sorted(rows, key=lambda r: (r["term"], r["block_id"] < 0,
-                                         r["shard"], abs(r["block_id"]))):
-        e = out.setdefault(r["term"], {"reg": [], "pre": []})
-        e["pre" if r["block_id"] < 0 else "reg"].append(r)
+    for r in sorted(rows, key=lambda r: (r["term"], r["shard"],
+                                         r["block_id"])):
+        out.setdefault(r["term"], []).append(r)
     return out
 
 
@@ -106,36 +100,26 @@ def _logical(tb):
     for term, d in tb.items():
         buf = d["buf"]
 
-        def blocks(so, nd, ub, shard, first=None, last=None):
-            return [(int(sh), int(n), int(np.float64(u).view(np.int64)),
-                     None if first is None else int(first[i]),
-                     None if last is None else int(last[i]),
-                     buf[s[0]:s[1]].tobytes(), buf[s[1]:s[2]].tobytes(),
-                     buf[s[2]:s[3]].tobytes())
-                    for i, (s, n, u, sh) in enumerate(zip(so, nd, ub, shard))]
         out[term] = {
-            "reg": blocks(d["so"], d["nd"], d["ub"], d["bshard"],
-                          d["first"], d["last"]),
-            "pre": (blocks(d["iso"], d["ind"], d["iub"], d["ishard"])
-                    if "iso" in d else []),
+            "blocks": [(int(n), int(np.float64(u).view(np.int64)),
+                        int(f), int(la), buf[s[0]:s[1]].tobytes(),
+                        buf[s[1]:s[2]].tobytes(), buf[s[2]:s[3]].tobytes())
+                       for s, n, u, f, la in zip(d["so"], d["nd"], d["ub"],
+                                                 d["first"], d["last"])],
             "nd_total": d["nd_total"], "w": d["w"]}
     return out
 
 
 def _want(rows):
-    def row(r, bounds=True):
-        return (r["shard"], r["n_docs"],
-                int(np.float64(r["max_score_ub"]).view(np.int64)),
-                r["first_docid"] if bounds else None,
-                r["last_docid"] if bounds else None,
-                r["deltas"], r["tfs"], r["dls"])
     out = {}
-    for term, e in _expected(rows).items():
-        df = sum(r["n_docs"] for r in e["reg"])
-        out[term] = {"reg": [row(r) for r in e["reg"]],
-                     "pre": [row(r, False) for r in e["pre"]],
-                     "nd_total": df + sum(r["n_docs"] for r in e["pre"]),
-                     "w": float(df)}
+    for term, rs in _expected(rows).items():
+        df = sum(r["n_docs"] for r in rs)
+        out[term] = {
+            "blocks": [(r["n_docs"],
+                        int(np.float64(r["max_score_ub"]).view(np.int64)),
+                        r["first_docid"], r["last_docid"], r["deltas"],
+                        r["tfs"], r["dls"]) for r in rs],
+            "nd_total": df, "w": float(df)}
     return out
 
 
@@ -177,19 +161,14 @@ def test_pack_parquet_termfiles_parse_round_trip(tmp_path):
     assert list(tb) == terms
     assert _logical(tb) == _want(rows)
     # decode straight from the values buffer ≡ per-block decode
-    for term, e in _expected(rows).items():
+    for term, rs in _expected(rows).items():
         d = tb[term]
-        for so, nd, rs in ((d["so"], d["nd"], e["reg"]),
-                           (d.get("iso"), d.get("ind"), e["pre"])):
-            if not rs:
-                continue
-            got = codec.decode_blocks_concat(d["buf"], so, nd)
-            want = [np.concatenate(x) for x in zip(*(
-                codec.decode_block(r["deltas"], r["tfs"], r["dls"],
-                                   r["n_docs"]) for r in rs))]
-            for g, w in zip(got, want):
-                assert np.array_equal(g.astype(np.uint64),
-                                      w.astype(np.uint64))
+        got = codec.decode_blocks_concat(d["buf"], d["so"], d["nd"])
+        want = [np.concatenate(x) for x in zip(*(
+            codec.decode_block(r["deltas"], r["tfs"], r["dls"], r["n_docs"])
+            for r in rs))]
+        for g, w in zip(got, want):
+            assert np.array_equal(g.astype(np.uint64), w.astype(np.uint64))
     # an absent term reads as an empty table and parses to nothing
     empty = tf.read(["absent"], _POSTING_COLS)
     assert empty.num_rows == 0 and _term_block_meta(empty, float) == {}

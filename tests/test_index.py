@@ -381,7 +381,9 @@ def test_stats_for_reads_term_stats_without_a_spark_job(spark, built):
 @pytest.mark.spark
 def test_readers_refuse_other_codec_version(spark, built, tmp_path):
     """A manifest from another codec layout is refused by every reader
-    and by merge, naming both versions."""
+    and by merge, naming both versions: version 1 (one column per
+    block field) and version 2 (whose impact-prefix rows this build
+    would count as postings)."""
     import json
 
     from jivesearch_spark import serve
@@ -389,16 +391,19 @@ def test_readers_refuse_other_codec_version(spark, built, tmp_path):
     shutil.copytree(built, root)
     with open(os.path.join(root, "manifest.json")) as f:
         m = json.load(f)
-    m["params"]["codec_version"] = 1
-    with open(os.path.join(root, "manifest.json"), "w") as f:
-        json.dump(m, f)
-    want = f"codec version 1; this build reads codec version {codec.CODEC_VERSION}"
-    for opener in (lambda: IndexReader(spark, root),
-                   lambda: serve.LocalIndex(root),
-                   lambda: merge_indexes(spark, [root], str(tmp_path / "m"),
-                                         log=lambda *a: None)):
-        with pytest.raises(ValueError, match=want):
-            opener()
+    for old in (1, 2):
+        m["params"]["codec_version"] = old
+        with open(os.path.join(root, "manifest.json"), "w") as f:
+            json.dump(m, f)
+        want = (f"codec version {old}; this build reads codec version "
+                f"{codec.CODEC_VERSION}")
+        for opener in (lambda: IndexReader(spark, root),
+                       lambda: serve.LocalIndex(root),
+                       lambda: merge_indexes(spark, [root],
+                                             str(tmp_path / "m"),
+                                             log=lambda *a: None)):
+            with pytest.raises(ValueError, match=want):
+                opener()
 
 
 @pytest.mark.spark

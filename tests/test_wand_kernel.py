@@ -1,7 +1,8 @@
 """Top-k kernels: lazy block-max rank identity vs brute, decode
-skipping, each hand-off of the lazy sweep and of the prefix TA, both
-accumulations of the brute finisher, the up-front brute-or-lazy choice
-in ``_topk_query``, and k=0 / empty edge inputs.
+skipping, each hand-off of the lazy sweep, both accumulations of the
+brute finisher, both finishers against a pure-Python per-doc sum, the
+up-front brute-or-lazy choice in ``_topk_query``, and k=0 / empty edge
+inputs.
 
 Pure-numpy tests (one Spark test aside) over synthetic postings built as
 Arrow tables with the posting schema — the same input the Spark
@@ -144,10 +145,10 @@ def test_lazy_kernel_flat_bounds_bail_to_dense():
     """Two similar-strength head terms with zipf tfs give θ no
     separation (every block bound ≈ θ): the kernel must detect the
     flat regime after the first wave and hand off (``no_separation``)
-    to the brute exit — these tables carry no prefix rows — paying
-    ~zero overhead vs brute. The timed path is lazy sweep → brute
-    against brute alone; the round-2 regression was ~1.3-1.5× (judge
-    microbench: 782/782 decoded AND slower than brute)."""
+    to the brute exit, paying ~zero overhead vs brute. The timed path
+    is lazy sweep → brute against brute alone; the round-2 regression
+    was ~1.3-1.5× (judge microbench: 782/782 decoded AND slower than
+    brute)."""
     import time
     rng = np.random.default_rng(42)
     n_docs = 400_000
@@ -224,17 +225,13 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
     assert store  # lazy decodes landed in the persistent store
 
 
-def _spiked_tbl(rng, n_docs, weights, prefix):
+def _spiked_tbl(rng, n_docs, weights):
     """Flat block bounds over spread doc scores. Each term is in a doc
     with probability 0.7 at tf 1-3 and dl 50-199, except one posting
     per block — on a doc no other term holds where the block has one —
     at tf 20 and dl 5, the term's top score: every block of a term has
-    the same bound, yet the spikes outscore the rest (so a prefix TA
-    can stop early) and, with a heavy first term, single-term spikes
-    outrank the docs MSM 2 keeps. ``prefix`` > 0 adds each list's top
-    ``prefix`` postings by (score desc, docid) as chunk rows (block_id
-    = -(rank+1), docid-sorted within a chunk), as the build writes
-    them."""
+    the same bound, yet the spikes outscore the rest and, with a heavy
+    first term, single-term spikes outrank the docs MSM 2 keeps."""
     bs = codec.BLOCK_SIZE
     lists = {t: np.flatnonzero(rng.random(n_docs) < 0.7) for t in weights}
     rows = []
@@ -248,49 +245,31 @@ def _spiked_tbl(rng, n_docs, weights, prefix):
             j = b0 + int(np.argmax(alone[b0:b0 + bs]))
             tf[j], dl[j] = 20, 5
 
-        def enc(ix):
-            return codec.encode_blocks(docids[ix], tf[ix], dl[ix], w,
-                                       K1, B, AVGDL)
-
-        rows += [dict(blk, term=term, shard=0)
-                 for blk in enc(np.arange(docids.size))]
-        score = tf / (tf + K1 * (1 - B + B * dl / AVGDL))
-        top = np.lexsort((docids, -score))[:prefix]
-        for c in range(0, top.size, bs):
-            (blk,) = enc(np.sort(top[c:c + bs]))
-            rows.append(dict(blk, term=term, shard=0, block_id=-(c // bs) - 1))
+        rows += [dict(blk, term=term, shard=0) for blk in
+                 codec.encode_blocks(docids, tf, dl, w, K1, B, AVGDL)]
     return _table(rows)
 
 
-#: (handoff, terms, prefix rows) → the finisher at k ∈ {1, 10} and at
-#: k > matches. Two strictly flat lists hand off before the sweep
+#: (handoff, terms) → the finisher at k > matches (at k ∈ {1, 10} it
+#: is brute). Two strictly flat lists hand off before the sweep
 #: whatever k is; three need a θ, which k > matches never sets, so
-#: that sweep runs to its end. A prefix TA that cannot stop early (k >
-#: matches) drains the prefixes and goes to the brute exit
-#: (``handoff = {"why": "ta_stalled"}``).
+#: that sweep runs to its end.
 GO_DENSE_EXITS = [
-    ("flat_bounds", 2, False, "brute", "brute"),
-    ("flat_bounds", 2, True, "prefix_ta", "brute"),
-    ("no_separation", 3, False, "brute", "lazy"),
-    ("no_separation", 3, True, "prefix_ta", "lazy"),
+    ("flat_bounds", 2, "brute"),
+    ("no_separation", 3, "lazy"),
 ]
 
 
-@pytest.mark.parametrize("why,n_terms,prefix,finisher,finisher_all",
-                         GO_DENSE_EXITS)
-def test_go_dense_exits_match_brute(why, n_terms, prefix, finisher,
-                                    finisher_all):
-    """Each lazy-sweep hand-off, with and without prefix rows on the
-    lists, is forced and answers exactly what ``_topk_brute`` answers
-    — docids and float scores — for k = 0, 1, 10 and more than the
-    matches, with and without MSM; ``stats`` names the finisher and
-    why the sweep stopped."""
+@pytest.mark.parametrize("why,n_terms,finisher_all", GO_DENSE_EXITS)
+def test_go_dense_exits_match_brute(why, n_terms, finisher_all):
+    """Each lazy-sweep hand-off is forced and answers exactly what
+    ``_topk_brute`` answers — docids and float scores — for k = 0, 1,
+    10 and more than the matches, with and without MSM; ``stats``
+    names the finisher and why the sweep stopped."""
     rng = np.random.default_rng(29)
     n_docs = 8192
     weights = dict(list({"a": 3.0, "b": 0.3, "c": 0.25}.items())[:n_terms])
-    tbl = _spiked_tbl(rng, n_docs, weights, 512 if prefix else 0)
-    tb = _term_block_meta(tbl, weights)
-    assert all((m.get("iub") is not None) == prefix for m in tb.values())
+    tbl = _spiked_tbl(rng, n_docs, weights)
     fails = []
     for msm, k in itertools.product((0, 2), (0, 1, 10, n_docs + 1)):
         st = {}
@@ -300,17 +279,12 @@ def test_go_dense_exits_match_brute(why, n_terms, prefix, finisher,
             _term_block_meta(tbl, weights), K1, B, AVGDL), k, msm)
         if not (np.array_equal(d1, d0) and np.array_equal(s1, s0)):
             fails.append((msm, k))
-        want = ("lazy" if k == 0 else finisher if k <= 10 else finisher_all)
+        want = ("lazy" if k == 0 else "brute" if k <= 10 else finisher_all)
         assert st["finisher"] == want, (msm, k, st)
         if want == "lazy":
             assert "handoff" not in st, (msm, k, st)
         else:
-            # a prefix TA that reaches brute says so in place of the
-            # sweep's reason
-            ta_exit = prefix and want == "brute"
-            assert st["handoff"]["why"] == ("ta_stalled" if ta_exit
-                                            else why), (msm, k, st)
-            assert st.get("prefix_ta", False) == prefix, (msm, k, st)
+            assert st["handoff"]["why"] == why, (msm, k, st)
     assert not fails, fails
 
 
@@ -376,30 +350,6 @@ def test_lazy_kernel_boosted_weights_need_boosted_bounds():
     # the failure mode the fielded tb construction must avoid)
     bad, _ = topk(scale_ub=False)
     assert bad != want
-
-
-def test_prefix_ta_flood_exit_matches_brute(monkeypatch):
-    """The prefix TA's flood detector, forced by a low
-    ``_TA_FLOOD_CANDS`` on a 3-term table with prefix rows: the sweep
-    hands off to the TA, which goes to the brute exit after its first
-    round of candidates and answers exactly what ``_topk_brute``
-    answers — docids and float scores — with ``stats`` naming brute,
-    the flood, and the prefix chunks the TA decoded first."""
-    from jivesearch_spark import query
-    monkeypatch.setattr(query, "_TA_FLOOD_CANDS", 8)
-    rng = np.random.default_rng(29)
-    weights = {"a": 3.0, "b": 0.3, "c": 0.25}
-    tbl = _spiked_tbl(rng, 8192, weights, 512)
-    for msm, k in itertools.product((0, 2), (1, 10)):
-        st = {}
-        d1, s1 = _topk_blockmax_lazy(_term_block_meta(tbl, weights), k, msm,
-                                     K1, B, AVGDL, stats=st)
-        d0, s0 = _topk_brute(_dense_arrays_from_tb(
-            _term_block_meta(tbl, weights), K1, B, AVGDL), k, msm)
-        assert np.array_equal(d1, d0) and np.array_equal(s1, s0), (msm, k)
-        assert st["finisher"] == "brute", (msm, k, st)
-        assert st["handoff"] == {"why": "ta_flood"}, (msm, k, st)
-        assert st["prefix_ta"] and st["prefix_chunks_decoded"] > 0, st
 
 
 # ---------------------------------------------------------------------------
@@ -492,6 +442,98 @@ def test_dense_merge_fewer_than_k_and_empty():
     assert d.tolist() == [9]
     d, s = _topk_brute({}, 10, 0)
     assert d.size == 0
+
+
+#: the MSM marks a random table's key may carry: none (its own group),
+#: a group shared with other keys, no group (a shingle key) or
+#: probe-only (the tld key)
+MARKS = [{}, {"group": "g"}, {"group": None}, {"probe_only": True}]
+
+
+def _random_lists(rng, marks):
+    """A seeded small block table and its postings: 1-4 keys over
+    300-2999 docs, each at a random doc rate with tf 1-3 and dl 50-199,
+    and in about half of its blocks one spike posting at tf 20, dl 5 —
+    so bounds are flat in some tables and spread in others. With
+    ``marks``, each key draws a mark from ``MARKS`` (at least one key
+    generates candidates). Returns (table, weights, {key: (docids, tfs,
+    dls, mark)})."""
+    n_docs = int(rng.integers(300, 3000))
+    lists, rows = {}, []
+    for ti in range(int(rng.integers(1, 5))):
+        key = f"t{ti}"
+        docids = np.flatnonzero(rng.random(n_docs) < rng.uniform(0.01, 0.8))
+        if not docids.size:
+            docids = rng.integers(0, n_docs, size=1)
+        tf = rng.integers(1, 4, size=docids.size)
+        dl = rng.integers(50, 200, size=docids.size)
+        for b0 in range(0, docids.size, codec.BLOCK_SIZE):
+            if rng.random() < 0.5:
+                j = b0 + int(rng.integers(0, min(codec.BLOCK_SIZE,
+                                                 docids.size - b0)))
+                tf[j], dl[j] = 20, 5
+        mark = MARKS[int(rng.integers(len(MARKS)))] if marks and ti else {}
+        lists[key] = (docids, tf, dl, mark)
+    weights = {t: float(rng.uniform(0.1, 3.0)) for t in lists}
+    for t, (docids, tf, dl, _) in lists.items():
+        rows += [dict(blk, term=t, shard=0) for blk in
+                 codec.encode_blocks(docids, tf, dl, weights[t],
+                                     K1, B, AVGDL)]
+    return _table(rows), weights, lists
+
+
+def _per_doc_ranking(lists, weights, msm):
+    """The pure-Python oracle over the raw postings: each posting's BM25
+    contribution as Python floats, then ``_reference_ranking``'s per-doc
+    sum, MSM count and pinned order."""
+    py = {}
+    for t, (docids, tf, dl, mark) in lists.items():
+        w = weights[t]
+        sc = [w * f * (K1 + 1.0) / (f + K1 * (1.0 - B + B * n / AVGDL))
+              for f, n in zip(tf.astype(float).tolist(),
+                              dl.astype(float).tolist())]
+        py[t] = dict(mark, docids=docids, scores=np.array(sc))
+    return _reference_ranking(py, msm)
+
+
+def test_finishers_match_per_doc_sum_property():
+    """On seeded random small block tables, with and without MSM
+    marks, the lazy sweep (whether it runs to its end or hands off)
+    and brute answer the same docids and float bits, and both equal
+    the pure-Python per-doc sum over the raw postings: k = 0, 1, 10
+    and more than the matches, MSM 0 and 2, and the offset slice of
+    the top-(k + offset) that paging serves."""
+    rng = np.random.default_rng(1234)
+    fails, finishers = [], set()
+    for trial in range(24):
+        tbl, weights, lists = _random_lists(rng, marks=trial % 2 == 1)
+
+        def fresh_tb():
+            """Block tables with the keys' marks and no memo of a
+            previous call."""
+            tb = _term_block_meta(tbl, weights)
+            for t, m in tb.items():
+                m.update(lists[t][3])
+            return tb
+        for msm in (0, 2):
+            want = _per_doc_ranking(lists, weights, msm)
+            for k, off in itertools.product((0, 1, 10, len(want) + 1),
+                                            (0, 7)):
+                st = {}
+                d1, s1 = _topk_blockmax_lazy(fresh_tb(), k + off, msm,
+                                             K1, B, AVGDL, stats=st)
+                d0, s0 = _topk_brute(_dense_arrays_from_tb(
+                    fresh_tb(), K1, B, AVGDL), k + off, msm)
+                if k + off:
+                    finishers.add(st["finisher"])
+                ref = want[off:off + k]
+                got = [(d1[off:], s1[off:]), (d0[off:], s0[off:])]
+                if not all(d.tolist() == [x for x, _ in ref]
+                           and s.tolist() == [x for _, x in ref]
+                           for d, s in got):
+                    fails.append((trial, msm, k, off))
+    assert not fails, fails
+    assert finishers == {"lazy", "brute"}, finishers
 
 
 def test_k_zero_is_empty():
@@ -618,7 +660,12 @@ def test_serving_mixed_choices_match_spark_path(spark, tmp_path):
             st = li.last_stats[q]
             reason = st["reason"]
             under = reason["postings"] <= reason["lazy_floor"]
-            assert (st["finisher"] == "brute") == under, (q, st)
+            # over the floor the sweep runs, and ends in brute only by
+            # handing off
+            handed_off = "handoff" in st
+            assert not (under and handed_off), (q, st)
+            assert (st["finisher"] == "brute") == (under or handed_off), \
+                (q, st)
             seen.add(under)
     assert seen == {True, False}, "the set must straddle the floor"
 

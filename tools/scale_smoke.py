@@ -3,7 +3,7 @@
 
 Reproducible protocol for the BENCH/BASELINE.md scale tables (rounds
 3-5 ran it ad-hoc): materialize an N-page corpus, build the serving
-index (impact prefixes + term-sorted bucket layout — bench's exact
+index (docid blocks + term-sorted bucket layout — bench's exact
 build_pipeline), then probe a fixed query set cold (fresh LocalIndex
 per rep — pays dataset discovery + footer + block-table read) and warm
 (same instance, result cache disabled so the kernel runs), 5-rep
