@@ -36,9 +36,10 @@ candidates, like the reference's non-qualifying regional clause).
 - ``FieldedLocalIndex.topk`` — the serving-tier flavor (open-once
   `index.TermFiles` pruned reads, no Spark job): the same up-front
   brute-or-lazy choice as `serve.LocalIndex`, df taken from the
-  postings rows it reads, the same `serve.TermCache` /
-  `serve.ResultCache`, whose ranked-prefix entries are keyed on the
-  query's `_analyze` sets and options, not on k and offset.
+  postings rows it reads, the same `serve.TermCache` (block tables
+  that carry their decoded-postings memos) and `serve.ResultCache`,
+  whose ranked-prefix entries are keyed on the query's `_analyze` sets
+  and options, not on k and offset.
 """
 
 from __future__ import annotations
@@ -53,7 +54,8 @@ from pyspark.sql import functions as F
 from . import analyze, bm25
 from .hashing import term_bucket
 from .index import IndexParams, Manifest, TermFiles, assign_doc_ids, build_index
-from .query import _POSTING_COLS, _term_block_meta, _topk_query, _topk_table
+from .query import (_POSTING_COLS, _memo_dfs, _term_block_meta, _topk_query,
+                    _topk_table)
 from .serve import ResultCache, TermCache
 from .session import ensure_shipped
 
@@ -162,18 +164,11 @@ class FieldedReader:
         self.stats = {n: TermFiles(os.path.join(root, "fields", n, "term_stats"),
                                    self.n_buckets) for n in self.man}
         self.doc_meta = spark.read.parquet(f"{root}/doc_meta")
-        self._df_cache: dict[tuple[str, str], int] = {}
+        self._df_memo: dict[str, dict[str, int]] = {n: {} for n in self.man}
         ensure_shipped(spark)
 
     def stats_for(self, field: str, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in terms if (field, t) not in self._df_cache]
-        if missing:
-            tbl = self.stats[field].read(missing, ["term", "df"])
-            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-            for t in missing:
-                self._df_cache[(field, t)] = int(found.get(t, 0))
-        return {t: self._df_cache[(field, t)] for t in terms
-                if self._df_cache[(field, t)] > 0}
+        return _memo_dfs(self.stats[field], self._df_memo[field], terms)
 
 
 def _analyze(query: str) -> tuple[tuple, tuple]:
@@ -413,9 +408,8 @@ class FieldedLocalIndex:
         ran = any(key[0] != TLD_FIELD for key in live)
         if ran:
             t0 = time.perf_counter()
-            docids, scores = _topk_query(
-                live, depth, req, k1, b, 1.0, use_wand,
-                stats=self.last_stats, store=self.terms.store)
+            docids, scores = _topk_query(live, depth, req, k1, b, 1.0,
+                                         use_wand, stats=self.last_stats)
             self.last_stats["ms"] = dict(
                 ms, kernel=1e3 * (time.perf_counter() - t0))
             self.last_stats["depth"] = depth

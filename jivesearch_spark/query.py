@@ -78,7 +78,7 @@ class IndexReader:
         self.postings = spark.read.parquet(f"{root}/postings")
         self.term_stats = spark.read.parquet(f"{root}/term_stats")
         self._stats_files = TermFiles(f"{root}/term_stats", self.n_buckets)
-        self._df_cache: dict[str, int] = {}
+        self._df_memo: dict[str, int] = {}
         ensure_shipped(spark)
 
     def buckets_of(self, terms: list[str]) -> list[int]:
@@ -87,15 +87,20 @@ class IndexReader:
         return sorted({term_bucket(t, self.n_buckets) for t in terms})
 
     def stats_for(self, terms: list[str]) -> dict[str, int]:
-        # per-term df memoized; a miss is one driver-side pruned read
-        # of term_stats, no Spark job
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            tbl = self._stats_files.read(missing, ["term", "df"])
-            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-            for t in missing:
-                self._df_cache[t] = int(found.get(t, 0))
-        return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
+        return _memo_dfs(self._stats_files, self._df_memo, terms)
+
+
+def _memo_dfs(files: TermFiles, memo: dict, terms: list[str]) -> dict[str, int]:
+    """{term: df} of the ``terms`` a ``term_stats`` table holds, each
+    df memoized in ``memo``: a miss is one driver-side pruned read
+    (`index.TermFiles`), no Spark job; an absent term memoizes 0."""
+    missing = [t for t in terms if t not in memo]
+    if missing:
+        tbl = files.read(missing, ["term", "df"])
+        found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+        for t in missing:
+            memo[t] = int(found.get(t, 0))
+    return {t: memo[t] for t in terms if memo[t] > 0}
 
 
 def bm25_topk_indexed(reader: IndexReader, query: str, k: int = 10,
@@ -159,8 +164,9 @@ def _score_shard_np(tbl, idf: dict, k1: float, b: float, avgdl: float,
 
     Builds the raw block tables with ``_term_block_meta`` and runs
     ``_topk_query`` on them, so the Spark path, the batch path and the
-    serving tier share one decode path and one kernel entry and so
-    choose the same finisher for the same lists. ``use_wand=False``
+    serving tier share one decode path (`_decode_blocks`, into a memo
+    on each block table) and one kernel entry and so choose the same
+    finisher for the same lists. ``use_wand=False``
     always runs ``_topk_brute`` — the oracle the rank-identity gates
     compare against.
     """
@@ -227,90 +233,157 @@ def _term_block_meta(tbl, idf) -> dict:
     return out
 
 
-def _memo_postings(meta: dict, st: dict) -> int:
-    """Posting-equivalent memory of one term's block table ``meta`` and
-    decoded-store entry ``st`` (the cost `serve.TermCache` budgets),
-    summed from the LIVE arrays: the lazy sweep's decoded blocks
-    (``np``), a bulk ``dense`` decode, and the raw compressed table at
-    ~1/4 posting-equivalent — otherwise a skip-heavy head term parks
-    its FULL compressed list at zero cost and a long-running tier
-    grows without bound. The +1 per entry bounds the empty entries of
-    terms the index lacks."""
-    n = st.get("np", 0)
-    if meta.get("dense") is not None:
-        n += int(meta["dense"][0].size)
+def _memo_postings(meta: dict) -> int:
+    """Posting-equivalent memory of one term's block table ``meta``
+    (the cost `serve.TermCache` budgets), summed from the LIVE arrays:
+    the decoded memo's allocated postings (`_decode_blocks`) and the
+    raw compressed table at ~1/4 posting-equivalent — otherwise a
+    skip-heavy head term parks its FULL compressed list at zero cost
+    and a long-running tier grows without bound. The +1 per entry
+    bounds the empty entries of terms the index lacks."""
+    n = meta["docids"].size if "docids" in meta else 0
     return 1 + n + meta.get("nd_total", 0) // 4
 
 
-def _bm25_scores(d: dict, tf: np.ndarray, dl: np.ndarray,
+def _scores_bulk(d: dict, tf: np.ndarray, dl: np.ndarray,
                  k1: float, b: float, avgdl: float) -> np.ndarray:
     """BM25 contributions for one term's decoded postings (w = idf or
-    idf×boost pinned on the tb entry; per-key avgdl override honored)."""
+    idf×boost pinned on the tb entry; per-key avgdl override honored).
+    When a large decode's (tf, dl) pack into 32 bits, factorize the
+    pairs and evaluate the formula once per DISTINCT pair, then gather
+    — tf-norm has few distinct values (tf and dl are small ints), so
+    millions of float64 formula passes collapse to a lookup. Float
+    results are bit-identical either way: the same expression runs on
+    the same float64 inputs, just once per distinct pair."""
+    ad = max(d.get("avgdl", avgdl), 1e-9)
+    if tf.size > (1 << 16) and tf.dtype.itemsize <= 2 \
+            and (dl.size == 0 or int(dl.max()) < (1 << 16)):
+        import pandas as pd
+        key = tf.astype(np.uint32) << np.uint32(16)
+        key |= dl.astype(np.uint32)
+        inv, uniq = pd.factorize(key)
+        utf = (uniq >> np.uint32(16)).astype(np.float64)
+        udl = (uniq & np.uint32(0xFFFF)).astype(np.float64)
+        return (d["w"] * utf * (k1 + 1.0) / (
+            utf + k1 * (1.0 - b + b * udl / ad)))[inv]
     tf = tf.astype(np.float64)
     dl = dl.astype(np.float64)
-    ad = d.get("avgdl", avgdl)
-    return d["w"] * tf * (k1 + 1.0) / (
-        tf + k1 * (1.0 - b + b * dl / max(ad, 1e-9)))
+    return d["w"] * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / ad))
 
 
-def _ensure_blocks(d: dict, st: dict, ords, k1: float, b: float,
-                   avgdl: float) -> int:
-    """Decode the given block ordinals of one term into its
-    block-granular store entry (segment map). Returns the number of
-    NEWLY decoded blocks. Deliberately does NOT maintain a global
-    concatenation of everything decoded: rebuilding one after every
-    probe batch is O(total decoded) per call — quadratic over a long
-    cold sweep (measured: a 3.4M-doc cold head-2 query spent most of
-    its 1.07 s re-concatenating ~900k decoded postings hundreds of
-    times). Readers build lookups over exactly the blocks they touch
-    (_seg_lookup)."""
-    seg = st["seg"]
-    new = [int(o) for o in np.unique(ords) if int(o) not in seg]
-    if not new:
-        return 0
-    na = np.asarray(new, dtype=np.int64)
-    dd, tf, dl = codec.decode_blocks_concat(d["buf"], d["so"][na],
-                                            d["nd"][na])
-    sc = _bm25_scores(d, tf, dl, k1, b, avgdl)
-    offs = np.concatenate([[0], np.cumsum(d["nd"][na])])
-    for i, o in enumerate(new):
-        seg[o] = (dd[offs[i]:offs[i + 1]], sc[offs[i]:offs[i + 1]])
-    st["np"] += int(d["nd"][na].sum())
-    return len(new)
+def _decode_blocks(pairs, k1: float, b: float, avgdl: float) -> int:
+    """Decode into each tb entry's memo the blocks of (entry, block
+    ordinals) ``pairs`` that are not decoded yet (ordinals None: every
+    block). THE decode path of both finishers: the lazy sweep asks for
+    the blocks it visits or probes, brute (`_dense_arrays_from_tb`)
+    for the rest. Returns the number of blocks newly decoded.
+
+    The memo is df-length ``docids`` / ``scores`` arrays placed by
+    block (block ``b`` starts at ``off[b]`` = Σ n_docs of the blocks
+    before it) plus a per-block ``done`` mark, so a block is decoded
+    at most once whichever finisher asks, and a fully decoded memo is
+    the docid-sorted list brute reads. The blocks to decode go through
+    one ``codec.decode_blocks_concat`` call per values buffer they
+    live in (one for a query whose terms came from one read), compact
+    dtypes, scored per entry with its own ``w`` and ``avgdl`` (one
+    `_scores_bulk`). An entry decoded whole in one call keeps the
+    decode output (a lone entry without a copy; entries sharing the
+    call copy their slice, so evicting one term frees its postings).
+    Otherwise the new blocks are written into arrays of the whole
+    list's length."""
+    todo: dict = {}
+    for d, ords in pairs:
+        done, kept = d.get("done"), None
+        if ords is None:
+            ords = (np.arange(d["nd"].size) if done is None
+                    else np.flatnonzero(~done))
+        else:
+            ords = np.unique(ords)
+            if done is not None:
+                ords = ords[~done[ords]]
+        if not ords.size:
+            continue
+        if done is not None and 4 * ords.size > done.size:
+            # filling most of a partly decoded list (a hand-off's brute
+            # exit): set its decoded rows aside and free its arrays
+            # before the decode, whose temporaries then reuse that
+            # memory instead of faulting in fresh pages (on the table
+            # of test_lazy_kernel_flat_bounds_bail_to_dense, default
+            # malloc settings, lazy → brute ran 0.86-1.15× of brute
+            # alone over 16 processes, 0.95-1.40× without)
+            keep = np.repeat(done, d["nd"])
+            kept = (keep, d.pop("docids")[keep], d.pop("scores")[keep])
+        todo.setdefault(id(d["buf"]), []).append((d, ords, kept))
+    n_new = 0
+    for parts in todo.values():
+        dd, tf, dl = codec.decode_blocks_concat(
+            parts[0][0]["buf"],
+            np.concatenate([d["so"][o] for d, o, _ in parts]),
+            np.concatenate([d["nd"][o] for d, o, _ in parts]), compact=True)
+        pos = 0
+        for d, ords, kept in parts:
+            nd = d["nd"]
+            sl = slice(pos, pos + int(nd[ords].sum()))
+            pos = sl.stop
+            sc = _scores_bulk(d, tf[sl], dl[sl], k1, b, avgdl)
+            whole = "done" not in d and ords.size == nd.size
+            if "done" not in d:
+                d["off"] = np.cumsum(nd) - nd
+                d["done"] = np.zeros(nd.size, dtype=bool)
+            if whole:   # decoded whole in this call: keep the output
+                d["docids"] = dd[sl] if len(parts) == 1 else dd[sl].copy()
+                d["scores"] = sc
+            else:
+                if "docids" not in d:   # first partial decode, or set aside
+                    d["docids"] = np.empty(d["nd_total"], dtype=np.int64)
+                    d["scores"] = np.empty(d["nd_total"])
+                    if kept is not None:
+                        d["docids"][kept[0]] = kept[1]
+                        d["scores"][kept[0]] = kept[2]
+                rows = _block_rows(d, ords)
+                d["docids"][rows] = dd[sl]
+                d["scores"][rows] = sc
+            d["done"][ords] = True
+            n_new += ords.size
+    return n_new
 
 
-def _seg_lookup(st: dict, ords: np.ndarray):
-    """(docids, scores) concatenated over the given DECODED block
-    ordinals — ordinal order == docid order (disjoint ranges), so the
-    result is docid-sorted. O(blocks touched), not O(blocks decoded)."""
-    seg = st["seg"]
-    parts = [seg[int(o)] for o in np.unique(ords)]
-    if not parts:
-        return (np.empty(0, dtype=np.int64), np.empty(0))
-    if len(parts) == 1:
-        return parts[0]
-    return (np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]))
+def _block_rows(d: dict, ords: np.ndarray) -> np.ndarray:
+    """Index into ``d``'s memo arrays of the postings of the sorted
+    unique block ordinals ``ords``, in docid order (block ordinal
+    order is docid order: disjoint ranges). A row mask when ``ords``
+    holds over a quarter of the blocks — a masked copy is ~5× cheaper
+    per row than an integer gather or scatter, and the mask costs one
+    byte per posting of the list — else row positions."""
+    nd = d["nd"]
+    if 4 * ords.size > nd.size:
+        sel = np.zeros(nd.size, dtype=bool)
+        sel[ords] = True
+        return np.repeat(sel, nd)
+    n = nd[ords]
+    return (np.repeat(d["off"][ords] - (np.cumsum(n) - n), n)
+            + np.arange(int(n.sum())))
 
 
-def _probe_term(d: dict, st: dict, cand: np.ndarray, k1: float, b: float,
-                avgdl: float):
-    """Exact contributions of one term for sorted unique ``cand``,
-    decoding only the covering blocks and searching only those.
-    Returns (contrib, hit, n_new)."""
-    if not d["first"].size:
-        return np.zeros(cand.size), np.zeros(cand.size, dtype=bool), 0
+def _covering(d: dict, cand: np.ndarray) -> np.ndarray:
+    """Sorted unique block ordinals of one key that cover a docid of
+    sorted ``cand``."""
     j = np.searchsorted(d["first"], cand, side="right") - 1
     jc = np.clip(j, 0, d["first"].size - 1)
-    covered = (j >= 0) & (cand <= d["last"][jc])
-    if not covered.any():
-        return np.zeros(cand.size), np.zeros(cand.size, dtype=bool), 0
-    n_new = _ensure_blocks(d, st, jc[covered], k1, b, avgdl)
-    cd, cs = _seg_lookup(st, jc[covered])
-    pos = np.searchsorted(cd, cand)
-    pos_c = np.minimum(pos, cd.size - 1)
-    hit = cd[pos_c] == cand
-    return np.where(hit, cs[pos_c], 0.0), hit, n_new
+    return np.unique(jc[(j >= 0) & (cand <= d["last"][jc])])
+
+
+def _probe_term(d: dict, ords: np.ndarray, cand: np.ndarray):
+    """Exact contributions of one key for sorted unique ``cand``,
+    searching only its DECODED covering blocks ``ords`` (`_covering`).
+    Returns (contrib, hit)."""
+    if not ords.size:
+        return np.zeros(cand.size), np.zeros(cand.size, dtype=bool)
+    rows = _block_rows(d, ords)
+    cd, cs = d["docids"][rows], d["scores"][rows]
+    pos = np.minimum(np.searchsorted(cd, cand), cd.size - 1)
+    hit = cd[pos] == cand
+    return np.where(hit, cs[pos], 0.0), hit
 
 
 # rounding slack: the final rank uses round(score, 9), so an interval is
@@ -390,30 +463,6 @@ def _range_max(levels: list, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
     return out
 
 
-def _scores_bulk(d: dict, tf: np.ndarray, dl: np.ndarray,
-                 k1: float, b: float, avgdl: float) -> np.ndarray:
-    """BM25 contributions for a BULK decode (identical values to
-    _bm25_scores): when (tf, dl) pack into 32 bits, factorize the
-    pairs and evaluate the formula once per DISTINCT pair, then
-    gather — tf-norm has few distinct values (tf and dl are small
-    ints), so millions of float64 formula passes collapse to a
-    lookup. Float results are bit-identical: the same expression runs
-    on the same float64 inputs, just once per distinct pair."""
-    if tf.size > (1 << 16) and tf.dtype.itemsize <= 2 \
-            and (dl.size == 0 or int(dl.max()) < (1 << 16)):
-        import pandas as pd
-        key = tf.astype(np.uint32) << np.uint32(16)
-        key |= dl.astype(np.uint32)
-        inv, uniq = pd.factorize(key)
-        utf = (uniq >> np.uint32(16)).astype(np.float64)
-        udl = (uniq & np.uint32(0xFFFF)).astype(np.float64)
-        ad = d.get("avgdl", avgdl)
-        g = d["w"] * utf * (k1 + 1.0) / (
-            utf + k1 * (1.0 - b + b * udl / max(ad, 1e-9)))
-        return g[inv]
-    return _bm25_scores(d, tf, dl, k1, b, avgdl)
-
-
 def _group_of(key, entry: dict):
     """The MSM group a tb entry (or its decoded arrays) counts toward:
     its ``group`` mark, else the key itself — one group per list, the
@@ -423,51 +472,24 @@ def _group_of(key, entry: dict):
     return None if entry.get("probe_only") else entry.get("group", key)
 
 
-def _dense_arrays_from_tb(tb: dict, k1: float, b: float, avgdl: float,
-                          keys=None) -> dict:
-    """Decode EVERY block of the given tb entries into brute-kernel
-    arrays ({docids, scores} plus the entry's MSM marks), memoizing
-    the decode on the tb entry (``dense``) so callers holding tb (e.g.
-    a serving-tier block cache) pay the bulk decode once. The entries
-    without a memo are decoded together, one
-    ``codec.decode_blocks_concat`` call per values buffer they live in
-    (one for a query whose terms came from one read), and scored per
-    entry with its own ``w`` and ``avgdl``. Compact decode (minimal
-    dtypes) + per-distinct-(tf, dl) score evaluation keep this pass
-    memory-bandwidth-lean — it is the brute finisher's main cost at
-    millions of postings."""
-    keys = sorted(tb) if keys is None else keys
-    todo: dict = {}
-    for t in keys:
-        if tb[t].get("dense") is None:
-            todo.setdefault(id(tb[t]["buf"]), []).append(t)
-    for ts in todo.values():
-        parts = [tb[t] for t in ts]
-        dd, tf, dl = codec.decode_blocks_concat(
-            parts[0]["buf"], np.concatenate([d["so"] for d in parts]),
-            np.concatenate([d["nd"] for d in parts]), compact=True)
-        o = 0
-        for d in parts:
-            sl = slice(o, o + int(d["nd"].sum()))
-            o = sl.stop
-            # a lone entry keeps the decode; shared ones copy their
-            # slice, so evicting one term frees its postings
-            d["dense"] = (dd[sl] if len(parts) == 1 else dd[sl].copy(),
-                          _scores_bulk(d, tf[sl], dl[sl], k1, b, avgdl))
-    dense = {}
-    for t in keys:
-        d = tb[t]
-        arrs = dense[t] = {"docids": d["dense"][0], "scores": d["dense"][1]}
-        for m in ("group", "probe_only"):   # read by `_group_of`
-            if m in d:
-                arrs[m] = d[m]
-    return dense
+def _dense_arrays_from_tb(tb: dict, k1: float, b: float,
+                          avgdl: float) -> dict:
+    """Brute's input: decode every block the tb entries' memos still
+    lack (`_decode_blocks`) and return ``tb``, each entry then holding
+    its whole list as docid-sorted ``docids`` / ``scores`` beside its
+    MSM marks — the shape `_topk_brute` reads. A lazy sweep's hand-off
+    so decodes only the blocks the sweep did not, and a resident memo
+    (a serving-tier term cache, the batch path's per-shard tables)
+    decodes nothing. Compact decode + per-distinct-(tf, dl) scoring
+    keep this pass memory-bandwidth-lean — it is the brute finisher's
+    main cost at millions of postings."""
+    _decode_blocks([(m, None) for m in tb.values()], k1, b, avgdl)
+    return tb
 
 
 def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
                         k1: float, b: float, avgdl: float,
-                        stats: dict | None = None,
-                        store: dict | None = None):
+                        stats: dict | None = None):
     """Lazy block-max top-k (score-neutral, rank-identical to brute).
 
     Vectorized equivalent of DAAT block-max WAND's in-list skipping
@@ -499,16 +521,17 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     < 25 % of the remaining blocks with no list close to exhaustion
     (``{"why": "no_separation", "skippable", "remaining"}``, in
     blocks). Either hand-off goes to the brute exit ``_topk_query``
-    uses (``_topk_brute_exit``), which reuses the blocks the sweep
-    decoded only through its count. Flat-bound queries thus pay at
-    most one wave of bookkeeping.
+    uses (``_topk_brute_exit``), which decodes only the blocks the
+    sweep did not. Flat-bound queries thus pay at most one wave of
+    bookkeeping.
 
     Generalizations for the serving tiers and the fielded tb:
 
-    * ``store``: a persistent dict {key -> {"seg", "np"}} that
-      outlives the call — decoded blocks accumulate across queries
-      (the serving tier's block-granular cache), so warm queries
-      decode nothing. The caller owns eviction.
+    * decoded blocks land in the tb entries' memos (`_decode_blocks`),
+      so a caller that keeps tb across queries (the serving tiers'
+      term cache, the batch path's per-shard tables) decodes each
+      block once: warm queries decode nothing. The caller owns
+      eviction.
     * MSM counts the DISTINCT groups hit (`_group_of`): every key is
       its own group unless its tb entry carries a ``group`` mark (the
       fielded cross_fields rule); a ``probe_only`` entry contributes
@@ -519,8 +542,9 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
       sub-indexes each carry their own).
     """
     zero = (np.empty(0, dtype=np.int64), np.empty(0))
-    if stats is not None:
-        stats["finisher"] = "lazy"   # a hand-off below overwrites it
+    if stats is not None:   # a hand-off below overwrites them
+        stats.update(finisher="lazy", blocks_decoded=0,
+                     blocks_total=sum(m["ub"].size for m in tb.values()))
     grp_of = {t: _group_of(t, m) for t, m in tb.items()}
     terms = sorted(t for t in tb if not tb[t].get("probe_only"))
     extras = sorted(t for t in tb if tb[t].get("probe_only"))
@@ -532,7 +556,6 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     dfs_of = np.array([int(tb[t]["nd"].sum()) for t in terms])
     blocks_of = np.array([tb[t]["ub"].size for t in terms])
     offsets = np.concatenate([[0], np.cumsum(blocks_of)])
-    blocks_all = int(blocks_of.sum()) + sum(tb[t]["ub"].size for t in extras)
 
     # ---- flat block table across candidate-generating terms ----
     b_term = np.repeat(np.arange(nt), blocks_of)
@@ -601,10 +624,11 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
     n_decoded = 0
 
     def go_dense(handoff: dict):
+        out = _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats)
         if stats is not None:
             stats["handoff"] = handoff
-        return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats,
-                                n_base=n_decoded)
+            stats["blocks_decoded"] += n_decoded
+        return out
 
     # upfront strictly-flat bailout (≤2 terms): when EVERY block bound
     # is identical (uniform corpora — same tf/dl everywhere), any θ
@@ -616,27 +640,6 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
         prio0 = compute_prio()
         if prio0.max() - prio0.min() <= _WAND_SLACK:
             return go_dense({"why": "flat_bounds"})
-
-    # ---- lazy decoded-block store (caller-persistent when given) ----
-    if store is None:
-        store = {}
-    for t in keys_all:
-        store.setdefault(t, {"seg": {}, "np": 0})
-
-    def ensure(ki, ords):
-        nonlocal n_decoded
-        n_decoded += _ensure_blocks(tb[keys_all[ki]], store[keys_all[ki]],
-                                    ords, k1, b, avgdl)
-
-    def probe(ki, cand):
-        """Exact per-key contributions for sorted unique ``cand``,
-        decoding only the blocks that cover a candidate."""
-        nonlocal n_decoded
-        contrib, hit, n_new = _probe_term(tb[keys_all[ki]],
-                                          store[keys_all[ki]], cand,
-                                          k1, b, avgdl)
-        n_decoded += n_new
-        return contrib, hit
 
     # ---- descending-bound wave sweep ----
     got_d, got_s, got_m = [], [], []
@@ -685,12 +688,14 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
             take_mask[idxs[key[:batch]]] = True
         take = np.flatnonzero(take_mask)
         remaining[take] = False
+        visit = [(ti, b_ord[take[b_term[take] == ti]])
+                 for ti in np.unique(b_term[take])]
+        n_decoded += _decode_blocks([(tb[terms[ti]], ords)
+                                     for ti, ords in visit], k1, b, avgdl)
         cands = []
-        for ti in np.unique(b_term[take]):
-            ords = b_ord[take[b_term[take] == ti]]
-            ensure(ti, ords)
-            t = terms[ti]
-            cands.extend(store[t]["seg"][int(o)][0] for o in ords)
+        for ti, ords in visit:
+            d = tb[terms[ti]]
+            cands.append(d["docids"][_block_rows(d, ords)])
             ub_live[ti][ords] = 0.0   # visited: all docs scored
             _dirty[ti] = True         # bound tables stale for this key
             n_left[ti] -= ords.size
@@ -700,12 +705,16 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
         batch = min(batch * 2, 512)
         if cand.size == 0:
             continue
+        # exact scores: decode every key's blocks that cover a
+        # candidate, then search only those
+        cover = [(tb[t], _covering(tb[t], cand)) for t in keys_all]
+        n_decoded += _decode_blocks(cover, k1, b, avgdl)
         total = np.zeros(cand.size)
         gm: dict = {}
-        for ki in range(len(keys_all)):   # fixed accumulation order
-            contrib, hit = probe(ki, cand)
+        for t, (d, ords) in zip(keys_all, cover):   # fixed sum order
+            contrib, hit = _probe_term(d, ords, cand)
             total += contrib
-            g = grp_of[keys_all[ki]]
+            g = grp_of[t]
             if g is not None:
                 m = gm.get(g)
                 gm[g] = hit if m is None else (m | hit)
@@ -722,7 +731,6 @@ def _topk_blockmax_lazy(tb: dict, k: int, msm_req: int,
 
     if stats is not None:
         stats["blocks_decoded"] = n_decoded
-        stats["blocks_total"] = blocks_all
 
     return _pools_topk(got_d, got_s, got_m, k, msm_req)
 
@@ -854,8 +862,7 @@ _LAZY_FLOOR = 16384
 
 
 def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
-                avgdl: float, use_wand: bool, stats: dict | None = None,
-                store: dict | None = None):
+                avgdl: float, use_wand: bool, stats: dict | None = None):
     """THE top-k entry: every Spark kernel and both serving tiers,
     fielded included, call it, so ``use_wand`` means one thing
     everywhere. The fielded rules ride on the tb entries, not on
@@ -865,9 +872,8 @@ def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
 
     The finisher is chosen once, up front, from what the input shows:
     brute (``_topk_brute_exit``) when the lists hold at most
-    ``len(tb) × _LAZY_FLOOR`` postings, else the lazy block-max kernel
-    (decoded blocks land in ``store`` when given), which may still
-    hand off to the brute exit (``stats["handoff"]`` says why).
+    ``len(tb) × _LAZY_FLOOR`` postings, else the lazy block-max kernel,
+    which may still hand off to the brute exit (``stats["handoff"]`` says why).
     Without ``use_wand`` it is always brute — the oracle. ``stats``
     gets ``reason`` (the two figures the choice compared) and
     ``finisher``, the path that produced the answer: ``brute`` (also
@@ -878,22 +884,20 @@ def _topk_query(tb: dict, k: int, msm_req: int, k1: float, b: float,
     if stats is not None:
         stats["reason"] = {"postings": postings, "lazy_floor": lazy_floor}
     if use_wand and postings > lazy_floor:
-        return _topk_blockmax_lazy(tb, k, msm_req, k1, b, avgdl,
-                                   stats=stats, store=store)
+        return _topk_blockmax_lazy(tb, k, msm_req, k1, b, avgdl, stats)
     return _topk_brute_exit(tb, k, msm_req, k1, b, avgdl, stats)
 
 
 def _topk_brute_exit(tb: dict, k: int, msm_req: int, k1: float, b: float,
-                     avgdl: float, stats: dict | None, n_base: int = 0):
+                     avgdl: float, stats: dict | None):
     """The brute finisher over raw block tables: decode every block
-    (memoized on the tb entries as ``dense``) and score exhaustively
-    with ``_topk_brute``. ``blocks_decoded`` counts the blocks without
-    a resident ``dense`` memo plus ``n_base``, the blocks a lazy sweep
-    decoded before handing off here."""
+    the tb entries' memos lack (`_dense_arrays_from_tb`) and score
+    exhaustively with ``_topk_brute``. ``blocks_decoded`` counts the
+    blocks this call decodes."""
     if stats is not None:
-        cold = sum(m["ub"].size for m in tb.values() if m.get("dense") is None)
-        stats.update(blocks_decoded=n_base + cold,
-                     blocks_total=sum(m["ub"].size for m in tb.values()),
+        total = sum(m["ub"].size for m in tb.values())
+        done = sum(int(m["done"].sum()) for m in tb.values() if "done" in m)
+        stats.update(blocks_decoded=total - done, blocks_total=total,
                      dense_bailout=True, finisher="brute")
     return _topk_brute(_dense_arrays_from_tb(tb, k1, b, avgdl), k, msm_req)
 
@@ -907,8 +911,9 @@ def bm25_topk_batch(reader: IndexReader, queries: list[tuple[str, str]],
     The analytics flavor of the query engine (replay a whole query log
     against a snapshot): one pruned postings scan for the UNION of all
     query terms, each shard's block tables built ONCE and every block
-    decoded at most once for all its queries (one shared store), then
-    a per-qid window rank for the global top-k. At 10^12-doc scale this is the right shape —
+    decoded at most once for all its queries (the tables' decoded
+    memos), then a per-qid window rank for the global top-k. At
+    10^12-doc scale this is the right shape —
     per-query jobs would re-pay scan+schedule costs N times. Each
     query runs ``_topk_query`` — the same kernel, with the same
     ``use_wand`` meaning, as ``bm25_topk_indexed`` and the serving tier.
@@ -942,17 +947,16 @@ def bm25_topk_batch(reader: IndexReader, queries: list[tuple[str, str]],
 
     def _score_shard_batch(tbl):
         import pyarrow as pa
-        # one block table and one decoded-block store per shard task:
-        # every query of the log reads the same blocks, so a block any
-        # query decodes is decoded once for the whole batch
-        tb, store = _term_block_meta(tbl, idf), {}
+        # one block table per shard task: every query of the log reads
+        # the same entries, so a block any query decodes is decoded
+        # once for the whole batch (`_decode_blocks`)
+        tb = _term_block_meta(tbl, idf)
         qids, docs_out, scores_out = [], [], []
         for qid, ts in analyzed.items():
             sub = {t: tb[t] for t in ts if t in tb}
             if not sub:
                 continue
-            d, s = _topk_query(sub, kk, reqs[qid], k1, b, avgdl, use_wand,
-                               store=store)
+            d, s = _topk_query(sub, kk, reqs[qid], k1, b, avgdl, use_wand)
             qids.extend([qid] * d.size)
             docs_out.append(d)
             scores_out.append(s)

@@ -35,8 +35,9 @@ read of a few posting lists. This module is that read path:
    entry ⇒ serve ≡ cluster rank identity, pinned tie-break included
    (the Spark path decides per shard; every finisher answers like the
    oracle, so the ranks agree). Both serving tiers keep block tables
-   and the kernel's decoded blocks in one `TermCache` (warm queries do
-   no IO and no decode) and ranked prefixes in one `ResultCache`,
+   in one `TermCache`, each table carrying the memo its finishers
+   decode into (`query._decode_blocks`: warm queries do no IO and no
+   decode), and ranked prefixes in one `ResultCache`,
    keyed on the ANALYZED request without its page: a miss ranks the
    first `PREFETCH_PAGES` pages, so a retyped form of a warm query
    (other case, spacing or word order) and its pages 2-3 are slices
@@ -106,17 +107,17 @@ def _retain_malloc_arenas():
 class TermCache:
     """The serving tiers' per-term cache: ``meta`` holds RAW block
     tables (compressed bytes + bounds — skips the pruned read) in LRU
-    order, ``store`` the lazy kernel's DECODED blocks at block
-    granularity (skips decode). Keys are opaque (a term, or a
-    (field, term) pair). Eviction is LRU by key over a posting-
-    equivalent budget; head terms dominate query logs, so hot queries
-    do no IO and no decode. Hit/miss/eviction counts land in the
-    caller's ``stats`` dict, next to `index.TermFiles.read`'s."""
+    order, each with the decoded-postings memo both finishers fill
+    block by block (`query._decode_blocks` — skips decode). Keys are
+    opaque (a term, or a (field, term) pair). Eviction is LRU by key
+    over a posting-equivalent budget (`query._memo_postings`); head
+    terms dominate query logs, so hot queries do no IO and no decode.
+    Hit/miss/eviction counts land in the caller's ``stats`` dict, next
+    to `index.TermFiles.read`'s."""
 
     def __init__(self, max_postings: int = 16_000_000):
         self.max_postings = max_postings
         self.meta: OrderedDict = OrderedDict()
-        self.store: dict = {}
         # incremental eviction accounting: per-key cost + running
         # total, recharged only for keys a query touched — per-query
         # eviction overhead is O(|Q|), not O(cached keys)
@@ -150,14 +151,13 @@ class TermCache:
         only ones a query can change), then LRU-evict until the budget
         holds, keeping at least one entry."""
         for k in touched:
-            new = _memo_postings(self.meta[k], self.store.get(k, {}))
+            new = _memo_postings(self.meta[k])
             self._cost_total += new - self._cost.get(k, 0)
             self._cost[k] = new
         evicted = 0
         while self._cost_total > self.max_postings and len(self.meta) > 1:
             k, _ = self.meta.popitem(last=False)
             self._cost_total -= self._cost.pop(k, 0)
-            self.store.pop(k, None)
             evicted += 1
         stats["term_cache_evicted"] = evicted
 
@@ -184,8 +184,8 @@ class TermCache:
 #: path a top-30 costs what a top-10 costs. The lazy sweep at scale:
 #: kernel-only `query._topk_query` ms, min of 27 runs (3 processes × 9)
 #: on a 4-core VM, the 200k-doc corpus of `query._LAZY_FLOOR`; cold =
-#: fresh block tables and store, warm = the same call again. A single
-#: head term runs lazy at k = 10 and hands off to brute at k = 30
+#: fresh block tables with nothing decoded, warm = the same call again.
+#: A single head term runs lazy at k = 10 and hands off to brute at k = 30
 #: (`no_separation`); every multi-term row hands off at both depths:
 #:
 #:   query (postings)             k=10 cold/warm        k=30 cold/warm
@@ -388,7 +388,7 @@ class LocalIndex:
                                        depth=depth)
             t0 = time.perf_counter()
             d, s = _topk_query(tb, depth, req, self.k1, self.b, avgdl,
-                               use_wand, stats=qstats, store=self.terms.store)
+                               use_wand, stats=qstats)
             qstats["ms"] = dict(ms, kernel=1e3 * (time.perf_counter() - t0))
             out[key] = [(int(di), float(si)) for di, si in zip(d, s)]
         self.terms.charge(tb_all, reads)

@@ -44,7 +44,7 @@ def _zipfian_replay(idx, ref, vocab, n=240, seed=20260821):
     tc, rc = idx.terms, idx.results
 
     def cost(key):
-        return _memo_postings(tc.meta[key], tc.store.get(key, {}))
+        return _memo_postings(tc.meta[key])
 
     rng = random.Random(seed)
 

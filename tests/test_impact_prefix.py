@@ -10,8 +10,10 @@ Gates here:
   = the raw lazy sweep, with and without MSM, at several k and
   offsets, on a 5-shard index whose lists are long enough for the
   sweep to run and hand off;
-- a warm repeat over the serving tier's persistent decoded-block store
-  decodes nothing, whether the sweep ran to its end or handed off.
+- a warm repeat over the serving tier's cached block tables decodes
+  nothing, whether the sweep ran to its end or handed off: the sweep
+  and brute decode into one memo per table, so brute after a sweep
+  decodes only the blocks the sweep left.
 """
 
 from __future__ import annotations
@@ -21,8 +23,10 @@ import pytest
 
 from jivesearch_spark import bm25
 from jivesearch_spark.index import IndexParams, build_index
-from jivesearch_spark.query import (IndexReader, _topk_blockmax_lazy,
-                                    analyze_query, bm25_topk_indexed)
+from jivesearch_spark.query import (_POSTING_COLS, IndexReader,
+                                    _term_block_meta, _topk_blockmax_lazy,
+                                    _topk_query, analyze_query,
+                                    bm25_topk_indexed)
 from jivesearch_spark.serve import LocalIndex
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -64,13 +68,13 @@ def big_index(spark, tmp_path_factory):
 
 def _sweep(li, q, k=10, msm_req=0):
     """The lazy block-max kernel over the tier's own cached block
-    tables and decoded-block store, whatever finisher ``_topk_query``
-    would pick for these lists. ``li.topk(q)`` caches the tables first.
+    tables, whatever finisher ``_topk_query`` would pick for these
+    lists. ``li.topk(q)`` or `_cache_tables` caches the tables first.
     Returns (pinned rows, kernel stats)."""
     st = {}
     d, s = _topk_blockmax_lazy(
         li.terms.take(sorted(set(analyze_query(li.man, q)))), k, msm_req,
-        li.k1, li.b, li.man.avgdl, stats=st, store=li.terms.store)
+        li.k1, li.b, li.man.avgdl, stats=st)
     return [(int(di), round(float(si), 9)) for di, si in zip(d, s)], st
 
 
@@ -117,15 +121,31 @@ def test_rank_identity_msm_and_paging(spark, big_index):
             assert swept[off:] == brute, (q, k, off)
 
 
+def _cache_tables(li, q):
+    """Put ``q``'s block tables in the tier's term cache through its
+    pruned read, nothing decoded (``li.topk`` would run brute and
+    decode every block: each list here is under the lazy floor)."""
+    miss = li.terms.missing(sorted(set(analyze_query(li.man, q))), {})
+    tb = _term_block_meta(li._postings.read(miss, _POSTING_COLS, {}),
+                          lambda df: bm25.idf(li.man.n_docs, df))
+    li.terms.put({t: tb.get(t, {}) for t in miss})
+
+
 def test_warm_repeat_is_decode_free(big_index):
-    """A repeated sweep over the persistent store decodes no block: the
-    blocks it visited stay in the store, and a hand-off's bulk decode
-    stays memoized on the cached block tables."""
-    li = LocalIndex(big_index)
+    """A repeated sweep over the tier's cached block tables decodes no
+    block: the blocks it visited stay in the tables' memos, and a
+    hand-off's brute exit fills them. Brute over the same tables after
+    the sweep decodes exactly the blocks the sweep left."""
     for q in ("bob", "bob dylan"):
-        li.topk(q, k=10)
+        li = LocalIndex(big_index)
+        _cache_tables(li, q)
         _, cold = _sweep(li, q)
         _, warm = _sweep(li, q)
         assert warm.get("handoff") == cold.get("handoff"), (cold, warm)
-        assert cold["blocks_decoded"] > 0, cold
+        assert 0 < cold["blocks_decoded"] <= cold["blocks_total"], cold
         assert warm["blocks_decoded"] == 0, (cold, warm)
+        st = {}
+        _topk_query(li.terms.take(sorted(set(analyze_query(li.man, q)))),
+                    10, 0, li.k1, li.b, li.man.avgdl, False, stats=st)
+        assert st["blocks_decoded"] == (st["blocks_total"]
+                                        - cold["blocks_decoded"]), (cold, st)

@@ -184,10 +184,10 @@ def test_lazy_kernel_flat_bounds_bail_to_dense():
 def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
     """For ≤2-term queries whose block bounds are flat (no block's own
     ub below its term max ⇒ nothing is ever retirable), the kernel
-    must go dense BEFORE any wave bookkeeping: the persistent segment
-    store stays untouched (zero lazy decodes — the decode-all happens
-    once, memoized on tb as 'dense'). A skewed 2-term query must still
-    take the lazy path and skip blocks."""
+    must go dense BEFORE any wave bookkeeping: zero lazy decodes, so
+    brute decodes each block exactly once into the tb memos. A skewed
+    2-term query must still take the lazy path, skip blocks and leave
+    a partly decoded memo on tb."""
     rng = np.random.default_rng(5)
     n_docs = 100_000
 
@@ -205,11 +205,12 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
             rows.append(blk)
     tbl = _table(rows)
     tb = _term_block_meta(tbl, idf)
-    store, st = {}, {}
-    d1, s1 = _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
+    st = {}
+    d1, s1 = _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st)
     assert st.get("dense_bailout"), st
     assert st["handoff"] == {"why": "flat_bounds"}, st
-    assert store == {}, "upfront bailout must precede any lazy decode"
+    # upfront bailout precedes any lazy decode: brute decodes each once
+    assert st["blocks_decoded"] == st["blocks_total"], st
     d0, s0 = _score_shard_np(tbl, idf, K1, B, AVGDL, 10, 0, False)
     assert np.array_equal(d1, d0) and np.allclose(s1, s0)
 
@@ -218,11 +219,13 @@ def test_lazy_kernel_flat_bailout_is_upfront_for_two_terms():
     idf = {t: float(bm25.idf(n_docs, d)) for t, d in spec.items()}
     tbl = _make_tbl(rng, n_docs, spec, idf, zipf=True)
     tb = _term_block_meta(tbl, idf)
-    store, st = {}, {}
-    _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st, store=store)
+    st = {}
+    _topk_blockmax_lazy(tb, 10, 0, K1, B, AVGDL, stats=st)
     assert not st.get("dense_bailout") and "handoff" not in st, st
     assert st["blocks_decoded"] < st["blocks_total"], st
-    assert store  # lazy decodes landed in the persistent store
+    # the lazy decodes landed in the tb memos, and only those
+    done = np.concatenate([m["done"] for m in tb.values() if "done" in m])
+    assert 0 < done.sum() == st["blocks_decoded"], st
 
 
 def _spiked_tbl(rng, n_docs, weights):
@@ -265,7 +268,8 @@ def test_go_dense_exits_match_brute(why, n_terms, finisher_all):
     """Each lazy-sweep hand-off is forced and answers exactly what
     ``_topk_brute`` answers — docids and float scores — for k = 0, 1,
     10 and more than the matches, with and without MSM; ``stats``
-    names the finisher and why the sweep stopped."""
+    names the finisher and why the sweep stopped, and no run decodes
+    a block twice (a hand-off reuses the blocks the sweep decoded)."""
     rng = np.random.default_rng(29)
     n_docs = 8192
     weights = dict(list({"a": 3.0, "b": 0.3, "c": 0.25}.items())[:n_terms])
@@ -279,6 +283,7 @@ def test_go_dense_exits_match_brute(why, n_terms, finisher_all):
             _term_block_meta(tbl, weights), K1, B, AVGDL), k, msm)
         if not (np.array_equal(d1, d0) and np.array_equal(s1, s0)):
             fails.append((msm, k))
+        assert st["blocks_decoded"] <= st["blocks_total"], (msm, k, st)
         want = ("lazy" if k == 0 else "brute" if k <= 10 else finisher_all)
         assert st["finisher"] == want, (msm, k, st)
         if want == "lazy":
@@ -502,9 +507,11 @@ def test_finishers_match_per_doc_sum_property():
     and brute answer the same docids and float bits, and both equal
     the pure-Python per-doc sum over the raw postings: k = 0, 1, 10
     and more than the matches, MSM 0 and 2, and the offset slice of
-    the top-(k + offset) that paging serves."""
+    the top-(k + offset) that paging serves. No sweep decodes a block
+    twice, and brute over the sweep's own tables — a memo the sweep
+    left partly decoded — still answers the per-doc sum."""
     rng = np.random.default_rng(1234)
-    fails, finishers = [], set()
+    fails, finishers, partial = [], set(), 0
     for trial in range(24):
         tbl, weights, lists = _random_lists(rng, marks=trial % 2 == 1)
 
@@ -519,21 +526,28 @@ def test_finishers_match_per_doc_sum_property():
             want = _per_doc_ranking(lists, weights, msm)
             for k, off in itertools.product((0, 1, 10, len(want) + 1),
                                             (0, 7)):
-                st = {}
-                d1, s1 = _topk_blockmax_lazy(fresh_tb(), k + off, msm,
+                st, swept = {}, fresh_tb()
+                d1, s1 = _topk_blockmax_lazy(swept, k + off, msm,
                                              K1, B, AVGDL, stats=st)
+                assert st["blocks_decoded"] <= st["blocks_total"], st
                 d0, s0 = _topk_brute(_dense_arrays_from_tb(
                     fresh_tb(), K1, B, AVGDL), k + off, msm)
+                partial += any("done" in m and not m["done"].all()
+                               for m in swept.values())
+                d2, s2 = _topk_brute(_dense_arrays_from_tb(
+                    swept, K1, B, AVGDL), k + off, msm)
                 if k + off:
                     finishers.add(st["finisher"])
                 ref = want[off:off + k]
-                got = [(d1[off:], s1[off:]), (d0[off:], s0[off:])]
+                got = [(d1[off:], s1[off:]), (d0[off:], s0[off:]),
+                       (d2[off:], s2[off:])]
                 if not all(d.tolist() == [x for x, _ in ref]
                            and s.tolist() == [x for _, x in ref]
                            for d, s in got):
                     fails.append((trial, msm, k, off))
     assert not fails, fails
     assert finishers == {"lazy", "brute"}, finishers
+    assert partial, "brute must start from a partly decoded memo"
 
 
 def test_k_zero_is_empty():
